@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round measurement harness (guide §1: measure first).
@@ -27,14 +26,7 @@ object Profile {
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "3").toInt
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planSuffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
     val names =
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted

@@ -3,6 +3,7 @@ package graft.api
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** Pluggable index storage — the Spark analog of the reference's
   * StorageProvider seam (storage/base.py:48-71, storage/__init__.py:29-49):
@@ -203,9 +204,38 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     */
   def appendDelta(docs: DataFrame): Unit =
     if (!dir.exists) replace(docs)
-    else dir.appendDelta { tmpDir =>
-      docs.dropDuplicates("doc_id").write.mode("overwrite").parquet(tmpDir)
+    else {
+      dir.currentDir.foreach(d => requireBaseSchema(spark.read.parquet(d).schema, docs))
+      dir.appendDelta { tmpDir =>
+        docs.dropDuplicates("doc_id").write.mode("overwrite").parquet(tmpDir)
+      }
     }
+
+  /** Schema-drift guard for batches written next to a base: merge-on-read
+    * reads every delta sidecar WITH the base schema, so a batch missing a
+    * base column (or carrying a renamed or retyped one) would surface as
+    * silent nulls. Column order and nullability are not drift.
+    */
+  private def requireBaseSchema(base: StructType, batch: DataFrame): Unit = {
+    def shape(t: StructType) = t.fields.map(f => f.name -> sansNullability(f.dataType)).toMap
+    val (want, got) = (shape(base), shape(batch.schema))
+    val missing = want.keys.filterNot(got.contains).toSeq.sorted
+    val extra = got.keys.filterNot(want.contains).toSeq.sorted
+    val retyped = want.keys.filter(k => got.get(k).exists(_ != want(k))).toSeq.sorted
+      .map(k => s"$k (${want(k).simpleString} in the base, ${got(k).simpleString} in the batch)")
+    require(missing.isEmpty && extra.isEmpty && retyped.isEmpty,
+      s"batch schema differs from the index base at $root: " +
+        s"missing [${missing.mkString(", ")}], extra [${extra.mkString(", ")}], " +
+        s"retyped [${retyped.mkString(", ")}]")
+  }
+
+  private def sansNullability(t: DataType): DataType = t match {
+    case ArrayType(e, _) => ArrayType(sansNullability(e), containsNull = true)
+    case MapType(k, v, _) => MapType(sansNullability(k), sansNullability(v), valueContainsNull = true)
+    case StructType(fs) => StructType(fs.map(f =>
+      StructField(f.name, sansNullability(f.dataType), nullable = true)))
+    case other => other
+  }
 
   /** Number of delta sidecars pending against the active version. */
   def deltaCount: Int = dir.listDeltas.size
@@ -264,11 +294,13 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
   }
 
   /** Shared tail of [[upsert]]/[[insertPrechecked]]: `inserted` must be
-    * conflict-free and deduped. An all-conflict batch is a NO-OP — writing
-    * an empty "add" sidecar would still tick foldEvery, so idempotent
-    * replays would trigger pointless full folds.
+    * conflict-free and deduped, and match the base schema (checked before
+    * any job runs). An all-conflict batch is a NO-OP — writing an empty
+    * "add" sidecar would still tick foldEvery, so idempotent replays would
+    * trigger pointless full folds.
     */
-  private def writeInserted(inserted: DataFrame, existing: DataFrame): Unit =
+  private def writeInserted(inserted: DataFrame, existing: DataFrame): Unit = {
+    requireBaseSchema(existing.schema, inserted)
     if (!inserted.isEmpty) {
       if (dir.exists) {
         dir.appendDelta({ tmp =>
@@ -277,6 +309,7 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
         if (deltaCount >= foldEvery) foldDeltas()
       } else replace(inserted.unionByName(existing))
     }
+  }
 
   /** O(batch) write: ids land as a "del" tombstone delta; the rows vanish
     * at merge-on-read and physically at the next fold/compact.

@@ -298,6 +298,11 @@ object FullText {
     // monotonically_increasing_id() numbers rows 0..n-1 within the single
     // partition 0. Ranks are identical to the old row_number (same total
     // order, same tie-break), with zero exchanges and zero WindowExecs.
+    // ...which holds only while the limit plans as TakeOrderedAndProject
+    val topKMax = docs.sparkSession.conf.get("spark.sql.execution.topKSortFallbackThreshold").toInt
+    require(kCand < topKMax, s"hybridRrf: kCand $kCand must be below " +
+      s"spark.sql.execution.topKSortFallbackThreshold $topKMax, else the candidate " +
+      "pages plan as sort + limit and their ranks depend on the physical plan")
     def posRank(rankCol: String)(page: DataFrame): DataFrame =
       page.withColumn(rankCol, (monotonically_increasing_id() + 1).cast("int"))
     val vecTop = posRank("vec_rank")(

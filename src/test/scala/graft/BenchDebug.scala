@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: per-query timing with live progress (Bench prints only at end). */
 object BenchDebug {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val only = args.toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.wholeStage", sys.env.getOrElse("WSCG", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
+    spark.conf.set("spark.sql.codegen.wholeStage", sys.env.getOrElse("WSCG", "true"))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.isEmpty || only.contains(name)) {
         val t0 = System.nanoTime()

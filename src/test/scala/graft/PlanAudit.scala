@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump formatted plans of the queries named on the command line
   * (default: the ANN paths) to verify the physical shape — partition filters
   * present, no BroadcastNestedLoopJoin, no spurious exchanges.
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("8")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_ann_lsh", "q_ann_lsh_pruned", "q_ann_ivf_assign", "q_ann_ivf_topk", "q_find_similar_multi")
     names.foreach { name =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness (not part of the driver contract): print the executed plan
   * of one `SparkEntry.queries` entry — `runMain graft.PlanPeek <name> [sf]`.
   */
@@ -9,13 +7,7 @@ object PlanPeek {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q1_agg")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("8")
     val df = SparkEntry.queries(name)(spark, dir)
     println(s"==== $name @ $dir ====")
     println(df.queryExecution.executedPlan.toString)

@@ -66,6 +66,30 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(m == Map(10L -> "chunk a", 11L -> "chunk b", 12L -> "new"))
   }
 
+  // merge-on-read pins the base schema on delta reads, so a drifted batch
+  // would otherwise surface as silent nulls (or a renamed column vanish)
+  test("schema drift in an upsert or delta batch fails loudly; the index is unchanged") {
+    val store = newStore("drift")
+    store.replace(docs(1L -> "one", 2L -> "two"))
+    def snapshot() = store.read().orderBy("doc_id").collect().map(_.toString).toSeq
+    val before = snapshot()
+    val missing = intercept[IllegalArgumentException](
+      store.upsert(docs(3L -> "three").drop("metadata")))
+    assert(missing.getMessage.contains("metadata"), missing.getMessage)
+    val renamed = intercept[IllegalArgumentException](
+      store.appendDelta(docs(4L -> "four").withColumnRenamed("content", "body")))
+    assert(renamed.getMessage.contains("content") && renamed.getMessage.contains("body"),
+      renamed.getMessage)
+    val retyped = intercept[IllegalArgumentException](
+      store.upsert(docs(5L -> "five").withColumn("doc_id", col("doc_id").cast("int"))))
+    assert(retyped.getMessage.contains("doc_id"), retyped.getMessage)
+    assert(snapshot() == before)
+    assert(store.deltaCount == 0)
+    // column order and nullability are not drift
+    store.upsert(docs(6L -> "six").select("metadata", "vector", "object_keys", "content", "doc_id"))
+    assert(store.read().select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 6L))
+  }
+
   test("delete writes a del tombstone; a later re-insert revives the id") {
     val store = newStore("deldelta")
     store.replace(docs(1L -> "a", 2L -> "b"))

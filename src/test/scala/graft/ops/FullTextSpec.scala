@@ -72,6 +72,20 @@ class FullTextSpec extends AnyFunSuite {
     }
   }
 
+  // ranks are row positions in a TakeOrderedAndProject page; at or above
+  // the fallback threshold Spark plans a sort + limit instead, whose output
+  // order (and so the ranks) depends on the physical plan
+  test("hybridRrf rejects kCand at or above topKSortFallbackThreshold") {
+    val key = "spark.sql.execution.topKSortFallbackThreshold"
+    spark.conf.set(key, "4")
+    try {
+      val e = intercept[IllegalArgumentException](
+        FullText.hybridRrf(docs, "spark hash join", k = 2, kCand = 4))
+      assert(e.getMessage.contains("kCand 4") && e.getMessage.contains(s"$key 4"), e.getMessage)
+      FullText.hybridRrf(docs, "spark hash join", k = 2, kCand = 3).collect()
+    } finally spark.conf.unset(key)
+  }
+
   test("mmrRerank: pick 1 is argmax relevance; lambda=1 reduces to pure relevance order") {
     val pure = FullText.mmrRerank(docs, "spark hash", k = 3, kCand = 4, lambda = 1.0)
       .orderBy("pick").collect().map(x => (x.getInt(0), x.getLong(1), x.getDouble(2)))
