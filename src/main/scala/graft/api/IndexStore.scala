@@ -105,13 +105,44 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
       s.isFile && s.getPath.getName.endsWith(".parquet"))
   }
 
-  override def read(): DataFrame = dir.currentDir match {
-    case Some(d) =>
-      val base = spark.read.parquet(d)
-      val deltas = dir.listDeltas
-      if (deltas.isEmpty) base else mergeOnRead(base, deltas)
-    case None => spark.read.parquet(root) // legacy flat layout (or throw)
+  override def read(): DataFrame = {
+    val snap = dir.snapshot
+    if (snap.exists) resolved(snap) else spark.read.parquet(root) // legacy flat layout (or throw)
   }
+
+  /** One snapshot decides both existence and contents, so `exists` and
+    * `read` cannot disagree across a concurrent write.
+    */
+  override def readOption(): Option[DataFrame] = {
+    val snap = dir.snapshot
+    if (snap.exists) Some(resolved(snap))
+    else if (legacyExists) Some(spark.read.parquet(root))
+    else None
+  }
+
+  /** The resolved read of the last snapshot seen: the base relation (file
+    * listing and schema resolved once) merged with its deltas. Version and
+    * delta directories are immutable, so while the root's snapshot is
+    * unchanged the same DataFrame is the same contents; any write — through
+    * this handle, another handle or another process — changes the snapshot
+    * and replaces the entry. Every DataFrame stays pinned to its concrete
+    * version directory. The broadcast cap is part of the key because the
+    * merge plan depends on it.
+    */
+  @volatile private var lastRead: Option[((VersionedDir.Snapshot, Long), DataFrame)] = None
+
+  private def resolved(snap: VersionedDir.Snapshot): DataFrame = {
+    val key = (snap, broadcastDeltaCap)
+    lastRead.collect { case (k, df) if k == key => df }.getOrElse {
+      val base = spark.read.parquet(snap.dir.get)
+      val df = if (snap.deltas.isEmpty) base else mergeOnRead(base, snap.deltas, key._2)
+      lastRead = Some((key, df))
+      df
+    }
+  }
+
+  private def broadcastDeltaCap: Long =
+    spark.conf.getOption("graft.store.broadcastDeltaMaxBytes").map(_.toLong).getOrElse(64L << 20)
 
   /** Merge of the base version with its delta sidecars, by delta kind.
     * The base relation is never shuffled or widened: every resolution step
@@ -131,7 +162,8 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     *  - "del" (tombstones, doc_id-only rows): a doc_id is dropped unless a
     *    LATER delta re-introduced it.
     */
-  private def mergeOnRead(base: DataFrame, deltas: Seq[VersionedDir.DeltaRef]): DataFrame = {
+  private def mergeOnRead(base: DataFrame, deltas: Seq[VersionedDir.DeltaRef],
+                          cap: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     // The explicit broadcast hint bypasses autoBroadcastJoinThreshold, so it
     // is only safe while the pending delta set is genuinely small. Streaming
@@ -142,8 +174,6 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
       val f = fs
       val pendingBytes = deltas.iterator
         .map(d => f.getContentSummary(new Path(d.path)).getLength).sum
-      val cap = spark.conf.getOption("graft.store.broadcastDeltaMaxBytes")
-        .map(_.toLong).getOrElse(64L << 20)
       if (pendingBytes <= cap) broadcast _ else identity _
     }
     val (dels, lives) = deltas.partition(_.kind == "del")

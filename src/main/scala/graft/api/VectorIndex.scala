@@ -311,8 +311,7 @@ final class VectorIndex(
           lit(null).cast("array<float>").as("vector"), lit(true).as("deleted"))
         annDeltaWrite(annHnswPath, adds.unionByName(tombs))
       case SearchMode.Ivf(_, _, _) =>
-        val (cvs, cids) = SimilaritySearch.collectCentroids(
-          SimilaritySearch.ivfCentroidsRead(spark, annIvfPath))
+        val (cvs, cids) = annVersion(annIvfPath).centroids
         val adds = changedDocs1.select(col("doc_id"), col("vector"),
             graft.functions.vector.nearest_centroid(col("vector"), cvs, cids).as("cell"),
             lit(false).as("deleted"))
@@ -322,11 +321,9 @@ final class VectorIndex(
         annDeltaWrite(annIvfPath, adds.unionByName(tombs))
       case SearchMode.IvfPq(_, _, m, ksub, _, _) =>
         val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, m, ksub)
-        val resolved = VersionedDir.resolve(spark, annIvfPqPath)
-        val (cvs, cids) = SimilaritySearch.collectCentroids(
-          VersionedDir.readSide(spark, s"$resolved/_centroids"))
-        val cbs = graft.ops.ProductQuantization.collectCodebooks(
-          VersionedDir.readSide(spark, s"$resolved/_codebooks"), cfg)
+        val v = annVersion(annIvfPqPath)
+        val (cvs, cids) = v.centroids
+        val cbs = v.codebooks(cfg)
         val adds = changedDocs1.select(col("doc_id"),
             graft.functions.vector.nearest_centroid(col("vector"), cvs, cids).as("cell"),
             graft.functions.vector.pq_encode(col("vector"), cbs, cfg.dsub).as("codes"),
@@ -339,14 +336,12 @@ final class VectorIndex(
         // cell's frame, encode against the STORED residual codebooks — no
         // retrain on a 1-row upsert (the FAISS IVFPQ add path)
         val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, m, ksub)
-        val resolved = VersionedDir.resolve(spark, annRpqPath)
-        val centroidsDf = VersionedDir.readSide(spark, s"$resolved/_centroids")
-        val (cvs, cids) = SimilaritySearch.collectCentroids(centroidsDf)
-        val cbs = graft.ops.ProductQuantization.collectCodebooks(
-          VersionedDir.readSide(spark, s"$resolved/_codebooks"), cfg)
+        val v = annVersion(annRpqPath)
+        val (cvs, cids) = v.centroids
+        val cbs = v.codebooks(cfg)
         val assigned = changedDocs1.select(col("doc_id"), col("vector"),
           graft.functions.vector.nearest_centroid(col("vector"), cvs, cids).as("cell"))
-        val adds = graft.ops.ProductQuantization.residualize(assigned, centroidsDf,
+        val adds = graft.ops.ProductQuantization.residualize(assigned, v.centroidsDf,
             itemVec = "vector")
           .select(col("doc_id"), col("cell"),
             graft.functions.vector.pq_encode(col("residual"), cbs, cfg.dsub).as("codes"),
@@ -356,8 +351,7 @@ final class VectorIndex(
         annDeltaWrite(annRpqPath, adds.unionByName(tombs))
       case SearchMode.Sq(_) =>
         // encode against the STORED params — no retrain on a 1-row upsert
-        val (mins, maxs) = graft.ops.ScalarQuantization.collectParams(
-          graft.ops.ScalarQuantization.sqParamsRead(spark, annSqPath))
+        val (mins, maxs) = annVersion(annSqPath).sqParams
         val adds = changedDocs1.select(col("doc_id"),
           graft.functions.vector.sq_encode(col("vector"), mins, maxs).as("sq"),
           lit(false).as("deleted"))
@@ -365,8 +359,7 @@ final class VectorIndex(
           lit(null).cast("binary").as("sq"), lit(true).as("deleted"))
         annDeltaWrite(annSqPath, adds.unionByName(tombs))
       case SearchMode.Bq(_) =>
-        val thr = graft.ops.BinaryQuantization.collectThresholds(
-          graft.ops.BinaryQuantization.bqParamsRead(spark, annBqPath))
+        val thr = annVersion(annBqPath).bqThresholds
         val adds = changedDocs1.select(col("doc_id"),
           graft.functions.vector.bq_encode(col("vector"), thr).as("bq"),
           lit(false).as("deleted"))
@@ -412,9 +405,8 @@ final class VectorIndex(
   /** Latest-per-doc merge view of an ANN structure's pending deltas (None
     * when the structure has no deltas — the common, zero-overhead case).
     */
-  private def annDeltaRead(root: String): Option[DataFrame] = {
+  private def annDeltaRead(deltas: Seq[VersionedDir.DeltaRef]): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    val deltas = new VersionedDir(spark, root).listDeltas
     if (deltas.isEmpty) None
     else {
       // every sidecar of one ANN structure is written by [[annDeltaWrite]]
@@ -431,6 +423,44 @@ final class VectorIndex(
     }
   }
 
+  /** One resolved version of an ANN side index: everything a search or an
+    * incremental write reads from it — the relation pinned to the concrete
+    * version dir, the side tables collected to the driver, the merged delta
+    * overlay — resolved on first use and then reused for as long as the
+    * root's snapshot stays the same.
+    */
+  private final class AnnVersion(val snapshot: VersionedDir.Snapshot, dir: String) {
+    lazy val relation: DataFrame = spark.read.parquet(dir)
+    lazy val centroidsDf: DataFrame = VersionedDir.readSide(spark, s"$dir/_centroids")
+    lazy val centroids: (Array[Array[Float]], Array[Long]) =
+      SimilaritySearch.collectCentroids(centroidsDf)
+    private lazy val codebookRows = graft.ops.ProductQuantization.codebookRows(
+      VersionedDir.readSide(spark, s"$dir/_codebooks"))
+    def codebooks(cfg: graft.ops.ProductQuantization.PqConfig): Array[Array[Array[Float]]] =
+      graft.ops.ProductQuantization.codebooksFrom(codebookRows, cfg)
+    lazy val sqParams: (Array[Float], Array[Float]) = graft.ops.ScalarQuantization.collectParams(
+      VersionedDir.readSide(spark, s"$dir/_sqparams"))
+    lazy val bqThresholds: Array[Double] = graft.ops.BinaryQuantization.collectThresholds(
+      VersionedDir.readSide(spark, s"$dir/_bqparams"))
+    lazy val delta: Option[DataFrame] = annDeltaRead(snapshot.deltas)
+    lazy val deltaIds: Set[Long] = graft.ops.Hnsw.deltaIdSet(delta, "doc_id")
+  }
+
+  /** One [[AnnVersion]] per ANN root, replaced whenever the root's snapshot
+    * differs from the one it was resolved at — so every mutation, through
+    * this handle or any other writer, invalidates it.
+    */
+  private val annVersions = TrieMap.empty[String, AnnVersion]
+
+  private def annVersion(root: String): AnnVersion = {
+    val snap = new VersionedDir(spark, root).snapshot
+    annVersions.get(root).filter(_.snapshot == snap).getOrElse {
+      val v = new AnnVersion(snap, snap.dir.getOrElse(root))
+      annVersions.put(root, v)
+      v
+    }
+  }
+
   def search(query: String, k: Int = 5, threshold: Double = 0.0,
              metric: Metric = Metric.Cosine,
              mode: SearchMode = SearchMode.Exact,
@@ -443,8 +473,8 @@ final class VectorIndex(
     case (SearchMode.Exact, _: ServerSideSearch) if metric == Metric.Cosine && filter.isEmpty =>
       searchVector(backend.embedOne(query).toSeq, k, threshold, metric, mode)
     case (SearchMode.Exact, _) =>
-      Retrieval.search(filter.fold(documents)(documents.filter), query, backend,
-        k, threshold, metric)
+      val docs = documents
+      Retrieval.search(filter.fold(docs)(docs.filter), query, backend, k, threshold, metric)
     case (m, _) =>
       searchVector(backend.embedOne(query).toSeq, k, threshold, metric, m, filter)
   }
@@ -458,52 +488,48 @@ final class VectorIndex(
     require(ann.exists(_.getClass == m.getClass),
       s"index was not built with ANN mode $m — pass it in VectorIndex(ann = ...)")
     import org.apache.spark.sql.functions.{broadcast, col}
+    val docs = documents
     val topk = m match {
       case SearchMode.Lsh(bits, maxHamming) =>
-        SimilaritySearch.lshTopKPruned(spark, annLshPath, probes, config.dims, k,
-          bits, maxHamming, itemId = "doc_id", itemVec = "vector",
-          delta = annDeltaRead(annLshPath))
+        val v = annVersion(annLshPath)
+        SimilaritySearch.lshTopKResolved(v.relation, probes, config.dims, k,
+          bits, maxHamming, itemId = "doc_id", itemVec = "vector", v.delta, payloadFilter = None)
       case SearchMode.Ivf(_, nProbe, _) =>
-        val centroids = SimilaritySearch.ivfCentroidsRead(spark, annIvfPath)
-        SimilaritySearch.ivfTopKPruned(spark, annIvfPath, centroids, probes, k,
-          nProbe, itemId = "doc_id", itemVec = "vector",
-          delta = annDeltaRead(annIvfPath))
+        val v = annVersion(annIvfPath)
+        SimilaritySearch.ivfTopKResolved(v.relation, v.centroids, probes, k,
+          nProbe, itemId = "doc_id", itemVec = "vector", v.delta, payloadFilter = None)
       case SearchMode.IvfPq(_, nProbe, pm, ksub, refine, _) =>
-        graft.ops.ProductQuantization.ivfPqTopKPruned(spark, annIvfPqPath, documents,
-          probes, graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub),
-          k, nProbe, refine, itemId = "doc_id", itemVec = "vector",
-          delta = annDeltaRead(annIvfPqPath))
+        val v = annVersion(annIvfPqPath)
+        val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub)
+        graft.ops.ProductQuantization.ivfPqTopKResolved(v.relation, v.centroids,
+          v.codebooks(cfg), docs, probes, cfg, k, nProbe, refine,
+          itemId = "doc_id", itemVec = "vector", v.delta)
       case SearchMode.RpqIvf(_, nProbe, pm, ksub, refine, _) =>
-        graft.ops.ProductQuantization.residualIvfPqTopKPruned(spark, annRpqPath, documents,
-          probes, graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub),
-          k, nProbe, refine, itemId = "doc_id", itemVec = "vector",
-          delta = annDeltaRead(annRpqPath))
+        val v = annVersion(annRpqPath)
+        val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub)
+        graft.ops.ProductQuantization.residualIvfPqTopKResolved(v.relation, v.centroids,
+          v.codebooks(cfg), docs, probes, cfg, k, nProbe, refine,
+          itemId = "doc_id", itemVec = "vector", v.delta)
       case SearchMode.Sq(refine) =>
-        val resolved = VersionedDir.resolve(spark, annSqPath)
-        val (mins, maxs) = graft.ops.ScalarQuantization.collectParams(
-          VersionedDir.readSide(spark, s"$resolved/_sqparams"))
-        val codes = annCodesOverlay(
-          spark.read.parquet(resolved).select(col("doc_id"), col("sq")),
-          annDeltaRead(annSqPath), "sq")
-        graft.ops.ScalarQuantization.sqTopK(codes, documents, mins, maxs,
+        val v = annVersion(annSqPath)
+        val (mins, maxs) = v.sqParams
+        val codes = annCodesOverlay(v.relation.select(col("doc_id"), col("sq")), v.delta, "sq")
+        graft.ops.ScalarQuantization.sqTopK(codes, docs, mins, maxs,
           probes, k, refine, itemId = "doc_id", itemVec = "vector")
       case SearchMode.Bq(refine) =>
-        val resolved = VersionedDir.resolve(spark, annBqPath)
-        val thr = graft.ops.BinaryQuantization.collectThresholds(
-          VersionedDir.readSide(spark, s"$resolved/_bqparams"))
-        val codes = annCodesOverlay(
-          spark.read.parquet(resolved).select(col("doc_id"), col("bq")),
-          annDeltaRead(annBqPath), "bq")
-        graft.ops.BinaryQuantization.bqTopK(codes, documents, thr,
+        val v = annVersion(annBqPath)
+        val codes = annCodesOverlay(v.relation.select(col("doc_id"), col("bq")), v.delta, "bq")
+        graft.ops.BinaryQuantization.bqTopK(codes, docs, v.bqThresholds,
           probes, k, refine, itemId = "doc_id", itemVec = "vector")
       case SearchMode.Hnsw(_, _, ef) =>
-        graft.ops.Hnsw.hnswTopKIndexed(spark, annHnswPath, probes, k, ef,
-          delta = annDeltaRead(annHnswPath), itemId = "doc_id", itemVec = "vector")
+        val v = annVersion(annHnswPath)
+        graft.ops.Hnsw.hnswTopKResolved(v.relation, probes, k, ef, v.delta, v.deltaIds,
+          itemId = "doc_id", itemVec = "vector")
       case SearchMode.Exact => throw new IllegalStateException("unreachable")
     }
     broadcast(topk.filter(col("score") >= threshold)
         .select(col("doc_id"), col("score")))
-      .join(documents, Seq("doc_id"))
+      .join(docs, Seq("doc_id"))
       .withColumn("key", col("object_keys").getItem(0))
   }
 

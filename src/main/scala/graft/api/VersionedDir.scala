@@ -42,7 +42,14 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
   private val rootPath = new Path(root)
   private def manifestPath = new Path(rootPath, "_CURRENT")
 
-  /** Active version resolution, newest-installed-wins: the highest-numbered
+  /** One read of the root's state: a single `listStatus(root)` gives the
+    * active version and the modification time of its install marker, and a
+    * single `listStatus(<v>.deltas)` gives its delta sidecars.
+    * [[currentVersion]], [[currentDir]], [[listDeltas]] and [[exists]] are
+    * all derived from it, so callers that hold one snapshot see one
+    * consistent state.
+    *
+    * Active version resolution, newest-installed-wins: the highest-numbered
     * `_FLIP_v*` marker whose version dir still exists. Markers are written
     * by ATOMIC CREATE after the version's data is complete and are NEVER
     * overwritten or renamed, so there is no window in which two writers can
@@ -52,27 +59,39 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     * the newest version dir (crash between data write and marker create —
     * the data is complete at that point).
     */
-  def currentVersion: Option[String] = {
+  def snapshot: VersionedDir.Snapshot = {
     val f = fs
-    val markers =
-      if (!f.exists(rootPath)) Seq.empty
-      else f.listStatus(rootPath).toSeq.map(_.getPath.getName)
-        .filter(_.matches("_FLIP_v\\d+")).map(_.drop("_FLIP_".length))
-    val dirs = listVersions.toSet
-    markers.filter(dirs.contains).sortBy(_.drop(1).toLong).lastOption.orElse {
-      if (f.exists(manifestPath)) {
+    val entries =
+      try f.listStatus(rootPath).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val byName = entries.map(s => s.getPath.getName -> s).toMap
+    val dirs = versionsIn(entries)
+    val marked = byName.keys.filter(_.matches("_FLIP_v\\d+")).map(_.drop("_FLIP_".length))
+      .filter(dirs.contains).toSeq.sortBy(_.drop(1).toLong).lastOption
+    val version = marked.orElse {
+      if (byName.contains(manifestPath.getName)) {
         val in = f.open(manifestPath)
         try {
           val v = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          if (v.nonEmpty && dirs.contains(v)) Some(v) else listVersions.lastOption
+          if (v.nonEmpty && dirs.contains(v)) Some(v) else dirs.lastOption
         } finally in.close()
-      } else listVersions.lastOption
+      } else dirs.lastOption
+    }
+    version match {
+      case None => VersionedDir.Snapshot(None, 0L, Seq.empty)
+      case Some(v) =>
+        // the marker's mtime tells a re-created version apart from the one
+        // it replaced: clear() + rebuild installs `v00001` again
+        val stamp = byName.getOrElse(s"_FLIP_$v", byName(v)).getModificationTime
+        val deltas = if (byName.get(s"$v.deltas").exists(_.isDirectory)) deltasOf(v) else Seq.empty
+        VersionedDir.Snapshot(Some(new Path(rootPath, v).toString), stamp, deltas)
     }
   }
 
+  def currentVersion: Option[String] = snapshot.version
+
   /** Absolute path of the active version directory. */
-  def currentDir: Option[String] =
-    currentVersion.map(v => new Path(rootPath, v).toString)
+  def currentDir: Option[String] = snapshot.dir
 
   /** Version names, NUMERICALLY sorted (v\d+ of any width — "v%05d" is only
     * a cosmetic default; past v99999 names grow a digit and lexicographic
@@ -80,13 +99,14 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     */
   def listVersions: Seq[String] = {
     val f = fs
-    if (!f.exists(rootPath)) Seq.empty
-    else f.listStatus(rootPath).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.matches("v\\d+")).sortBy(_.drop(1).toLong)
+    if (!f.exists(rootPath)) Seq.empty else versionsIn(f.listStatus(rootPath).toSeq)
   }
 
-  def exists: Boolean = currentVersion.isDefined
+  private def versionsIn(entries: Seq[org.apache.hadoop.fs.FileStatus]): Seq[String] =
+    entries.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.matches("v\\d+")).sortBy(_.drop(1).toLong)
+
+  def exists: Boolean = snapshot.exists
 
   def read(): DataFrame = currentDir match {
     case Some(d) => spark.read.parquet(d)
@@ -190,24 +210,20 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     * the caller (unsuffixed dirs read back as kind "put" — the original
     * replace-touched-keys kind, so pre-kind layouts stay readable).
     */
-  def listDeltas: Seq[VersionedDir.DeltaRef] = currentVersion match {
-    case None => Seq.empty
-    case Some(v) =>
-      val f = fs
-      val dr = deltaRoot(v)
-      if (!f.exists(dr)) Seq.empty
-      else f.listStatus(dr).toSeq
-        .filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.matches("d\\d+(_[a-z]+)?"))
-        .map { p =>
-          val (num, kind) = p.getName.drop(1).split("_", 2) match {
-            case Array(n)    => (n.toLong, "put")
-            case Array(n, k) => (n.toLong, k)
-          }
-          VersionedDir.DeltaRef(num, kind, p.toString)
+  def listDeltas: Seq[VersionedDir.DeltaRef] = snapshot.deltas
+
+  private def deltasOf(version: String): Seq[VersionedDir.DeltaRef] =
+    fs.listStatus(deltaRoot(version)).toSeq
+      .filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.matches("d\\d+(_[a-z]+)?"))
+      .map { p =>
+        val (num, kind) = p.getName.drop(1).split("_", 2) match {
+          case Array(n)    => (n.toLong, "put")
+          case Array(n, k) => (n.toLong, k)
         }
-        .sortBy(_.seq)
-  }
+        VersionedDir.DeltaRef(num, kind, p.toString)
+      }
+      .sortBy(_.seq)
 
   /** Append one delta beside the active version via `write(tmpDir)`; the
     * temp dir renames into its final sequence-numbered name on success.
@@ -215,12 +231,13 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     */
   def appendDelta(write: String => Unit, kind: String = "put"): Unit = {
     require(kind.matches("[a-z]+"), s"delta kind must be lowercase letters: $kind")
-    val v = currentVersion.getOrElse(
+    val snap = snapshot
+    val v = snap.version.getOrElse(
       throw new IllegalStateException(s"no base version to append a delta to under $root"))
     val f = fs
     val dr = deltaRoot(v)
     f.mkdirs(dr)
-    val next = listDeltas.lastOption.map(_.seq).getOrElse(0L) + 1
+    val next = snap.deltas.lastOption.map(_.seq).getOrElse(0L) + 1
     val name = "d%08d".format(next) + (if (kind == "put") "" else s"_$kind")
     val tmp = new Path(dr, s".tmp_$name")
     f.delete(tmp, true)
@@ -278,6 +295,18 @@ object VersionedDir {
     * insert / "del" tombstones — interpreted by the caller), and its path.
     */
   final case class DeltaRef(seq: Long, kind: String, path: String)
+
+  /** What one listing of a versioned root resolved: the active version
+    * directory (None when no version exists), the modification time of its
+    * install marker, and its delta sidecars. Two snapshots of an unchanged
+    * root are equal; every write — a new version, a new delta, or clear()
+    * followed by a rebuild that reuses a version name — yields a different
+    * one, so a snapshot is a safe key for anything resolved from it.
+    */
+  final case class Snapshot(dir: Option[String], stamp: Long, deltas: Seq[DeltaRef]) {
+    def exists: Boolean = dir.isDefined
+    def version: Option[String] = dir.map(d => new Path(d).getName)
+  }
 
   /** Resolve a path that may be a versioned root OR a plain directory: the
     * active version dir if a manifest/version layout is present, the path

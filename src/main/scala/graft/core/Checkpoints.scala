@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -38,22 +39,39 @@ object Checkpoints {
     * deployment opts into reliable checkpoints.
     */
   implicit class MaterializeSyntax[T](private val ds: Dataset[T]) {
-    def materialize(eager: Boolean): Dataset[T] = reliableDir match {
-      case Some(dir) =>
-        val sc = ds.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        ds.checkpoint(eager)
-      case None => ds.localCheckpoint(eager)
-    }
+    def materialize(eager: Boolean): Dataset[T] = materializeIn(ds, eager, reliableDir)
   }
 
-  /** Drop the block-manager storage behind a localCheckpoint'd Dataset.
+  /** `materialize` with the reliable-checkpoint directory given: `None` is
+    * a local checkpoint, `Some(dir)` a reliable one under `dir` (unless the
+    * context already has a checkpoint directory, which is then kept).
+    */
+  private[graft] def materializeIn[T](ds: Dataset[T], eager: Boolean,
+                                      dir: Option[String]): Dataset[T] = dir match {
+    case Some(d) =>
+      val sc = ds.sparkSession.sparkContext
+      // two threads (Concurrent.both) may materialize at once
+      synchronized { if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d) }
+      ds.checkpoint(eager)
+    case None => ds.localCheckpoint(eager)
+  }
+
+  /** Drop the storage behind a checkpoint'd Dataset: the block-manager
+    * blocks of a local checkpoint, and the files of a reliable one —
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` cannot be set once
+    * the context runs, so nothing else would ever delete them.
     * Safe ONLY when nothing will read `ds` (or a plan built on it) again —
-    * a local checkpoint cannot be recomputed once its blocks are gone.
+    * a checkpoint cannot be recomputed once its storage is gone.
     * Returns false (no-op) when `ds` is not checkpoint-backed.
     */
   def release(ds: Dataset[_]): Boolean = ds.queryExecution.analyzed match {
-    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false); true
+    case lr: LogicalRDD =>
+      lr.rdd.unpersist(blocking = false)
+      lr.rdd.getCheckpointFile.foreach { f =>
+        val p = new Path(f)
+        p.getFileSystem(ds.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+      true
     case _ => false
   }
 }

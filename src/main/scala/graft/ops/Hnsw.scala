@@ -199,15 +199,28 @@ object Hnsw {
   def hnswTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                       probes: Seq[(Long, Seq[Float])], k: Int = 10, ef: Int = 32,
                       delta: Option[DataFrame] = None,
-                      itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame = {
+                      itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame =
+    hnswTopKResolved(spark.read.parquet(graft.api.VersionedDir.resolve(spark, path)),
+      probes, k, ef, delta, deltaIdSet(delta, itemId), itemId, itemVec)
+
+  /** The ids a delta overlay suppresses in graph results (one collect). */
+  private[graft] def deltaIdSet(delta: Option[DataFrame], itemId: String): Set[Long] =
+    delta.fold(Set.empty[Long])(
+      _.select(col(itemId).cast("long")).collect().map(_.getLong(0)).toSet)
+
+  /** [[hnswTopKIndexed]] over an already-resolved graph relation `raw`,
+    * with the delta's id set already collected ([[deltaIdSet]]).
+    */
+  private[graft] def hnswTopKResolved(raw: DataFrame, probes: Seq[(Long, Seq[Float])],
+                                      k: Int, ef: Int, delta: Option[DataFrame],
+                                      deltaIds: Set[Long],
+                                      itemId: String, itemVec: String): DataFrame = {
+    val spark = raw.sparkSession
     require(probes.size <= 4096, s"probe batch too large: ${probes.size}")
     val probeArr = probes.map { case (qid, qv) => (qid, qv.toArray) }.toArray
     val probesB = spark.sparkContext.broadcast(probeArr)
-    val deltaIds = delta.fold(Set.empty[Long])(
-      _.select(col(itemId).cast("long")).collect().map(_.getLong(0)).toSet)
     require(deltaIds.size <= 1000000, s"delta too large to overlay: ${deltaIds.size} — rebuild")
     val deltaIdsB = spark.sparkContext.broadcast(deltaIds)
-    val raw = spark.read.parquet(graft.api.VersionedDir.resolve(spark, path))
     val outSchema = StructType(Seq(
       StructField("qid", LongType), StructField(itemId, LongType),
       StructField("score", DoubleType)))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -153,11 +153,22 @@ object ProductQuantization {
                               k: Int = 10, nProbe: Int = 4, refine: Int = 4,
                               itemId: String = "vec_id", itemVec: String = "embedding",
                               delta: Option[org.apache.spark.sql.DataFrame] = None): DataFrame = {
+    val (raw, centroids, cbs) = resolveIndex(spark, indexPath, cfg)
+    residualIvfPqTopKResolved(raw, centroids, cbs, items, probes, cfg, k, nProbe, refine,
+      itemId, itemVec, delta)
+  }
+
+  /** [[residualIvfPqTopKPruned]] over an already-resolved version: its
+    * cell-partitioned codes relation, collected centroids and codebooks.
+    */
+  private[graft] def residualIvfPqTopKResolved(raw: DataFrame,
+      centroids: (Array[Array[Float]], Array[Long]), cbs: Array[Array[Array[Float]]],
+      items: DataFrame, probes: Seq[(Long, Seq[Float])], cfg: PqConfig,
+      k: Int, nProbe: Int, refine: Int, itemId: String, itemVec: String,
+      delta: Option[DataFrame]): DataFrame = {
+    val spark = raw.sparkSession
     import spark.implicits._
-    val resolved = graft.api.VersionedDir.resolve(spark, indexPath)
-    val (cvs, cids) = SimilaritySearch.collectCentroids(
-      graft.api.VersionedDir.readSide(spark, s"$resolved/_centroids"))
-    val cbs = collectCodebooks(graft.api.VersionedDir.readSide(spark, s"$resolved/_codebooks"), cfg)
+    val (cvs, cids) = centroids
     val expanded = probes.flatMap { case (qid, qv) =>
       SimilaritySearch.nearestCellsLocal(qv, cvs, cids, nProbe).map { c =>
         val cv = cvs(cids.indexOf(c))
@@ -167,7 +178,6 @@ object ProductQuantization {
     }
     val probeDf = expanded.toDF("qid", "qv", "__cell", "lut")
       .select(col("qid"), col("qv").cast("array<float>"), col("__cell"), col("lut"))
-    val raw = spark.read.parquet(resolved)
     val candCells: Seq[Any] = raw.schema("cell").dataType match {
       case org.apache.spark.sql.types.IntegerType => expanded.map(_._3.toInt).distinct
       case _                                      => expanded.map(_._3).distinct
@@ -278,11 +288,34 @@ object ProductQuantization {
                       k: Int = 10, nProbe: Int = 4, refine: Int = 4,
                       itemId: String = "vec_id", itemVec: String = "embedding",
                       delta: Option[org.apache.spark.sql.DataFrame] = None): DataFrame = {
-    import spark.implicits._
+    val (raw, centroids, cbs) = resolveIndex(spark, indexPath, cfg)
+    ivfPqTopKResolved(raw, centroids, cbs, items, probes, cfg, k, nProbe, refine,
+      itemId, itemVec, delta)
+  }
+
+  /** One version of an IVF×PQ index resolved from its versioned root: the
+    * cell-partitioned codes relation pinned to the concrete version dir,
+    * and the centroids and codebooks riding in that dir, collected.
+    */
+  private def resolveIndex(spark: SparkSession, indexPath: String, cfg: PqConfig)
+      : (DataFrame, (Array[Array[Float]], Array[Long]), Array[Array[Array[Float]]]) = {
     val resolved = graft.api.VersionedDir.resolve(spark, indexPath)
-    val (cvs, cids) = SimilaritySearch.collectCentroids(
-      graft.api.VersionedDir.readSide(spark, s"$resolved/_centroids"))
-    val cbs = collectCodebooks(graft.api.VersionedDir.readSide(spark, s"$resolved/_codebooks"), cfg)
+    (spark.read.parquet(resolved),
+      SimilaritySearch.collectCentroids(graft.api.VersionedDir.readSide(spark, s"$resolved/_centroids")),
+      collectCodebooks(graft.api.VersionedDir.readSide(spark, s"$resolved/_codebooks"), cfg))
+  }
+
+  /** [[ivfPqTopKPruned]] over an already-resolved version: its
+    * cell-partitioned codes relation, collected centroids and codebooks.
+    */
+  private[graft] def ivfPqTopKResolved(raw: DataFrame,
+      centroids: (Array[Array[Float]], Array[Long]), cbs: Array[Array[Array[Float]]],
+      items: DataFrame, probes: Seq[(Long, Seq[Float])], cfg: PqConfig,
+      k: Int, nProbe: Int, refine: Int, itemId: String, itemVec: String,
+      delta: Option[DataFrame]): DataFrame = {
+    val spark = raw.sparkSession
+    import spark.implicits._
+    val (cvs, cids) = centroids
     val expanded = probes.flatMap { case (qid, qv) =>
       val lut = adcLut(qv, cbs, cfg).toSeq
       SimilaritySearch.nearestCellsLocal(qv, cvs, cids, nProbe)
@@ -290,7 +323,6 @@ object ProductQuantization {
     }
     val probeDf = expanded.toDF("qid", "qv", "__cell", "lut")
       .select(col("qid"), col("qv").cast("array<float>"), col("__cell"), col("lut"))
-    val raw = spark.read.parquet(resolved)
     // literals of the parquet-inferred partition-column type keep the IN a
     // bare partition filter (same discipline as ivfTopKPruned)
     val candCells: Seq[Any] = raw.schema("cell").dataType match {
@@ -317,10 +349,17 @@ object ProductQuantization {
     * empty placeholder. (An empty corpus trims to zero codewords, which
     * [[graft.functions.PqEncodeExpr]] rejects with a clear message.)
     */
-  def collectCodebooks(codebooks: DataFrame, cfg: PqConfig): Array[Array[Array[Float]]] = {
-    val out = Array.fill(cfg.m, cfg.ksub)(Array.empty[Float])
+  def collectCodebooks(codebooks: DataFrame, cfg: PqConfig): Array[Array[Array[Float]]] =
+    codebooksFrom(codebookRows(codebooks), cfg)
+
+  /** The (sub, code, cv) rows of a codebook table, collected (one job). */
+  private[graft] def codebookRows(codebooks: DataFrame): Array[Row] =
     codebooks.select(col("sub").cast("int"), col("code").cast("int"), col("cv")).collect()
-      .foreach(r => out(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray)
+
+  /** [[collectCodebooks]] over rows already collected by [[codebookRows]]. */
+  private[graft] def codebooksFrom(rows: Array[Row], cfg: PqConfig): Array[Array[Array[Float]]] = {
+    val out = Array.fill(cfg.m, cfg.ksub)(Array.empty[Float])
+    rows.foreach(r => out(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray)
     out.map { cb =>
       val filled = cb.indexWhere(_.isEmpty) match { case -1 => cb.length; case i => i }
       cb.take(filled)

@@ -290,8 +290,4 @@ object BinaryQuantization {
         (-bq_hamming(col("bq"), col("qb"))).cast("double").as("score"))
     ProductQuantization.rerankExact(scored, items, probeDf, k, refine, itemId, itemVec)
   }
-
-  /** Thresholds of the ACTIVE index version. */
-  def bqParamsRead(spark: SparkSession, path: String): DataFrame =
-    graft.api.VersionedDir.readSide(spark, s"${graft.api.VersionedDir.resolve(spark, path)}/_bqparams")
 }

@@ -179,7 +179,20 @@ object SimilaritySearch {
                     dims: Int, k: Int = 10, bits: Int = 8, maxHamming: Int = 1,
                     itemId: String = "vec_id", itemVec: String = "embedding",
                     delta: Option[DataFrame] = None,
-                    payloadFilter: Option[Column] = None): DataFrame = {
+                    payloadFilter: Option[Column] = None): DataFrame =
+    // pin the concrete version dir (plain dirs resolve to themselves)
+    lshTopKResolved(spark.read.parquet(graft.api.VersionedDir.resolve(spark, indexPath)),
+      probes, dims, k, bits, maxHamming, itemId, itemVec, delta, payloadFilter)
+
+  /** [[lshTopKPruned]] over an already-resolved bucket-partitioned relation
+    * `raw` (one version directory's read).
+    */
+  private[graft] def lshTopKResolved(raw: DataFrame, probes: Seq[(Long, Seq[Float])],
+                                     dims: Int, k: Int, bits: Int, maxHamming: Int,
+                                     itemId: String, itemVec: String,
+                                     delta: Option[DataFrame],
+                                     payloadFilter: Option[Column]): DataFrame = {
+    val spark = raw.sparkSession
     import spark.implicits._
     require(payloadFilter.isEmpty || delta.isEmpty,
       "payloadFilter over a delta overlay is unsupported: delta sidecars carry " +
@@ -191,8 +204,6 @@ object SimilaritySearch {
     }
     val probeDf = expanded.toDF("qid", "qv", "__bkt")
       .select(col("qid"), col("qv").cast("array<float>"), col("__bkt"))
-    // pin the concrete version dir (plain dirs resolve to themselves)
-    val raw = spark.read.parquet(graft.api.VersionedDir.resolve(spark, indexPath))
     // partition-column type inference reads small bucket dirs back as int;
     // filter with literals of the inferred type so the In stays a bare
     // partition filter (no cast wrapper → static pruning guaranteed)
@@ -551,18 +562,30 @@ object SimilaritySearch {
                     probes: Seq[(Long, Seq[Float])], k: Int = 10, nProbe: Int = 4,
                     itemId: String = "vec_id", itemVec: String = "embedding",
                     delta: Option[DataFrame] = None,
-                    payloadFilter: Option[Column] = None): DataFrame = {
+                    payloadFilter: Option[Column] = None): DataFrame =
+    ivfTopKResolved(spark.read.parquet(graft.api.VersionedDir.resolve(spark, indexPath)),
+      collectCentroids(centroids), probes, k, nProbe, itemId, itemVec, delta, payloadFilter)
+
+  /** [[ivfTopKPruned]] over an already-resolved cell-partitioned relation
+    * `raw` and its version's collected centroids.
+    */
+  private[graft] def ivfTopKResolved(raw: DataFrame,
+                                     centroids: (Array[Array[Float]], Array[Long]),
+                                     probes: Seq[(Long, Seq[Float])], k: Int, nProbe: Int,
+                                     itemId: String, itemVec: String,
+                                     delta: Option[DataFrame],
+                                     payloadFilter: Option[Column]): DataFrame = {
+    val spark = raw.sparkSession
     import spark.implicits._
     require(payloadFilter.isEmpty || delta.isEmpty,
       "payloadFilter over a delta overlay is unsupported: delta sidecars carry " +
         "only (id, vector) — fold the deltas first, or filter the hydrated results")
-    val (cvs, cids) = collectCentroids(centroids)
+    val (cvs, cids) = centroids
     val expanded = probes.flatMap { case (qid, qv) =>
       nearestCellsLocal(qv, cvs, cids, nProbe).map(c => (qid, qv, c))
     }
     val probeDf = expanded.toDF("qid", "qv", "__cell")
       .select(col("qid"), col("qv").cast("array<float>"), col("__cell"))
-    val raw = spark.read.parquet(graft.api.VersionedDir.resolve(spark, indexPath))
     val candCells: Seq[Any] = raw.schema("cell").dataType match {
       case org.apache.spark.sql.types.IntegerType => expanded.map(_._3.toInt).distinct
       case _                                      => expanded.map(_._3).distinct

@@ -453,6 +453,125 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(fresh.select("content").as[String].collect().forall(_.contains("v2")))
   }
 
+  // every mutation — through this handle or another one on the same path,
+  // and clear() + rebuild, which installs `v00001` again — must show in the
+  // next search: the per-handle read snapshots are keyed on the root's state
+  test("read snapshots: every mutation, through this or another handle, shows in the next search") {
+    val ivf = SearchMode.Ivf(nCells = 4, nProbe = 4, lloydIters = 1)
+    val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 1 << 20)
+    val reader = annIndex("snap", Seq(ivf, hnsw))
+    val other = new VectorIndex(spark, reader.config, reader.backend, reader.chatBackend,
+      reader.indexPath, "page", "id", ann = reader.ann)
+    val q = "completely new page about quasars and pulsars today"
+    // (key, content) of the top 3 of every route, read through `reader`
+    def routes(similarTo: String): Map[String, Seq[(String, String)]] = {
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("key", "content").as[(String, String)].collect().toSeq
+      Map(
+        "exact" -> rows(reader.search(q, k = 3, threshold = -1.0)),
+        "ivf" -> rows(reader.search(q, k = 3, threshold = -1.0, mode = ivf)),
+        "hnsw" -> rows(reader.search(q, k = 3, threshold = -1.0, mode = hnsw)),
+        "similar" -> rows(reader.findSimilar(similarTo, k = 3, threshold = -1.0)),
+        "similar_ivf" -> rows(reader.findSimilar(similarTo, k = 3, threshold = -1.0, mode = ivf)),
+        "similar_hnsw" -> rows(reader.findSimilar(similarTo, k = 3, threshold = -1.0, mode = hnsw)))
+    }
+    def sourceWith(suffix: String) = annSource.withColumn("body", concat(col("body"), lit(suffix)))
+    for (writer <- Seq(reader, other)) {
+      val tag = if (writer eq reader) "same handle" else "second handle"
+      writer.rebuild(sourceWith(" v1"))
+      routes("page:1").foreach { case (r, hits) =>
+        assert(hits.nonEmpty && hits.forall(_._2.endsWith(" v1")), s"$tag $r: $hits") }
+
+      val newDoc = graft.pipeline.IndexBuild.buildDocuments(
+        Seq((100L, q)).toDF("id", "body"), writer.config, writer.backend, "page", "id")
+      writer.upsert(newDoc)
+      routes("page:100").foreach { case (r, hits) =>
+        if (r.startsWith("similar")) assert(hits.nonEmpty, s"$tag upsert $r")
+        else assert(hits.exists(_._1 == "page:100"), s"$tag upsert $r: $hits")
+      }
+
+      writer.delete(newDoc.select("doc_id").as[Long].collect().toSeq)
+      routes("page:1").foreach { case (r, hits) =>
+        assert(!hits.exists(_._1 == "page:100"), s"$tag delete $r: $hits") }
+
+      writer.update(sourceWith(" v1").withColumn("body",
+        when(col("id") === 17L, lit(s"$q seventeen")).otherwise(col("body"))))
+      routes("page:1").filter(!_._1.startsWith("similar")).foreach { case (r, hits) =>
+        assert(hits.exists(h => h._1 == "page:17" && h._2.contains("seventeen")),
+          s"$tag update $r: $hits")
+      }
+
+      writer.rebuild(sourceWith(" v2"))
+      routes("page:1").foreach { case (r, hits) =>
+        assert(hits.nonEmpty && hits.forall(_._2.endsWith(" v2")), s"$tag rebuild $r: $hits") }
+
+      writer.clear()
+      writer.rebuild(sourceWith(" v3"))
+      assert(new VersionedDir(spark, reader.indexPath).currentVersion.contains("v00001"))
+      assert(new VersionedDir(spark, reader.annIvfPath).currentVersion.contains("v00001"))
+      routes("page:1").foreach { case (r, hits) =>
+        assert(hits.nonEmpty && hits.forall(_._2.endsWith(" v3")), s"$tag clear+rebuild $r: $hits") }
+      writer.clear()
+    }
+  }
+
+  /** Spark jobs launched while `f` runs. The listener bus is asynchronous:
+    * a marker job in another group, delivered after them, flushes it.
+    */
+  private def jobsDuring(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.incrementAndGet()
+          case g if g == s"$group-flush" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not flushed")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // a repeated call on an unchanged index must not resolve the version
+  // again: no file-listing / schema-inference job, no side-table collect
+  test("repeated searches on an unchanged index launch only their own execution's jobs") {
+    val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
+    val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 16)
+    val idx = annIndex("jobs", Seq(ivf, hnsw))
+    idx.rebuild(annSource)
+    val q = "document number 17 about topic3 detail17"
+    idx.search(q, k = 5).collect()
+    assert(jobsDuring(idx.search(q, k = 5).collect()) == 1, "exact search")
+    // with a pending delta on every root, so the overlays and the HNSW
+    // delta-id set are resolved once too
+    for (pending <- Seq(false, true)) {
+      if (pending) idx.upsert(graft.pipeline.IndexBuild.buildDocuments(
+        Seq((100L, "completely new page about quasars")).toDF("id", "body"),
+        idx.config, idx.backend, "page", "id"))
+      for (m <- Seq(ivf, hnsw)) {
+        idx.search(q, k = 5, mode = m).collect()
+        assert(jobsDuring(idx.search(q, k = 5, mode = m)) == 0, s"$m build, deltas=$pending")
+        // findSimilar collects its probe chunks, and nothing else, at build
+        idx.findSimilar("page:17", k = 5, mode = m).collect()
+        val probeJobs = jobsDuring(idx.documents.filter(array_contains(col("object_keys"), "page:17"))
+          .select("doc_id", "vector").collect())
+        assert(jobsDuring(idx.findSimilar("page:17", k = 5, mode = m)) == probeJobs,
+          s"$m findSimilar build, deltas=$pending")
+      }
+    }
+  }
+
   test("registry rebuilds all registered indexes") {
     IndexRegistry.clearRegistry()
     val a = IndexRegistry.register(newIndex("reg_a"), () => source)

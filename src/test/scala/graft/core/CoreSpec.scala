@@ -49,4 +49,25 @@ class CoreSpec extends AnyFunSuite {
     assert(Metric.fromString("max_inner_product") == Metric.MaxInnerProduct)
     intercept[IllegalArgumentException] { Metric.fromString("hamming") }
   }
+
+  // a reliable checkpoint's files outlive its blocks: release must delete
+  // them, or a long-lived session accretes one directory per call
+  test("reliable checkpoints: release deletes the files, 20 cycles keep the directory count flat") {
+    val spark = graft.TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    def rddDirs(): Int = spark.sparkContext.getCheckpointDir.fold(0) { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+        .count(_.getPath.getName.startsWith("rdd-"))
+    }
+    val counts = (1 to 20).map { i =>
+      val ds = Checkpoints.materializeIn(spark.range(0, 100).selectExpr(s"id * $i AS x"),
+        eager = true, Some(dir))
+      assert(ds.count() == 100)
+      assert(spark.sparkContext.getCheckpointDir.isDefined)
+      assert(Checkpoints.release(ds))
+      rddDirs()
+    }
+    assert(counts.forall(_ == counts.head), s"checkpoint dirs per cycle: $counts")
+  }
 }
