@@ -2,9 +2,11 @@ package graft.api
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-import graft.core.{IndexConfig, Metric}
+import graft.core.{Checkpoints, IndexConfig, Metric}
+import graft.core.Checkpoints.MaterializeSyntax
 import graft.embed.{ChatBackend, EchoChatBackend, EmbeddingBackend, HashEmbeddingBackend}
 import graft.ops.SimilaritySearch
 import graft.pipeline.IndexBuild
@@ -444,6 +446,22 @@ final class VectorIndex(
       VersionedDir.readSide(spark, s"$dir/_bqparams"))
     lazy val delta: Option[DataFrame] = annDeltaRead(snapshot.deltas)
     lazy val deltaIds: Set[Long] = graft.ops.Hnsw.deltaIdSet(delta, "doc_id")
+    private var graph: Option[DataFrame] = None
+    /** The HNSW graph relation exchanged by shard once and materialized on
+      * first use, so a query searches it without a shuffle.
+      */
+    def hnswGraph: DataFrame = synchronized {
+      graph.getOrElse {
+        val g = graft.ops.Hnsw.shardGraph(relation).materialize(true)
+        graph = Some(g)
+        g
+      }
+    }
+    /** Drop the materialized graph — called when the version is replaced. */
+    def release(): Unit = synchronized {
+      graph.foreach(Checkpoints.release)
+      graph = None
+    }
   }
 
   /** One [[AnnVersion]] per ANN root, replaced whenever the root's snapshot
@@ -456,7 +474,7 @@ final class VectorIndex(
     val snap = new VersionedDir(spark, root).snapshot
     annVersions.get(root).filter(_.snapshot == snap).getOrElse {
       val v = new AnnVersion(snap, snap.dir.getOrElse(root))
-      annVersions.put(root, v)
+      annVersions.put(root, v).foreach(_.release())
       v
     }
   }
@@ -479,65 +497,77 @@ final class VectorIndex(
       searchVector(backend.embedOne(query).toSeq, k, threshold, metric, m, filter)
   }
 
-  /** ANN candidate top-k for a driver-resident probe batch, hydrated back to
-    * full documents (+`key`, per-chunk `rank`) with a broadcast join of the
-    * ≤ probes·k hit ids — the shared tail of every ANN-routed query method.
+  /** The ANN candidate page of a driver-resident probe batch: the route's
+    * per-probe top-k as (doc_id, score), the top-k operator at the plan root
+    * — a single probe's is one TakeOrderedAndProject job, a batch's the
+    * bounded TopK aggregator. Lazy; [[annHits]] collects it.
     */
-  private def annHits(probes: Seq[(Long, Seq[Float])], k: Int, threshold: Double,
-                      m: SearchMode): DataFrame = {
+  private[graft] def annPage(probes: Seq[(Long, Seq[Float])], k: Int,
+                             m: SearchMode): DataFrame = {
     require(ann.exists(_.getClass == m.getClass),
       s"index was not built with ANN mode $m — pass it in VectorIndex(ann = ...)")
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val docs = documents
+    import org.apache.spark.sql.functions.col
+    def page(candidates: DataFrame) =
+      SimilaritySearch.topKPage(candidates, k, probes.size, "doc_id")
     val topk = m match {
       case SearchMode.Lsh(bits, maxHamming) =>
         val v = annVersion(annLshPath)
-        SimilaritySearch.lshTopKResolved(v.relation, probes, config.dims, k,
-          bits, maxHamming, itemId = "doc_id", itemVec = "vector", v.delta, payloadFilter = None)
+        page(SimilaritySearch.lshCandidates(v.relation, probes, config.dims,
+          bits, maxHamming, itemId = "doc_id", itemVec = "vector", v.delta, payloadFilter = None))
       case SearchMode.Ivf(_, nProbe, _) =>
         val v = annVersion(annIvfPath)
-        SimilaritySearch.ivfTopKResolved(v.relation, v.centroids, probes, k,
-          nProbe, itemId = "doc_id", itemVec = "vector", v.delta, payloadFilter = None)
+        page(SimilaritySearch.ivfCandidates(v.relation, v.centroids, probes,
+          nProbe, itemId = "doc_id", itemVec = "vector", v.delta, payloadFilter = None))
       case SearchMode.IvfPq(_, nProbe, pm, ksub, refine, _) =>
         val v = annVersion(annIvfPqPath)
         val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub)
         graft.ops.ProductQuantization.ivfPqTopKResolved(v.relation, v.centroids,
-          v.codebooks(cfg), docs, probes, cfg, k, nProbe, refine,
+          v.codebooks(cfg), documents, probes, cfg, k, nProbe, refine,
           itemId = "doc_id", itemVec = "vector", v.delta)
       case SearchMode.RpqIvf(_, nProbe, pm, ksub, refine, _) =>
         val v = annVersion(annRpqPath)
         val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub)
         graft.ops.ProductQuantization.residualIvfPqTopKResolved(v.relation, v.centroids,
-          v.codebooks(cfg), docs, probes, cfg, k, nProbe, refine,
+          v.codebooks(cfg), documents, probes, cfg, k, nProbe, refine,
           itemId = "doc_id", itemVec = "vector", v.delta)
       case SearchMode.Sq(refine) =>
         val v = annVersion(annSqPath)
         val (mins, maxs) = v.sqParams
         val codes = annCodesOverlay(v.relation.select(col("doc_id"), col("sq")), v.delta, "sq")
-        graft.ops.ScalarQuantization.sqTopK(codes, docs, mins, maxs,
+        graft.ops.ScalarQuantization.sqTopK(codes, documents, mins, maxs,
           probes, k, refine, itemId = "doc_id", itemVec = "vector")
       case SearchMode.Bq(refine) =>
         val v = annVersion(annBqPath)
         val codes = annCodesOverlay(v.relation.select(col("doc_id"), col("bq")), v.delta, "bq")
-        graft.ops.BinaryQuantization.bqTopK(codes, docs, v.bqThresholds,
+        graft.ops.BinaryQuantization.bqTopK(codes, documents, v.bqThresholds,
           probes, k, refine, itemId = "doc_id", itemVec = "vector")
       case SearchMode.Hnsw(_, _, ef) =>
         val v = annVersion(annHnswPath)
-        graft.ops.Hnsw.hnswTopKResolved(v.relation, probes, k, ef, v.delta, v.deltaIds,
-          itemId = "doc_id", itemVec = "vector")
+        page(graft.ops.Hnsw.hnswCandidates(v.hnswGraph, probes, k, ef, v.delta, v.deltaIds,
+          itemId = "doc_id", itemVec = "vector"))
       case SearchMode.Exact => throw new IllegalStateException("unreachable")
     }
-    broadcast(topk.filter(col("score") >= threshold)
-        .select(col("doc_id"), col("score")))
-      .join(docs, Seq("doc_id"))
-      .withColumn("key", col("object_keys").getItem(0))
+    topk.select(col("doc_id"), col("score"))
+  }
+
+  /** [[annPage]] collected, thresholded on the driver and hydrated back to
+    * full documents (+`key`) with one read of the ≤ probes·k hit ids — the
+    * shared tail of every ANN-routed query method. Rows in rank order.
+    */
+  private def annHits(probes: Seq[(Long, Seq[Float])], k: Int, threshold: Double,
+                      m: SearchMode): (Seq[Row], StructType) = {
+    val page = annPage(probes, k, m)
+    val hits = page.collect().toSeq
+      .filter(r => Retrieval.compareScores(r.getDouble(1), threshold) >= 0)
+    Retrieval.hydratePage(documents, hits, page.schema("score"))
   }
 
   /** Search by a raw query vector (the reference's get_similar_documents
     * takes a query_vector, storage/base.py:311-315). ANN modes route through
     * the partition-pruned index paths; the k hit ids are then hydrated back
-    * to full documents with a broadcast join and deduped per object key,
-    * so every mode returns the same shape as [[search]].
+    * to full documents and deduped per object key, so every mode returns
+    * the same shape as [[search]]. Every mode collects its candidate page
+    * once and returns a DataFrame over the finished rows, in rank order.
     */
   def searchVector(queryVec: Seq[Float], k: Int = 5, threshold: Double = 0.0,
                    metric: Metric = Metric.Cosine,
@@ -548,10 +578,8 @@ final class VectorIndex(
       // top-k, pushed into the documents scan — results are the true top-k
       // of the filtered set (PRE-filtering; qdrant's `filter` +
       // `query_vector` semantics), never a post-filtered page
-      val hits = Retrieval.knn(documents.filter(filter.get), queryVec, k,
-        threshold, metric)
-      Retrieval.dedupByKey(hits.withColumn("key",
-        org.apache.spark.sql.functions.col("object_keys").getItem(0)))
+      Retrieval.finishPage(Retrieval.keyed(
+        Retrieval.knn(documents.filter(filter.get), queryVec, k, threshold, metric)))
     case SearchMode.Exact =>
       import org.apache.spark.sql.functions.col
       val hits = store match {
@@ -565,7 +593,7 @@ final class VectorIndex(
         // from the Spark scan: which hits survive an equal-score tie at
         // the k boundary is the server's choice (the wire carries only
         // `limit`, no doc_id tie-break) — ordering WITHIN the returned
-        // set stays deterministic via dedupByKey's (score, doc_id) sort.
+        // set stays deterministic via the (score, doc_id) rank order.
         case s: ServerSideSearch if metric == Metric.Cosine =>
           s.searchSimilar(queryVec, k,
               similarityThreshold = math.min(math.max(threshold, 0.0), 1.0))
@@ -573,11 +601,13 @@ final class VectorIndex(
         case _ =>
           Retrieval.knn(documents, queryVec, k, threshold, metric)
       }
-      Retrieval.dedupByKey(hits.withColumn("key", col("object_keys").getItem(0)))
+      Retrieval.finishPage(Retrieval.keyed(hits))
     case m =>
       require(metric == Metric.Cosine, s"ANN modes rerank by cosine; got $metric")
       filter match {
-        case None => Retrieval.dedupByKey(annHits(Seq((0L, queryVec)), k, threshold, m))
+        case None =>
+          val (rows, schema) = annHits(Seq((0L, queryVec)), k, threshold, m)
+          Retrieval.localFrame(spark, Retrieval.firstPerKey(rows, schema), schema)
         case Some(pred) =>
           // ANN + filter = POST-filtering with overfetch: the candidate page
           // is k·overfetch hits of the unfiltered index, filtered after
@@ -585,13 +615,12 @@ final class VectorIndex(
           // return < k rows — the documented ANN/filter trade-off (the
           // pre-filtering alternative is the exact path above, or
           // ivfTopKPruned(payloadFilter) when the payload rides in the index)
-          import org.apache.spark.sql.functions.{col, desc}
-          val page = annHits(Seq((0L, queryVec)), k * VectorIndex.AnnFilterOverfetch,
-              threshold, m)
-            .filter(pred)
-            .orderBy(desc("score"), col("doc_id").asc)
-            .limit(k)
-          Retrieval.dedupByKey(page)
+          val (rows, schema) = annHits(Seq((0L, queryVec)), k * VectorIndex.AnnFilterOverfetch,
+            threshold, m)
+          // the predicate runs over the local rows (no Spark job)
+          val kept = Retrieval.localFrame(spark, rows, schema).filter(pred).collect().toSeq
+          Retrieval.localFrame(spark,
+            Retrieval.firstPerKey(kept.sorted(Retrieval.byRank(schema)).take(k), schema), schema)
       }
   }
 
@@ -608,13 +637,14 @@ final class VectorIndex(
     case SearchMode.Exact =>
       Retrieval.findSimilar(documents, objectKey, k, threshold, config.metric, includeSelf)
     case m =>
-      import org.apache.spark.sql.functions.{array_contains, col, lit}
+      import org.apache.spark.sql.functions.{array_contains, col}
       val probes = documents.filter(array_contains(col("object_keys"), objectKey))
         .select(col("doc_id"), col("vector")).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
       require(probes.nonEmpty, s"no documents found for object key $objectKey")
-      val deduped = Retrieval.dedupByKey(annHits(probes, k, threshold, m))
-      if (includeSelf) deduped else deduped.filter(col("key") =!= lit(objectKey))
+      val (rows, schema) = annHits(probes, k, threshold, m)
+      Retrieval.localFrame(spark, Retrieval.excludeKey(
+        Retrieval.firstPerKey(rows, schema), schema, objectKey, includeSelf), schema)
   }
 
   /** RAG query; ANN modes retrieve through the pruned index. Reference
@@ -643,16 +673,8 @@ final class VectorIndex(
 
   private def annRagPrompt(question: String, sourcesLimit: Int, threshold: Double,
                            m: SearchMode): (Seq[graft.embed.ChatMessage], DataFrame) = {
-    import org.apache.spark.sql.functions.{col, desc}
-    val qv = backend.embedOne(question).toSeq
-    val hits = annHits(Seq((0L, qv)), sourcesLimit, threshold, m)
-    val context = hits.orderBy(desc("score"), col("doc_id").asc)
-      .select("content").collect().map(_.getString(0)).mkString("\n")
-    val messages = Seq(
-      graft.embed.ChatMessage("system", Retrieval.DefaultSystemPrompt),
-      graft.embed.ChatMessage("system", context),
-      graft.embed.ChatMessage("user", question))
-    (messages, Retrieval.dedupByKey(hits))
+    val (rows, schema) = annHits(Seq((0L, backend.embedOne(question).toSeq)), sourcesLimit, threshold, m)
+    Retrieval.ragFinish(spark, rows, schema, question, Retrieval.DefaultSystemPrompt)
   }
 }
 

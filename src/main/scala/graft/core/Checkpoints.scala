@@ -56,6 +56,15 @@ object Checkpoints {
     case None => ds.localCheckpoint(eager)
   }
 
+  /** Materialize `ds` eagerly, hand it to `consume`, and release it once
+    * `consume` returns — for a per-call intermediate that `consume` reads to
+    * completion (what it returns must not reference the checkpoint).
+    */
+  def scoped[T, R](ds: Dataset[T])(consume: Dataset[T] => R): R = {
+    val m = materializeIn(ds, eager = true, reliableDir)
+    try consume(m) finally release(m)
+  }
+
   /** Drop the storage behind a checkpoint'd Dataset: the block-manager
     * blocks of a local checkpoint, and the files of a reliable one —
     * `spark.cleaner.referenceTracking.cleanCheckpoints` cannot be set once

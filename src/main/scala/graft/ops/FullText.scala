@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
+import graft.core.Checkpoints
 import graft.core.Checkpoints.MaterializeSyntax
 import graft.functions.{textfn, textkernel, TextKernel}
 
@@ -113,26 +114,12 @@ object FullText {
 
   // ------------------------------------------------------------- BM25
 
-  /** Okapi BM25 per-(doc, query-term) partial scores — shared by
-    * [[bm25TopK]] and tested directly. Returns one row per matched
+  /** Okapi BM25 per-(doc, query-term) partial scores over the materialized
+    * per-doc term counts `pre` ([[bm25Page]]). Returns one row per matched
     * (doc, term): (id, term, tf, dl, df, score_micro).
     */
-  private def bm25TermScores(docs: DataFrame, query: String, k1: Double, b: Double,
-                             textCol: String, idCol: String): DataFrame = {
-    val terms = queryTerms(query).distinct
-    require(terms.nonEmpty, s"query has no tokens: '$query'")
-    // r20 (guide §2.4 / §4.1): ONE compiled-kernel pass over the corpus —
-    // multi_marker_hits with one single-term set per query term counts each
-    // term's occurrences AND the total token count (dl) together (same
-    // TextKernel.tokens stream word_tokens wraps, so tf/dl are
-    // value-identical to the old explode+filter+agg). The old plan
-    // tokenized the corpus TWICE (the corpus-stats agg and the tf explode
-    // re-derived `w` per consumer); the per-doc hit row here is ≤
-    // |terms|+1 longs, materialized per call, and both consumers read it.
-    val pre = docs.select(col(idCol),
-        textkernel.multi_marker_hits(col(textCol), terms.map(Seq(_)),
-          includeTotal = true).as("__h"))
-      .materialize(true)
+  private def bm25TermScores(pre: DataFrame, terms: Seq[String], k1: Double, b: Double,
+                             idCol: String): DataFrame = {
     val dlCol = col("__h").getItem(terms.size).cast(LongType)
     // corpus stats: ONE tiny broadcast row; avgdl division is IEEE-exact given
     // the exact integer inputs, so both engines compute the same double
@@ -161,17 +148,44 @@ object FullText {
   /** BM25 top-k for a query string: Σ over matched query terms of
     * idf·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)), idf = ln(1+(N−df+0.5)/(df+0.5)).
     * Docs matching no term never enter the plan. Returns
-    * (doc_id, n_terms, score) via TakeOrderedAndProject.
+    * (doc_id, n_terms, score), collected from one TakeOrderedAndProject
+    * page: a DataFrame over the ≤ k local rows, in rank order.
     */
   def bm25TopK(docs: DataFrame, query: String, k: Int = 10,
                k1: Double = 1.2, b: Double = 0.75,
                textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    bm25TermScores(docs, query, k1, b, textCol, idCol)
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_terms"),
-        round(sum(col("score_micro")) / Micro, 6).as("score"))
-      .orderBy(desc("score"), col(idCol).asc)
-      .limit(k)
+    bm25Page(docs, query, k, k1, b, textCol, idCol) { page =>
+      docs.sparkSession.createDataFrame(java.util.Arrays.asList(page.collect(): _*), page.schema)
+    }
+
+  /** The BM25 top-k page of [[bm25TopK]], handed to `consume` while the
+    * per-doc term counts it reads are materialized; they are released when
+    * `consume` returns.
+    */
+  private[graft] def bm25Page[R](docs: DataFrame, query: String, k: Int, k1: Double, b: Double,
+                                 textCol: String, idCol: String)(consume: DataFrame => R): R = {
+    val terms = queryTerms(query).distinct
+    require(terms.nonEmpty, s"query has no tokens: '$query'")
+    // r20 (guide §2.4 / §4.1): ONE compiled-kernel pass over the corpus —
+    // multi_marker_hits with one single-term set per query term counts each
+    // term's occurrences AND the total token count (dl) together (same
+    // TextKernel.tokens stream word_tokens wraps, so tf/dl are
+    // value-identical to the old explode+filter+agg). The old plan
+    // tokenized the corpus TWICE (the corpus-stats agg and the tf explode
+    // re-derived `w` per consumer); the per-doc hit row here is ≤
+    // |terms|+1 longs, materialized per call, and both consumers read it.
+    val hits = docs.select(col(idCol),
+      textkernel.multi_marker_hits(col(textCol), terms.map(Seq(_)),
+        includeTotal = true).as("__h"))
+    Checkpoints.scoped(hits) { pre =>
+      consume(bm25TermScores(pre, terms, k1, b, idCol)
+        .groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_terms"),
+          round(sum(col("score_micro")) / Micro, 6).as("score"))
+        .orderBy(desc("score"), col(idCol).asc)
+        .limit(k))
+    }
+  }
 
   // ------------------------------------------- persisted inverted index
 
@@ -309,9 +323,13 @@ object FullText {
         hashEmbedCosine(docs, query, dims, textCol, idCol)
           .orderBy(desc("cos"), col(idCol).asc).limit(kCand))
       .select(col(idCol), col("vec_rank"))
-    val bmTop = posRank("bm25_rank")(
-        bm25TopK(docs, query, kCand, textCol = textCol, idCol = idCol))
-      .select(col(idCol), col("bm25_rank"))
+    // the BM25 page is already local and in rank order: rank it on the driver
+    val bmPage = bm25TopK(docs, query, kCand, textCol = textCol, idCol = idCol)
+      .select(col(idCol))
+    val bmTop = docs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(bmPage.collect().zipWithIndex
+        .map { case (r, i) => Row(r.get(0), i + 1) }: _*),
+      StructType(Seq(bmPage.schema(idCol), StructField("bm25_rank", IntegerType, nullable = false))))
     vecTop.join(bmTop, Seq(idCol), "full_outer")
       .withColumn("rrf_score", round(
         coalesce(lit(1.0) / (col("vec_rank") + rrfK), lit(0.0)) +

@@ -200,22 +200,34 @@ object Hnsw {
                       probes: Seq[(Long, Seq[Float])], k: Int = 10, ef: Int = 32,
                       delta: Option[DataFrame] = None,
                       itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame =
-    hnswTopKResolved(spark.read.parquet(graft.api.VersionedDir.resolve(spark, path)),
-      probes, k, ef, delta, deltaIdSet(delta, itemId), itemId, itemVec)
+    SimilaritySearch.topKByProbe(
+      hnswCandidates(shardGraph(spark.read.parquet(graft.api.VersionedDir.resolve(spark, path))),
+        probes, k, ef, delta, deltaIdSet(delta, itemId), itemId, itemVec),
+      k, "qid", itemId)
 
   /** The ids a delta overlay suppresses in graph results (one collect). */
   private[graft] def deltaIdSet(delta: Option[DataFrame], itemId: String): Set[Long] =
     delta.fold(Set.empty[Long])(
       _.select(col(itemId).cast("long")).collect().map(_.getLong(0)).toSet)
 
-  /** [[hnswTopKIndexed]] over an already-resolved graph relation `raw`,
-    * with the delta's id set already collected ([[deltaIdSet]]).
+  /** A persisted graph relation ([[hnswIndexWrite]]) exchanged by shard, so
+    * each partition holds whole shards — what [[hnswCandidates]] searches.
     */
-  private[graft] def hnswTopKResolved(raw: DataFrame, probes: Seq[(Long, Seq[Float])],
-                                      k: Int, ef: Int, delta: Option[DataFrame],
-                                      deltaIds: Set[Long],
-                                      itemId: String, itemVec: String): DataFrame = {
-    val spark = raw.sparkSession
+  private[graft] def shardGraph(raw: DataFrame): DataFrame =
+    raw.select(col("shard"), col("pos"), col("vec_id"),
+        col("level"), col("embedding"), col("nbrs"))
+      .repartition(col("shard"))
+
+  /** The scored candidates of [[hnswTopKIndexed]] — (qid, itemId, score),
+    * ≤ k live beam hits per (probe, shard) plus every live delta row —
+    * over a shard-partitioned graph relation ([[shardGraph]]), with the
+    * delta's id set already collected ([[deltaIdSet]]).
+    */
+  private[graft] def hnswCandidates(graph: DataFrame, probes: Seq[(Long, Seq[Float])],
+                                    k: Int, ef: Int, delta: Option[DataFrame],
+                                    deltaIds: Set[Long],
+                                    itemId: String, itemVec: String): DataFrame = {
+    val spark = graph.sparkSession
     require(probes.size <= 4096, s"probe batch too large: ${probes.size}")
     val probeArr = probes.map { case (qid, qv) => (qid, qv.toArray) }.toArray
     val probesB = spark.sparkContext.broadcast(probeArr)
@@ -225,9 +237,7 @@ object Hnsw {
       StructField("qid", LongType), StructField(itemId, LongType),
       StructField("score", DoubleType)))
     implicit val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    val graphBeams = raw.select(col("shard"), col("pos"), col("vec_id"),
-        col("level"), col("embedding"), col("nbrs"))
-      .repartition(col("shard"))
+    val graphBeams = graph
       .mapPartitions { rows =>
         // a partition may hold several whole shards (hash partitioning) —
         // group, reassemble each graph from its stored positions, search
@@ -271,7 +281,7 @@ object Hnsw {
           val efEff = effectiveEf(ef, k, n)
           probesB.value.iterator.flatMap { case (qid, qv) =>
             // beam at the population-scaled width; only the top-k live
-            // rows cross the shuffle into the merge
+            // rows leave the task for the merge
             g.search(qv, efEff).iterator
               .filter { case (idx, _) => !stale.contains(ids(idx)) }
               .take(k)
@@ -281,20 +291,19 @@ object Hnsw {
       }
     val withDelta = delta.fold(graphBeams: DataFrame) { d =>
       import spark.implicits._
-      val probeDf = probeArr.toSeq.map { case (qid, qv) => (qid, qv.toSeq) }
+      lazy val probeDf = probeArr.toSeq.map { case (qid, qv) => (qid, qv.toSeq) }
         .toDF("qid", "qv").select(col("qid"), col("qv").cast("array<float>"))
       // VectorIndex-style sidecars carry a `deleted` tombstone column
       // (null vector): every delta id — live or tombstoned — suppresses
       // its stale graph row above; only LIVE rows score here
       val live = if (d.columns.contains("deleted")) d.filter(!col("deleted")) else d
-      val deltaScored = live.select(col(itemId).cast("long"), col(itemVec))
-        .crossJoin(broadcast(probeDf))
+      val deltaScored = SimilaritySearch.withProbes(
+          live.select(col(itemId).cast("long"), col(itemVec)), probes, probeDf, key = None)
         .select(col("qid"), col(itemId),
           graft.functions.vector.vec_cosine(col(itemVec), col("qv")).cast("double").as("score"))
       graphBeams.unionByName(deltaScored)
     }
-    SimilaritySearch.topKByProbe(
-      withDelta.withColumn("score", round(col("score"), 6)), k, "qid", itemId)
+    withDelta.withColumn("score", round(col("score"), 6))
   }
 
   // ---- in-memory per-shard graph ----

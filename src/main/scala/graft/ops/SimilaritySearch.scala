@@ -164,8 +164,8 @@ object SimilaritySearch {
       .select(col(probeId), col(probeVec), col("__pb"), explode(typedLit(masks)).as("__m"))
       .withColumn("__bkt", col("__pb").bitwiseXOR(col("__m")))
       .drop("__m", "__pb")
-    rerank(bucketed.join(broadcast(probed), Seq("__bkt")),
-      k, itemId, itemVec, probeId, probeVec)
+    rerank(scoreCandidates(bucketed.join(broadcast(probed), Seq("__bkt")),
+      itemId, itemVec, probeId, probeVec), k, probeId, itemId, singleProbe = false)
   }
 
   /** Query a [[lshIndexWrite]]-written index with partition pruning: the
@@ -181,17 +181,19 @@ object SimilaritySearch {
                     delta: Option[DataFrame] = None,
                     payloadFilter: Option[Column] = None): DataFrame =
     // pin the concrete version dir (plain dirs resolve to themselves)
-    lshTopKResolved(spark.read.parquet(graft.api.VersionedDir.resolve(spark, indexPath)),
-      probes, dims, k, bits, maxHamming, itemId, itemVec, delta, payloadFilter)
+    rerank(lshCandidates(spark.read.parquet(graft.api.VersionedDir.resolve(spark, indexPath)),
+      probes, dims, bits, maxHamming, itemId, itemVec, delta, payloadFilter),
+      k, "qid", itemId, singleProbe = probes.size == 1)
 
-  /** [[lshTopKPruned]] over an already-resolved bucket-partitioned relation
-    * `raw` (one version directory's read).
+  /** The scored candidates of [[lshTopKPruned]] — (qid, itemId, score) for
+    * every item in a probe's Hamming ball — over an already-resolved
+    * bucket-partitioned relation `raw` (one version directory's read).
     */
-  private[graft] def lshTopKResolved(raw: DataFrame, probes: Seq[(Long, Seq[Float])],
-                                     dims: Int, k: Int, bits: Int, maxHamming: Int,
-                                     itemId: String, itemVec: String,
-                                     delta: Option[DataFrame],
-                                     payloadFilter: Option[Column]): DataFrame = {
+  private[graft] def lshCandidates(raw: DataFrame, probes: Seq[(Long, Seq[Float])],
+                                   dims: Int, bits: Int, maxHamming: Int,
+                                   itemId: String, itemVec: String,
+                                   delta: Option[DataFrame],
+                                   payloadFilter: Option[Column]): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
     require(payloadFilter.isEmpty || delta.isEmpty,
@@ -202,7 +204,7 @@ object SimilaritySearch {
       val pb = lshBucketLocal(qv, dims, bits)
       masks.map(m => (qid, qv, pb ^ m))
     }
-    val probeDf = expanded.toDF("qid", "qv", "__bkt")
+    lazy val probeDf = expanded.toDF("qid", "qv", "__bkt")
       .select(col("qid"), col("qv").cast("array<float>"), col("__bkt"))
     // partition-column type inference reads small bucket dirs back as int;
     // filter with literals of the inferred type so the In stays a bare
@@ -219,8 +221,7 @@ object SimilaritySearch {
       .drop("bucket")
     val live = mergeDelta(index, delta, "bucket", "__bkt",
       expanded.map(_._3).distinct, itemId, itemVec)
-    rerank(live.join(broadcast(probeDf), Seq("__bkt")),
-      k, itemId, itemVec, "qid", "qv", singleProbe = probes.size == 1)
+    scoreCandidates(withProbes(live, probes, probeDf, Some("__bkt")), itemId, itemVec, "qid", "qv")
   }
 
   /** New-wins overlay of an incremental-maintenance delta onto a pruned ANN
@@ -245,28 +246,51 @@ object SimilaritySearch {
         .unionByName(adds)
   }
 
-  /** Shared exact-rerank tail: cosine score, per-probe top-k window.
-    *
-    * `singleProbe = true` (a one-element probe batch, e.g. the public
-    * `VectorIndex.search`) swaps the window — which would funnel EVERY
-    * candidate into one task — for `orderBy+limit`, which Catalyst plans as
-    * TakeOrderedAndProject: per-partition top-k, driver merges partitions×k
-    * rows. The trailing rank window then runs over k rows only.
+  /** Attach candidate rows to their probe's (qid, qv). A single probe's
+    * values ride as literals — every pruned row is its candidate, so there
+    * is no join and no broadcast job; a batch joins its broadcast probe
+    * rows on `key` (cross-joins them when `key` is None).
     */
-  private def rerank(joined: DataFrame, k: Int, itemId: String, itemVec: String,
-                     probeId: String, probeVec: String,
-                     singleProbe: Boolean = false): DataFrame = {
-    val scored = joined.select(col(probeId), col(itemId),
+  private[graft] def withProbes(cands: DataFrame, probes: Seq[(Long, Seq[Float])],
+                                probeDf: => DataFrame, key: Option[String]): DataFrame =
+    probes match {
+      case Seq((qid, qv)) =>
+        key.fold(cands)(cands.drop).withColumn("qid", lit(qid)).withColumn("qv", typedLit(qv))
+      case _ =>
+        key.fold(cands.crossJoin(broadcast(probeDf)))(k => cands.join(broadcast(probeDf), Seq(k)))
+    }
+
+  /** Exact rerank score of joined (item, probe) candidate pairs:
+    * (probeId, itemId, score), the cosine rounded to 6 dp.
+    */
+  private def scoreCandidates(joined: DataFrame, itemId: String, itemVec: String,
+                              probeId: String, probeVec: String): DataFrame =
+    joined.select(col(probeId), col(itemId),
       round(vec_cosine(col(itemVec), col(probeVec)), 6).as("score"))
+
+  /** The top-k page of scored (qid, itemId, score) candidates. A single
+    * probe's is `orderBy+limit`, which Catalyst plans as
+    * TakeOrderedAndProject — per-partition top-k, the driver merges
+    * partitions×k rows — where a window would funnel EVERY candidate into
+    * one task; a batch's is the bounded per-probe TopK aggregator
+    * ([[topKByProbe]], which also adds `rank`).
+    */
+  private[graft] def topKPage(scored: DataFrame, k: Int, nProbes: Int, itemId: String): DataFrame =
+    if (nProbes == 1) scored.orderBy(desc("score"), col(itemId).asc).limit(k)
+    else topKByProbe(scored, k, "qid", itemId)
+
+  /** Shared exact-rerank tail: the [[topKPage]] with a per-probe `rank`.
+    * For a single probe the rank window runs over the k limited rows only.
+    */
+  private def rerank(scored: DataFrame, k: Int, probeId: String, itemId: String,
+                     singleProbe: Boolean): DataFrame =
     if (singleProbe) {
-      val topk = scored.orderBy(desc("score"), col(itemId).asc).limit(k)
       // partitioned by the (single) probe id: operates on the k limited
       // rows either way, but keeps the no-unpartitioned-window invariant
       // (and the WindowExec warning) out of the engine entirely
       val w = Window.partitionBy(probeId).orderBy(desc("score"), col(itemId).asc)
-      topk.withColumn("rank", row_number().over(w))
+      topKPage(scored, k, 1, itemId).withColumn("rank", row_number().over(w))
     } else topKByProbe(scored, k, probeId, itemId)
-  }
 
   /** Auto cell count for [[ivfAssign]]: ≈ √N (the FAISS `IVF√N` heuristic —
     * balances cells-scanned-per-probe against items-per-cell, keeping BOTH
@@ -548,8 +572,8 @@ object SimilaritySearch {
     // filtered set within the probed cells (vs post-filtering a top-k page,
     // which can return < k rows for selective filters).
     val items = candidateFilter.fold(assigned)(assigned.filter)
-    rerank(items.join(broadcast(probeCells), Seq("cell")),
-      k, itemId, itemVec, probeId, probeVec)
+    rerank(scoreCandidates(items.join(broadcast(probeCells), Seq("cell")),
+      itemId, itemVec, probeId, probeVec), k, probeId, itemId, singleProbe = false)
   }
 
   /** Query an [[ivfIndexWrite]]-written index with partition pruning —
@@ -563,18 +587,20 @@ object SimilaritySearch {
                     itemId: String = "vec_id", itemVec: String = "embedding",
                     delta: Option[DataFrame] = None,
                     payloadFilter: Option[Column] = None): DataFrame =
-    ivfTopKResolved(spark.read.parquet(graft.api.VersionedDir.resolve(spark, indexPath)),
-      collectCentroids(centroids), probes, k, nProbe, itemId, itemVec, delta, payloadFilter)
+    rerank(ivfCandidates(spark.read.parquet(graft.api.VersionedDir.resolve(spark, indexPath)),
+      collectCentroids(centroids), probes, nProbe, itemId, itemVec, delta, payloadFilter),
+      k, "qid", itemId, singleProbe = probes.size == 1)
 
-  /** [[ivfTopKPruned]] over an already-resolved cell-partitioned relation
-    * `raw` and its version's collected centroids.
+  /** The scored candidates of [[ivfTopKPruned]] — (qid, itemId, score) for
+    * every item in a probe's nProbe nearest cells — over an already-resolved
+    * cell-partitioned relation `raw` and its version's collected centroids.
     */
-  private[graft] def ivfTopKResolved(raw: DataFrame,
-                                     centroids: (Array[Array[Float]], Array[Long]),
-                                     probes: Seq[(Long, Seq[Float])], k: Int, nProbe: Int,
-                                     itemId: String, itemVec: String,
-                                     delta: Option[DataFrame],
-                                     payloadFilter: Option[Column]): DataFrame = {
+  private[graft] def ivfCandidates(raw: DataFrame,
+                                   centroids: (Array[Array[Float]], Array[Long]),
+                                   probes: Seq[(Long, Seq[Float])], nProbe: Int,
+                                   itemId: String, itemVec: String,
+                                   delta: Option[DataFrame],
+                                   payloadFilter: Option[Column]): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
     require(payloadFilter.isEmpty || delta.isEmpty,
@@ -584,7 +610,7 @@ object SimilaritySearch {
     val expanded = probes.flatMap { case (qid, qv) =>
       nearestCellsLocal(qv, cvs, cids, nProbe).map(c => (qid, qv, c))
     }
-    val probeDf = expanded.toDF("qid", "qv", "__cell")
+    lazy val probeDf = expanded.toDF("qid", "qv", "__cell")
       .select(col("qid"), col("qv").cast("array<float>"), col("__cell"))
     val candCells: Seq[Any] = raw.schema("cell").dataType match {
       case org.apache.spark.sql.types.IntegerType => expanded.map(_._3.toInt).distinct
@@ -600,8 +626,7 @@ object SimilaritySearch {
       .withColumn("__cell", col("cell").cast("long")).drop("cell")
     val live = mergeDelta(index, delta, "cell", "__cell",
       expanded.map(_._3).distinct, itemId, itemVec)
-    rerank(live.join(broadcast(probeDf), Seq("__cell")),
-      k, itemId, itemVec, "qid", "qv", singleProbe = probes.size == 1)
+    scoreCandidates(withProbes(live, probes, probeDf, Some("__cell")), itemId, itemVec, "qid", "qv")
   }
 
   /** Driver-side twin of NearestCellsExpr (same distance accumulation and

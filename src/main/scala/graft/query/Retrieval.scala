@@ -1,8 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.core.Metric
 import graft.embed.{ChatBackend, ChatMessage, EmbeddingBackend}
@@ -88,33 +89,42 @@ object Retrieval {
   }
 
   /** search(q): embed the query (driver-side single call, reference
-    * storage/base.py:303-316) → KNN → dedup by first object key.
+    * storage/base.py:303-316) → KNN → dedup by first object key. The KNN
+    * page (≤ k full rows, one TakeOrderedAndProject job) is finished on
+    * the driver ([[finishPage]]).
     */
   def search(index: DataFrame, query: String, backend: EmbeddingBackend,
              k: Int = 5, threshold: Double = 0.0,
-             metric: Metric = Metric.Cosine): DataFrame = {
-    val qv = backend.embedOne(query).toSeq
-    val hits = knn(index, qv, k, threshold, metric)
-      .withColumn("key", col("object_keys").getItem(0))
-    dedupByKey(hits)
-  }
+             metric: Metric = Metric.Cosine): DataFrame =
+    finishPage(keyed(knn(index, backend.embedOne(query).toSeq, k, threshold, metric)))
 
   /** find_similar(obj): per-chunk KNN of the probe object's own chunks,
     * union, dedup, exclude self (reference storage/base.py:278-301 — which
     * loops one similarity query per chunk). Here the probe chunks stay a
-    * DataFrame and are BROADCAST into a single index scan: score every
-    * (probe-chunk, doc) pair over a NARROW (doc_id, vector) projection,
-    * bounded per-chunk top-k via [[graft.ops.SimilaritySearch.topKByProbe]]
-    * (partial aggregation keeps ≤ k rows per chunk per partition — the one
-    * shuffle carries O(chunks·k), where a window row_number would shuffle
-    * every row passing the threshold, i.e. the scored corpus), then a
-    * broadcast join of the ≤ chunks·k hit ids hydrates full documents for
-    * the global first-per-key dedup. One narrow scan + one semi-join-shaped
-    * hydration scan, however many chunks the object has.
+    * DataFrame and are BROADCAST into a single index scan ([[similarPage]]);
+    * the ≤ chunks·k (doc_id, score) page is collected once, each doc keeps
+    * its best score, and one read of the hit ids hydrates full documents for
+    * the first-per-key dedup on the driver ([[hydratePage]]).
     */
   def findSimilar(index: DataFrame, probeKey: String, k: Int = 5,
                   threshold: Double = 0.0, metric: Metric = Metric.Cosine,
                   includeSelf: Boolean = false): DataFrame = {
+    val page = similarPage(index, probeKey, k, threshold, metric)
+    val (rows, schema) = hydratePage(index, page.collect().toSeq, page.schema("score"))
+    localFrame(index.sparkSession,
+      excludeKey(firstPerKey(rows, schema), schema, probeKey, includeSelf), schema)
+  }
+
+  /** The candidate page of [[findSimilar]]: score every (probe-chunk, doc)
+    * pair over a NARROW (doc_id, vector) projection, bounded per-chunk top-k
+    * via [[graft.ops.SimilaritySearch.topKByProbe]] (partial aggregation
+    * keeps ≤ k rows per chunk per partition — the one shuffle carries
+    * O(chunks·k), where a window row_number would shuffle every row passing
+    * the threshold, i.e. the scored corpus). Output (doc_id, score), one row
+    * per (chunk, hit).
+    */
+  private[graft] def similarPage(index: DataFrame, probeKey: String, k: Int,
+                                 threshold: Double, metric: Metric): DataFrame = {
     val probes = index
       .filter(array_contains(col("object_keys"), probeKey))
       .select(col("doc_id").as("__qid"), col("vector").as("__qv"))
@@ -122,14 +132,8 @@ object Retrieval {
       .select(col("__qid"), col("doc_id"),
         scoreColOf(col("vector"), col("__qv"), metric).as("score"))
       .filter(col("score") >= lit(threshold))
-    val topk = graft.ops.SimilaritySearch.topKByProbe(scored, k, "__qid", "doc_id")
-    // a doc hit by several probe chunks keeps its best score for the dedup
-    val hits = topk.groupBy(col("doc_id")).agg(max(col("score")).as("score"))
-    val keyed = broadcast(hits)
-      .join(index, Seq("doc_id"))
-      .withColumn("key", col("object_keys").getItem(0))
-    val deduped = dedupByKey(keyed)
-    if (includeSelf) deduped else deduped.filter(col("key") =!= lit(probeKey))
+    graft.ops.SimilaritySearch.topKByProbe(scored, k, "__qid", "doc_id")
+      .select(col("doc_id"), col("score"))
   }
 
   final case class QueryResponse(response: String, sources: DataFrame)
@@ -149,20 +153,12 @@ object Retrieval {
     * sources list — so two chunks of one object both contribute content.
     * `sourcesLimit` IS honored here — the reference accepts it but drops it
     * (base.py:197,208-212, quirk O4); divergence documented in SURVEY.md §7.
+    * Context and sources come from ONE collected KNN page.
     */
   def ragQuery(index: DataFrame, query: String, embedBackend: EmbeddingBackend,
                chatBackend: ChatBackend, sourcesLimit: Int = 5,
                threshold: Double = 0.0, systemPrompt: String = DefaultSystemPrompt): QueryResponse = {
-    val qv = embedBackend.embedOne(query).toSeq
-    val hits = knn(index, qv, sourcesLimit, threshold)
-      .withColumn("key", col("object_keys").getItem(0))
-    val context = hits.orderBy(desc("score"), col("doc_id").asc)
-      .select("content").collect().map(_.getString(0)).mkString("\n")
-    val sources = dedupByKey(hits)
-    val messages = Seq(
-      ChatMessage("system", systemPrompt),
-      ChatMessage("system", context),
-      ChatMessage("user", query))
+    val (messages, sources) = ragPrompt(index, query, embedBackend, sourcesLimit, threshold, systemPrompt)
     QueryResponse(chatBackend.chat(messages), sources)
   }
 
@@ -175,16 +171,133 @@ object Retrieval {
                      chatBackend: ChatBackend, sourcesLimit: Int = 5,
                      threshold: Double = 0.0,
                      systemPrompt: String = DefaultSystemPrompt): StreamingQueryResponse = {
-    val qv = embedBackend.embedOne(query).toSeq
-    val hits = knn(index, qv, sourcesLimit, threshold)
-      .withColumn("key", col("object_keys").getItem(0))
-    val context = hits.orderBy(desc("score"), col("doc_id").asc)
-      .select("content").collect().map(_.getString(0)).mkString("\n")
-    val sources = dedupByKey(hits)
+    val (messages, sources) = ragPrompt(index, query, embedBackend, sourcesLimit, threshold, systemPrompt)
+    StreamingQueryResponse(chatBackend.chatStream(messages), sources)
+  }
+
+  private def ragPrompt(index: DataFrame, query: String, embedBackend: EmbeddingBackend,
+                        sourcesLimit: Int, threshold: Double,
+                        systemPrompt: String): (Seq[ChatMessage], DataFrame) = {
+    val page = keyed(knn(index, embedBackend.embedOne(query).toSeq, sourcesLimit, threshold))
+    ragFinish(index.sparkSession, page.collect().toSeq, page.schema, query, systemPrompt)
+  }
+
+  /** The RAG prompt and sources of one ranked chunk page: the context is
+    * every chunk's content in rank order, the sources the page deduped per
+    * object key.
+    */
+  private[graft] def ragFinish(spark: SparkSession, rows: Seq[Row], schema: StructType,
+                               query: String, systemPrompt: String): (Seq[ChatMessage], DataFrame) = {
+    val content = schema.fieldIndex("content")
+    val context = rows.sorted(byRank(schema)).map(_.getString(content)).mkString("\n")
     val messages = Seq(
       ChatMessage("system", systemPrompt),
       ChatMessage("system", context),
       ChatMessage("user", query))
-    StreamingQueryResponse(chatBackend.chatStream(messages), sources)
+    (messages, localFrame(spark, firstPerKey(rows, schema), schema))
   }
+
+  // ---- candidate-page finish -------------------------------------------
+  //
+  // Every query path collects its bounded candidate page once (≤ probes·k
+  // rows — the TakeOrderedAndProject and TopK-aggregator results already
+  // land on the driver) and finishes it here: threshold, best score per
+  // doc, first-per-key dedup and self-exclusion run over those local rows,
+  // with Spark's ordering, and the result is a DataFrame over the rows.
+
+  /** The first object key of each hit — the dedup key. */
+  private[graft] def keyed(hits: DataFrame): DataFrame =
+    hits.withColumn("key", col("object_keys").getItem(0))
+
+  /** Spark's order of two doubles (`SQLOrderingUtil.compareDoubles`): -0.0
+    * equals 0.0, NaN equals itself and sorts above every other value. A
+    * `score >= threshold` filter is `compareScores(score, threshold) >= 0`.
+    */
+  private[graft] def compareScores(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  private def doubleAt(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue
+
+  /** Rank order of page rows: score descending, then doc_id ascending —
+    * [[dedupByKey]]'s window order and [[knn]]'s sort.
+    */
+  private[graft] def byRank(schema: StructType): Ordering[Row] = {
+    val s = schema.fieldIndex("score")
+    val d = schema.fieldIndex("doc_id")
+    (a: Row, b: Row) => {
+      val c = compareScores(doubleAt(b, s), doubleAt(a, s))
+      if (c != 0) c
+      else java.lang.Long.compare(a.get(d).asInstanceOf[Number].longValue,
+        b.get(d).asInstanceOf[Number].longValue)
+    }
+  }
+
+  /** The first row per `key` in rank order — [[dedupByKey]] over a
+    * collected page — returned in rank order. A null key is one key, as in
+    * the window's partitioning.
+    */
+  private[graft] def firstPerKey(rows: Seq[Row], schema: StructType): Seq[Row] = {
+    val k = schema.fieldIndex("key")
+    val seen = new java.util.HashSet[Any]()
+    rows.sorted(byRank(schema)).filter(r => seen.add(r.get(k)))
+  }
+
+  /** find_similar's self-exclusion, `key =!= probeKey` (a null key fails it). */
+  private[graft] def excludeKey(rows: Seq[Row], schema: StructType, probeKey: String,
+                                includeSelf: Boolean): Seq[Row] =
+    if (includeSelf) rows
+    else {
+      val k = schema.fieldIndex("key")
+      rows.filter(r => r.get(k) != null && r.get(k) != probeKey)
+    }
+
+  /** Collect a page of full rows (with `score` and `key`) and finish it:
+    * first per key, in rank order.
+    */
+  private[graft] def finishPage(page: DataFrame): DataFrame =
+    localFrame(page.sparkSession, firstPerKey(page.collect().toSeq, page.schema), page.schema)
+
+  /** Hydrate a collected (doc_id, score) page with ONE read of its ids:
+    * rows shaped like `page.join(docs, Seq("doc_id"))` plus `key` — doc_id,
+    * score, the other document columns, key — in rank order, one per
+    * (page row, document row) pair. A doc hit by several probes keeps its
+    * best score. Scores are thresholded before this by the caller.
+    */
+  private[graft] def hydratePage(docs: DataFrame, page: Seq[Row],
+                                 scoreField: StructField): (Seq[Row], StructType) = {
+    val best = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
+    page.foreach { r =>
+      val id = r.getLong(0)
+      val s = doubleAt(r, 1)
+      if (best.get(id).forall(compareScores(s, _) > 0)) best(id) = s
+    }
+    val docSchema = docs.schema
+    val idIdx = docSchema.fieldIndex("doc_id")
+    val keysIdx = docSchema.fieldIndex("object_keys")
+    val others = docSchema.fields.indices.filter(_ != idIdx)
+    val keyType = docSchema("object_keys").dataType match {
+      case org.apache.spark.sql.types.ArrayType(t, _) => t
+      case t => throw new IllegalArgumentException(s"object_keys must be an array, got $t")
+    }
+    val schema = StructType(docSchema(idIdx) +: scoreField +: others.map(docSchema.fields(_)) :+
+      StructField("key", keyType, nullable = true))
+    val docRows =
+      if (best.isEmpty) Array.empty[Row]
+      else docs.filter(col("doc_id").isin(best.keys.toSeq: _*)).collect()
+    val byId = docRows.groupBy(_.get(idIdx).asInstanceOf[Number].longValue)
+    val rows = best.toSeq.flatMap { case (id, score) =>
+      byId.getOrElse(id, Array.empty[Row]).toSeq.map { d =>
+        val keys = d.getSeq[Any](keysIdx)
+        val key = if (keys == null || keys.isEmpty) null else keys.head
+        Row.fromSeq(d.get(idIdx) +: score +: others.map(d.get) :+ key)
+      }
+    }
+    (rows.sorted(byRank(schema)), schema)
+  }
+
+  /** A DataFrame over rows already on the driver (a LocalRelation:
+    * collecting, projecting or filtering it runs no Spark job).
+    */
+  private[graft] def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 }

@@ -1,6 +1,7 @@
 package graft.api
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -201,14 +202,16 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(lshFull == exact)
     assert(ivfFull == exact)
 
-    // narrow probe ⇒ the scan carries a NON-EMPTY partition filter
+    // narrow probe ⇒ the candidate page's scan carries a NON-EMPTY
+    // partition filter, and the page's top-k is TakeOrderedAndProject at
+    // the plan root with no window (the search finishes on the driver)
     val nonEmptyPf = "PartitionFilters: \\[[^\\]]".r
-    val lshPlan = idx.search(q, k = 5, mode = SearchMode.Lsh(4, 1))
-      .queryExecution.executedPlan.toString
-    assert(nonEmptyPf.findFirstIn(lshPlan).isDefined, s"no partition filter in:\n$lshPlan")
-    val ivfPlan = idx.search(q, k = 5, mode = SearchMode.Ivf(4, 2, 1))
-      .queryExecution.executedPlan.toString
-    assert(nonEmptyPf.findFirstIn(ivfPlan).isDefined, s"no partition filter in:\n$ivfPlan")
+    val qv = Seq((0L, idx.backend.embedOne(q).toSeq))
+    for (m <- Seq(SearchMode.Lsh(4, 1), SearchMode.Ivf(4, 2, 1))) {
+      val p = idx.annPage(qv, 5, m).queryExecution.executedPlan.toString
+      assert(nonEmptyPf.findFirstIn(p).isDefined, s"no partition filter in:\n$p")
+      assert(p.contains("TakeOrderedAndProject") && !p.contains("Window"), p)
+    }
   }
 
   test("Sq/Bq modes: full-refine parity with exact search; mutations ride the delta overlay") {
@@ -288,8 +291,8 @@ class VectorIndexSpec extends AnyFunSuite {
 
     // narrow probe: static partition filter on the CODES scan, and that
     // scan must not read a vector column (codes are the 32×-smaller read)
-    val narrow = idx.search(q, k = 5,
-      mode = SearchMode.IvfPq(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1))
+    val narrow = idx.annPage(Seq((0L, idx.backend.embedOne(q).toSeq)), 5,
+      SearchMode.IvfPq(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1))
     val p = narrow.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(p).isDefined, s"no partition filter in:\n$p")
     val codesScan = p.linesIterator.find(l => l.contains("__ann_ivfpq")).getOrElse("")
@@ -315,8 +318,8 @@ class VectorIndexSpec extends AnyFunSuite {
 
     // narrow probe: static partition filter on the residual-codes scan,
     // and that scan must not read a vector column
-    val narrow = idx.search(q, k = 5,
-      mode = SearchMode.RpqIvf(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1))
+    val narrow = idx.annPage(Seq((0L, idx.backend.embedOne(q).toSeq)), 5,
+      SearchMode.RpqIvf(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1))
     val p = narrow.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(p).isDefined, s"no partition filter in:\n$p")
     val codesScan = p.linesIterator.find(_.contains("__ann_rpq")).getOrElse("")
@@ -544,32 +547,180 @@ class VectorIndexSpec extends AnyFunSuite {
   }
 
   // a repeated call on an unchanged index must not resolve the version
-  // again: no file-listing / schema-inference job, no side-table collect
+  // again (no file-listing / schema-inference job, no side-table collect),
+  // and each call stops at its candidate page: one top-k collect, one
+  // hydration read by id, the rest on the driver
   test("repeated searches on an unchanged index launch only their own execution's jobs") {
     val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
     val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 16)
     val idx = annIndex("jobs", Seq(ivf, hnsw))
     idx.rebuild(annSource)
     val q = "document number 17 about topic3 detail17"
-    idx.search(q, k = 5).collect()
-    assert(jobsDuring(idx.search(q, k = 5).collect()) == 1, "exact search")
+    idx.search(q, k = 5)
+    assert(jobsDuring(idx.search(q, k = 5)) == 1, "exact search")
+    assert(jobsDuring(idx.query(q, sourcesLimit = 5)) == 1, "query")
+    assert(jobsDuring(idx.findSimilar("page:17", k = 5)) <= 4, "exact findSimilar")
+    val done = idx.search(q, k = 5)
+    assert(jobsDuring(done.collect()) == 0, "collect() on a returned result")
     // with a pending delta on every root, so the overlays and the HNSW
     // delta-id set are resolved once too
     for (pending <- Seq(false, true)) {
       if (pending) idx.upsert(graft.pipeline.IndexBuild.buildDocuments(
         Seq((100L, "completely new page about quasars")).toDF("id", "body"),
         idx.config, idx.backend, "page", "id"))
+      // pending deltas add their merge-on-read work (the ANN overlay's
+      // shadowing join and the document store's) to every call
+      val (searchJobs, similarJobs) = if (pending) (8, 13) else (2, 4)
       for (m <- Seq(ivf, hnsw)) {
-        idx.search(q, k = 5, mode = m).collect()
-        assert(jobsDuring(idx.search(q, k = 5, mode = m)) == 0, s"$m build, deltas=$pending")
-        // findSimilar collects its probe chunks, and nothing else, at build
-        idx.findSimilar("page:17", k = 5, mode = m).collect()
-        val probeJobs = jobsDuring(idx.documents.filter(array_contains(col("object_keys"), "page:17"))
-          .select("doc_id", "vector").collect())
-        assert(jobsDuring(idx.findSimilar("page:17", k = 5, mode = m)) == probeJobs,
-          s"$m findSimilar build, deltas=$pending")
+        idx.search(q, k = 5, mode = m)
+        assert(jobsDuring(idx.search(q, k = 5, mode = m)) <= searchJobs, s"$m search, deltas=$pending")
+        idx.findSimilar("page:17", k = 5, mode = m)
+        assert(jobsDuring(idx.findSimilar("page:17", k = 5, mode = m)) <= similarJobs,
+          s"$m findSimilar, deltas=$pending")
+        val res = idx.findSimilar("page:17", k = 5, mode = m)
+        assert(jobsDuring(res.collect()) == 0, s"$m collect()")
       }
     }
+  }
+
+  // the HNSW graph is exchanged by shard once per index version and
+  // materialized; a replaced version's blocks are released, not left to GC
+  test("HNSW shard graph: materialized once per version, released when the version is replaced") {
+    val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 16)
+    val idx = annIndex("hnsw_graph", Seq(hnsw))
+    idx.rebuild(annSource)
+    val q = "document number 17 about topic3 detail17"
+    val qv = Seq((0L, idx.backend.embedOne(q).toSeq))
+    idx.search(q, k = 5, mode = hnsw)
+    val p = idx.annPage(qv, 5, hnsw).queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), s"HNSW page re-shuffles the graph:\n$p")
+    val sc = spark.sparkContext
+    val live = sc.getPersistentRDDs.size
+    // every persisted RDD stays referenced here, so only an explicit
+    // release — never a driver GC — can drop a replaced graph's blocks
+    val held = scala.collection.mutable.Buffer.empty[org.apache.spark.rdd.RDD[_]]
+    for (i <- 1 to 10) {
+      idx.upsert(graft.pipeline.IndexBuild.buildDocuments(
+        Seq((200L + i, s"new page $i about quasars")).toDF("id", "body"),
+        idx.config, idx.backend, "page", "id"))
+      assert(idx.search(q, k = 5, mode = hnsw).count() > 0)
+      held ++= sc.getPersistentRDDs.values
+      assert(sc.getPersistentRDDs.size <= live,
+        s"cycle $i: ${sc.getPersistentRDDs.size} persisted RDDs, was $live")
+    }
+    assert(held.nonEmpty)
+  }
+
+  // --- page finish: every query path against a brute-force reference ---
+
+  /** 40 chunks of 12 objects (several chunks per object), their vectors
+    * copies or jittered copies of 6 directions — so scores tie, also at the
+    * k-th place — plus zero vectors, written straight to the store.
+    */
+  private def pageIndex(modes: Seq[SearchMode]): (VectorIndex, Seq[Seq[Float]]) = {
+    val rnd = new scala.util.Random(11)
+    val dirs = Seq.fill(6)(Seq.fill(32)(rnd.nextGaussian().toFloat))
+    val docs = (0 until 40).map { i =>
+      val v = if (i % 13 == 5) Seq.fill(32)(0f)
+        else if (i % 4 == 0) dirs(i % 6)
+        else dirs(i % 6).map(x => x + (rnd.nextFloat() - 0.5f) * 0.4f)
+      (i * 7L + 3, Seq(s"page:${i % 12}"), v, s"chunk $i", Map("chunk_index" -> i.toString))
+    }.toDF("doc_id", "object_keys", "vector", "content", "metadata")
+    val idx = annIndex("page_finish", modes)
+    idx.store.replace(docs)
+    idx.refreshAnn()
+    (idx, dirs :+ Seq.fill(32)(0f))
+  }
+
+  /** (doc_id, key, score) rows, first per key of a ranked page. */
+  private def firstPerKey(ranked: Seq[(Long, String, Double)]): Seq[(Long, String, Double)] = {
+    val seen = scala.collection.mutable.Set.empty[String]
+    ranked.filter(r => seen.add(r._2))
+  }
+
+  /** Rank (score desc, doc_id asc) the rows passing `threshold`. */
+  private def rank(rows: Seq[(Long, String, Double)], threshold: Double) =
+    rows.filter(_._3 >= threshold)
+      .sortWith((a, b) => a._3 > b._3 || (a._3 == b._3 && a._1 < b._1))
+
+  private def triples(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, Double)] =
+    df.select(col("doc_id"), col("key"), col("score")).as[(Long, String, Double)].collect().toSeq
+
+  test("page finish: search, searchVector, findSimilar and query match a brute-force reference") {
+    val lsh = SearchMode.Lsh(bits = 4, maxHamming = 4)      // every bucket
+    val ivf = SearchMode.Ivf(nCells = 4, nProbe = 4, lloydIters = 1) // every cell
+    val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 1 << 20) // exact
+    val (idx, queries) = pageIndex(Seq(lsh, ivf, hnsw))
+    val docs = idx.documents
+    val exactCols = docs.columns.toSeq ++ Seq("score", "key")
+    val annCols = Seq("doc_id", "score") ++ docs.columns.filter(_ != "doc_id") ++ Seq("key")
+    val keyOf = docs.select(col("doc_id"), col("object_keys").getItem(0))
+      .as[(Long, String)].collect().toMap
+    val content = docs.select("doc_id", "content").as[(Long, String)].collect().toMap
+    // every (probe, doc) score, computed by the engine's own kernel: raw for
+    // exact search, rounded to 6 dp for the ANN rerank
+    def scored(qv: Column, rounded: Boolean) = docs.select(col("doc_id"), {
+        val c = graft.functions.vector.vec_cosine(col("vector"), qv)
+        if (rounded) round(c, 6) else c
+      }).as[(Long, Double)].collect().toSeq.map { case (d, sc) => (d, keyOf(d), sc) }
+    val k = 4
+    val pred = col("object_keys").getItem(0) =!= "page:0"
+    for (qv <- queries; t <- Seq(-2.0, 0.0, 0.9)) {
+      val what = s"query ${queries.indexOf(qv)}, threshold $t"
+      val raw = rank(scored(typedLit(qv), rounded = false), t)
+      val rounded = rank(scored(typedLit(qv), rounded = true), t)
+      val exact = idx.searchVector(qv, k, t)
+      assert(exact.columns.toSeq == exactCols)
+      assert(triples(exact) == firstPerKey(raw.take(k)), s"exact, $what")
+      assert(triples(idx.searchVector(qv, k, t, filter = Some(pred))) ==
+        firstPerKey(raw.filter(_._2 != "page:0").take(k)), s"exact + filter, $what")
+      for (m <- Seq(lsh, ivf, hnsw)) {
+        val ann = idx.searchVector(qv, k, t, mode = m)
+        assert(ann.columns.toSeq == annCols)
+        assert(triples(ann) == firstPerKey(rounded.take(k)), s"$m, $what")
+        // ANN + filter: the overfetched page post-filtered, re-limited to k
+        assert(triples(idx.searchVector(qv, k, t, mode = m, filter = Some(pred))) ==
+          firstPerKey(rounded.take(k * VectorIndex.AnnFilterOverfetch)
+            .filter(_._2 != "page:0").take(k)), s"$m + filter, $what")
+      }
+    }
+    // RAG: the context is every top-k chunk in rank order, the sources the
+    // same page deduped; one page serves both
+    val question = "document about nothing in particular"
+    val qv = idx.backend.embedOne(question).toSeq
+    for (t <- Seq(-2.0, 0.0, 0.9); m <- Seq(SearchMode.Exact, lsh, ivf, hnsw)) {
+      val ranked = if (m == SearchMode.Exact) rank(scored(typedLit(qv), rounded = false), t)
+        else rank(scored(typedLit(qv), rounded = true), t)
+      val resp = idx.query(question, sourcesLimit = k, threshold = t, mode = m)
+      val context = ranked.take(k).map(r => content(r._1)).mkString("\n")
+      assert(resp.response == graft.embed.EchoChatBackend().chat(Seq(
+        graft.embed.ChatMessage("system", graft.query.Retrieval.DefaultSystemPrompt),
+        graft.embed.ChatMessage("system", context),
+        graft.embed.ChatMessage("user", question))), s"$m context, threshold $t")
+      assert(triples(resp.sources) == firstPerKey(ranked.take(k)), s"$m sources, threshold $t")
+    }
+    // findSimilar: per-chunk top-k of the object's chunks, best score per
+    // doc, first per key, self excluded unless includeSelf
+    val pairs = docs.as("d").crossJoin(docs.select(col("doc_id").as("p"), col("vector").as("pv"),
+        col("object_keys").getItem(0).as("pk")))
+      .select(col("pk"), col("p"), col("doc_id"),
+        graft.functions.vector.vec_cosine(col("vector"), col("pv")).as("raw"),
+        round(graft.functions.vector.vec_cosine(col("vector"), col("pv")), 6).as("rounded"))
+      .as[(String, Long, Long, Double, Double)].collect().toSeq
+    for (obj <- Seq("page:0", "page:5", "page:11"); t <- Seq(-2.0, 0.0, 0.9);
+         self <- Seq(false, true); m <- Seq(SearchMode.Exact, lsh, ivf, hnsw)) {
+      val perChunk = pairs.filter(_._1 == obj).groupBy(_._2).values.flatMap { rows =>
+        rank(rows.map(r => (r._3, keyOf(r._3), if (m == SearchMode.Exact) r._4 else r._5)), t).take(k)
+      }
+      val best = rank(perChunk.groupBy(_._1).values.map(_.maxBy(_._3)).toSeq, -3.0)
+      val want = firstPerKey(best).filter(r => self || r._2 != obj)
+      assert(triples(idx.findSimilar(obj, k, t, includeSelf = self, mode = m)) == want,
+        s"findSimilar($obj) $m, threshold $t, includeSelf $self")
+    }
+    // nothing passes: empty results, same columns
+    assert(idx.searchVector(queries.head, k, threshold = 1.5).isEmpty)
+    assert(idx.searchVector(queries.head, k, threshold = 1.5, mode = ivf).columns.toSeq == annCols)
+    assert(idx.findSimilar("page:3", k, threshold = 1.5, mode = hnsw).isEmpty)
   }
 
   test("registry rebuilds all registered indexes") {

@@ -43,6 +43,22 @@ class FullTextSpec extends AnyFunSuite {
     assert(r.map(_._1).toSet == Set(1L, 4L))
   }
 
+  // the per-call term-count checkpoint is released before bm25TopK returns
+  test("bm25TopK: 20 calls keep the block-manager census flat, same page each time") {
+    val sc = spark.sparkContext
+    val first = FullText.bm25TopK(docs, "hash join", k = 3).collect().toSeq
+    val live = sc.getPersistentRDDs.size
+    // every persisted RDD stays referenced here, so only an explicit
+    // release — never a driver GC — can drop a call's blocks
+    val held = scala.collection.mutable.Buffer.empty[org.apache.spark.rdd.RDD[_]]
+    for (i <- 1 to 20) {
+      assert(FullText.bm25TopK(docs, "hash join", k = 3).collect().toSeq == first, s"call $i")
+      held ++= sc.getPersistentRDDs.values
+      assert(sc.getPersistentRDDs.size <= live,
+        s"call $i: ${sc.getPersistentRDDs.size} persisted RDDs, was $live")
+    }
+  }
+
   test("bm25 score matches the hand-computed Okapi formula") {
     // corpus: N=4, dl = (5,4,8,9), avgdl = 26/4 = 6.5
     // term 'fast': df=1, tf in doc 4 = 1, dl=9

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.core.Metric
 import graft.embed.{ConstantEmbeddingBackend, EchoChatBackend, FixedChatBackend, HashEmbeddingBackend}
+import graft.functions.vector.vec_cosine
 
 /** Ports the reference's retrieval-behavior tests: the content-keyed vector
   * fixture and threshold table (tests/test_index.py:18-26, 256-284),
@@ -94,5 +95,93 @@ class RetrievalSpec extends AnyFunSuite {
     val echo = Retrieval.ragQuery(index, "q", embed, EchoChatBackend(), sourcesLimit = 1,
       threshold = -1.0)
     assert(echo.response.startsWith("This is an echo backend:"))
+  }
+
+  // --- page finish: results against a brute-force reference ---
+
+  /** Several chunks per object, score ties across and within objects, a
+    * zero vector and an opposite vector.
+    */
+  private def pageIndex = Seq(
+      (1L, Seq("p:1"), Seq(0.9f, 0.1f, 0.0f)),
+      (2L, Seq("p:1"), Seq(0.9f, 0.1f, 0.0f)),
+      (3L, Seq("p:2"), Seq(0.9f, 0.1f, 0.0f)),
+      (4L, Seq("p:2"), Seq(1.0f, 0.0f, 0.0f)),
+      (5L, Seq("p:3"), Seq(0.0f, 0.0f, 0.0f)),
+      (6L, Seq("p:4"), Seq(-1.0f, 0.0f, 0.0f)),
+      (7L, Seq("p:4"), Seq(0.1f, 0.1f, 0.8f)),
+      (8L, Seq("p:5"), Seq(0.7f, 0.3f, 0.0f)))
+    .map { case (id, keys, v) => (id, keys, v, s"content $id") }
+    .toDF("doc_id", "object_keys", "vector", "content")
+
+  /** Rank (score desc, doc_id asc) the (doc_id, key, score) rows passing
+    * `threshold`; then the first row per key.
+    */
+  private def rank(rows: Seq[(Long, String, Double)], threshold: Double) =
+    rows.filter(_._3 >= threshold)
+      .sortWith((a, b) => a._3 > b._3 || (a._3 == b._3 && a._1 < b._1))
+  private def firstPerKey(ranked: Seq[(Long, String, Double)]) = {
+    val seen = scala.collection.mutable.Set.empty[String]
+    ranked.filter(r => seen.add(r._2))
+  }
+  private def triples(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("doc_id"), col("key"), col("score")).as[(Long, String, Double)].collect().toSeq
+
+  test("page finish: search, ragQuery and findSimilar match a brute-force reference") {
+    val idx = pageIndex
+    val keyOf = idx.select(col("doc_id"), col("object_keys").getItem(0)).as[(Long, String)]
+      .collect().toMap
+    def scores(qv: org.apache.spark.sql.Column) =
+      idx.select(col("doc_id"), vec_cosine(col("vector"), qv)).as[(Long, Double)].collect()
+        .toSeq.map { case (d, s) => (d, keyOf(d), s) }
+    for (q <- Seq(Seq(1f, 0f, 0f), Seq(0f, 0f, 0f), Seq(0.2f, 0.1f, 0.9f));
+         t <- Seq(-2.0, 0.0, 0.9); k <- Seq(1, 2, 3, 6)) {
+      val what = s"query $q, threshold $t, k $k"
+      val ranked = rank(scores(typedLit(q)), t)
+      val hits = Retrieval.search(idx, "q", ConstantEmbeddingBackend(q), k, t)
+      assert(hits.columns.toSeq == idx.columns.toSeq ++ Seq("score", "key"))
+      assert(triples(hits) == firstPerKey(ranked.take(k)), what)
+      val resp = Retrieval.ragQuery(idx, "q", ConstantEmbeddingBackend(q), EchoChatBackend(), k, t)
+      val context = ranked.take(k).map(r => s"content ${r._1}").mkString("\n")
+      assert(resp.response == s"This is an echo backend: ${Retrieval.DefaultSystemPrompt} $context q",
+        what)
+      assert(triples(resp.sources) == firstPerKey(ranked.take(k)), what)
+    }
+    // findSimilar: per-chunk top-k, best score per doc, first per key, self
+    // excluded unless includeSelf — p:3's only chunk is a zero vector
+    for (obj <- Seq("p:1", "p:3", "p:4"); t <- Seq(-2.0, 0.0, 0.9); k <- Seq(1, 3, 8);
+         self <- Seq(false, true)) {
+      val probes = idx.filter(array_contains(col("object_keys"), obj))
+        .select("vector").as[Seq[Float]].collect().toSeq
+      val perChunk = probes.flatMap(p => rank(scores(typedLit(p)), t).take(k))
+      val best = rank(perChunk.groupBy(_._1).values.map(_.maxBy(_._3)).toSeq, -3.0)
+      val got = Retrieval.findSimilar(idx, obj, k, t, includeSelf = self)
+      assert(got.columns.toSeq == Seq("doc_id", "score", "object_keys", "vector", "content", "key"))
+      assert(triples(got) == firstPerKey(best).filter(r => self || r._2 != obj),
+        s"findSimilar($obj), threshold $t, k $k, includeSelf $self")
+    }
+    // nothing passes the threshold: an empty result, and no hydration read
+    assert(Retrieval.findSimilar(idx, "p:1", 3, threshold = 1.5).isEmpty)
+    assert(Retrieval.search(idx, "q", ConstantEmbeddingBackend(Seq(1f, 0f, 0f)), 3, 1.5).isEmpty)
+  }
+
+  // the driver's first-per-key dedup is dedupByKey's window: same rows on
+  // random pages with tied, NaN and signed-zero scores and null keys
+  test("page finish: driver first-per-key dedup agrees with dedupByKey on random pages") {
+    val rnd = new scala.util.Random(5)
+    val scoresPool = Seq(0.9, 0.5, 0.5, 0.0, -0.0, -0.3, Double.NaN, 1.0)
+    for (trial <- 0 until 30) {
+      val n = 1 + rnd.nextInt(25)
+      val rows = rnd.shuffle((0L until 40L).toList).take(n).map { id =>
+        val key = if (rnd.nextInt(8) == 0) null else s"k${rnd.nextInt(6)}"
+        (key, id, scoresPool(rnd.nextInt(scoresPool.size)))
+      }
+      val page = rows.toDF("key", "doc_id", "score")
+      val window = Retrieval.dedupByKey(page).collect().map(r => (r.getString(0), r.getLong(1)))
+      val local = Retrieval.firstPerKey(page.collect().toSeq, page.schema)
+      assert(local.map(r => (r.getString(0), r.getLong(1))).toSet == window.toSet,
+        s"trial $trial: $rows")
+      assert(local == local.sorted(Retrieval.byRank(page.schema)), s"trial $trial: not in rank order")
+    }
   }
 }
