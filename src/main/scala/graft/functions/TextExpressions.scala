@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.SparkInternals.{toColumn, toExpression, AbstractDataType}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -1179,6 +1180,19 @@ case class RegistrableDomainExpr(child: Expression) extends StringKernelExpressi
   override protected def withNewChildInternal(c: Expression): RegistrableDomainExpr = copy(child = c)
 }
 
+/** Canonical URL ([[graft.ops.Urls.canonicalColumn]]) → string, null for
+  * input that is not `scheme://...`. The case mapping follows Spark's
+  * `lower` (ICU unless `spark.sql.icu.caseMappings.enabled` is off).
+  */
+case class CanonicalUrlExpr(child: Expression) extends StringKernelExpression {
+  override def dataType: DataType = StringType
+  @transient private lazy val icuLower: Boolean =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+  protected override def nullSafeEval(v: Any): Any =
+    graft.ops.Urls.canonical(v.asInstanceOf[UTF8String], icuLower)
+  override protected def withNewChildInternal(c: Expression): CanonicalUrlExpr = copy(child = c)
+}
+
 /** Unigram-LM (Kudo 2018) Viterbi encode → array<string> (piece stream of
   * every word, words in order). The piece score table is a plan-time
   * constant.
@@ -1392,6 +1406,7 @@ object textkernel {
       m.scores.toSeq.sortBy(_._1), m.maxPieceLen))
   def registrable_domain(c: Column): Column =
     toColumn(RegistrableDomainExpr(toExpression(c)))
+  def canonical_url(c: Column): Column = toColumn(CanonicalUrlExpr(toExpression(c)))
   def wordpiece_tokens(c: Column, v: graft.text.WordPiece.Vocab): Column =
     toColumn(WordPieceEncodeExpr(toExpression(c),
       v.initial.toSeq.sorted, v.cont.toSeq.sorted, v.maxPieceLen))

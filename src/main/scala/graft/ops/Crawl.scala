@@ -137,15 +137,15 @@ object Crawl {
     val polite = applyRobots(applyBlocklist(canon, blockedDomains), robots, agent)
     // first-per-canonical-URL: min_by keyed on (path, rec_idx) — one
     // map-side-combined exchange on the canonical URL; deterministic
-    // because (archive name, record ordinal) totally orders the crawl
+    // because (archive name, record ordinal) totally orders the crawl.
+    // ONE min_by over the record's columns: (path, rec_idx) is unique, so
+    // it picks the same record six per-column min_bys would, with one
+    // ordering comparison and one aggregation buffer instead of six
+    val recordCols = Seq("body", "charset", "is_pdf", "is_docx", "is_epub", "is_txt")
     val deduped = polite
       .groupBy("url_canon", "url_domain")
-      .agg(min_by(col("body"), struct(col("path"), col("rec_idx"))).as("body"),
-        min_by(col("charset"), struct(col("path"), col("rec_idx"))).as("charset"),
-        min_by(col("is_pdf"), struct(col("path"), col("rec_idx"))).as("is_pdf"),
-        min_by(col("is_docx"), struct(col("path"), col("rec_idx"))).as("is_docx"),
-        min_by(col("is_epub"), struct(col("path"), col("rec_idx"))).as("is_epub"),
-        min_by(col("is_txt"), struct(col("path"), col("rec_idx"))).as("is_txt"))
+      .agg(min_by(struct(recordCols.map(col): _*), struct(col("path"), col("rec_idx"))).as("__rec"))
+      .select(col("url_canon") +: col("url_domain") +: recordCols.map(c => col(s"__rec.$c")): _*)
     // extraction columns inlined (not Html.extractText) so url_domain rides
     // the same projection — no join back, nothing after the dedup shuffles.
     // Decode honours the surviving record's declared charset through the

@@ -553,25 +553,36 @@ object TextAnalysis {
                       * `textCol`.
                       */
                     tokenCol: Option[String] = None): DataFrame = {
+    val outCols = groupCol.map(c => col("__gk").as(c)).toSeq ++ Seq(
+      col("doc_id"), col("n_tokens"), col("tok_before"), col("bin"))
+    packCut(docs, tokenBudget, idCol, textCol, targetGroups, groupCol, tokenCol,
+      carryText = false).select(outCols: _*)
+  }
+
+  /** The cut both packers run on, with its prefix sum: `(__gk, doc_id,
+    * n_tokens[, __text], tok_before, bin)`.
+    *
+    * The cut is MATERIALIZED lazily (r20, guide §2.4): prefixSum consumes
+    * it three times (id bounds, chunk totals, the final cumsum join) and
+    * the token estimator is a full kernel pass — without the lineage cut
+    * the caller's plan re-runs per consumer. Lazy: the first prefixSum job
+    * (bounds) materializes the rows; no extra blocking job. `carryText`
+    * keeps the text in the cut for [[assemblePacked]], so the bins group
+    * from it and the caller's plan runs once per call. Per-call state only.
+    */
+  private def packCut(docs: DataFrame, tokenBudget: Long, idCol: String, textCol: String,
+                      targetGroups: Long, groupCol: Option[String], tokenCol: Option[String],
+                      carryText: Boolean): DataFrame = {
     require(tokenBudget > 0, s"tokenBudget must be positive: $tokenBudget")
     val gk = groupCol.map(c => col(c).cast("string")).getOrElse(lit(""))
     val tokens = tokenCol.map(c => col(c).cast("long"))
       .getOrElse(token_stats(col(textCol)).getField("n_tokens_naive"))
-    // MATERIALIZED lazily (r20, guide §2.4): prefixSum consumes `sized`
-    // three times (id bounds, chunk totals, the final cumsum join) and the
-    // token estimator is a full kernel pass — without the lineage cut the
-    // corpus is re-tokenized per consumer. Lazy: the first prefixSum job
-    // (bounds) materializes the narrow (group, id, n_tokens) rows; no
-    // extra blocking job. Per-call state only.
-    val sized = docs.select(gk.as("__gk"), col(idCol).cast("long").as("doc_id"),
-      tokens.as("n_tokens")).materialize(false)
-    val outCols = groupCol.map(c => col("__gk").as(c)).toSeq ++ Seq(
-      col("doc_id"), col("n_tokens"), col("tok_before"),
-      expr(s"tok_before div $tokenBudget").as("bin"))
-    prefixSum(sized, targetGroups, "tok_before") match {
-      case None      => sized.withColumn("tok_before", lit(0L)).select(outCols: _*).limit(0)
-      case Some(cum) => cum.select(outCols: _*)
-    }
+    val text = if (carryText) Seq(col(textCol).as("__text")) else Nil
+    val sized = docs.select(Seq(gk.as("__gk"), col(idCol).cast("long").as("doc_id"),
+      tokens.as("n_tokens")) ++ text: _*).materialize(false)
+    prefixSum(sized, targetGroups, "tok_before")
+      .getOrElse(sized.withColumn("tok_before", lit(0L)).limit(0))
+      .withColumn("bin", expr(s"tok_before div $tokenBudget"))
   }
 
   /** Parallel prefix sum of `n_tokens` in (group `__gk`, doc_id) order —
@@ -678,6 +689,9 @@ object TextAnalysis {
     * parallelism — and per-bin state is BOUNDED by the token budget (a bin
     * holds ≤ budget tokens plus the one doc that crosses the boundary), so
     * the aggregation never accumulates unbounded rows per key.
+    *
+    * The text rides the prefix sum's cut, so the bins group straight from
+    * it: no join back to `docs`, whose plan is planned and run once.
     */
   def assemblePacked(docs: DataFrame, tokenBudget: Long,
                      idCol: String = "doc_id", textCol: String = "text",
@@ -685,13 +699,10 @@ object TextAnalysis {
                      groupCol: Option[String] = None,
                      sep: String = "\n\n",
                      tokenCol: Option[String] = None): DataFrame = {
-    val packed = packSequences(docs, tokenBudget, idCol, textCol, targetGroups,
-      groupCol, tokenCol)
-    val joined = packed.join(
-      docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("__text")),
-      Seq("doc_id"))
-    val keys = groupCol.toSeq :+ "bin"
-    joined.groupBy(keys.map(col): _*)
+    val keys = groupCol.map(c => col("__gk").as(c)).toSeq :+ col("bin")
+    packCut(docs, tokenBudget, idCol, textCol, targetGroups, groupCol, tokenCol,
+      carryText = true)
+      .groupBy(keys: _*)
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
         array_join(transform(
           array_sort(collect_list(struct(col("doc_id"), col("__text")))),

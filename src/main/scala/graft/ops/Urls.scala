@@ -1,7 +1,11 @@
 package graft.ops
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.CollationSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** URL canonicalization, URL-level dedup, and domain filtering — the crawl
   * bookkeeping stage of a training-data pipeline (CCNet/C4 both dedup at
@@ -13,8 +17,9 @@ import org.apache.spark.sql.functions._
   * (same oracle discipline as [[Html]]/[[TextAnalysis.redactPii]]): parts
   * are extracted with shared regexes, then the query string loses tracking
   * parameters via ordered regex passes that stay in the Java-regex ∩ RE2
-  * common subset. Everything is a per-row codegen'd projection — zero
-  * exchanges until the (map-side-combined) dedup groupBy.
+  * common subset, run by one row kernel with precompiled patterns.
+  * Everything is a per-row projection — zero exchanges until the
+  * (map-side-combined) dedup groupBy.
   */
 object Urls {
 
@@ -29,10 +34,6 @@ object Urls {
   val TrackingParams: Seq[String] =
     Seq("utm_[a-z]+", "fbclid", "gclid", "msclkid", "ref")
 
-  /** Lowercased `host[:port]` authority (empty string for non-URL input). */
-  def hostColumn(url: Column): Column =
-    lower(regexp_extract(trim(url), SchemeRe + "([^/?#]*)", 2))
-
   /** Canonical form, null for input that is not `scheme://...`:
     *  1. scheme and host lowercase (path/query case is significant — kept);
     *  2. leading `www.` and a scheme-default port (`:80` http / `:443`
@@ -45,32 +46,75 @@ object Urls {
     *     collapse, leading/trailing `&` drop, an emptied query drops its
     *     `?`;
     *  5. an empty path becomes `/` (`http://a.com` ≡ `http://a.com/`).
+    *
+    * Evaluated by one row kernel ([[graft.functions.textkernel.canonical_url]],
+    * body [[canonical]]) with precompiled patterns. Written as a Column
+    * chain of trim/lower/regexp_extract/regexp_replace, the same steps
+    * inlined every regex at each use site: a ~450 KB whole-stage class
+    * with ~130 `Pattern.compile`s, compiled on the driver and again in a
+    * task for every plan that canonicalizes.
     */
-  def canonicalColumn(url: Column): Column = {
-    val u = trim(url)
-    val scheme = lower(regexp_extract(u, SchemeRe, 1))
-    val host0 = hostColumn(url)
-    val host1 = regexp_replace(host0, "^www\\.", "")
-    val host = when(scheme === "http", regexp_replace(host1, ":80$", ""))
-      .when(scheme === "https", regexp_replace(host1, ":443$", ""))
-      .otherwise(host1)
-    val rest0 = regexp_extract(u, SchemeRe + "[^/?#]*((?s).*)$", 2)
-    val rest1 = regexp_replace(rest0, "(?s)#.*$", "")
+  def canonicalColumn(url: Column): Column =
+    graft.functions.textkernel.canonical_url(url)
+
+  private val SchemeP = Pattern.compile(SchemeRe)
+  private val HostP = Pattern.compile(SchemeRe + "([^/?#]*)")
+  private val WwwP = Pattern.compile("^www\\.")
+  private val HttpPortP = Pattern.compile(":80$")
+  private val HttpsPortP = Pattern.compile(":443$")
+  private val RestP = Pattern.compile(SchemeRe + "[^/?#]*((?s).*)$")
+  private val FragmentP = Pattern.compile("(?s)#.*$")
+  private val PathP = Pattern.compile("(?s)^([^?]*)")
+  private val BeforeQueryP = Pattern.compile("(?s)^[^?]*\\?")
+  private val TrackingP = Pattern.compile(s"(?i)&(${TrackingParams.mkString("|")})=[^&#]*")
+  private val AmpRunP = Pattern.compile("&{2,}")
+  private val AmpEdgeP = Pattern.compile("^&|&$")
+
+  /** Spark's `regexp_extract`: the group of the first match, `""` when
+    * nothing (or a non-participating group) matches.
+    */
+  private def extract(p: Pattern, s: String, group: Int): String = {
+    val m = p.matcher(s)
+    if (!m.find()) "" else { val g = m.group(group); if (g == null) "" else g }
+  }
+
+  private def replace(p: Pattern, s: String, by: String): String = p.matcher(s).replaceAll(by)
+
+  /** [[canonicalColumn]] over one value, step for step with Spark's string
+    * functions: `trim` strips ASCII spaces only (tabs and newlines stay),
+    * `lower` is Spark's UTF8_BINARY lower (ICU case mapping unless
+    * `spark.sql.icu.caseMappings.enabled` is off), and the regexes are the
+    * ones the Column form ran, in the same order.
+    */
+  private[graft] def canonical(url: UTF8String, icuLower: Boolean): UTF8String = {
+    def lower(s: String): String = {
+      val u = UTF8String.fromString(s)
+      (if (icuLower) CollationSupport.Lower.execBinaryICU(u)
+       else CollationSupport.Lower.execBinary(u)).toString
+    }
+    val u = url.trim().toString
+    val scheme = lower(extract(SchemeP, u, 1))
+    if (scheme.isEmpty) return null
+    val host1 = replace(WwwP, lower(extract(HostP, u, 2)), "")
+    val host = scheme match {
+      case "http"  => replace(HttpPortP, host1, "")
+      case "https" => replace(HttpsPortP, host1, "")
+      case _       => host1
+    }
+    if (host.isEmpty) return null
+    val rest1 = replace(FragmentP, extract(RestP, u, 2), "")
     // split path/query at the FIRST `?` before touching tracking params:
     // stripping `?utm=x` textually and restoring the `?` afterwards turned
     // a legal literal `&` in a query-less path (http://a.com/a&b, RFC 3986
     // pchar) into a bogus `?` (r8 advice)
-    val path = regexp_extract(rest1, "(?s)^([^?]*)", 1)
-    val query0 = when(instr(rest1, "?") > 0,
-      regexp_replace(rest1, "(?s)^[^?]*\\?", "")).otherwise(lit(""))
+    val path = extract(PathP, rest1, 1)
+    val query0 = if (rest1.indexOf('?') >= 0) replace(BeforeQueryP, rest1, "") else ""
     // uniform `&name=value` matching via a sentinel `&`, then tidy
-    val query1 = regexp_replace(concat(lit("&"), query0),
-      s"(?i)&(${TrackingParams.mkString("|")})=[^&#]*", "")
-    val query2 = regexp_replace(regexp_replace(query1, "&{2,}", "&"), "^&|&$", "")
-    val rest5 = when(query2 === "", path).otherwise(concat(path, lit("?"), query2))
-    val rest = when(rest5 === "", lit("/")).otherwise(rest5)
-    when(scheme === "" || host === "", lit(null).cast("string"))
-      .otherwise(concat(scheme, lit("://"), host, rest))
+    val query1 = replace(TrackingP, "&" + query0, "")
+    val query2 = replace(AmpEdgeP, replace(AmpRunP, query1, "&"), "")
+    val rest5 = if (query2.isEmpty) path else path + "?" + query2
+    val rest = if (rest5.isEmpty) "/" else rest5
+    UTF8String.fromString(scheme + "://" + host + rest)
   }
 
   /** Registrable domain of the canonical host, resolved against the

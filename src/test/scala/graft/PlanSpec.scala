@@ -733,4 +733,29 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("WindowGroupLimit"), p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
+
+  // a Column chain of regexp_* calls inlines each of its patterns into the
+  // whole-stage class: URL canonicalization written that way made a ~450 KB
+  // class, compiled on the driver and again in a task on every ingest
+  test("Crawl.ingest: every whole-stage class stays under 64 KB of generated code") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import graft.sources.WarcCodec
+    val dir = java.nio.file.Files.createTempDirectory("plan_ingest_codegen").toFile
+    try {
+      val recs = (0 until 6).map { i =>
+        val html = s"<html><head><title>T$i</title></head><body><p>page $i has some words " +
+          "to keep</p><a href='/x'>x</a></body></html>"
+        WarcCodec.WarcRecord("response", s"http://WWW.site$i.example.com/p?utm_source=a&q=$i",
+          "2024-01-01T00:00:00Z", s"<urn:$i>", "application/http; msgtype=response",
+          s"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n\r\n$html".getBytes(UTF_8))
+      }
+      java.nio.file.Files.write(new java.io.File(dir, "a.warc.gz").toPath, WarcCodec.writeWarcGz(recs))
+      val df = graft.ops.Crawl.ingest(spark, dir.getAbsolutePath)
+      assert(df.collect().length == 6)
+      val classes = org.apache.spark.sql.execution.debug.codegenStringSeq(df.queryExecution.executedPlan)
+      assert(classes.nonEmpty)
+      val (subtree, code, _) = classes.maxBy(_._2.length)
+      assert(code.length < 64 * 1024, s"${code.length} chars of generated code for\n$subtree")
+    } finally { dir.listFiles().foreach(_.delete()); dir.delete() }
+  }
 }

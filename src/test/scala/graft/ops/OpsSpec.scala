@@ -988,6 +988,88 @@ class CleanPipelineSpec extends AnyFunSuite {
     assert(probes.map(r => (r.getLong(1), r.getLong(2))).toSeq ==
       Seq((0L, 1L), (1_234_567L, 1_234_568L), (n - 1, n)))
   }
+
+  /** `assemblePacked` as the join of [[TextAnalysis.packSequences]]' bins
+    * back to `docs`, grouped by bin — the reference the one-cut form must
+    * reproduce row for row.
+    */
+  private def packedByJoin(docs: org.apache.spark.sql.DataFrame, budget: Long,
+                           groupCol: Option[String] = None,
+                           tokenCol: Option[String] = None): org.apache.spark.sql.DataFrame = {
+    val packed = TextAnalysis.packSequences(docs, budget, targetGroups = 7,
+      groupCol = groupCol, tokenCol = tokenCol)
+    packed.join(docs.select(col("doc_id").cast("long").as("doc_id"), col("text").as("__text")),
+        Seq("doc_id"))
+      .groupBy((groupCol.toSeq :+ "bin").map(col): _*)
+      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
+        array_join(transform(array_sort(collect_list(struct(col("doc_id"), col("__text")))),
+          x => x.getField("__text")), "\n\n").as("content"))
+  }
+
+  private def outcome(df: => org.apache.spark.sql.DataFrame): Either[String, Seq[String]] =
+    try Right(df.collect().map(_.toSeq.mkString("|")).sorted.toSeq)
+    catch {
+      case e: Throwable =>
+        def root(t: Throwable): Throwable = if (t.getCause == null) t else root(t.getCause)
+        Left(root(e).getClass.getName)
+    }
+
+  test("assemblePacked equals packSequences joined back to docs, grouped by bin") {
+    val rnd = new scala.util.Random(17)
+    val words = Seq("alpha", "beta", "gamma", "delta", "eps")
+    val rows = (0L until 200L).map { i =>
+      val text = if (i % 23 == 5) null else Seq.fill(1 + rnd.nextInt(30))(words(rnd.nextInt(5))).mkString(" ")
+      val lang = if (i % 7 == 0) null else s"l${i % 3}"
+      (i * 3 + rnd.nextInt(3), lang, text, (i % 11) + 1)
+    }
+    val docs = rows.toDF("doc_id", "lang", "text", "n_bpe")
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame, Option[String], Option[String])](
+      ("plain", docs, None, None),
+      ("empty", docs.filter(col("doc_id") < 0), None, None),
+      ("null group", docs, Some("lang"), None),
+      ("tokenCol", docs, None, Some("n_bpe")),
+      ("group + tokenCol", docs, Some("lang"), Some("n_bpe")),
+      ("null ids", docs.withColumn("doc_id",
+        when(col("doc_id") % 5 === 0, lit(null)).otherwise(col("doc_id"))), None, None),
+      ("all ids null", docs.withColumn("doc_id", lit(null).cast("long")), None, None))
+    cases.foreach { case (name, d, g, t) =>
+      val want = outcome(packedByJoin(d, 40, g, t))
+      val got = outcome(TextAnalysis.assemblePacked(d, 40, targetGroups = 7,
+        groupCol = g, tokenCol = t))
+      assert(got == want, s"$name")
+      if (name == "plain" || name == "null group")
+        assert(want.exists(_.nonEmpty), s"$name: the reference packs nothing")
+    }
+    val schema = TextAnalysis.assemblePacked(docs, 40, groupCol = Some("lang")).schema
+    assert(schema.fieldNames.toSeq == Seq("lang", "bin", "n_docs", "n_tokens", "content"))
+    // a text column that does not exist fails at analysis, as the join did
+    val noText = docs.drop("text")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      TextAnalysis.assemblePacked(noText, 40, tokenCol = Some("n_bpe"))
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      packedByJoin(noText, 40, tokenCol = Some("n_bpe"))
+    }
+    // duplicate ids still fail loudly
+    val dup = Seq((1L, "a b"), (1L, "c d e"), (2L, "f")).toDF("doc_id", "text")
+    val e = intercept[Throwable](TextAnalysis.assemblePacked(dup, 10).collect())
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(_.contains("duplicate (group, id)")), e.getMessage)
+  }
+
+  test("assemblePacked produces the caller's rows once per call") {
+    // every evaluation of `docs` runs the counting id column once per row:
+    // joining the bins back to `docs` evaluated it twice per row
+    val produced = spark.sparkContext.longAccumulator("assemblePacked.docs_rows")
+    val countRow = udf { (id: Long) => produced.add(1L); id }.asNondeterministic()
+    val n = 500L
+    val docs = spark.range(0, n, 1, 4).select(countRow(col("id")).as("doc_id"),
+      concat(lit("word "), (col("id") % 13).cast("string"), lit(" more words")).as("text"))
+    val out = TextAnalysis.assemblePacked(docs, 64, targetGroups = 16).collect()
+    assert(out.map(_.getAs[Long]("n_docs")).sum == n)
+    assert(produced.value == n, s"docs rows produced ${produced.value} times for $n rows")
+  }
 }
 
 class TextAnalysisSpec extends AnyFunSuite {
