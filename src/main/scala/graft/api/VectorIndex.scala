@@ -178,28 +178,25 @@ final class VectorIndex(
   /** Remove every document (S11), including ANN side indexes. */
   def clear(): Unit = {
     store.clear()
-    if (ann.nonEmpty) {
-      new VersionedDir(spark, annLshPath).deleteAll()
-      new VersionedDir(spark, annIvfPath).deleteAll()
-      new VersionedDir(spark, annIvfPqPath).deleteAll()
-      new VersionedDir(spark, annRpqPath).deleteAll()
-      new VersionedDir(spark, annSqPath).deleteAll()
-      new VersionedDir(spark, annBqPath).deleteAll()
-      new VersionedDir(spark, annHnswPath).deleteAll()
-    }
+    if (ann.nonEmpty) VectorIndex.AnnLayouts.keys.foreach(c => new VersionedDir(spark, annRoot(c)).deleteAll())
   }
 
   /** Versioned roots of the ANN side indexes (underscore-free siblings of
     * nothing — they live UNDER indexPath; the document store's version
     * listing ignores non-v\d+ names).
     */
-  def annLshPath: String = s"$indexPath/__ann_lsh"
-  def annIvfPath: String = s"$indexPath/__ann_ivf"
-  def annIvfPqPath: String = s"$indexPath/__ann_ivfpq"
-  def annRpqPath: String = s"$indexPath/__ann_rpq"
-  def annSqPath: String = s"$indexPath/__ann_sq"
-  def annBqPath: String = s"$indexPath/__ann_bq"
-  def annHnswPath: String = s"$indexPath/__ann_hnsw"
+  def annLshPath: String = annRoot(classOf[SearchMode.Lsh])
+  def annIvfPath: String = annRoot(classOf[SearchMode.Ivf])
+  def annIvfPqPath: String = annRoot(classOf[SearchMode.IvfPq])
+  def annRpqPath: String = annRoot(classOf[SearchMode.RpqIvf])
+  def annSqPath: String = annRoot(classOf[SearchMode.Sq])
+  def annBqPath: String = annRoot(classOf[SearchMode.Bq])
+  def annHnswPath: String = annRoot(classOf[SearchMode.Hnsw])
+
+  private def annRoot(mode: Class[_]): String = s"$indexPath/__ann_${VectorIndex.AnnLayouts(mode)._1}"
+
+  /** The configured ANN modes (Exact has no side index). */
+  private def annModes: Seq[SearchMode] = ann.filter(_ != SearchMode.Exact)
 
   /** Rebuild every configured ANN structure from the CURRENT documents —
     * called after each mutation, so ANN search always reflects the store.
@@ -207,64 +204,62 @@ final class VectorIndex(
     * previous ANN version still completes mid-refresh.
     */
   def refreshAnn(): Unit = if (ann.nonEmpty && store.exists) {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{BinaryQuantization => BQ, ProductQuantization => PQ, ScalarQuantization => SQ}
     val docs = store.read()
-    ann.foreach {
-      case SearchMode.Lsh(bits, _) =>
-        SimilaritySearch.lshIndexWrite(docs, annLshPath, config.dims, bits, itemVec = "vector")
-      case SearchMode.Hnsw(m, efc, _) =>
-        graft.ops.Hnsw.hnswIndexWrite(docs.select(
-            org.apache.spark.sql.functions.col("doc_id"),
-            org.apache.spark.sql.functions.col("vector")),
-          annHnswPath, config.dims, m, efc, itemId = "doc_id", itemVec = "vector")
-      case SearchMode.Ivf(nCells, _, lloydIters) =>
-        val (assigned, centroids) = SimilaritySearch.ivfAssign(docs, nCells,
-          itemId = "doc_id", itemVec = "vector", lloydIters = lloydIters)
-        SimilaritySearch.ivfIndexWrite(assigned, annIvfPath, Some(centroids))
-      case SearchMode.IvfPq(nCells, _, m, ksub, _, lloydIters) =>
-        val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, m, ksub)
-        val (assigned, centroids) = SimilaritySearch.ivfAssign(docs, nCells,
-          itemId = "doc_id", itemVec = "vector", lloydIters = lloydIters)
-        val cb = graft.ops.ProductQuantization.pqTrain(docs, cfg,
-          itemId = "doc_id", itemVec = "vector", lloydIters = lloydIters)
-        val encoded = graft.ops.ProductQuantization.pqEncode(assigned, cb, cfg, itemVec = "vector")
-          .select(org.apache.spark.sql.functions.col("doc_id"),
-            org.apache.spark.sql.functions.col("cell"),
-            org.apache.spark.sql.functions.col("codes"))
-        graft.ops.ProductQuantization.pqIndexWrite(encoded, cb, annIvfPqPath, Some(centroids))
-      case SearchMode.RpqIvf(nCells, _, m, ksub, _, lloydIters) =>
-        // FAISS IVFPQ construction: codebooks train on and codes encode the
-        // RESIDUAL v − centroid(cell), not the raw vector
-        val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, m, ksub)
-        val (assigned, centroids) = SimilaritySearch.ivfAssign(docs, nCells,
-          itemId = "doc_id", itemVec = "vector", lloydIters = lloydIters)
-        val res = graft.ops.ProductQuantization.residualize(assigned, centroids,
-          itemVec = "vector")
-        val cb = graft.ops.ProductQuantization.pqTrain(res, cfg,
-          itemId = "doc_id", itemVec = "residual", lloydIters = lloydIters)
-        val encoded = graft.ops.ProductQuantization.pqEncode(res, cb, cfg, itemVec = "residual")
-          .select(org.apache.spark.sql.functions.col("doc_id"),
-            org.apache.spark.sql.functions.col("cell"),
-            org.apache.spark.sql.functions.col("codes"))
-        graft.ops.ProductQuantization.pqIndexWrite(encoded, cb, annRpqPath, Some(centroids))
-      case SearchMode.Sq(_) =>
-        val params = graft.ops.ScalarQuantization.sqTrain(docs, itemVec = "vector")
-        val (mins, maxs) = graft.ops.ScalarQuantization.collectParams(params)
-        graft.ops.ScalarQuantization.sqIndexWrite(
-          graft.ops.ScalarQuantization.sqEncode(docs, mins, maxs, itemVec = "vector")
-            .select(org.apache.spark.sql.functions.col("doc_id"),
-              org.apache.spark.sql.functions.col("sq")),
-          params, annSqPath)
-      case SearchMode.Bq(_) =>
-        val params = graft.ops.BinaryQuantization.bqTrain(docs, itemVec = "vector")
-        val thr = graft.ops.BinaryQuantization.collectThresholds(params)
-        graft.ops.BinaryQuantization.bqIndexWrite(
-          graft.ops.BinaryQuantization.bqEncode(docs, thr, itemVec = "vector")
-            .select(org.apache.spark.sql.functions.col("doc_id"),
-              org.apache.spark.sql.functions.col("bq")),
-          params, annBqPath)
-      case SearchMode.Exact => ()
+    annModes.foreach { m =>
+      val root = annRoot(m.getClass)
+      m match {
+        case SearchMode.Lsh(bits, _) =>
+          SimilaritySearch.lshIndexWrite(docs, root, config.dims, bits, itemVec = "vector")
+        case SearchMode.Hnsw(hm, efc, _) =>
+          graft.ops.Hnsw.hnswIndexWrite(docs.select(col("doc_id"), col("vector")),
+            root, config.dims, hm, efc, itemId = "doc_id", itemVec = "vector")
+        case SearchMode.Ivf(nCells, _, lloydIters) =>
+          val (assigned, centroids) = SimilaritySearch.ivfAssign(docs, nCells,
+            itemId = "doc_id", itemVec = "vector", lloydIters = lloydIters)
+          SimilaritySearch.ivfIndexWrite(assigned, root, Some(centroids))
+        case IvfPqMode(nCells, _, pm, ksub, _, lloydIters, residual) =>
+          val cfg = PQ.PqConfig(config.dims, pm, ksub)
+          val (assigned, centroids) = SimilaritySearch.ivfAssign(docs, nCells,
+            itemId = "doc_id", itemVec = "vector", lloydIters = lloydIters)
+          val (framed, vec) = pqFrame(assigned, centroids, residual)
+          val cb = PQ.pqTrain(framed, cfg, itemId = "doc_id", itemVec = vec, lloydIters = lloydIters)
+          PQ.pqIndexWrite(PQ.pqEncode(framed, cb, cfg, itemVec = vec)
+            .select(col("doc_id"), col("cell"), col("codes")), cb, root, Some(centroids))
+        case SearchMode.Sq(_) =>
+          val params = SQ.sqTrain(docs, itemVec = "vector")
+          val (mins, maxs) = SQ.collectParams(params)
+          SQ.sqIndexWrite(SQ.sqEncode(docs, mins, maxs, itemVec = "vector")
+            .select(col("doc_id"), col("sq")), params, root)
+        case SearchMode.Bq(_) =>
+          val params = BQ.bqTrain(docs, itemVec = "vector")
+          BQ.bqIndexWrite(BQ.bqEncode(docs, BQ.collectThresholds(params), itemVec = "vector")
+            .select(col("doc_id"), col("bq")), params, root)
+        case SearchMode.Exact => ()
+      }
     }
   }
+
+  /** IVF-PQ and residual IVF-PQ, which share every field: (nCells, nProbe,
+    * m, ksub, refine, lloydIters, residual).
+    */
+  private object IvfPqMode {
+    def unapply(m: SearchMode): Option[(Int, Int, Int, Int, Int, Int, Boolean)] = m match {
+      case SearchMode.IvfPq(c, p, pm, ks, r, l)  => Some((c, p, pm, ks, r, l, false))
+      case SearchMode.RpqIvf(c, p, pm, ks, r, l) => Some((c, p, pm, ks, r, l, true))
+      case _                                     => None
+    }
+  }
+
+  /** The frame a PQ mode trains and encodes in, as (rows, vector column):
+    * the vector itself, or for the residual form (the FAISS IVFPQ
+    * construction) `v − centroid(cell)` ([[graft.ops.ProductQuantization.residualize]]).
+    */
+  private def pqFrame(assigned: DataFrame, centroids: DataFrame,
+                      residual: Boolean): (DataFrame, String) =
+    if (!residual) (assigned, "vector")
+    else (graft.ops.ProductQuantization.residualize(assigned, centroids, itemVec = "vector"), "residual")
 
   /** Incremental ANN maintenance (the 100 TB mutation path): changed rows
     * are assigned against the EXISTING structures — LSH hyperplanes are
@@ -279,124 +274,54 @@ final class VectorIndex(
   def refreshAnnIncremental(changedDocs: DataFrame, removedIds: DataFrame,
                             foldEvery: Int = 10): Unit = if (ann.nonEmpty && store.exists) {
     import org.apache.spark.sql.functions._
-    val anyMissingBase = ann.exists {
-      case SearchMode.Lsh(_, _)      => !new VersionedDir(spark, annLshPath).exists
-      case SearchMode.Ivf(_, _, _)   => !new VersionedDir(spark, annIvfPath).exists
-      case SearchMode.IvfPq(_, _, _, _, _, _) => !new VersionedDir(spark, annIvfPqPath).exists
-      case SearchMode.RpqIvf(_, _, _, _, _, _) => !new VersionedDir(spark, annRpqPath).exists
-      case SearchMode.Sq(_)          => !new VersionedDir(spark, annSqPath).exists
-      case SearchMode.Bq(_)          => !new VersionedDir(spark, annBqPath).exists
-      case SearchMode.Hnsw(_, _, _)  => !new VersionedDir(spark, annHnswPath).exists
-      case SearchMode.Exact          => false
-    }
-    if (anyMissingBase) { refreshAnn(); return }
+    import graft.functions.vector.{bq_encode, nearest_centroid, pq_encode, sq_encode}
+    // one listing per root serves the missing-base check, the side tables
+    // the writes encode against, and the fold's pending-delta count
+    val roots = annModes.map(m => annRoot(m.getClass))
+    val snaps = roots.distinct.map(r => r -> new VersionedDir(spark, r).snapshot).toMap
+    if (snaps.values.exists(!_.exists)) { refreshAnn(); return }
     // one overlay row per doc: a duplicate id in the delta would occupy two
     // top-k candidate slots (the store write is deduped; mirror it here for
     // callers invoking this directly)
-    val changedDocs1 = changedDocs.dropDuplicates("doc_id")
+    val changed = changedDocs.dropDuplicates("doc_id").select(col("doc_id"), col("vector"))
     val tombIds = removedIds.select(col("doc_id").cast("long").as("doc_id"))
-    ann.foreach {
-      case SearchMode.Lsh(bits, _) =>
-        val adds = SimilaritySearch
-          .lshBuckets(changedDocs1.select(col("doc_id"), col("vector")),
-            config.dims, bits, itemVec = "vector")
-          .select(col("doc_id"), col("vector"),
-            col("bucket").cast("long").as("bucket"), lit(false).as("deleted"))
-        val tombs = tombIds.select(col("doc_id"),
-          lit(null).cast("array<float>").as("vector"),
-          lit(null).cast("long").as("bucket"), lit(true).as("deleted"))
-        annDeltaWrite(annLshPath, adds.unionByName(tombs))
-      case SearchMode.Hnsw(_, _, _) =>
-        val adds = changedDocs1.select(col("doc_id"), col("vector"),
-          lit(false).as("deleted"))
-        val tombs = tombIds.select(col("doc_id"),
-          lit(null).cast("array<float>").as("vector"), lit(true).as("deleted"))
-        annDeltaWrite(annHnswPath, adds.unionByName(tombs))
-      case SearchMode.Ivf(_, _, _) =>
-        val (cvs, cids) = annVersion(annIvfPath).centroids
-        val adds = changedDocs1.select(col("doc_id"), col("vector"),
-            graft.functions.vector.nearest_centroid(col("vector"), cvs, cids).as("cell"),
-            lit(false).as("deleted"))
-        val tombs = tombIds.select(col("doc_id"),
-          lit(null).cast("array<float>").as("vector"),
-          lit(null).cast("long").as("cell"), lit(true).as("deleted"))
-        annDeltaWrite(annIvfPath, adds.unionByName(tombs))
-      case SearchMode.IvfPq(_, _, m, ksub, _, _) =>
-        val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, m, ksub)
-        val v = annVersion(annIvfPqPath)
-        val (cvs, cids) = v.centroids
-        val cbs = v.codebooks(cfg)
-        val adds = changedDocs1.select(col("doc_id"),
-            graft.functions.vector.nearest_centroid(col("vector"), cvs, cids).as("cell"),
-            graft.functions.vector.pq_encode(col("vector"), cbs, cfg.dsub).as("codes"),
-            lit(false).as("deleted"))
-        val tombs = tombIds.select(col("doc_id"), lit(null).cast("long").as("cell"),
-          lit(null).cast("array<int>").as("codes"), lit(true).as("deleted"))
-        annDeltaWrite(annIvfPqPath, adds.unionByName(tombs))
-      case SearchMode.RpqIvf(_, _, m, ksub, _, _) =>
-        // assign against the STORED centroids, residualize in the assigned
-        // cell's frame, encode against the STORED residual codebooks — no
-        // retrain on a 1-row upsert (the FAISS IVFPQ add path)
-        val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, m, ksub)
-        val v = annVersion(annRpqPath)
-        val (cvs, cids) = v.centroids
-        val cbs = v.codebooks(cfg)
-        val assigned = changedDocs1.select(col("doc_id"), col("vector"),
-          graft.functions.vector.nearest_centroid(col("vector"), cvs, cids).as("cell"))
-        val adds = graft.ops.ProductQuantization.residualize(assigned, v.centroidsDf,
-            itemVec = "vector")
-          .select(col("doc_id"), col("cell"),
-            graft.functions.vector.pq_encode(col("residual"), cbs, cfg.dsub).as("codes"),
-            lit(false).as("deleted"))
-        val tombs = tombIds.select(col("doc_id"), lit(null).cast("long").as("cell"),
-          lit(null).cast("array<int>").as("codes"), lit(true).as("deleted"))
-        annDeltaWrite(annRpqPath, adds.unionByName(tombs))
-      case SearchMode.Sq(_) =>
-        // encode against the STORED params — no retrain on a 1-row upsert
-        val (mins, maxs) = annVersion(annSqPath).sqParams
-        val adds = changedDocs1.select(col("doc_id"),
-          graft.functions.vector.sq_encode(col("vector"), mins, maxs).as("sq"),
-          lit(false).as("deleted"))
-        val tombs = tombIds.select(col("doc_id"),
-          lit(null).cast("binary").as("sq"), lit(true).as("deleted"))
-        annDeltaWrite(annSqPath, adds.unionByName(tombs))
-      case SearchMode.Bq(_) =>
-        val thr = annVersion(annBqPath).bqThresholds
-        val adds = changedDocs1.select(col("doc_id"),
-          graft.functions.vector.bq_encode(col("vector"), thr).as("bq"),
-          lit(false).as("deleted"))
-        val tombs = tombIds.select(col("doc_id"),
-          lit(null).cast("binary").as("bq"), lit(true).as("deleted"))
-        annDeltaWrite(annBqPath, adds.unionByName(tombs))
-      case SearchMode.Exact => ()
+    annModes.zip(roots).foreach { case (m, root) =>
+      lazy val v = annVersion(root, snaps(root))
+      // side tables come from the STORED version — no retrain on a 1-row upsert
+      val adds = m match {
+        case SearchMode.Lsh(bits, _) =>
+          SimilaritySearch.lshBuckets(changed, config.dims, bits, itemVec = "vector")
+            .select(col("doc_id"), col("vector"), col("bucket").cast("long").as("bucket"))
+        case SearchMode.Hnsw(_, _, _) => changed
+        case SearchMode.Ivf(_, _, _) =>
+          val (cvs, cids) = v.centroids
+          changed.withColumn("cell", nearest_centroid(col("vector"), cvs, cids))
+        case IvfPqMode(_, _, pm, ksub, _, _, residual) =>
+          // encoded in the assigned cell's frame for the residual form (the
+          // FAISS IVFPQ add path)
+          val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub)
+          val (cvs, cids) = v.centroids
+          val (framed, vec) = pqFrame(
+            changed.withColumn("cell", nearest_centroid(col("vector"), cvs, cids)), v.centroidsDf, residual)
+          framed.select(col("doc_id"), col("cell"), pq_encode(col(vec), v.codebooks(cfg), cfg.dsub).as("codes"))
+        case SearchMode.Sq(_) =>
+          val (mins, maxs) = v.sqParams
+          changed.select(col("doc_id"), sq_encode(col("vector"), mins, maxs).as("sq"))
+        case SearchMode.Bq(_) =>
+          changed.select(col("doc_id"), bq_encode(col("vector"), v.bqThresholds).as("bq"))
+        case SearchMode.Exact => throw new IllegalStateException("unreachable")
+      }
+      // a tombstone row has the adds' columns, null but for doc_id; cast by
+      // type name, so array elements stay nullable in the written schema
+      val tombs = tombIds.select(col("doc_id") +: adds.schema.fields.toSeq.filter(_.name != "doc_id")
+        .map(f => lit(null).cast(f.dataType.catalogString).as(f.name)) :+ lit(true).as("deleted"): _*)
+      annDeltaWrite(root, adds.withColumn("deleted", lit(false)).unionByName(tombs))
     }
     // fold: when enough deltas accumulate, retrain + rewrite once — the
-    // amortized cost of staying incremental between folds
-    val maxPending = ann.map {
-      case SearchMode.Lsh(_, _)    => new VersionedDir(spark, annLshPath).listDeltas.size
-      case SearchMode.Ivf(_, _, _) => new VersionedDir(spark, annIvfPath).listDeltas.size
-      case SearchMode.IvfPq(_, _, _, _, _, _) => new VersionedDir(spark, annIvfPqPath).listDeltas.size
-      case SearchMode.RpqIvf(_, _, _, _, _, _) => new VersionedDir(spark, annRpqPath).listDeltas.size
-      case SearchMode.Sq(_)        => new VersionedDir(spark, annSqPath).listDeltas.size
-      case SearchMode.Bq(_)        => new VersionedDir(spark, annBqPath).listDeltas.size
-      case SearchMode.Hnsw(_, _, _) => new VersionedDir(spark, annHnswPath).listDeltas.size
-      case SearchMode.Exact        => 0
-    }.maxOption.getOrElse(0)
-    if (maxPending >= foldEvery) refreshAnn()
-  }
-
-  /** New-wins overlay of a codes delta onto an UNPARTITIONED codes scan
-    * (SQ/BQ — full-scan structures, so there is no partition filter to
-    * preserve): every delta doc shadows its base row (broadcast anti
-    * equi-join — the delta is O(batch)), live delta rows union in.
-    */
-  private def annCodesOverlay(base: DataFrame, delta: Option[DataFrame],
-                              codeCol: String): DataFrame = delta match {
-    case None => base
-    case Some(d) =>
-      import org.apache.spark.sql.functions.{broadcast, col, not}
-      base.join(broadcast(d.select(col("doc_id")).distinct()), Seq("doc_id"), "left_anti")
-        .unionByName(d.filter(not(col("deleted"))).select(col("doc_id"), col(codeCol)))
+    // amortized cost of staying incremental between folds. Each root holds
+    // the deltas of its snapshot plus the ones just appended to it.
+    val pending = roots.groupBy(identity).map { case (r, appended) => snaps(r).deltas.size + appended.size }
+    if (pending.exists(_ >= foldEvery)) refreshAnn()
   }
 
   private def annDeltaWrite(root: String, rows: DataFrame): Unit =
@@ -470,14 +395,12 @@ final class VectorIndex(
     */
   private val annVersions = TrieMap.empty[String, AnnVersion]
 
-  private def annVersion(root: String): AnnVersion = {
-    val snap = new VersionedDir(spark, root).snapshot
+  private def annVersion(root: String, snap: VersionedDir.Snapshot): AnnVersion =
     annVersions.get(root).filter(_.snapshot == snap).getOrElse {
       val v = new AnnVersion(snap, snap.dir.getOrElse(root))
       annVersions.put(root, v).foreach(_.release())
       v
     }
-  }
 
   def search(query: String, k: Int = 5, threshold: Double = 0.0,
              metric: Metric = Metric.Cosine,
@@ -507,44 +430,33 @@ final class VectorIndex(
     require(ann.exists(_.getClass == m.getClass),
       s"index was not built with ANN mode $m — pass it in VectorIndex(ann = ...)")
     import org.apache.spark.sql.functions.col
+    import graft.ops.{BinaryQuantization => BQ, ProductQuantization => PQ, ScalarQuantization => SQ}
+    val root = annRoot(m.getClass)
+    val v = annVersion(root, new VersionedDir(spark, root).snapshot)
+    val scored = VectorIndex.AnnLayouts(m.getClass)._2
     def page(candidates: DataFrame) =
       SimilaritySearch.topKPage(candidates, k, probes.size, "doc_id")
+    // SQ/BQ codes are unpartitioned: the whole relation under the overlay
+    def codes = SimilaritySearch.prunedRead(v.relation, None, Seq("doc_id", scored), v.delta, None)
     val topk = m match {
       case SearchMode.Lsh(bits, maxHamming) =>
-        val v = annVersion(annLshPath)
         page(SimilaritySearch.lshCandidates(v.relation, probes, config.dims,
-          bits, maxHamming, itemId = "doc_id", itemVec = "vector", v.delta, payloadFilter = None))
+          bits, maxHamming, itemId = "doc_id", itemVec = scored, v.delta, payloadFilter = None))
       case SearchMode.Ivf(_, nProbe, _) =>
-        val v = annVersion(annIvfPath)
         page(SimilaritySearch.ivfCandidates(v.relation, v.centroids, probes,
-          nProbe, itemId = "doc_id", itemVec = "vector", v.delta, payloadFilter = None))
-      case SearchMode.IvfPq(_, nProbe, pm, ksub, refine, _) =>
-        val v = annVersion(annIvfPqPath)
-        val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub)
-        graft.ops.ProductQuantization.ivfPqTopKResolved(v.relation, v.centroids,
-          v.codebooks(cfg), documents, probes, cfg, k, nProbe, refine,
-          itemId = "doc_id", itemVec = "vector", v.delta)
-      case SearchMode.RpqIvf(_, nProbe, pm, ksub, refine, _) =>
-        val v = annVersion(annRpqPath)
-        val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub)
-        graft.ops.ProductQuantization.residualIvfPqTopKResolved(v.relation, v.centroids,
-          v.codebooks(cfg), documents, probes, cfg, k, nProbe, refine,
-          itemId = "doc_id", itemVec = "vector", v.delta)
+          nProbe, itemId = "doc_id", itemVec = scored, v.delta, payloadFilter = None))
+      case IvfPqMode(_, nProbe, pm, ksub, refine, _, residual) =>
+        val cfg = PQ.PqConfig(config.dims, pm, ksub)
+        PQ.ivfPqTopKResolved(v.relation, v.centroids, v.codebooks(cfg), documents, probes, cfg,
+          k, nProbe, refine, itemId = "doc_id", itemVec = "vector", v.delta, residual)
       case SearchMode.Sq(refine) =>
-        val v = annVersion(annSqPath)
         val (mins, maxs) = v.sqParams
-        val codes = annCodesOverlay(v.relation.select(col("doc_id"), col("sq")), v.delta, "sq")
-        graft.ops.ScalarQuantization.sqTopK(codes, documents, mins, maxs,
-          probes, k, refine, itemId = "doc_id", itemVec = "vector")
+        SQ.sqTopK(codes, documents, mins, maxs, probes, k, refine, itemId = "doc_id", itemVec = "vector")
       case SearchMode.Bq(refine) =>
-        val v = annVersion(annBqPath)
-        val codes = annCodesOverlay(v.relation.select(col("doc_id"), col("bq")), v.delta, "bq")
-        graft.ops.BinaryQuantization.bqTopK(codes, documents, v.bqThresholds,
-          probes, k, refine, itemId = "doc_id", itemVec = "vector")
+        BQ.bqTopK(codes, documents, v.bqThresholds, probes, k, refine, itemId = "doc_id", itemVec = "vector")
       case SearchMode.Hnsw(_, _, ef) =>
-        val v = annVersion(annHnswPath)
         page(graft.ops.Hnsw.hnswCandidates(v.hnswGraph, probes, k, ef, v.delta, v.deltaIds,
-          itemId = "doc_id", itemVec = "vector"))
+          itemId = "doc_id", itemVec = scored))
       case SearchMode.Exact => throw new IllegalStateException("unreachable")
     }
     topk.select(col("doc_id"), col("score"))
@@ -737,6 +649,20 @@ object IndexRegistry {
 }
 
 object VectorIndex {
+  /** Per ANN mode: the name of its versioned root under the index path
+    * (`__ann_<name>`), and the column its rows are scored by — the vector,
+    * or the mode's codes. Delta sidecars carry it too, beside doc_id, any
+    * partition key and `deleted`.
+    */
+  private val AnnLayouts: Map[Class[_], (String, String)] = Map(
+    classOf[SearchMode.Lsh] -> ("lsh", "vector"),
+    classOf[SearchMode.Ivf] -> ("ivf", "vector"),
+    classOf[SearchMode.IvfPq] -> ("ivfpq", "codes"),
+    classOf[SearchMode.RpqIvf] -> ("rpq", "codes"),
+    classOf[SearchMode.Sq] -> ("sq", "sq"),
+    classOf[SearchMode.Bq] -> ("bq", "bq"),
+    classOf[SearchMode.Hnsw] -> ("hnsw", "vector"))
+
   /** Candidate-page multiplier for ANN + post-filter searches: fetch
     * k·overfetch hits before the payload predicate re-limits to k.
     */

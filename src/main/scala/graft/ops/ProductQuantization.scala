@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.vector._
 
@@ -154,45 +157,8 @@ object ProductQuantization {
                               itemId: String = "vec_id", itemVec: String = "embedding",
                               delta: Option[org.apache.spark.sql.DataFrame] = None): DataFrame = {
     val (raw, centroids, cbs) = resolveIndex(spark, indexPath, cfg)
-    residualIvfPqTopKResolved(raw, centroids, cbs, items, probes, cfg, k, nProbe, refine,
-      itemId, itemVec, delta)
-  }
-
-  /** [[residualIvfPqTopKPruned]] over an already-resolved version: its
-    * cell-partitioned codes relation, collected centroids and codebooks.
-    */
-  private[graft] def residualIvfPqTopKResolved(raw: DataFrame,
-      centroids: (Array[Array[Float]], Array[Long]), cbs: Array[Array[Array[Float]]],
-      items: DataFrame, probes: Seq[(Long, Seq[Float])], cfg: PqConfig,
-      k: Int, nProbe: Int, refine: Int, itemId: String, itemVec: String,
-      delta: Option[DataFrame]): DataFrame = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    val (cvs, cids) = centroids
-    val expanded = probes.flatMap { case (qid, qv) =>
-      SimilaritySearch.nearestCellsLocal(qv, cvs, cids, nProbe).map { c =>
-        val cv = cvs(cids.indexOf(c))
-        val rq = Seq.tabulate(qv.length)(i => (qv(i).toDouble - cv(i).toDouble).toFloat)
-        (qid, qv, c, adcLut(rq, cbs, cfg).toSeq)
-      }
-    }
-    val probeDf = expanded.toDF("qid", "qv", "__cell", "lut")
-      .select(col("qid"), col("qv").cast("array<float>"), col("__cell"), col("lut"))
-    val candCells: Seq[Any] = raw.schema("cell").dataType match {
-      case org.apache.spark.sql.types.IntegerType => expanded.map(_._3.toInt).distinct
-      case _                                      => expanded.map(_._3).distinct
-    }
-    val index = raw.filter(col("cell").isin(candCells: _*))
-      .withColumn("__cell", col("cell").cast("long")).drop("cell")
-    // incremental-maintenance overlay: delta rows carry codes encoded
-    // against THIS version's (residual-trained) codebooks in their assigned
-    // cell's frame — same shadow-new-wins merge as [[ivfPqTopKPruned]]
-    val live = SimilaritySearch.mergeDelta(index, delta, "cell", "__cell",
-      expanded.map(_._3).distinct, itemId, itemVec = "codes")
-    val scored = live.join(broadcast(probeDf.select(col("qid"), col("__cell"), col("lut"))), Seq("__cell"))
-      .select(col("qid"), col(itemId),
-        (-pq_adc(col("codes"), col("lut"), cfg.ksub)).cast("double").as("score"))
-    rerankExact(scored, items, probeDf, k, refine, itemId, itemVec)
+    ivfPqTopKResolved(raw, centroids, cbs, items, probes, cfg, k, nProbe, refine,
+      itemId, itemVec, delta, residual = true)
   }
 
   /** Codebooks of the ACTIVE index version. */
@@ -239,27 +205,65 @@ object ProductQuantization {
               probes: Seq[(Long, Seq[Float])], cfg: PqConfig,
               k: Int = 10, refine: Int = 4,
               itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame = {
-    val spark = encoded.sparkSession
-    import spark.implicits._
     val cbs = collectCodebooks(codebooks, cfg)
-    val probeDf = probes
-      .map { case (qid, qv) => (qid, qv, adcLut(qv, cbs, cfg).toSeq) }
-      .toDF("qid", "qv", "lut")
-      .select(col("qid"), col("qv").cast("array<float>"), col("lut"))
-    val scored = encoded.select(col(itemId), col("codes"))
-      .crossJoin(broadcast(probeDf.select(col("qid"), col("lut"))))
-      // negate: the aggregator keeps LARGEST scores; adc is an exact long
-      // (≪ 2^53, so the double negation is still exact)
-      .select(col("qid"), col(itemId),
-        (-pq_adc(col("codes"), col("lut"), cfg.ksub)).cast("double").as("score"))
+    codesTopK(encoded.select(col(itemId), col("codes")), "codes", None,
+      probes.map { case (qid, qv) => Row(qid, qv, adcLut(qv, cbs, cfg).toSeq) }, LutType,
+      pq_adc(_, _, cfg.ksub), items, k, refine, itemId, itemVec)
+  }
+
+  /** Spark type of an ADC lookup table ([[adcLut]], [[ScalarQuantization.sqLut]]). */
+  private[ops] val LutType = ArrayType(LongType, containsNull = false)
+
+  /** Quantized scoring with exact rerank — the shared body of every PQ, SQ
+    * and BQ route. Each probe row is (qid, qv[, key], code): the probe's
+    * code built on the driver (an ADC lookup table or packed query bits),
+    * plus, with `key` set, the partition key it probes — one row per
+    * (probe, cell), joined to the `codes` rows of its cell (the `__cell`
+    * of [[SimilaritySearch.prunedRead]]); without a key every probe scores
+    * every row. `score(codes, code)` is an exact long distance, negated
+    * because the TopK aggregator keeps the LARGEST scores (≪ 2^53, so the
+    * double is still exact).
+    */
+  private[ops] def codesTopK(codes: DataFrame, codeCol: String, key: Option[String],
+                             probeRows: Seq[Row], codeType: DataType,
+                             score: (Column, Column) => Column, items: DataFrame,
+                             k: Int, refine: Int, itemId: String, itemVec: String): DataFrame = {
+    val schema = StructType(Seq(StructField("qid", LongType), StructField("qv", ArrayType(FloatType))) ++
+      key.map(StructField(_, LongType)) :+ StructField("code", codeType))
+    val probeDf = codes.sparkSession.createDataFrame(probeRows.asJava, schema)
+    val probeSide = broadcast(probeDf.drop("qv"))
+    val scored = key.fold(codes.crossJoin(probeSide))(kc => codes.join(probeSide, Seq(kc)))
+      .select(col("qid"), col(itemId), (-score(col(codeCol), col("code"))).cast("double").as("score"))
     rerankExact(scored, items, probeDf, k, refine, itemId, itemVec)
+  }
+
+  /** [[codesTopK]] over a cell-partitioned codes relation `raw` (one
+    * version directory's read): each probe's `nProbe` nearest cells are
+    * picked on the driver against the version's centroids, and the codes
+    * are read through [[SimilaritySearch.prunedRead]] — static cell prune
+    * plus the new-wins `delta` overlay. `probeCode(qv, j)` builds a probe's
+    * code for the cell with centroid index j.
+    */
+  private[ops] def ivfCodesTopK(raw: DataFrame, centroids: (Array[Array[Float]], Array[Long]),
+                                probes: Seq[(Long, Seq[Float])], nProbe: Int, codeCol: String,
+                                probeCode: (Seq[Float], Int) => Any, codeType: DataType,
+                                score: (Column, Column) => Column, items: DataFrame,
+                                k: Int, refine: Int, itemId: String, itemVec: String,
+                                delta: Option[DataFrame]): DataFrame = {
+    val probeRows = SimilaritySearch.probeCells(probes, centroids, nProbe).map { case (qid, qv, c) =>
+      Row(qid, qv, c, probeCode(qv, centroids._2.indexOf(c)))
+    }
+    val codes = SimilaritySearch.prunedRead(raw, Some(("cell", probeRows.map(_.getLong(2)))),
+      Seq(itemId, codeCol), delta, None)
+    codesTopK(codes, codeCol, Some("__cell"), probeRows, codeType, score, items, k, refine,
+      itemId, itemVec)
   }
 
   /** Shared exact-rerank tail: bounded candidate selection on the ADC
     * score, then cosine over the full vectors of the ≤ probes·k·refine
     * candidate ids only (both candidate sides broadcast — tiny).
     */
-  private[ops] def rerankExact(scored: DataFrame, items: DataFrame, probeDf: DataFrame,
+  private def rerankExact(scored: DataFrame, items: DataFrame, probeDf: DataFrame,
                           k: Int, refine: Int, itemId: String, itemVec: String): DataFrame = {
     val cand = SimilaritySearch.topKByProbe(scored, k * refine, "qid", itemId)
       .select(col("qid"), col(itemId))
@@ -290,7 +294,7 @@ object ProductQuantization {
                       delta: Option[org.apache.spark.sql.DataFrame] = None): DataFrame = {
     val (raw, centroids, cbs) = resolveIndex(spark, indexPath, cfg)
     ivfPqTopKResolved(raw, centroids, cbs, items, probes, cfg, k, nProbe, refine,
-      itemId, itemVec, delta)
+      itemId, itemVec, delta, residual = false)
   }
 
   /** One version of an IVF×PQ index resolved from its versioned root: the
@@ -305,40 +309,24 @@ object ProductQuantization {
       collectCodebooks(graft.api.VersionedDir.readSide(spark, s"$resolved/_codebooks"), cfg))
   }
 
-  /** [[ivfPqTopKPruned]] over an already-resolved version: its
+  /** [[ivfPqTopKPruned]] (`residual` false) and [[residualIvfPqTopKPruned]]
+    * (`residual` true) over an already-resolved version: its
     * cell-partitioned codes relation, collected centroids and codebooks.
+    * The two differ only in the frame the LUT is built in — the probe `q`,
+    * or per probed cell its residual `q − centroid`. Delta codes rows were
+    * encoded against THIS version's codebooks, in the same frame.
     */
   private[graft] def ivfPqTopKResolved(raw: DataFrame,
       centroids: (Array[Array[Float]], Array[Long]), cbs: Array[Array[Array[Float]]],
       items: DataFrame, probes: Seq[(Long, Seq[Float])], cfg: PqConfig,
       k: Int, nProbe: Int, refine: Int, itemId: String, itemVec: String,
-      delta: Option[DataFrame]): DataFrame = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    val (cvs, cids) = centroids
-    val expanded = probes.flatMap { case (qid, qv) =>
-      val lut = adcLut(qv, cbs, cfg).toSeq
-      SimilaritySearch.nearestCellsLocal(qv, cvs, cids, nProbe)
-        .map(c => (qid, qv, c, lut))
-    }
-    val probeDf = expanded.toDF("qid", "qv", "__cell", "lut")
-      .select(col("qid"), col("qv").cast("array<float>"), col("__cell"), col("lut"))
-    // literals of the parquet-inferred partition-column type keep the IN a
-    // bare partition filter (same discipline as ivfTopKPruned)
-    val candCells: Seq[Any] = raw.schema("cell").dataType match {
-      case org.apache.spark.sql.types.IntegerType => expanded.map(_._3.toInt).distinct
-      case _                                      => expanded.map(_._3).distinct
-    }
-    val index = raw.filter(col("cell").isin(candCells: _*))
-      .withColumn("__cell", col("cell").cast("long")).drop("cell")
-    // incremental-maintenance overlay: delta codes rows (encoded against
-    // THIS version's codebooks) shadow base copies new-wins; tombstones drop
-    val live = SimilaritySearch.mergeDelta(index, delta, "cell", "__cell",
-      expanded.map(_._3).distinct, itemId, itemVec = "codes")
-    val scored = live.join(broadcast(probeDf.select(col("qid"), col("__cell"), col("lut"))), Seq("__cell"))
-      .select(col("qid"), col(itemId),
-        (-pq_adc(col("codes"), col("lut"), cfg.ksub)).cast("double").as("score"))
-    rerankExact(scored, items, probeDf, k, refine, itemId, itemVec)
+      delta: Option[DataFrame], residual: Boolean): DataFrame = {
+    def frame(qv: Seq[Float], j: Int): Seq[Float] =
+      if (!residual) qv
+      else Seq.tabulate(qv.length)(i => (qv(i).toDouble - centroids._1(j)(i).toDouble).toFloat)
+    ivfCodesTopK(raw, centroids, probes, nProbe, "codes",
+      (qv, j) => adcLut(frame(qv, j), cbs, cfg).toSeq, LutType, pq_adc(_, _, cfg.ksub),
+      items, k, refine, itemId, itemVec, delta)
   }
 
   /** (sub, code, cv) rows → `cbs(sub)(code)` float arrays (tiny by design:

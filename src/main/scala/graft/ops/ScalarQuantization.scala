@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
 import graft.functions.vector._
 
@@ -88,21 +89,10 @@ object ScalarQuantization {
              mins: Array[Float], maxs: Array[Float],
              probes: Seq[(Long, Seq[Float])],
              k: Int = 10, refine: Int = 4,
-             itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame = {
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    val probeDf = probes
-      .map { case (qid, qv) => (qid, qv, sqLut(qv, mins, maxs).toSeq) }
-      .toDF("qid", "qv", "lut")
-      .select(col("qid"), col("qv").cast("array<float>"), col("lut"))
-    val scored = encoded.select(col(itemId), col("sq"))
-      .crossJoin(broadcast(probeDf.select(col("qid"), col("lut"))))
-      // negate: the TopK aggregator keeps LARGEST scores; the ADC long is
-      // ≪ 2^53, so the double negation is still exact
-      .select(col("qid"), col(itemId),
-        (-sq_adc(col("sq"), col("lut"))).cast("double").as("score"))
-    ProductQuantization.rerankExact(scored, items, probeDf, k, refine, itemId, itemVec)
-  }
+             itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame =
+    ProductQuantization.codesTopK(encoded.select(col(itemId), col("sq")), "sq", None,
+      probes.map { case (qid, qv) => Row(qid, qv, sqLut(qv, mins, maxs).toSeq) },
+      ProductQuantization.LutType, sq_adc, items, k, refine, itemId, itemVec)
 
   /** Write an SQ-encoded index with its params riding INSIDE the version
     * dir (`_sqparams`) — codes and the extremes they were computed against
@@ -134,30 +124,12 @@ object ScalarQuantization {
                       probes: Seq[(Long, Seq[Float])],
                       k: Int = 10, nProbe: Int = 4, refine: Int = 4,
                       itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame = {
-    import spark.implicits._
     val resolved = graft.api.VersionedDir.resolve(spark, indexPath)
-    val (cvs, cids) = SimilaritySearch.collectCentroids(
-      graft.api.VersionedDir.readSide(spark, s"$resolved/_centroids"))
     val (mins, maxs) = collectParams(graft.api.VersionedDir.readSide(spark, s"$resolved/_sqparams"))
-    val expanded = probes.flatMap { case (qid, qv) =>
-      val lut = sqLut(qv, mins, maxs).toSeq
-      SimilaritySearch.nearestCellsLocal(qv, cvs, cids, nProbe)
-        .map(c => (qid, qv, c, lut))
-    }
-    val probeDf = expanded.toDF("qid", "qv", "__cell", "lut")
-      .select(col("qid"), col("qv").cast("array<float>"), col("__cell"), col("lut"))
-    val raw = spark.read.parquet(resolved)
-    val candCells: Seq[Any] = raw.schema("cell").dataType match {
-      case org.apache.spark.sql.types.IntegerType => expanded.map(_._3.toInt).distinct
-      case _                                      => expanded.map(_._3).distinct
-    }
-    val index = raw.filter(col("cell").isin(candCells: _*))
-      .withColumn("__cell", col("cell").cast("long")).drop("cell")
-    val scored = index
-      .join(broadcast(probeDf.select(col("qid"), col("__cell"), col("lut"))), Seq("__cell"))
-      .select(col("qid"), col(itemId),
-        (-sq_adc(col("sq"), col("lut"))).cast("double").as("score"))
-    ProductQuantization.rerankExact(scored, items, probeDf, k, refine, itemId, itemVec)
+    ProductQuantization.ivfCodesTopK(spark.read.parquet(resolved),
+      SimilaritySearch.collectCentroids(graft.api.VersionedDir.readSide(spark, s"$resolved/_centroids")),
+      probes, nProbe, "sq", (qv, _) => sqLut(qv, mins, maxs).toSeq, ProductQuantization.LutType,
+      sq_adc, items, k, refine, itemId, itemVec, delta = None)
   }
 
   /** Params of the ACTIVE index version. */
@@ -225,20 +197,10 @@ object BinaryQuantization {
   def bqTopK(encoded: DataFrame, items: DataFrame, thresholds: Array[Double],
              probes: Seq[(Long, Seq[Float])],
              k: Int = 10, refine: Int = 4,
-             itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame = {
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    val probeDf = probes
-      .map { case (qid, qv) => (qid, qv, bqEncodeLocal(qv, thresholds)) }
-      .toDF("qid", "qv", "qb")
-      .select(col("qid"), col("qv").cast("array<float>"), col("qb"))
-    val scored = encoded.select(col(itemId), col("bq"))
-      .crossJoin(broadcast(probeDf.select(col("qid"), col("qb"))))
-      // negate: the TopK aggregator keeps LARGEST scores; hamming ≤ dims
-      .select(col("qid"), col(itemId),
-        (-bq_hamming(col("bq"), col("qb"))).cast("double").as("score"))
-    ProductQuantization.rerankExact(scored, items, probeDf, k, refine, itemId, itemVec)
-  }
+             itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame =
+    ProductQuantization.codesTopK(encoded.select(col(itemId), col("bq")), "bq", None,
+      probes.map { case (qid, qv) => Row(qid, qv, bqEncodeLocal(qv, thresholds)) }, BinaryType,
+      bq_hamming, items, k, refine, itemId, itemVec)
 
   /** Write a BQ-encoded index with its thresholds riding INSIDE the
     * version dir (`_bqparams`) — codes and params flip atomically, like
@@ -265,29 +227,11 @@ object BinaryQuantization {
                       probes: Seq[(Long, Seq[Float])],
                       k: Int = 10, nProbe: Int = 4, refine: Int = 4,
                       itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame = {
-    import spark.implicits._
     val resolved = graft.api.VersionedDir.resolve(spark, indexPath)
-    val (cvs, cids) = SimilaritySearch.collectCentroids(
-      graft.api.VersionedDir.readSide(spark, s"$resolved/_centroids"))
     val thr = collectThresholds(graft.api.VersionedDir.readSide(spark, s"$resolved/_bqparams"))
-    val expanded = probes.flatMap { case (qid, qv) =>
-      val qb = bqEncodeLocal(qv, thr)
-      SimilaritySearch.nearestCellsLocal(qv, cvs, cids, nProbe)
-        .map(c => (qid, qv, c, qb))
-    }
-    val probeDf = expanded.toDF("qid", "qv", "__cell", "qb")
-      .select(col("qid"), col("qv").cast("array<float>"), col("__cell"), col("qb"))
-    val raw = spark.read.parquet(resolved)
-    val candCells: Seq[Any] = raw.schema("cell").dataType match {
-      case org.apache.spark.sql.types.IntegerType => expanded.map(_._3.toInt).distinct
-      case _                                      => expanded.map(_._3).distinct
-    }
-    val index = raw.filter(col("cell").isin(candCells: _*))
-      .withColumn("__cell", col("cell").cast("long")).drop("cell")
-    val scored = index
-      .join(broadcast(probeDf.select(col("qid"), col("__cell"), col("qb"))), Seq("__cell"))
-      .select(col("qid"), col(itemId),
-        (-bq_hamming(col("bq"), col("qb"))).cast("double").as("score"))
-    ProductQuantization.rerankExact(scored, items, probeDf, k, refine, itemId, itemVec)
+    ProductQuantization.ivfCodesTopK(spark.read.parquet(resolved),
+      SimilaritySearch.collectCentroids(graft.api.VersionedDir.readSide(spark, s"$resolved/_centroids")),
+      probes, nProbe, "bq", (qv, _) => bqEncodeLocal(qv, thr), BinaryType,
+      bq_hamming, items, k, refine, itemId, itemVec, delta = None)
   }
 }

@@ -196,54 +196,59 @@ object SimilaritySearch {
                                    payloadFilter: Option[Column]): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
-    require(payloadFilter.isEmpty || delta.isEmpty,
-      "payloadFilter over a delta overlay is unsupported: delta sidecars carry " +
-        "only (id, vector) — fold the deltas first, or filter the hydrated results")
     val masks = hammingMasks(bits, maxHamming)
     val expanded = probes.flatMap { case (qid, qv) =>
       val pb = lshBucketLocal(qv, dims, bits)
       masks.map(m => (qid, qv, pb ^ m))
     }
-    lazy val probeDf = expanded.toDF("qid", "qv", "__bkt")
-      .select(col("qid"), col("qv").cast("array<float>"), col("__bkt"))
-    // partition-column type inference reads small bucket dirs back as int;
-    // filter with literals of the inferred type so the In stays a bare
-    // partition filter (no cast wrapper → static pruning guaranteed)
-    val candBuckets: Seq[Any] = raw.schema("bucket").dataType match {
-      case org.apache.spark.sql.types.IntegerType => expanded.map(_._3.toInt).distinct
-      case _                                      => expanded.map(_._3).distinct
-    }
-    // payload predicate pushes to parquet inside the surviving buckets —
-    // same composition as ivfTopKPruned (partition prune × pushed filter)
-    val index = payloadFilter.fold(raw)(raw.filter)
-      .filter(col("bucket").isin(candBuckets: _*))
-      .withColumn("__bkt", col("bucket").cast("long"))
-      .drop("bucket")
-    val live = mergeDelta(index, delta, "bucket", "__bkt",
-      expanded.map(_._3).distinct, itemId, itemVec)
-    scoreCandidates(withProbes(live, probes, probeDf, Some("__bkt")), itemId, itemVec, "qid", "qv")
+    lazy val probeDf = expanded.toDF("qid", "qv", "__bucket")
+      .select(col("qid"), col("qv").cast("array<float>"), col("__bucket"))
+    val live = prunedRead(raw, Some(("bucket", expanded.map(_._3))), Seq(itemId, itemVec),
+      delta, payloadFilter)
+    scoreCandidates(withProbes(live, probes, probeDf, Some("__bucket")), itemId, itemVec, "qid", "qv")
   }
 
-  /** New-wins overlay of an incremental-maintenance delta onto a pruned ANN
-    * base scan ([[graft.api.VectorIndex.refreshAnnIncremental]]): every
-    * doc_id present in the delta shadows its base copies (broadcast anti
-    * equi-join — the delta is small by construction, and the base scan's
-    * partition filter survives untouched), then the delta's LIVE rows in
-    * candidate buckets/cells union in. Tombstones (`deleted = true`)
-    * contribute only the shadowing.
+  /** The one pruned ANN read, shared by every route over a versioned ANN
+    * relation (LSH buckets; IVF cells over vectors, PQ, residual PQ, SQ and
+    * BQ codes; the unpartitioned SQ/BQ code scans):
+    *  1. prune — with `part = Some((key, candidates))` the scan carries
+    *     `key IN (candidates)`, the candidates computed on the driver. The
+    *     literals take the parquet-inferred partition type (small dirs read
+    *     back as int), so the In stays a bare partition filter: no cast
+    *     wrapper, static pruning guaranteed. `payloadFilter` pushes to the
+    *     parquet row groups INSIDE the surviving partitions (the index
+    *     write carries the item's payload columns through): partitions ×
+    *     filter, never a corpus scan. The key is renamed to the long
+    *     `__<key>` the probe side joins on;
+    *  2. overlay — an incremental-maintenance delta
+    *     ([[graft.api.VectorIndex.refreshAnnIncremental]]) merges new-wins:
+    *     every id in the delta shadows its base copies (broadcast anti
+    *     equi-join — the delta is small by construction, and the base
+    *     scan's partition filter survives untouched), then the delta's LIVE
+    *     rows in the candidate partitions union in. Tombstones
+    *     (`deleted = true`) contribute only the shadowing.
+    * Output: `cols` (the item id first), then `__<key>` when partitioned.
     */
-  private[graft] def mergeDelta(prunedBase: DataFrame, delta: Option[DataFrame],
-                                keyCol: String, outCol: String, candKeys: Seq[Long],
-                                itemId: String, itemVec: String): DataFrame = delta match {
-    case None => prunedBase
-    case Some(d) =>
-      val dIds = broadcast(d.select(col(itemId)).distinct())
-      val adds = d.filter(!col("deleted"))
-        .filter(col(keyCol).isin(candKeys: _*))
-        .select(col(itemId), col(itemVec), col(keyCol).cast("long").as(outCol))
-      prunedBase.select(col(itemId), col(itemVec), col(outCol))
-        .join(dIds, Seq(itemId), "left_anti")
-        .unionByName(adds)
+  private[graft] def prunedRead(raw: DataFrame, part: Option[(String, Seq[Long])],
+                                cols: Seq[String], delta: Option[DataFrame],
+                                payloadFilter: Option[Column]): DataFrame = {
+    require(payloadFilter.isEmpty || delta.isEmpty,
+      "payloadFilter over a delta overlay is unsupported: delta sidecars carry " +
+        "only (id, vector) — fold the deltas first, or filter the hydrated results")
+    def pruned(rows: DataFrame): DataFrame = part.fold(rows.select(cols.map(col): _*)) {
+      case (key, candidates) =>
+        val lits: Seq[Any] = rows.schema(key).dataType match {
+          case org.apache.spark.sql.types.IntegerType => candidates.distinct.map(_.toInt)
+          case _                                      => candidates.distinct
+        }
+        rows.filter(col(key).isin(lits: _*))
+          .select(cols.map(col) :+ col(key).cast("long").as(s"__$key"): _*)
+    }
+    val base = pruned(payloadFilter.fold(raw)(raw.filter))
+    delta.fold(base) { d =>
+      base.join(broadcast(d.select(col(cols.head)).distinct()), Seq(cols.head), "left_anti")
+        .unionByName(pruned(d.filter(!col("deleted"))))
+    }
   }
 
   /** Attach candidate rows to their probe's (qid, qv). A single probe's
@@ -603,31 +608,21 @@ object SimilaritySearch {
                                    payloadFilter: Option[Column]): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
-    require(payloadFilter.isEmpty || delta.isEmpty,
-      "payloadFilter over a delta overlay is unsupported: delta sidecars carry " +
-        "only (id, vector) — fold the deltas first, or filter the hydrated results")
-    val (cvs, cids) = centroids
-    val expanded = probes.flatMap { case (qid, qv) =>
-      nearestCellsLocal(qv, cvs, cids, nProbe).map(c => (qid, qv, c))
-    }
+    val expanded = probeCells(probes, centroids, nProbe)
     lazy val probeDf = expanded.toDF("qid", "qv", "__cell")
       .select(col("qid"), col("qv").cast("array<float>"), col("__cell"))
-    val candCells: Seq[Any] = raw.schema("cell").dataType match {
-      case org.apache.spark.sql.types.IntegerType => expanded.map(_._3.toInt).distinct
-      case _                                      => expanded.map(_._3).distinct
-    }
-    // Payload filter composes with the partition filter: `cell IN (…)` prunes
-    // directories, the payload predicate pushes to the parquet row groups
-    // INSIDE the surviving cells (the index write carries the item's payload
-    // columns through, so the predicate is scan-native). This is the
-    // 100 TB filtered-ANN shape: cells × filter, never a corpus scan.
-    val index = payloadFilter.fold(raw)(raw.filter)
-      .filter(col("cell").isin(candCells: _*))
-      .withColumn("__cell", col("cell").cast("long")).drop("cell")
-    val live = mergeDelta(index, delta, "cell", "__cell",
-      expanded.map(_._3).distinct, itemId, itemVec)
+    val live = prunedRead(raw, Some(("cell", expanded.map(_._3))), Seq(itemId, itemVec),
+      delta, payloadFilter)
     scoreCandidates(withProbes(live, probes, probeDf, Some("__cell")), itemId, itemVec, "qid", "qv")
   }
+
+  /** (qid, qv, cell) for each probe's `nProbe` nearest cells, on the driver. */
+  private[ops] def probeCells(probes: Seq[(Long, Seq[Float])],
+                              centroids: (Array[Array[Float]], Array[Long]),
+                              nProbe: Int): Seq[(Long, Seq[Float], Long)] =
+    probes.flatMap { case (qid, qv) =>
+      nearestCellsLocal(qv, centroids._1, centroids._2, nProbe).map(c => (qid, qv, c))
+    }
 
   /** Driver-side twin of NearestCellsExpr (same distance accumulation and
     * (dist, cid) tie order) for probe vectors already on the driver.

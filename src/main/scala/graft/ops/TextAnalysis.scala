@@ -580,7 +580,7 @@ object TextAnalysis {
     val text = if (carryText) Seq(col(textCol).as("__text")) else Nil
     val sized = docs.select(Seq(gk.as("__gk"), col(idCol).cast("long").as("doc_id"),
       tokens.as("n_tokens")) ++ text: _*).materialize(false)
-    prefixSum(sized, targetGroups, "tok_before")
+    prefixSum(sized, targetGroups, "tok_before", idCol)
       .getOrElse(sized.withColumn("tok_before", lit(0L)).limit(0))
       .withColumn("bin", expr(s"tok_before div $tokenBudget"))
   }
@@ -609,10 +609,12 @@ object TextAnalysis {
     * final window's existing (group, chunk, id) sort, so a lag-based
     * raise_error guard rides that sort — no extra job, shuffle, or
     * distinct aggregation (the naive count-vs-countDistinct probe costs a
-    * full extra shuffle of the id set).
+    * full extra shuffle of the id set). Null ids have no prefix order
+    * either: they are counted in the id-bounds job and fail loudly,
+    * naming the caller's id column `idCol`.
     */
   private[graft] def prefixSum(sized: DataFrame, targetGroups: Long,
-                        outCol: String,
+                        outCol: String, idCol: String,
                         /** Driver-collect guard: max non-empty (group,
                           * superblock) rows. The default (4M rows ≈ ~200 MB
                           * boxed on the driver) is sized for the 64 GB-heap
@@ -623,7 +625,11 @@ object TextAnalysis {
                         maxSuperblocks: Long = 4_000_000L): Option[DataFrame] = {
     val spark = sized.sparkSession
     import spark.implicits._
-    val bounds = sized.agg(min("doc_id"), max("doc_id")).head()
+    val bounds = sized.agg(min("doc_id"), max("doc_id"),
+      count(when(col("doc_id").isNull, lit(1)))).head()
+    require(bounds.getLong(2) == 0,
+      s"null id in column $idCol (${bounds.getLong(2)} rows): prefix order would be " +
+        "undefined; drop or assign the null ids first")
     if (bounds.isNullAt(0)) return None
     val (minId, maxId) = (bounds.getLong(0), bounds.getLong(1))
     val span = math.max(1L, (maxId - minId + targetGroups) / targetGroups)
@@ -781,7 +787,7 @@ object TextAnalysis {
           .withColumn("selected", (col("q_level") > b).cast("int"))
         val bSub = sized.filter(col("q_level") === b)
           .select(lit("").as("__gk"), col("doc_id"), col("n_tokens"))
-        val bOut = prefixSum(bSub, targetGroups, "tok_before").get
+        val bOut = prefixSum(bSub, targetGroups, "tok_before", idCol).get
           .select(col("doc_id"), lit(b).as("q_level"), col("n_tokens"),
             (col("tok_before") + col("n_tokens") <= budgetLeft).cast("int").as("selected"))
         nonB.select("doc_id", "q_level", "n_tokens", "selected").union(bOut)
@@ -801,7 +807,7 @@ object TextAnalysis {
     val wCol = weights.foldLeft(lit(1.0)) { case (acc, (g, wt)) =>
       when(col("__gk") === g, lit(wt)).otherwise(acc)
     }
-    prefixSum(sized, targetGroups, "__rank0") match {
+    prefixSum(sized, targetGroups, "__rank0", idCol) match {
       case None => sized.select(col("__gk").as(groupCol), col("doc_id"),
         lit(0L).as("rank_in_group"), lit(0.0).as("pos")).limit(0)
       case Some(cum) => cum

@@ -103,22 +103,55 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  /** The IVF × {PQ, residual PQ, SQ, BQ} indexes over `items` (8 cells),
+    * written under `tmp`: (pq, rpq, sq, bq) paths, the PQ config and the
+    * plain and residual PQ codes.
+    */
+  private def quantizedIvfIndexes(tmp: String) = {
+    import graft.ops.{BinaryQuantization => BQ, ProductQuantization => PQ, ScalarQuantization => SQ}
+    val cfg = PQ.PqConfig(dims = 16, m = 4, ksub = 8)
+    val (assigned, centroids) = SimilaritySearch.ivfAssign(items, nCells = 8)
+    val res = PQ.residualize(assigned, centroids)
+    val pqCb = PQ.pqTrain(items, cfg)
+    val rpqCb = PQ.pqTrain(res, cfg, itemVec = "residual")
+    val pqCodes = PQ.pqEncode(assigned, pqCb, cfg).select("vec_id", "cell", "codes")
+    val rpqCodes = PQ.pqEncode(res, rpqCb, cfg, itemVec = "residual").select("vec_id", "cell", "codes")
+    PQ.pqIndexWrite(pqCodes, pqCb, s"$tmp/pq", Some(centroids))
+    PQ.pqIndexWrite(rpqCodes, rpqCb, s"$tmp/rpq", Some(centroids))
+    val sqParams = SQ.sqTrain(items)
+    val (mins, maxs) = SQ.collectParams(sqParams)
+    SQ.sqIndexWrite(SQ.sqEncode(assigned, mins, maxs).select("vec_id", "cell", "sq"),
+      sqParams, s"$tmp/sq", Some(centroids))
+    val bqParams = BQ.bqTrain(items)
+    BQ.bqIndexWrite(BQ.bqEncode(assigned, BQ.collectThresholds(bqParams)).select("vec_id", "cell", "bq"),
+      bqParams, s"$tmp/bq", Some(centroids))
+    (cfg, pqCodes, rpqCodes)
+  }
+
   test("both pruned ANN paths carry a non-empty static partition filter") {
+    import graft.ops.{BinaryQuantization => BQ, ProductQuantization => PQ, ScalarQuantization => SQ}
     val tmp = java.nio.file.Files.createTempDirectory("graft-planspec").toString
     val probeRows = probes.collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
 
     SimilaritySearch.lshIndexWrite(items, s"$tmp/lsh", dims = 16, bits = 8)
-    val lsh = plan(SimilaritySearch.lshTopKPruned(spark, s"$tmp/lsh", probeRows,
-      dims = 16, k = 5, bits = 8, maxHamming = 1))
-    assert(nonEmptyPartitionFilter.findFirstIn(lsh).isDefined, lsh)
-    assert(!lsh.contains("BroadcastNestedLoopJoin"), lsh)
-
     val (assigned, centroids) = SimilaritySearch.ivfAssign(items, nCells = 8)
     SimilaritySearch.ivfIndexWrite(assigned, s"$tmp/ivf", Some(centroids))
-    val ivf = plan(SimilaritySearch.ivfTopKPruned(spark, s"$tmp/ivf",
-      SimilaritySearch.ivfCentroidsRead(spark, s"$tmp/ivf"), probeRows, k = 5, nProbe = 2))
-    assert(nonEmptyPartitionFilter.findFirstIn(ivf).isDefined, ivf)
-    assert(!ivf.contains("BroadcastNestedLoopJoin"), ivf)
+    val (cfg, _, _) = quantizedIvfIndexes(tmp)
+    val routes = Seq(
+      "lsh" -> SimilaritySearch.lshTopKPruned(spark, s"$tmp/lsh", probeRows,
+        dims = 16, k = 5, bits = 8, maxHamming = 1),
+      "ivf" -> SimilaritySearch.ivfTopKPruned(spark, s"$tmp/ivf",
+        SimilaritySearch.ivfCentroidsRead(spark, s"$tmp/ivf"), probeRows, k = 5, nProbe = 2),
+      "ivf-pq" -> PQ.ivfPqTopKPruned(spark, s"$tmp/pq", items, probeRows, cfg, k = 5, nProbe = 2),
+      "residual ivf-pq" -> PQ.residualIvfPqTopKPruned(spark, s"$tmp/rpq", items, probeRows, cfg,
+        k = 5, nProbe = 2),
+      "ivf-sq" -> SQ.ivfSqTopKPruned(spark, s"$tmp/sq", items, probeRows, k = 5, nProbe = 2),
+      "ivf-bq" -> BQ.ivfBqTopKPruned(spark, s"$tmp/bq", items, probeRows, k = 5, nProbe = 2))
+    routes.foreach { case (name, df) =>
+      val p = plan(df)
+      assert(nonEmptyPartitionFilter.findFirstIn(p).isDefined, s"$name:\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"$name:\n$p")
+    }
   }
 
   test("single-probe pruned search reranks via TakeOrderedAndProject, not a global window") {
@@ -173,16 +206,32 @@ class PlanSpec extends AnyFunSuite {
   // cost the base scan its static partition filter (the pruned read stays
   // pruned; the delta rides in as a broadcast-side union).
   test("pruned ANN read keeps its static partition filter under a delta overlay") {
+    import graft.ops.{ProductQuantization => PQ}
     val tmp = java.nio.file.Files.createTempDirectory("graft-planspec-delta").toString
     SimilaritySearch.lshIndexWrite(items, s"$tmp/lsh", dims = 16, bits = 8)
+    val (assigned, centroids) = SimilaritySearch.ivfAssign(items, nCells = 8)
+    SimilaritySearch.ivfIndexWrite(assigned, s"$tmp/ivf", Some(centroids))
+    val (cfg, pqCodes, rpqCodes) = quantizedIvfIndexes(tmp)
     val probeRows = probes.collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val delta = items.filter(col("vec_id") === 0)
-      .select(col("vec_id"), col("embedding"),
-        lit(3L).as("bucket"), lit(false).as("deleted"))
-    val p = plan(SimilaritySearch.lshTopKPruned(spark, s"$tmp/lsh", probeRows,
-      dims = 16, k = 5, bits = 8, maxHamming = 1, delta = Some(delta)))
-    assert(nonEmptyPartitionFilter.findFirstIn(p).isDefined, p)
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    // one live row and one tombstone per delta, in the sidecar row shapes
+    def delta(rows: org.apache.spark.sql.DataFrame, key: String, cols: String*) =
+      rows.filter(col("vec_id") < 2).select(col("vec_id") +: cols.map(col) :+
+        lit(3L).as(key) :+ (col("vec_id") === 1).as("deleted"): _*)
+    val routes = Seq(
+      "lsh" -> SimilaritySearch.lshTopKPruned(spark, s"$tmp/lsh", probeRows,
+        dims = 16, k = 5, bits = 8, maxHamming = 1, delta = Some(delta(items, "bucket", "embedding"))),
+      "ivf" -> SimilaritySearch.ivfTopKPruned(spark, s"$tmp/ivf",
+        SimilaritySearch.ivfCentroidsRead(spark, s"$tmp/ivf"), probeRows, k = 5, nProbe = 2,
+        delta = Some(delta(items, "cell", "embedding"))),
+      "ivf-pq" -> PQ.ivfPqTopKPruned(spark, s"$tmp/pq", items, probeRows, cfg, k = 5, nProbe = 2,
+        delta = Some(delta(pqCodes, "cell", "codes"))),
+      "residual ivf-pq" -> PQ.residualIvfPqTopKPruned(spark, s"$tmp/rpq", items, probeRows, cfg,
+        k = 5, nProbe = 2, delta = Some(delta(rpqCodes, "cell", "codes"))))
+    routes.foreach { case (name, df) =>
+      val p = plan(df)
+      assert(nonEmptyPartitionFilter.findFirstIn(p).isDefined, s"$name:\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"$name:\n$p")
+    }
   }
 
   // filtered search (round 8): the payload predicate must reach the parquet

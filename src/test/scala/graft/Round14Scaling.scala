@@ -142,7 +142,7 @@ object Round14Scaling {
       val sized = sizedWith(511)
       for ((tg, tag) <- Seq((1000000L, "0.5M_sb"), (8000000L, "3.99M_sb"))) {
         val t0 = System.nanoTime()
-        val out = graft.ops.TextAnalysis.prefixSum(sized, tg, "tok_before").get
+        val out = graft.ops.TextAnalysis.prefixSum(sized, tg, "tok_before", "doc_id").get
         val mx = out.agg(max("tok_before")).head().getLong(0)
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"[r14prefix] targetGroups=$tg ($tag) time=${dt}%.1fs max_prefix=$mx")
@@ -150,7 +150,7 @@ object Round14Scaling {
       graft.core.Checkpoints.release(sized)
       val over = sizedWith(520)
       val loud = try {
-        graft.ops.TextAnalysis.prefixSum(over, 8000000L, "tok_before")
+        graft.ops.TextAnalysis.prefixSum(over, 8000000L, "tok_before", "doc_id")
           .get.agg(max("tok_before")).head(); "NOT-RAISED"
       } catch { case e: IllegalArgumentException =>
         e.getMessage.linesIterator.next().take(120) }

@@ -432,6 +432,55 @@ class VectorIndexSpec extends AnyFunSuite {
     }
   }
 
+  /** The schema Spark wrote into the parquet footer of a delta sidecar, one
+    * "name type" line per field; `not null` marks a non-nullable field or
+    * array element.
+    */
+  private def writtenSchema(dir: String): Seq[String] = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val file = d.getFileSystem(conf).listStatus(d).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata") finally reader.close()
+    def shape(t: DataType): String = t match {
+      case ArrayType(e, containsNull) => s"array<${shape(e)}${if (containsNull) "" else " not null"}>"
+      case other                      => other.catalogString
+    }
+    DataType.fromJson(json).asInstanceOf[StructType].fields.toSeq
+      .map(f => s"${f.name} ${shape(f.dataType)}${if (f.nullable) "" else " not null"}")
+  }
+
+  test("delta sidecars: every ANN mode's upsert and tombstone rows keep their written schema") {
+    val idx = annIndex("ann_sidecars", Seq(SearchMode.Lsh(bits = 4), SearchMode.Ivf(nCells = 4),
+      SearchMode.IvfPq(nCells = 4, m = 4, ksub = 16), SearchMode.RpqIvf(nCells = 4, m = 4, ksub = 16),
+      SearchMode.Sq(), SearchMode.Bq(), SearchMode.Hnsw()))
+    idx.rebuild(annSource)
+    val newDoc = graft.pipeline.IndexBuild.buildDocuments(
+      Seq((100L, "a new page about quasars and pulsars")).toDF("id", "body"),
+      idx.config, idx.backend, "page", "id")
+    idx.upsert(newDoc)
+    idx.delete(newDoc.select("doc_id").as[Long].collect().toSeq)
+    val vector = "vector array<float>"
+    val codes = Seq("cell bigint", "codes array<int>")
+    // (root, columns between doc_id and deleted)
+    val roots = Seq(idx.annLshPath -> Seq(vector, "bucket bigint"),
+      idx.annIvfPath -> Seq(vector, "cell bigint"), idx.annIvfPqPath -> codes,
+      idx.annRpqPath -> codes, idx.annSqPath -> Seq("sq binary"), idx.annBqPath -> Seq("bq binary"),
+      idx.annHnswPath -> Seq(vector))
+    roots.foreach { case (root, cols) =>
+      val deltas = new VersionedDir(spark, root).listDeltas
+      assert(deltas.size == 2, root)
+      // the upsert's and the delete's sidecar alike: a tombstone column is
+      // nullable, and so are array elements, whichever row kind is written
+      val want = ("doc_id bigint not null" +: cols) :+ "deleted boolean not null"
+      deltas.foreach(d => assert(writtenSchema(d.path) == want, d.path))
+    }
+  }
+
   test("searching an ANN mode the index was not built with fails fast") {
     val idx = annIndex("ann2", Seq(SearchMode.Lsh()))
     idx.rebuild(annSource)

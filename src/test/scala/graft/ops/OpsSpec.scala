@@ -946,12 +946,12 @@ class CleanPipelineSpec extends AnyFunSuite {
     val sized = (0L until 4096L).map(i => (s"g${i % 4}", i, 1L))
       .toDF("__gk", "doc_id", "n_tokens")
     val e = intercept[IllegalArgumentException] {
-      TextAnalysis.prefixSum(sized, targetGroups = 4096L, "out", maxSuperblocks = 8L)
+      TextAnalysis.prefixSum(sized, targetGroups = 4096L, "out", "doc_id", maxSuperblocks = 8L)
     }
     assert(e.getMessage.contains("lower targetGroups"),
       s"the guard must tell the caller the fix: ${e.getMessage}")
     // exactly at the cap: collect proceeds and the prefix sum is correct
-    val ok = TextAnalysis.prefixSum(sized, 4096L, "out", maxSuperblocks = 16L).get
+    val ok = TextAnalysis.prefixSum(sized, 4096L, "out", "doc_id", maxSuperblocks = 16L).get
     val g0 = ok.filter(col("__gk") === "g0").orderBy("doc_id")
       .select("out").as[Long].collect().toSeq
     assert(g0 == (0L until 1024L).toSeq, "per-group running sum unaffected by the guard")
@@ -972,6 +972,25 @@ class CleanPipelineSpec extends AnyFunSuite {
     val crossGroup = Seq((1L, "x", "a b"), (1L, "y", "c"), (2L, "x", "d"))
       .toDF("doc_id", "lang", "text")
     assert(TextAnalysis.packSequences(crossGroup, 10, groupCol = Some("lang")).count() == 3)
+  }
+
+  test("packSequences, assemblePacked and mixtureOrder name the id column on null ids") {
+    // a null id has no place in the prefix order: counted by the id-bounds
+    // job, it fails at call time like a duplicate id, naming the column
+    val docs = Seq((Some(1L), "a b", "x"), (None, "c d e", "x"), (Some(2L), "f", "y"))
+      .toDF("page_id", "text", "lang")
+    val allNull = docs.withColumn("page_id", lit(null).cast("long"))
+    for (d <- Seq(docs, allNull)) {
+      val runs = Seq[(String, () => Any)](
+        "packSequences" -> (() => TextAnalysis.packSequences(d, 10, idCol = "page_id").collect()),
+        "assemblePacked" -> (() => TextAnalysis.assemblePacked(d, 10, idCol = "page_id").collect()),
+        "mixtureOrder" -> (() =>
+          TextAnalysis.mixtureOrder(d, Map.empty, groupCol = "lang", idCol = "page_id").collect()))
+      runs.foreach { case (name, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("null id in column page_id"), s"$name: ${e.getMessage}")
+      }
+    }
   }
 
   test("two-level prefix sum: chunk cardinality above the old 4M driver cap") {

@@ -178,22 +178,31 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("residual IVF-PQ search at full probe width + full refine equals brute force") {
-    val path = java.nio.file.Files.createTempDirectory("rpq_spec").toString + "/idx"
+    val tmp = java.nio.file.Files.createTempDirectory("rpq_spec").toString
     val (assigned, centroids) = SimilaritySearch.ivfAssign(clustered, nCells = 8)
     val res = ProductQuantization.residualize(assigned, centroids)
     val cb = ProductQuantization.pqTrain(res, cfg, itemVec = "residual")
     val encoded = ProductQuantization.pqEncode(res, cb, cfg, itemVec = "residual")
       .select(col("vec_id"), col("cell"), col("codes"))
-    ProductQuantization.pqIndexWrite(encoded, cb, path, Some(centroids))
+    ProductQuantization.pqIndexWrite(encoded, cb, s"$tmp/rpq", Some(centroids))
+    // plain IVF-PQ over the same cells: codes of the raw vectors
+    val plainCb = ProductQuantization.pqTrain(clustered, cfg)
+    ProductQuantization.pqIndexWrite(ProductQuantization.pqEncode(assigned, plainCb, cfg)
+      .select(col("vec_id"), col("cell"), col("codes")), plainCb, s"$tmp/pq", Some(centroids))
     val probes = (0L until 4L).map(i => (i, cvec(i)))
-    val got = ProductQuantization.residualIvfPqTopKPruned(spark, path, clustered,
-        probes, cfg, k = 5, nProbe = 8, refine = 40)
-      .select("qid", "vec_id").as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
     val exact = SimilaritySearch.bruteForceTopK(clustered, probes.toDF("qid", "qv")
         .select(col("qid"), col("qv").cast("array<float>")), k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
-    probes.foreach { case (q, _) => assert(got(q) == exact(q), s"probe $q") }
+    val routes = Seq(
+      "residual" -> ProductQuantization.residualIvfPqTopKPruned(spark, s"$tmp/rpq", clustered,
+        probes, cfg, k = 5, nProbe = 8, refine = 40),
+      "plain" -> ProductQuantization.ivfPqTopKPruned(spark, s"$tmp/pq", clustered,
+        probes, cfg, k = 5, nProbe = 8, refine = 40))
+    routes.foreach { case (name, df) =>
+      val got = df.select("qid", "vec_id").as[(Long, Long)].collect()
+        .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
+      probes.foreach { case (q, _) => assert(got(q) == exact(q), s"$name: probe $q") }
+    }
   }
 }

@@ -6,6 +6,11 @@ comment-only and longer than 3 characters. Per file, prints the number of
 distinct windows that occur more than once, and the number of lines that are
 extra copies (lines covered by a window's second and later occurrences).
 
+Given more than one file, also prints one `across files:` line: the number of
+distinct windows that occur in two or more of the files, and the number of
+lines their occurrences cover outside the first file (in argument order) that
+holds them.
+
 Usage: dup_windows.py FILE...
 """
 import sys
@@ -18,17 +23,36 @@ def countable(line):
     return len(line) > 3 and not line.startswith(("//", "/*", "*", "#"))
 
 
-def dup_windows(path):
+def windows(path):
+    """Window -> start lines, for every countable window of the file."""
     lines = [l.strip() for l in open(path, encoding="utf-8", errors="replace")]
     starts = defaultdict(list)
     for i in range(len(lines) - WIN + 1):
         win = lines[i:i + WIN]
         if all(countable(l) for l in win):
             starts[tuple(win)].append(i)
-    repeated = {w: s for w, s in starts.items() if len(s) > 1}
+    return starts
+
+
+def dup_windows(path):
+    repeated = {w: s for w, s in windows(path).items() if len(s) > 1}
     extra = {i + k for s in repeated.values() for i in s[1:] for k in range(WIN)}
     first = {i + k for s in repeated.values() for k in range(WIN) for i in s[:1]}
     return len(repeated), len(extra - first)
+
+
+def cross_file_windows(paths):
+    occurrences = defaultdict(list)  # window -> [(file index, start line)]
+    for f, p in enumerate(paths):
+        for w, s in windows(p).items():
+            occurrences[w].extend((f, i) for i in s)
+    shared = [s for s in occurrences.values() if len({f for f, _ in s}) > 1]
+    extra, first = set(), set()
+    for s in shared:
+        home = min(f for f, _ in s)
+        for f, i in s:
+            (first if f == home else extra).update((f, i + k) for k in range(WIN))
+    return len(shared), len(extra - first)
 
 
 if __name__ == "__main__":
@@ -37,3 +61,6 @@ if __name__ == "__main__":
     for p in sys.argv[1:]:
         n, extra = dup_windows(p)
         print(f"{p}: repeated_windows={n} extra_copy_lines={extra}")
+    if len(sys.argv) > 2:
+        n, extra = cross_file_windows(sys.argv[1:])
+        print(f"across files: repeated_windows={n} extra_copy_lines={extra}")
