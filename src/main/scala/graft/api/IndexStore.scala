@@ -55,6 +55,14 @@ trait IndexStore {
     * conflict-free batch degenerates to the same insert.
     */
   private[graft] def insertPrechecked(inserted: DataFrame): Unit = upsert(inserted)
+
+  /** [[read]] together with a token of the version it read, both from one
+    * snapshot: two reads with equal tokens have the same contents, and every
+    * write yields a new token. `None` means the store cannot tell, and
+    * nothing derived from the read may be reused ([[VectorIndex]]'s page
+    * cache keys on this).
+    */
+  private[graft] def readVersioned(): (DataFrame, Option[Any]) = (read(), None)
 }
 
 /** Connector capability: the backing service answers similarity search
@@ -105,9 +113,17 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
       s.isFile && s.getPath.getName.endsWith(".parquet"))
   }
 
-  override def read(): DataFrame = {
+  override def read(): DataFrame = readVersioned()._1
+
+  /** The token is the resolved read's key; the legacy flat layout has no
+    * snapshot, so it has none.
+    */
+  override private[graft] def readVersioned(): (DataFrame, Option[Any]) = {
     val snap = dir.snapshot
-    if (snap.exists) resolved(snap) else spark.read.parquet(root) // legacy flat layout (or throw)
+    if (snap.exists) {
+      val key = (snap, broadcastDeltaCap)
+      (resolved(key), Some(key))
+    } else (spark.read.parquet(root), None) // legacy flat layout (or throw)
   }
 
   /** One snapshot decides both existence and contents, so `exists` and
@@ -115,7 +131,7 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     */
   override def readOption(): Option[DataFrame] = {
     val snap = dir.snapshot
-    if (snap.exists) Some(resolved(snap))
+    if (snap.exists) Some(resolved((snap, broadcastDeltaCap)))
     else if (legacyExists) Some(spark.read.parquet(root))
     else None
   }
@@ -131,11 +147,11 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     */
   @volatile private var lastRead: Option[((VersionedDir.Snapshot, Long), DataFrame)] = None
 
-  private def resolved(snap: VersionedDir.Snapshot): DataFrame = {
-    val key = (snap, broadcastDeltaCap)
+  private def resolved(key: (VersionedDir.Snapshot, Long)): DataFrame = {
+    val (snap, cap) = key
     lastRead.collect { case (k, df) if k == key => df }.getOrElse {
       val base = spark.read.parquet(snap.dir.get)
-      val df = if (snap.deltas.isEmpty) base else mergeOnRead(base, snap.deltas, key._2)
+      val df = if (snap.deltas.isEmpty) base else mergeOnRead(base, snap.deltas, cap)
       lastRead = Some((key, df))
       df
     }

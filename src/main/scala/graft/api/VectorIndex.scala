@@ -96,6 +96,8 @@ final class VectorIndex(
     */
   val store: IndexStore = storeOverride.getOrElse(new ParquetIndexStore(spark, indexPath))
 
+  import VectorIndex.Page
+
   def documents: DataFrame = store.read()
 
   /** Full rebuild: clear + build from scratch (reference rebuild_index,
@@ -391,48 +393,77 @@ final class VectorIndex(
 
   /** One [[AnnVersion]] per ANN root, replaced whenever the root's snapshot
     * differs from the one it was resolved at — so every mutation, through
-    * this handle or any other writer, invalidates it.
+    * this handle or any other writer, invalidates it. The replacement is
+    * made under a lock: threads resolving one new snapshot at once share
+    * one version, and none releases a graph another is searching.
     */
   private val annVersions = TrieMap.empty[String, AnnVersion]
 
-  private def annVersion(root: String, snap: VersionedDir.Snapshot): AnnVersion =
-    annVersions.get(root).filter(_.snapshot == snap).getOrElse {
+  private def annVersion(root: String, snap: VersionedDir.Snapshot): AnnVersion = {
+    def current = annVersions.get(root).filter(_.snapshot == snap)
+    current.getOrElse(annVersions.synchronized(current.getOrElse {
       val v = new AnnVersion(snap, snap.dir.getOrElse(root))
       annVersions.put(root, v).foreach(_.release())
       v
-    }
+    }))
+  }
 
+  // ---- the page cache ----------------------------------------------------
+  //
+  // Every cacheable request ends in a collected page that depends only on
+  // the index version it read and on the request: the exact KNN page, an ANN
+  // route's hydrated hits, findSimilar's hydrated page. The page is kept
+  // under (version token, request) in one bounded LRU per handle, and the
+  // finishing steps (first per key, self-exclusion, the RAG prompt and the
+  // chat call) run on every call. Any write, through any handle, changes the
+  // token, so a page of an older version is never served; it ages out.
+  // Filtered searches (a predicate may be non-deterministic), server-side
+  // searches and stores without a version token are never cached.
+
+  private val pages = new VectorIndex.PageCache(VectorIndex.PageCacheEntries, VectorIndex.PageCacheRows)
+
+  /** (entries, rows) held in this handle's page cache. */
+  private[graft] def pageCacheSize: (Int, Int) = pages.size
+
+  /** `page`, kept under (`token`, `request`) — unless the token is None. */
+  private def cached(token: Option[Any], request: VectorIndex.Request)(page: => Page): Page =
+    token.fold(page)(t => pages.getOrElseUpdate((t, request), page))
+
+  /** What an ANN request in mode `m` reads, each root resolved from one
+    * snapshot: the documents, the ANN version, and the token of both.
+    */
+  private def annRead(m: SearchMode): (DataFrame, AnnVersion, Option[Any]) = {
+    require(ann.exists(_.getClass == m.getClass),
+      s"index was not built with ANN mode $m — pass it in VectorIndex(ann = ...)")
+    val (docs, token) = store.readVersioned()
+    val root = annRoot(m.getClass)
+    val v = annVersion(root, new VersionedDir(spark, root).snapshot)
+    (docs, v, token.map((_, v.snapshot)))
+  }
+
+  /** search(q): embed the query once on the driver (reference
+    * storage/base.py:303-316) and search by its vector ([[searchVector]]).
+    */
   def search(query: String, k: Int = 5, threshold: Double = 0.0,
              metric: Metric = Metric.Cosine,
              mode: SearchMode = SearchMode.Exact,
-             filter: Option[Column] = None): DataFrame = (mode, store) match {
-    // server-side-capable connectors answer exact cosine searches on the
-    // service (same embed-then-route shape as the ANN modes); a payload
-    // filter routes through the Spark scan instead — our wire clients carry
-    // no filter clause, and a silent post-filter would change which k
-    // survive (documented divergence from qdrant's native filtered search)
-    case (SearchMode.Exact, _: ServerSideSearch) if metric == Metric.Cosine && filter.isEmpty =>
-      searchVector(backend.embedOne(query).toSeq, k, threshold, metric, mode)
-    case (SearchMode.Exact, _) =>
-      val docs = documents
-      Retrieval.search(filter.fold(docs)(docs.filter), query, backend, k, threshold, metric)
-    case (m, _) =>
-      searchVector(backend.embedOne(query).toSeq, k, threshold, metric, m, filter)
-  }
+             filter: Option[Column] = None): DataFrame =
+    searchVector(backend.embedOne(query).toSeq, k, threshold, metric, mode, filter)
 
   /** The ANN candidate page of a driver-resident probe batch: the route's
     * per-probe top-k as (doc_id, score), the top-k operator at the plan root
     * — a single probe's is one TakeOrderedAndProject job, a batch's the
     * bounded TopK aggregator. Lazy; [[annHits]] collects it.
     */
-  private[graft] def annPage(probes: Seq[(Long, Seq[Float])], k: Int,
-                             m: SearchMode): DataFrame = {
-    require(ann.exists(_.getClass == m.getClass),
-      s"index was not built with ANN mode $m — pass it in VectorIndex(ann = ...)")
+  private[graft] def annPage(probes: Seq[(Long, Seq[Float])], k: Int, m: SearchMode): DataFrame = {
+    val (docs, v, _) = annRead(m)
+    annPage(docs, v, probes, k, m)
+  }
+
+  private def annPage(docs: DataFrame, v: AnnVersion, probes: Seq[(Long, Seq[Float])], k: Int,
+                      m: SearchMode): DataFrame = {
     import org.apache.spark.sql.functions.col
     import graft.ops.{BinaryQuantization => BQ, ProductQuantization => PQ, ScalarQuantization => SQ}
-    val root = annRoot(m.getClass)
-    val v = annVersion(root, new VersionedDir(spark, root).snapshot)
     val scored = VectorIndex.AnnLayouts(m.getClass)._2
     def page(candidates: DataFrame) =
       SimilaritySearch.topKPage(candidates, k, probes.size, "doc_id")
@@ -447,13 +478,13 @@ final class VectorIndex(
           nProbe, itemId = "doc_id", itemVec = scored, v.delta, payloadFilter = None))
       case IvfPqMode(_, nProbe, pm, ksub, refine, _, residual) =>
         val cfg = PQ.PqConfig(config.dims, pm, ksub)
-        PQ.ivfPqTopKResolved(v.relation, v.centroids, v.codebooks(cfg), documents, probes, cfg,
+        PQ.ivfPqTopKResolved(v.relation, v.centroids, v.codebooks(cfg), docs, probes, cfg,
           k, nProbe, refine, itemId = "doc_id", itemVec = "vector", v.delta, residual)
       case SearchMode.Sq(refine) =>
         val (mins, maxs) = v.sqParams
-        SQ.sqTopK(codes, documents, mins, maxs, probes, k, refine, itemId = "doc_id", itemVec = "vector")
+        SQ.sqTopK(codes, docs, mins, maxs, probes, k, refine, itemId = "doc_id", itemVec = "vector")
       case SearchMode.Bq(refine) =>
-        BQ.bqTopK(codes, documents, v.bqThresholds, probes, k, refine, itemId = "doc_id", itemVec = "vector")
+        BQ.bqTopK(codes, docs, v.bqThresholds, probes, k, refine, itemId = "doc_id", itemVec = "vector")
       case SearchMode.Hnsw(_, _, ef) =>
         page(graft.ops.Hnsw.hnswCandidates(v.hnswGraph, probes, k, ef, v.delta, v.deltaIds,
           itemId = "doc_id", itemVec = scored))
@@ -466,13 +497,38 @@ final class VectorIndex(
     * full documents (+`key`) with one read of the ≤ probes·k hit ids — the
     * shared tail of every ANN-routed query method. Rows in rank order.
     */
-  private def annHits(probes: Seq[(Long, Seq[Float])], k: Int, threshold: Double,
-                      m: SearchMode): (Seq[Row], StructType) = {
-    val page = annPage(probes, k, m)
+  private def annHits(docs: DataFrame, v: AnnVersion, probes: Seq[(Long, Seq[Float])], k: Int,
+                      threshold: Double, m: SearchMode): Page = {
+    val page = annPage(docs, v, probes, k, m)
     val hits = page.collect().toSeq
       .filter(r => Retrieval.compareScores(r.getDouble(1), threshold) >= 0)
-    Retrieval.hydratePage(documents, hits, page.schema("score"))
+    Retrieval.hydratePage(docs, hits, page.schema("score"))
   }
+
+  /** The top-k chunk page of one query vector — exact (the KNN page) or
+    * through the ANN route — kept in the page cache. Exact and ANN search,
+    * searchVector, query and queryStream all read it.
+    */
+  private def vectorPage(queryVec: Seq[Float], k: Int, threshold: Double, metric: Metric,
+                         mode: SearchMode): Page = {
+    val request = VectorIndex.Request(queryVec.map(java.lang.Float.floatToIntBits).toVector,
+      k, threshold, metric, mode)
+    mode match {
+      case SearchMode.Exact =>
+        val (docs, token) = store.readVersioned()
+        cached(token, request) {
+          val page = Retrieval.keyed(Retrieval.knn(docs, queryVec, k, threshold, metric))
+          (page.collect().toSeq, page.schema)
+        }
+      case m =>
+        val (docs, v, token) = annRead(m)
+        cached(token, request)(annHits(docs, v, Seq((0L, queryVec)), k, threshold, m))
+    }
+  }
+
+  /** The first row per object key of a page, as a DataFrame over its rows. */
+  private def firstPerKey(page: Page): DataFrame =
+    Retrieval.localFrame(spark, Retrieval.firstPerKey(page._1, page._2), page._2)
 
   /** Search by a raw query vector (the reference's get_similar_documents
     * takes a query_vector, storage/base.py:311-315). ANN modes route through
@@ -489,37 +545,35 @@ final class VectorIndex(
       // metadata-filtered exact search: the predicate lands BEFORE the knn
       // top-k, pushed into the documents scan — results are the true top-k
       // of the filtered set (PRE-filtering; qdrant's `filter` +
-      // `query_vector` semantics), never a post-filtered page
+      // `query_vector` semantics), never a post-filtered page. A
+      // server-side connector takes this route too: our wire clients carry
+      // no filter clause, and a silent post-filter would change which k
+      // survive (documented divergence from qdrant's native filtered search)
       Retrieval.finishPage(Retrieval.keyed(
         Retrieval.knn(documents.filter(filter.get), queryVec, k, threshold, metric)))
-    case SearchMode.Exact =>
-      import org.apache.spark.sql.functions.col
-      val hits = store match {
-        // a connector that searches SERVER-side (qdrant points/search,
-        // weaviate nearVector) answers exact cosine queries itself — the
-        // reference's get_similar_documents does exactly this; routing
-        // through read() would download the whole collection per search.
-        // The client-side threshold re-filter restores the engine's
-        // threshold semantics (the wire rejects thresholds the engine
-        // allows, e.g. negative = unfiltered). One DOCUMENTED divergence
-        // from the Spark scan: which hits survive an equal-score tie at
-        // the k boundary is the server's choice (the wire carries only
-        // `limit`, no doc_id tie-break) — ordering WITHIN the returned
-        // set stays deterministic via the (score, doc_id) rank order.
-        case s: ServerSideSearch if metric == Metric.Cosine =>
-          s.searchSimilar(queryVec, k,
-              similarityThreshold = math.min(math.max(threshold, 0.0), 1.0))
-            .filter(col("score") >= threshold)
-        case _ =>
-          Retrieval.knn(documents, queryVec, k, threshold, metric)
-      }
-      Retrieval.finishPage(Retrieval.keyed(hits))
+    case SearchMode.Exact => store match {
+      // a connector that searches SERVER-side (qdrant points/search,
+      // weaviate nearVector) answers exact cosine queries itself — the
+      // reference's get_similar_documents does exactly this; routing
+      // through read() would download the whole collection per search.
+      // The client-side threshold re-filter restores the engine's
+      // threshold semantics (the wire rejects thresholds the engine
+      // allows, e.g. negative = unfiltered). One DOCUMENTED divergence
+      // from the Spark scan: which hits survive an equal-score tie at
+      // the k boundary is the server's choice (the wire carries only
+      // `limit`, no doc_id tie-break) — ordering WITHIN the returned
+      // set stays deterministic via the (score, doc_id) rank order.
+      case s: ServerSideSearch if metric == Metric.Cosine =>
+        import org.apache.spark.sql.functions.col
+        Retrieval.finishPage(Retrieval.keyed(s.searchSimilar(queryVec, k,
+            similarityThreshold = math.min(math.max(threshold, 0.0), 1.0))
+          .filter(col("score") >= threshold)))
+      case _ => firstPerKey(vectorPage(queryVec, k, threshold, metric, mode))
+    }
     case m =>
       require(metric == Metric.Cosine, s"ANN modes rerank by cosine; got $metric")
       filter match {
-        case None =>
-          val (rows, schema) = annHits(Seq((0L, queryVec)), k, threshold, m)
-          Retrieval.localFrame(spark, Retrieval.firstPerKey(rows, schema), schema)
+        case None => firstPerKey(vectorPage(queryVec, k, threshold, metric, m))
         case Some(pred) =>
           // ANN + filter = POST-filtering with overfetch: the candidate page
           // is k·overfetch hits of the unfiltered index, filtered after
@@ -527,12 +581,12 @@ final class VectorIndex(
           // return < k rows — the documented ANN/filter trade-off (the
           // pre-filtering alternative is the exact path above, or
           // ivfTopKPruned(payloadFilter) when the payload rides in the index)
-          val (rows, schema) = annHits(Seq((0L, queryVec)), k * VectorIndex.AnnFilterOverfetch,
-            threshold, m)
+          val (docs, v, _) = annRead(m)
+          val (rows, schema) = annHits(docs, v, Seq((0L, queryVec)),
+            k * VectorIndex.AnnFilterOverfetch, threshold, m)
           // the predicate runs over the local rows (no Spark job)
           val kept = Retrieval.localFrame(spark, rows, schema).filter(pred).collect().toSeq
-          Retrieval.localFrame(spark,
-            Retrieval.firstPerKey(kept.sorted(Retrieval.byRank(schema)).take(k), schema), schema)
+          firstPerKey((kept.sorted(Retrieval.byRank(schema)).take(k), schema))
       }
   }
 
@@ -541,22 +595,35 @@ final class VectorIndex(
     * reference itself runs one query per chunk, storage/base.py:278-301) and
     * searched as one multi-probe pruned batch; per-chunk top-k, union,
     * first-per-key dedup, self-exclusion — same semantics as the exact path,
-    * but only the candidate buckets/cells are read.
+    * but only the candidate buckets/cells are read. The hydrated page is
+    * kept in the page cache before self-exclusion, so both `includeSelf`
+    * variants share it. A key with no documents yields an empty result in
+    * every mode.
     */
   def findSimilar(objectKey: String, k: Int = 5, threshold: Double = 0.0,
                   includeSelf: Boolean = false,
-                  mode: SearchMode = SearchMode.Exact): DataFrame = mode match {
-    case SearchMode.Exact =>
-      Retrieval.findSimilar(documents, objectKey, k, threshold, config.metric, includeSelf)
-    case m =>
-      import org.apache.spark.sql.functions.{array_contains, col}
-      val probes = documents.filter(array_contains(col("object_keys"), objectKey))
-        .select(col("doc_id"), col("vector")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      require(probes.nonEmpty, s"no documents found for object key $objectKey")
-      val (rows, schema) = annHits(probes, k, threshold, m)
-      Retrieval.localFrame(spark, Retrieval.excludeKey(
-        Retrieval.firstPerKey(rows, schema), schema, objectKey, includeSelf), schema)
+                  mode: SearchMode = SearchMode.Exact): DataFrame = {
+    val request = VectorIndex.Request(objectKey, k, threshold, config.metric, mode)
+    val (rows, schema) = mode match {
+      case SearchMode.Exact =>
+        val (docs, token) = store.readVersioned()
+        cached(token, request)(Retrieval.similarRows(docs, objectKey, k, threshold, config.metric))
+      case m =>
+        import org.apache.spark.sql.functions.{array_contains, col}
+        val (docs, v, token) = annRead(m)
+        cached(token, request) {
+          val probes = docs.filter(array_contains(col("object_keys"), objectKey))
+            .select(col("doc_id"), col("vector")).collect()
+            .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+          // nothing to probe: the exact path's empty page (its schema is
+          // resolved by analysis alone, no job runs)
+          if (probes.isEmpty) Retrieval.hydratePage(docs, Nil,
+            Retrieval.similarPage(docs, objectKey, k, threshold, config.metric).schema("score"))
+          else annHits(docs, v, probes, k, threshold, m)
+        }
+    }
+    Retrieval.localFrame(spark, Retrieval.excludeKey(
+      Retrieval.firstPerKey(rows, schema), schema, objectKey, includeSelf), schema)
   }
 
   /** RAG query; ANN modes retrieve through the pruned index. Reference
@@ -565,27 +632,23 @@ final class VectorIndex(
     * (storage/base.py:194-228; see [[Retrieval.ragQuery]]).
     */
   def query(question: String, sourcesLimit: Int = 5, threshold: Double = 0.0,
-            mode: SearchMode = SearchMode.Exact): Retrieval.QueryResponse = mode match {
-    case SearchMode.Exact =>
-      Retrieval.ragQuery(documents, question, backend, chatBackend, sourcesLimit, threshold)
-    case m =>
-      val (messages, sources) = annRagPrompt(question, sourcesLimit, threshold, m)
-      Retrieval.QueryResponse(chatBackend.chat(messages), sources)
+            mode: SearchMode = SearchMode.Exact): Retrieval.QueryResponse = {
+    val (messages, sources) = ragPrompt(question, sourcesLimit, threshold, mode)
+    Retrieval.QueryResponse(chatBackend.chat(messages), sources)
   }
 
   /** R4: streaming RAG query (reference aquery, storage/base.py:230-276). */
   def queryStream(question: String, sourcesLimit: Int = 5, threshold: Double = 0.0,
-                  mode: SearchMode = SearchMode.Exact): Retrieval.StreamingQueryResponse = mode match {
-    case SearchMode.Exact =>
-      Retrieval.ragQueryStream(documents, question, backend, chatBackend, sourcesLimit, threshold)
-    case m =>
-      val (messages, sources) = annRagPrompt(question, sourcesLimit, threshold, m)
-      Retrieval.StreamingQueryResponse(chatBackend.chatStream(messages), sources)
+                  mode: SearchMode = SearchMode.Exact): Retrieval.StreamingQueryResponse = {
+    val (messages, sources) = ragPrompt(question, sourcesLimit, threshold, mode)
+    Retrieval.StreamingQueryResponse(chatBackend.chatStream(messages), sources)
   }
 
-  private def annRagPrompt(question: String, sourcesLimit: Int, threshold: Double,
-                           m: SearchMode): (Seq[graft.embed.ChatMessage], DataFrame) = {
-    val (rows, schema) = annHits(Seq((0L, backend.embedOne(question).toSeq)), sourcesLimit, threshold, m)
+  /** The prompt and sources of a RAG question, from its cosine top-k page. */
+  private def ragPrompt(question: String, sourcesLimit: Int, threshold: Double,
+                        mode: SearchMode): (Seq[graft.embed.ChatMessage], DataFrame) = {
+    val (rows, schema) = vectorPage(backend.embedOne(question).toSeq, sourcesLimit, threshold,
+      Metric.Cosine, mode)
     Retrieval.ragFinish(spark, rows, schema, question, Retrieval.DefaultSystemPrompt)
   }
 }
@@ -667,6 +730,48 @@ object VectorIndex {
     * k·overfetch hits before the payload predicate re-limits to k.
     */
   val AnnFilterOverfetch = 4
+
+  /** A collected page: its rows in rank order, and their schema. */
+  private[graft] type Page = (Seq[Row], StructType)
+
+  /** What a cached page answers: its probe — the bit pattern of a query
+    * vector (`floatToIntBits`, so -0.0 and 0.0 differ and NaN equals NaN)
+    * or an object key — with k, threshold, metric and mode.
+    */
+  private[graft] final case class Request(probe: Any, k: Int, threshold: Double,
+                                          metric: Metric, mode: SearchMode)
+
+  /** The bounds of a handle's page cache: pages, and rows over all pages. */
+  private[graft] val PageCacheEntries = 256
+  private[graft] val PageCacheRows = 4096
+
+  /** A bounded LRU of pages: at most `maxEntries` pages holding at most
+    * `maxRows` rows in all, least recently used evicted first. A page with
+    * more rows than `maxRows` is not kept. A page is computed outside the
+    * lock, so two threads missing one key may both compute it (the same
+    * page); the later insert replaces the earlier.
+    */
+  private[graft] final class PageCache(maxEntries: Int, maxRows: Int) {
+    private val entries = new java.util.LinkedHashMap[Any, Page](16, 0.75f, true)
+    private var rows = 0
+
+    def getOrElseUpdate(key: Any, page: => Page): Page =
+      synchronized(Option(entries.get(key))).getOrElse {
+        val p = page
+        if (p._1.size <= maxRows) synchronized {
+          rows += p._1.size - Option(entries.put(key, p)).fold(0)(_._1.size)
+          val eldest = entries.values.iterator
+          while (entries.size > maxEntries || rows > maxRows) {
+            rows -= eldest.next()._1.size
+            eldest.remove()
+          }
+        }
+        p
+      }
+
+    /** (pages, rows) held. */
+    def size: (Int, Int) = synchronized((entries.size, rows))
+  }
 
   /** Convenience constructor with the dev/test backends. */
   def local(spark: SparkSession, config: IndexConfig, indexPath: String,

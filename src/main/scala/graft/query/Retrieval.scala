@@ -109,10 +109,18 @@ object Retrieval {
   def findSimilar(index: DataFrame, probeKey: String, k: Int = 5,
                   threshold: Double = 0.0, metric: Metric = Metric.Cosine,
                   includeSelf: Boolean = false): DataFrame = {
-    val page = similarPage(index, probeKey, k, threshold, metric)
-    val (rows, schema) = hydratePage(index, page.collect().toSeq, page.schema("score"))
+    val (rows, schema) = similarRows(index, probeKey, k, threshold, metric)
     localFrame(index.sparkSession,
       excludeKey(firstPerKey(rows, schema), schema, probeKey, includeSelf), schema)
+  }
+
+  /** [[similarPage]] collected and hydrated: the rows [[findSimilar]]
+    * finishes, in rank order. A key with no documents yields no rows.
+    */
+  private[graft] def similarRows(index: DataFrame, probeKey: String, k: Int,
+                                 threshold: Double, metric: Metric): (Seq[Row], StructType) = {
+    val page = similarPage(index, probeKey, k, threshold, metric)
+    hydratePage(index, page.collect().toSeq, page.schema("score"))
   }
 
   /** The candidate page of [[findSimilar]]: score every (probe-chunk, doc)

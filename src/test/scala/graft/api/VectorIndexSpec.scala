@@ -595,41 +595,66 @@ class VectorIndexSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  // a repeated call on an unchanged index must not resolve the version
-  // again (no file-listing / schema-inference job, no side-table collect),
-  // and each call stops at its candidate page: one top-k collect, one
-  // hydration read by id, the rest on the driver
+  // each call stops at its candidate page: one top-k collect, one hydration
+  // read by id, the rest on the driver. A version is resolved once (no
+  // file-listing / schema-inference job, no side-table collect on later
+  // requests), and a repeat of an answered request on an unchanged index is
+  // served from the page cache without any job
   test("repeated searches on an unchanged index launch only their own execution's jobs") {
     val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
     val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 16)
     val idx = annIndex("jobs", Seq(ivf, hnsw))
     idx.rebuild(annSource)
-    val q = "document number 17 about topic3 detail17"
-    idx.search(q, k = 5)
-    assert(jobsDuring(idx.search(q, k = 5)) == 1, "exact search")
-    assert(jobsDuring(idx.query(q, sourcesLimit = 5)) == 1, "query")
+    def text(i: Int) = s"document number $i about topic${i % 7} detail$i"
+    // first calls, on texts and keys this version has not answered yet
+    idx.search(text(1), k = 5)
+    assert(jobsDuring(idx.search(text(2), k = 5)) == 1, "exact search")
+    assert(jobsDuring(idx.query(text(3), sourcesLimit = 5)) == 1, "query")
     assert(jobsDuring(idx.findSimilar("page:17", k = 5)) <= 4, "exact findSimilar")
-    val done = idx.search(q, k = 5)
+    // repeats of each kind; query shares exact search's page
+    assert(jobsDuring(idx.search(text(2), k = 5)) == 0, "exact search repeat")
+    assert(jobsDuring(idx.searchVector(idx.backend.embedOne(text(2)).toSeq, k = 5)) == 0,
+      "searchVector repeat")
+    assert(jobsDuring(idx.query(text(3), sourcesLimit = 5)) == 0, "query repeat")
+    assert(jobsDuring(idx.queryStream(text(3), sourcesLimit = 5)) == 0, "queryStream repeat")
+    assert(jobsDuring(idx.query(text(2), sourcesLimit = 5)) == 0, "query of a searched text")
+    assert(jobsDuring(idx.findSimilar("page:17", k = 5)) == 0, "exact findSimilar repeat")
+    assert(jobsDuring(idx.findSimilar("page:17", k = 5, includeSelf = true)) == 0,
+      "exact findSimilar repeat, includeSelf")
+    val done = idx.search(text(2), k = 5)
     assert(jobsDuring(done.collect()) == 0, "collect() on a returned result")
     // with a pending delta on every root, so the overlays and the HNSW
     // delta-id set are resolved once too
-    for (pending <- Seq(false, true)) {
-      if (pending) idx.upsert(graft.pipeline.IndexBuild.buildDocuments(
+    for (pending <- Seq(false, true); (m, j) <- Seq(ivf, hnsw).zipWithIndex) {
+      if (pending && m == ivf) idx.upsert(graft.pipeline.IndexBuild.buildDocuments(
         Seq((100L, "completely new page about quasars")).toDF("id", "body"),
         idx.config, idx.backend, "page", "id"))
       // pending deltas add their merge-on-read work (the ANN overlay's
-      // shadowing join and the document store's) to every call
+      // shadowing join and the document store's) to every first call
       val (searchJobs, similarJobs) = if (pending) (8, 13) else (2, 4)
-      for (m <- Seq(ivf, hnsw)) {
-        idx.search(q, k = 5, mode = m)
-        assert(jobsDuring(idx.search(q, k = 5, mode = m)) <= searchJobs, s"$m search, deltas=$pending")
-        idx.findSimilar("page:17", k = 5, mode = m)
-        assert(jobsDuring(idx.findSimilar("page:17", k = 5, mode = m)) <= similarJobs,
-          s"$m findSimilar, deltas=$pending")
-        val res = idx.findSimilar("page:17", k = 5, mode = m)
-        assert(jobsDuring(res.collect()) == 0, s"$m collect()")
-      }
+      val n = 20 + 10 * j + (if (pending) 5 else 0) // texts and keys not asked yet
+      idx.search(text(n), k = 5, mode = m)
+      assert(jobsDuring(idx.search(text(n + 1), k = 5, mode = m)) <= searchJobs, s"$m search, deltas=$pending")
+      idx.findSimilar(s"page:${n + 2}", k = 5, mode = m)
+      assert(jobsDuring(idx.findSimilar(s"page:${n + 3}", k = 5, mode = m)) <= similarJobs,
+        s"$m findSimilar, deltas=$pending")
+      assert(jobsDuring(idx.search(text(n + 1), k = 5, mode = m)) == 0, s"$m search repeat, deltas=$pending")
+      assert(jobsDuring(idx.query(text(n + 1), sourcesLimit = 5, mode = m)) == 0,
+        s"$m query of a searched text, deltas=$pending")
+      val res = idx.findSimilar(s"page:${n + 3}", k = 5, mode = m)
+      assert(jobsDuring(res.collect()) == 0, s"$m collect()")
+      assert(jobsDuring(idx.findSimilar(s"page:${n + 3}", k = 5, mode = m)) == 0,
+        s"$m findSimilar repeat, deltas=$pending")
     }
+    // a write through a second handle: the next repeats run their jobs again
+    val other = new VectorIndex(spark, idx.config, idx.backend, idx.chatBackend,
+      idx.indexPath, "page", "id", ann = idx.ann)
+    other.upsert(graft.pipeline.IndexBuild.buildDocuments(
+      Seq((101L, "another new page about comets")).toDF("id", "body"), idx.config, idx.backend, "page", "id"))
+    assert(jobsDuring(idx.search(text(2), k = 5)) >= 1, "exact search after another handle's upsert")
+    assert(jobsDuring(idx.findSimilar("page:17", k = 5)) >= 1, "exact findSimilar after another handle's upsert")
+    for ((m, n) <- Seq(ivf -> 26, hnsw -> 36))
+      assert(jobsDuring(idx.search(text(n), k = 5, mode = m)) >= 1, s"$m search after another handle's upsert")
   }
 
   // the HNSW graph is exchanged by shard once per index version and
@@ -695,6 +720,42 @@ class VectorIndexSpec extends AnyFunSuite {
   private def triples(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, Double)] =
     df.select(col("doc_id"), col("key"), col("score")).as[(Long, String, Double)].collect().toSeq
 
+  /** Brute-force answers over an index's current documents, every (probe,
+    * doc) score computed by the engine's own kernel: raw for exact search,
+    * rounded to 6 dp for the ANN rerank.
+    */
+  private final class BruteForce(idx: VectorIndex) {
+    private val docs = idx.documents
+    val keyOf: Map[Long, String] = docs.select(col("doc_id"), col("object_keys").getItem(0))
+      .as[(Long, String)].collect().toMap
+    val content: Map[Long, String] = docs.select("doc_id", "content").as[(Long, String)].collect().toMap
+
+    /** (doc_id, key, score) of every doc against `qv`, ranked, passing `t`. */
+    def ranked(qv: Seq[Float], t: Double, exact: Boolean): Seq[(Long, String, Double)] =
+      rank(docs.select(col("doc_id"), {
+          val c = graft.functions.vector.vec_cosine(col("vector"), typedLit(qv))
+          if (exact) c else round(c, 6)
+        }).as[(Long, Double)].collect().toSeq.map { case (d, sc) => (d, keyOf(d), sc) }, t)
+
+    private lazy val pairs = docs.as("d").crossJoin(docs.select(col("doc_id").as("p"),
+        col("vector").as("pv"), col("object_keys").getItem(0).as("pk")))
+      .select(col("pk"), col("p"), col("doc_id"),
+        graft.functions.vector.vec_cosine(col("vector"), col("pv")).as("raw"),
+        round(graft.functions.vector.vec_cosine(col("vector"), col("pv")), 6).as("rounded"))
+      .as[(String, Long, Long, Double, Double)].collect().toSeq
+
+    /** findSimilar: per-chunk top-k of the object's chunks, best score per
+      * doc, first per key, self excluded unless `self`.
+      */
+    def similar(obj: String, k: Int, t: Double, self: Boolean, exact: Boolean): Seq[(Long, String, Double)] = {
+      val perChunk = pairs.filter(_._1 == obj).groupBy(_._2).values.flatMap { rows =>
+        rank(rows.map(r => (r._3, keyOf(r._3), if (exact) r._4 else r._5)), t).take(k)
+      }
+      val best = rank(perChunk.groupBy(_._1).values.map(_.maxBy(_._3)).toSeq, -3.0)
+      firstPerKey(best).filter(r => self || r._2 != obj)
+    }
+  }
+
   test("page finish: search, searchVector, findSimilar and query match a brute-force reference") {
     val lsh = SearchMode.Lsh(bits = 4, maxHamming = 4)      // every bucket
     val ivf = SearchMode.Ivf(nCells = 4, nProbe = 4, lloydIters = 1) // every cell
@@ -703,21 +764,13 @@ class VectorIndexSpec extends AnyFunSuite {
     val docs = idx.documents
     val exactCols = docs.columns.toSeq ++ Seq("score", "key")
     val annCols = Seq("doc_id", "score") ++ docs.columns.filter(_ != "doc_id") ++ Seq("key")
-    val keyOf = docs.select(col("doc_id"), col("object_keys").getItem(0))
-      .as[(Long, String)].collect().toMap
-    val content = docs.select("doc_id", "content").as[(Long, String)].collect().toMap
-    // every (probe, doc) score, computed by the engine's own kernel: raw for
-    // exact search, rounded to 6 dp for the ANN rerank
-    def scored(qv: Column, rounded: Boolean) = docs.select(col("doc_id"), {
-        val c = graft.functions.vector.vec_cosine(col("vector"), qv)
-        if (rounded) round(c, 6) else c
-      }).as[(Long, Double)].collect().toSeq.map { case (d, sc) => (d, keyOf(d), sc) }
+    val bf = new BruteForce(idx)
     val k = 4
     val pred = col("object_keys").getItem(0) =!= "page:0"
     for (qv <- queries; t <- Seq(-2.0, 0.0, 0.9)) {
       val what = s"query ${queries.indexOf(qv)}, threshold $t"
-      val raw = rank(scored(typedLit(qv), rounded = false), t)
-      val rounded = rank(scored(typedLit(qv), rounded = true), t)
+      val raw = bf.ranked(qv, t, exact = true)
+      val rounded = bf.ranked(qv, t, exact = false)
       val exact = idx.searchVector(qv, k, t)
       assert(exact.columns.toSeq == exactCols)
       assert(triples(exact) == firstPerKey(raw.take(k)), s"exact, $what")
@@ -738,10 +791,9 @@ class VectorIndexSpec extends AnyFunSuite {
     val question = "document about nothing in particular"
     val qv = idx.backend.embedOne(question).toSeq
     for (t <- Seq(-2.0, 0.0, 0.9); m <- Seq(SearchMode.Exact, lsh, ivf, hnsw)) {
-      val ranked = if (m == SearchMode.Exact) rank(scored(typedLit(qv), rounded = false), t)
-        else rank(scored(typedLit(qv), rounded = true), t)
+      val ranked = bf.ranked(qv, t, exact = m == SearchMode.Exact)
       val resp = idx.query(question, sourcesLimit = k, threshold = t, mode = m)
-      val context = ranked.take(k).map(r => content(r._1)).mkString("\n")
+      val context = ranked.take(k).map(r => bf.content(r._1)).mkString("\n")
       assert(resp.response == graft.embed.EchoChatBackend().chat(Seq(
         graft.embed.ChatMessage("system", graft.query.Retrieval.DefaultSystemPrompt),
         graft.embed.ChatMessage("system", context),
@@ -750,26 +802,203 @@ class VectorIndexSpec extends AnyFunSuite {
     }
     // findSimilar: per-chunk top-k of the object's chunks, best score per
     // doc, first per key, self excluded unless includeSelf
-    val pairs = docs.as("d").crossJoin(docs.select(col("doc_id").as("p"), col("vector").as("pv"),
-        col("object_keys").getItem(0).as("pk")))
-      .select(col("pk"), col("p"), col("doc_id"),
-        graft.functions.vector.vec_cosine(col("vector"), col("pv")).as("raw"),
-        round(graft.functions.vector.vec_cosine(col("vector"), col("pv")), 6).as("rounded"))
-      .as[(String, Long, Long, Double, Double)].collect().toSeq
     for (obj <- Seq("page:0", "page:5", "page:11"); t <- Seq(-2.0, 0.0, 0.9);
          self <- Seq(false, true); m <- Seq(SearchMode.Exact, lsh, ivf, hnsw)) {
-      val perChunk = pairs.filter(_._1 == obj).groupBy(_._2).values.flatMap { rows =>
-        rank(rows.map(r => (r._3, keyOf(r._3), if (m == SearchMode.Exact) r._4 else r._5)), t).take(k)
-      }
-      val best = rank(perChunk.groupBy(_._1).values.map(_.maxBy(_._3)).toSeq, -3.0)
-      val want = firstPerKey(best).filter(r => self || r._2 != obj)
-      assert(triples(idx.findSimilar(obj, k, t, includeSelf = self, mode = m)) == want,
+      assert(triples(idx.findSimilar(obj, k, t, includeSelf = self, mode = m)) ==
+        bf.similar(obj, k, t, self, exact = m == SearchMode.Exact),
         s"findSimilar($obj) $m, threshold $t, includeSelf $self")
     }
     // nothing passes: empty results, same columns
     assert(idx.searchVector(queries.head, k, threshold = 1.5).isEmpty)
     assert(idx.searchVector(queries.head, k, threshold = 1.5, mode = ivf).columns.toSeq == annCols)
     assert(idx.findSimilar("page:3", k, threshold = 1.5, mode = hnsw).isEmpty)
+  }
+
+  test("findSimilar of a key with no documents is empty, with the same columns, in every mode") {
+    val idx = annIndex("similar_none", Seq(SearchMode.Ivf(), SearchMode.Hnsw()))
+    idx.rebuild(annSource)
+    val exact = idx.findSimilar("page:999", k = 5, threshold = -1.0)
+    assert(exact.isEmpty)
+    for (m <- Seq(SearchMode.Exact, SearchMode.Ivf(), SearchMode.Hnsw()); self <- Seq(false, true)) {
+      val got = idx.findSimilar("page:999", k = 5, threshold = -1.0, includeSelf = self, mode = m)
+      assert(got.isEmpty, s"$m, includeSelf $self")
+      assert(got.schema == exact.schema, s"$m, includeSelf $self")
+    }
+  }
+
+  // --- page cache: repeats are served from the version they read ---
+
+  /** Every cacheable request kind of `modes` through `idx`, by name. */
+  private def answers(idx: VectorIndex, q: String, similarTo: Seq[String],
+                      modes: Seq[SearchMode]): Seq[(String, Any)] = {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "key", "score", "content").collect().toSeq
+    val qv = idx.backend.embedOne(q).toSeq
+    modes.flatMap { m =>
+      Seq(s"search $m" -> rows(idx.search(q, k = 3, threshold = -1.0, mode = m)),
+        s"searchVector $m" -> rows(idx.searchVector(qv, k = 4, threshold = -1.0, mode = m)),
+        s"query $m" -> {
+          val r = idx.query(q, sourcesLimit = 3, threshold = -1.0, mode = m)
+          (r.response, rows(r.sources))
+        },
+        s"queryStream $m" -> {
+          val r = idx.queryStream(q, sourcesLimit = 3, threshold = -1.0, mode = m)
+          (r.response.mkString, rows(r.sources))
+        }) ++
+      similarTo.flatMap(key => Seq(false, true).map(self => s"findSimilar($key) $m includeSelf $self" ->
+        rows(idx.findSimilar(key, k = 3, threshold = -1.0, includeSelf = self, mode = m))))
+    }
+  }
+
+  test("page cache: repeated requests equal a fresh handle's answers after every write, through this and another handle") {
+    val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
+    val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 16)
+    val modes = Seq(SearchMode.Exact, ivf, hnsw)
+    val reader = annIndex("cache_writes", Seq(ivf, hnsw))
+    def handle() = new VectorIndex(spark, reader.config, reader.backend, reader.chatBackend,
+      reader.indexPath, "page", "id", ann = reader.ann)
+    val q = "completely new page about quasars and pulsars today"
+    val similarTo = Seq("page:17", "page:100")
+    // `reader` answers every request (its cache holds the pages of the
+    // version before the write), then repeats them without a job; both
+    // must equal what a handle with an empty cache answers
+    def check(step: String): Unit = {
+      val first = answers(reader, q, similarTo, modes)
+      var repeat = Seq.empty[(String, Any)]
+      assert(jobsDuring { repeat = answers(reader, q, similarTo, modes) } == 0, s"$step: repeats ran jobs")
+      val fresh = answers(handle(), q, similarTo, modes)
+      for (((what, a), (_, b)) <- first.zip(fresh)) assert(a == b, s"$step, $what: $a != $b")
+      assert(repeat == first, step)
+    }
+    def sourceWith(suffix: String) = annSource.withColumn("body", concat(col("body"), lit(suffix)))
+    for (writer <- Seq(reader, handle())) {
+      val tag = if (writer eq reader) "same handle" else "second handle"
+      writer.rebuild(sourceWith(" v1"))
+      check(s"$tag rebuild")
+      val newDoc = graft.pipeline.IndexBuild.buildDocuments(
+        Seq((100L, q)).toDF("id", "body"), writer.config, writer.backend, "page", "id")
+      writer.upsert(newDoc)
+      check(s"$tag upsert")
+      writer.delete(newDoc.select("doc_id").as[Long].collect().toSeq)
+      check(s"$tag delete")
+      writer.update(sourceWith(" v1").withColumn("body",
+        when(col("id") === 17L, lit(s"$q seventeen")).otherwise(col("body"))))
+      check(s"$tag update")
+      writer.rebuild(sourceWith(" v2"))
+      check(s"$tag rebuild")
+      writer.clear()
+      writer.rebuild(sourceWith(" v3"))
+      assert(new VersionedDir(spark, reader.indexPath).currentVersion.contains("v00001"))
+      assert(new VersionedDir(spark, reader.annIvfPath).currentVersion.contains("v00001"))
+      check(s"$tag clear+rebuild")
+      writer.clear()
+    }
+  }
+
+  test("page cache: filtered searches, the in-memory store and the legacy flat layout run jobs on every repeat") {
+    val lsh = SearchMode.Lsh(bits = 4, maxHamming = 1)
+    val idx = annIndex("cache_off", Seq(lsh))
+    idx.rebuild(annSource)
+    val q = "document number 17 about topic3 detail17"
+    val pred = col("object_keys").getItem(0) =!= "page:17"
+    for (m <- Seq(SearchMode.Exact, lsh)) {
+      idx.search(q, k = 3, mode = m, filter = Some(pred))
+      assert(jobsDuring(idx.search(q, k = 3, mode = m, filter = Some(pred))) >= 1, s"filtered $m")
+    }
+    // stores that give no version token
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cache-off").toString
+    val inMemory = new VectorIndex(spark, idx.config, idx.backend, idx.chatBackend, s"$tmp/mem",
+      "page", "id", storeOverride = Some(new InMemoryIndexStore(spark)))
+    inMemory.rebuild(annSource)
+    idx.documents.write.parquet(s"$tmp/flat")
+    val flat = new VectorIndex(spark, idx.config, idx.backend, idx.chatBackend, s"$tmp/flat", "page", "id")
+    for ((name, h) <- Seq("in-memory" -> inMemory, "legacy flat" -> flat)) {
+      h.search(q, k = 3); h.query(q, sourcesLimit = 3); h.findSimilar("page:17", k = 3)
+      assert(jobsDuring(h.search(q, k = 3)) >= 1, s"$name search")
+      assert(jobsDuring(h.query(q, sourcesLimit = 3)) >= 1, s"$name query")
+      assert(jobsDuring(h.findSimilar("page:17", k = 3)) >= 1, s"$name findSimilar")
+      assert(h.pageCacheSize == ((0, 0)), name)
+    }
+  }
+
+  test("page cache: 8 threads on one handle get brute-force answers, within the cache's bounds") {
+    val lsh = SearchMode.Lsh(bits = 4, maxHamming = 4)
+    val ivf = SearchMode.Ivf(nCells = 4, nProbe = 4, lloydIters = 1)
+    val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 1 << 20)
+    val (idx, queries) = pageIndex(Seq(lsh, ivf, hnsw))
+    val bf = new BruteForce(idx)
+    val k = 4
+    // (what, ask, brute-force answer)
+    val requests = (for (qv <- queries.take(3); t <- Seq(-2.0, 0.5); m <- Seq(SearchMode.Exact, lsh, ivf, hnsw))
+      yield (s"searchVector(query ${queries.indexOf(qv)}, threshold $t) $m",
+        () => triples(idx.searchVector(qv, k, t, mode = m)),
+        firstPerKey(bf.ranked(qv, t, exact = m == SearchMode.Exact).take(k)))) ++
+      (for (obj <- Seq("page:0", "page:5"); self <- Seq(false, true); m <- Seq(SearchMode.Exact, ivf, hnsw))
+        yield (s"findSimilar($obj) $m includeSelf $self",
+          () => triples(idx.findSimilar(obj, k, 0.0, includeSelf = self, mode = m)),
+          bf.similar(obj, k, 0.0, self, exact = m == SearchMode.Exact)))
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      // every thread asks every request twice, in its own order
+      (0 until 8).map { i =>
+        pool.submit(new Runnable {
+          def run(): Unit = new scala.util.Random(i).shuffle(requests ++ requests).foreach {
+            case (what, ask, want) =>
+              try {
+                val got = ask()
+                if (got != want) failures.add(s"thread $i, $what: $got != $want")
+              } catch { case e: Throwable => failures.add(s"thread $i, $what: $e") }
+              val (pages, rows) = idx.pageCacheSize
+              if (pages > VectorIndex.PageCacheEntries || rows > VectorIndex.PageCacheRows)
+                failures.add(s"thread $i: $pages pages, $rows rows cached")
+          }
+        })
+      }.foreach(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    assert(failures.isEmpty, failures.toArray.take(5).mkString("\n"))
+    assert(idx.pageCacheSize._1 > 0)
+  }
+
+  test("page cache: least recently used pages go first, within both bounds; a page over the row bound is not kept") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    val cache = new VectorIndex.PageCache(maxEntries = 3, maxRows = 10)
+    var computed = Seq.empty[String]
+    def get(key: String, rows: Int): Unit = cache.getOrElseUpdate(key, {
+      computed :+= key
+      (Seq.fill(rows)(Row(key)), StructType(Nil))
+    })
+    Seq("a", "b", "c").foreach(get(_, 2))
+    get("a", 2)                 // a hit, and now the most recent
+    assert(computed == Seq("a", "b", "c") && cache.size == ((3, 6)))
+    get("d", 2)                 // a fourth page: b, least recent, goes
+    assert(cache.size == ((3, 6)))
+    get("b", 2)                 // b computed again; c goes
+    assert(computed == Seq("a", "b", "c", "d", "b"))
+    get("e", 7)                 // 13 rows over 10: a and d go
+    assert(cache.size == ((2, 9)))
+    get("b", 2); get("e", 7)
+    assert(computed.size == 6, computed)
+    get("f", 11)                // over the row bound: answered, not kept
+    get("f", 11)
+    assert(computed.takeRight(2) == Seq("f", "f") && cache.size == ((2, 9)))
+    // many threads, overlapping keys: never above either bound
+    val small = new VectorIndex.PageCache(maxEntries = 4, maxRows = 10)
+    val over = new java.util.concurrent.atomic.AtomicInteger()
+    val threads = (0 until 8).map { i =>
+      new Thread(() => {
+        val rnd = new scala.util.Random(i)
+        for (_ <- 1 to 2000) {
+          val key = rnd.nextInt(12)
+          small.getOrElseUpdate(key, (Seq.fill(key % 5 + 1)(Row(key)), StructType(Nil)))
+          val (pages, rows) = small.size
+          if (pages > 4 || rows > 10) over.incrementAndGet()
+        }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(over.get == 0)
   }
 
   test("registry rebuilds all registered indexes") {

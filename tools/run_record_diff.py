@@ -5,6 +5,8 @@ A and B are run records (`.bench_build/runs/<workload>-seed<n>-trace<t>.json`,
 written by `perfbench/run.py`). Printed, one row per name present in either
 record, with the B/A ratio:
 
+- the record-level `repeat_share` (the share of requests that repeat an
+  earlier one), `attempted` and `failed` operations;
 - the gated metrics (`metrics`: end-to-end with --trace 0, per-layer with
   --trace 1), the workload metrics and the layer metrics;
 - for traced records, per span name: the number of spans, the median wall
@@ -63,8 +65,10 @@ def main(path_a, path_b):
     a, b = (json.load(open(p)) for p in (path_a, path_b))
     for label, rec, path in (("A", a, path_a), ("B", b, path_b)):
         print(f"{label}: {path}  workload={rec.get('workload')} seed={rec.get('seed')} "
-              f"trace={rec.get('trace')} cores={rec.get('cores')} commit={rec.get('commit')} "
-              f"attempted={rec.get('attempted')} failed={rec.get('failed')}")
+              f"trace={rec.get('trace')} cores={rec.get('cores')} commit={rec.get('commit')}")
+    table("record", ("name", "A", "B", "B/A"),
+          [(n, fmt(a.get(n)), fmt(b.get(n)), ratio(a.get(n), b.get(n)))
+           for n in ("repeat_share", "attempted", "failed")])
     for section in ("metrics", "workload_metrics", "layer_metrics"):
         ma, mb = metric_rows(a, section), metric_rows(b, section)
         names = sorted(set(ma) | set(mb))
