@@ -3981,7 +3981,8 @@ object SparkEntry {
     * documents are the embeddings table and whose LSH side index is
     * maintained through the versioned store by `upsert` — the gate query
     * goes through `VectorIndex.searchVector(mode = Lsh)` rather than any
-    * hand-plumbed index path. Built once per JVM (ingest state).
+    * hand-plumbed index path. Built once per JVM (ingest state); each call
+    * empties its page cache, so the gate times a search, not a cache hit.
     */
   private def viIndexFor(s: SparkSession, dir: String): VectorIndex =
     memo("vi", dir) { scratch =>
@@ -3991,7 +3992,7 @@ object SparkEntry {
         scratch + "/idx", "emb", "vec_id", ann = Seq(SearchMode.Lsh(bits = 8, maxHamming = 2)))
       vi.upsert(embDocs(tbl(s, dir, "embeddings")))
       vi
-    }
+    }.withEmptyPageCache()
 
   /** Cell-partitioned IVF index + its centroid table, built once per JVM. */
   private def ivfIndexFor(s: SparkSession, dir: String): (String, DataFrame) =
@@ -4358,6 +4359,9 @@ object SparkEntry {
     */
   private case class IncrAnn(gate: String, index: String, mode: SearchMode, sql: String)
 
+  /** The gate's index, built once per JVM; each call empties its page
+    * cache, so the gate times a search, not a cache hit.
+    */
   private def incrAnnIndexFor(s: SparkSession, dir: String, g: IncrAnn): VectorIndex =
     memo(g.index, dir) { scratch =>
       val vi = new VectorIndex(s,
@@ -4370,7 +4374,7 @@ object SparkEntry {
         .withColumn("vec_id", lit(1000001L)))) // re-uses vec 1's vector
       vi.delete(Seq(2L))
       vi
-    }
+    }.withEmptyPageCache()
 
   // ------------------------------------------------------------- oracle SQL
 

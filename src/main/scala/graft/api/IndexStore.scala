@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
+import graft.query.VersionScan
+
 /** Pluggable index storage — the Spark analog of the reference's
   * StorageProvider seam (storage/base.py:48-71, storage/__init__.py:29-49):
   * every index operation (`read`/`replace`/`upsert`/`delete`/`clear`) is a
@@ -63,6 +65,15 @@ trait IndexStore {
     * cache keys on this).
     */
   private[graft] def readVersioned(): (DataFrame, Option[Any]) = (read(), None)
+
+  /** [[readVersioned]] as a [[VersionScan]] of the read. A store with
+    * version tokens keeps one scan per version, so a version is planned
+    * once; by default every call gets a scan of its own.
+    */
+  private[graft] def readScan(): (VersionScan, Option[Any]) = {
+    val (docs, token) = readVersioned()
+    (new VersionScan(docs), token)
+  }
 }
 
 /** Connector capability: the backing service answers similarity search
@@ -115,15 +126,20 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
 
   override def read(): DataFrame = readVersioned()._1
 
+  override private[graft] def readVersioned(): (DataFrame, Option[Any]) = {
+    val (scan, token) = readScan()
+    (scan.docs, token)
+  }
+
   /** The token is the resolved read's key; the legacy flat layout has no
     * snapshot, so it has none.
     */
-  override private[graft] def readVersioned(): (DataFrame, Option[Any]) = {
+  override private[graft] def readScan(): (VersionScan, Option[Any]) = {
     val snap = dir.snapshot
     if (snap.exists) {
       val key = (snap, broadcastDeltaCap)
       (resolved(key), Some(key))
-    } else (spark.read.parquet(root), None) // legacy flat layout (or throw)
+    } else (new VersionScan(spark.read.parquet(root)), None) // legacy flat layout (or throw)
   }
 
   /** One snapshot decides both existence and contents, so `exists` and
@@ -131,13 +147,14 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     */
   override def readOption(): Option[DataFrame] = {
     val snap = dir.snapshot
-    if (snap.exists) Some(resolved((snap, broadcastDeltaCap)))
+    if (snap.exists) Some(resolved((snap, broadcastDeltaCap)).docs)
     else if (legacyExists) Some(spark.read.parquet(root))
     else None
   }
 
   /** The resolved read of the last snapshot seen: the base relation (file
-    * listing and schema resolved once) merged with its deltas. Version and
+    * listing and schema resolved once) merged with its deltas, and its
+    * [[VersionScan]], planned on first use. Version and
     * delta directories are immutable, so while the root's snapshot is
     * unchanged the same DataFrame is the same contents; any write — through
     * this handle, another handle or another process — changes the snapshot
@@ -145,15 +162,15 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     * version directory. The broadcast cap is part of the key because the
     * merge plan depends on it.
     */
-  @volatile private var lastRead: Option[((VersionedDir.Snapshot, Long), DataFrame)] = None
+  @volatile private var lastRead: Option[((VersionedDir.Snapshot, Long), VersionScan)] = None
 
-  private def resolved(key: (VersionedDir.Snapshot, Long)): DataFrame = {
+  private def resolved(key: (VersionedDir.Snapshot, Long)): VersionScan = {
     val (snap, cap) = key
-    lastRead.collect { case (k, df) if k == key => df }.getOrElse {
+    lastRead.collect { case (k, scan) if k == key => scan }.getOrElse {
       val base = spark.read.parquet(snap.dir.get)
-      val df = if (snap.deltas.isEmpty) base else mergeOnRead(base, snap.deltas, cap)
-      lastRead = Some((key, df))
-      df
+      val scan = new VersionScan(if (snap.deltas.isEmpty) base else mergeOnRead(base, snap.deltas, cap))
+      lastRead = Some((key, scan))
+      scan
     }
   }
 

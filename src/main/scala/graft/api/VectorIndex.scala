@@ -10,7 +10,7 @@ import graft.core.Checkpoints.MaterializeSyntax
 import graft.embed.{ChatBackend, EchoChatBackend, EmbeddingBackend, HashEmbeddingBackend}
 import graft.ops.SimilaritySearch
 import graft.pipeline.IndexBuild
-import graft.query.Retrieval
+import graft.query.{Retrieval, VersionScan}
 
 /** How [[VectorIndex.search]] matches candidates. `Exact` (the default, and
   * the reference's own posture — its numpy provider is a full scan,
@@ -413,10 +413,14 @@ final class VectorIndex(
   // Every cacheable request ends in a collected page that depends only on
   // the index version it read and on the request: the exact KNN page, an ANN
   // route's hydrated hits, findSimilar's hydrated page. The page is kept
-  // under (version token, request) in one bounded LRU per handle, and the
-  // finishing steps (first per key, self-exclusion, the RAG prompt and the
-  // chat call) run on every call. Any write, through any handle, changes the
-  // token, so a page of an older version is never served; it ages out.
+  // under (version token, request) in one bounded LRU per handle, with the
+  // DataFrames finished from it (first per key, and without self for
+  // findSimilar), so a repeat returns a frame Spark has already planned; the
+  // RAG prompt and the chat call run on every call. Any write, through any
+  // handle, changes the token, so a page of an older version is never
+  // served; it ages out. An exact miss, and the probe rows of an ANN
+  // findSimilar, read the store's version scan ([[IndexStore.readScan]]),
+  // planned once per version.
   // Filtered searches (a predicate may be non-deterministic), server-side
   // searches and stores without a version token are never cached.
 
@@ -425,20 +429,29 @@ final class VectorIndex(
   /** (entries, rows) held in this handle's page cache. */
   private[graft] def pageCacheSize: (Int, Int) = pages.size
 
+  /** This handle, its page cache emptied: the next request of each kind
+    * reads the index again.
+    */
+  private[graft] def withEmptyPageCache(): VectorIndex = {
+    pages.clear()
+    this
+  }
+
   /** `page`, kept under (`token`, `request`) — unless the token is None. */
   private def cached(token: Option[Any], request: VectorIndex.Request)(page: => Page): Page =
     token.fold(page)(t => pages.getOrElseUpdate((t, request), page))
 
   /** What an ANN request in mode `m` reads, each root resolved from one
-    * snapshot: the documents, the ANN version, and the token of both.
+    * snapshot: the documents' version scan, the ANN version, and the token
+    * of both.
     */
-  private def annRead(m: SearchMode): (DataFrame, AnnVersion, Option[Any]) = {
+  private def annRead(m: SearchMode): (VersionScan, AnnVersion, Option[Any]) = {
     require(ann.exists(_.getClass == m.getClass),
       s"index was not built with ANN mode $m — pass it in VectorIndex(ann = ...)")
-    val (docs, token) = store.readVersioned()
+    val (scan, token) = store.readScan()
     val root = annRoot(m.getClass)
     val v = annVersion(root, new VersionedDir(spark, root).snapshot)
-    (docs, v, token.map((_, v.snapshot)))
+    (scan, v, token.map((_, v.snapshot)))
   }
 
   /** search(q): embed the query once on the driver (reference
@@ -456,8 +469,8 @@ final class VectorIndex(
     * bounded TopK aggregator. Lazy; [[annHits]] collects it.
     */
   private[graft] def annPage(probes: Seq[(Long, Seq[Float])], k: Int, m: SearchMode): DataFrame = {
-    val (docs, v, _) = annRead(m)
-    annPage(docs, v, probes, k, m)
+    val (scan, v, _) = annRead(m)
+    annPage(scan.docs, v, probes, k, m)
   }
 
   private def annPage(docs: DataFrame, v: AnnVersion, probes: Seq[(Long, Seq[Float])], k: Int,
@@ -502,7 +515,7 @@ final class VectorIndex(
     val page = annPage(docs, v, probes, k, m)
     val hits = page.collect().toSeq
       .filter(r => Retrieval.compareScores(r.getDouble(1), threshold) >= 0)
-    Retrieval.hydratePage(docs, hits, page.schema("score"))
+    Page(Retrieval.hydratePage(docs, hits, page.schema("score")))
   }
 
   /** The top-k chunk page of one query vector — exact (the KNN page) or
@@ -515,20 +528,20 @@ final class VectorIndex(
       k, threshold, metric, mode)
     mode match {
       case SearchMode.Exact =>
-        val (docs, token) = store.readVersioned()
-        cached(token, request) {
-          val page = Retrieval.keyed(Retrieval.knn(docs, queryVec, k, threshold, metric))
-          (page.collect().toSeq, page.schema)
-        }
+        val (scan, token) = store.readScan()
+        cached(token, request)(Page(Retrieval.knnPage(scan, queryVec, k, threshold, metric)))
       case m =>
-        val (docs, v, token) = annRead(m)
-        cached(token, request)(annHits(docs, v, Seq((0L, queryVec)), k, threshold, m))
+        val (scan, v, token) = annRead(m)
+        cached(token, request)(annHits(scan.docs, v, Seq((0L, queryVec)), k, threshold, m))
     }
   }
 
-  /** The first row per object key of a page, as a DataFrame over its rows. */
-  private def firstPerKey(page: Page): DataFrame =
-    Retrieval.localFrame(spark, Retrieval.firstPerKey(page._1, page._2), page._2)
+  /** The first row per object key of a page, as a DataFrame over its rows —
+    * one per page, shared by the searches and RAG sources it answers.
+    */
+  private def firstPerKey(page: Page): DataFrame = page.firstPerKey {
+    Retrieval.localFrame(spark, Retrieval.firstPerKey(page.rows, page.schema), page.schema)
+  }
 
   /** Search by a raw query vector (the reference's get_similar_documents
     * takes a query_vector, storage/base.py:311-315). ANN modes route through
@@ -581,12 +594,12 @@ final class VectorIndex(
           // return < k rows — the documented ANN/filter trade-off (the
           // pre-filtering alternative is the exact path above, or
           // ivfTopKPruned(payloadFilter) when the payload rides in the index)
-          val (docs, v, _) = annRead(m)
-          val (rows, schema) = annHits(docs, v, Seq((0L, queryVec)),
-            k * VectorIndex.AnnFilterOverfetch, threshold, m)
+          val (scan, v, _) = annRead(m)
+          val page = annHits(scan.docs, v, Seq((0L, queryVec)), k * VectorIndex.AnnFilterOverfetch,
+            threshold, m)
           // the predicate runs over the local rows (no Spark job)
-          val kept = Retrieval.localFrame(spark, rows, schema).filter(pred).collect().toSeq
-          firstPerKey((kept.sorted(Retrieval.byRank(schema)).take(k), schema))
+          val kept = Retrieval.localFrame(spark, page.rows, page.schema).filter(pred).collect().toSeq
+          firstPerKey(new Page(kept.sorted(Retrieval.byRank(page.schema)).take(k), page.schema))
       }
   }
 
@@ -604,26 +617,25 @@ final class VectorIndex(
                   includeSelf: Boolean = false,
                   mode: SearchMode = SearchMode.Exact): DataFrame = {
     val request = VectorIndex.Request(objectKey, k, threshold, config.metric, mode)
-    val (rows, schema) = mode match {
+    val page = mode match {
       case SearchMode.Exact =>
-        val (docs, token) = store.readVersioned()
-        cached(token, request)(Retrieval.similarRows(docs, objectKey, k, threshold, config.metric))
+        val (scan, token) = store.readScan()
+        cached(token, request)(Page(Retrieval.similarRows(scan, objectKey, k, threshold, config.metric)))
       case m =>
-        import org.apache.spark.sql.functions.{array_contains, col}
-        val (docs, v, token) = annRead(m)
+        val (scan, v, token) = annRead(m)
         cached(token, request) {
-          val probes = docs.filter(array_contains(col("object_keys"), objectKey))
-            .select(col("doc_id"), col("vector")).collect()
-            .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-          // nothing to probe: the exact path's empty page (its schema is
-          // resolved by analysis alone, no job runs)
-          if (probes.isEmpty) Retrieval.hydratePage(docs, Nil,
-            Retrieval.similarPage(docs, objectKey, k, threshold, config.metric).schema("score"))
-          else annHits(docs, v, probes, k, threshold, m)
+          val probes = scan.withKey(objectKey)
+          // nothing to probe: the exact path's empty page
+          if (probes.isEmpty) Page(Retrieval.hydratePage(scan.docs, Nil, Retrieval.ScoreField))
+          else annHits(scan.docs, v, probes, k, threshold, m)
         }
     }
-    Retrieval.localFrame(spark, Retrieval.excludeKey(
-      Retrieval.firstPerKey(rows, schema), schema, objectKey, includeSelf), schema)
+    if (includeSelf) firstPerKey(page)
+    else page.withoutSelf {
+      val rows = Retrieval.firstPerKey(page.rows, page.schema)
+      Retrieval.localFrame(spark, Retrieval.excludeKey(rows, page.schema, objectKey, includeSelf = false),
+        page.schema)
+    }
   }
 
   /** RAG query; ANN modes retrieve through the pruned index. Reference
@@ -647,9 +659,8 @@ final class VectorIndex(
   /** The prompt and sources of a RAG question, from its cosine top-k page. */
   private def ragPrompt(question: String, sourcesLimit: Int, threshold: Double,
                         mode: SearchMode): (Seq[graft.embed.ChatMessage], DataFrame) = {
-    val (rows, schema) = vectorPage(backend.embedOne(question).toSeq, sourcesLimit, threshold,
-      Metric.Cosine, mode)
-    Retrieval.ragFinish(spark, rows, schema, question, Retrieval.DefaultSystemPrompt)
+    val page = vectorPage(backend.embedOne(question).toSeq, sourcesLimit, threshold, Metric.Cosine, mode)
+    (Retrieval.ragMessages(page.rows, page.schema, question, Retrieval.DefaultSystemPrompt), firstPerKey(page))
   }
 }
 
@@ -731,8 +742,31 @@ object VectorIndex {
     */
   val AnnFilterOverfetch = 4
 
-  /** A collected page: its rows in rank order, and their schema. */
-  private[graft] type Page = (Seq[Row], StructType)
+  /** A collected page: its rows in rank order, their schema, and the
+    * DataFrames finished from it. Each frame is built once, so a request the
+    * page answers again gets a DataFrame Spark has already planned.
+    */
+  private[graft] final class Page(val rows: Seq[Row], val schema: StructType) {
+    private var first: DataFrame = _
+    private var noSelf: DataFrame = _
+
+    /** The first row per object key, built by `build` on first use. */
+    def firstPerKey(build: => DataFrame): DataFrame = synchronized {
+      if (first == null) first = build
+      first
+    }
+
+    /** findSimilar's frame without the probe object, built on first use. */
+    def withoutSelf(build: => DataFrame): DataFrame = synchronized {
+      if (noSelf == null) noSelf = build
+      noSelf
+    }
+  }
+
+  private[graft] object Page {
+    /** The page of a `(rows, schema)` pair. */
+    def apply(page: (Seq[Row], StructType)): Page = new Page(page._1, page._2)
+  }
 
   /** What a cached page answers: its probe — the bit pattern of a query
     * vector (`floatToIntBits`, so -0.0 and 0.0 differ and NaN equals NaN)
@@ -758,11 +792,11 @@ object VectorIndex {
     def getOrElseUpdate(key: Any, page: => Page): Page =
       synchronized(Option(entries.get(key))).getOrElse {
         val p = page
-        if (p._1.size <= maxRows) synchronized {
-          rows += p._1.size - Option(entries.put(key, p)).fold(0)(_._1.size)
+        if (p.rows.size <= maxRows) synchronized {
+          rows += p.rows.size - Option(entries.put(key, p)).fold(0)(_.rows.size)
           val eldest = entries.values.iterator
           while (entries.size > maxEntries || rows > maxRows) {
-            rows -= eldest.next()._1.size
+            rows -= eldest.next().rows.size
             eldest.remove()
           }
         }
@@ -771,6 +805,11 @@ object VectorIndex {
 
     /** (pages, rows) held. */
     def size: (Int, Int) = synchronized((entries.size, rows))
+
+    def clear(): Unit = synchronized {
+      entries.clear()
+      rows = 0
+    }
   }
 
   /** Convenience constructor with the dev/test backends. */

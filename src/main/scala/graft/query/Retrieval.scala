@@ -2,8 +2,10 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.graftbridge.SparkInternals.{toColumn, toExpression}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.core.Metric
 import graft.embed.{ChatBackend, ChatMessage, EmbeddingBackend}
@@ -109,18 +111,10 @@ object Retrieval {
   def findSimilar(index: DataFrame, probeKey: String, k: Int = 5,
                   threshold: Double = 0.0, metric: Metric = Metric.Cosine,
                   includeSelf: Boolean = false): DataFrame = {
-    val (rows, schema) = similarRows(index, probeKey, k, threshold, metric)
+    val page = similarPage(index, probeKey, k, threshold, metric)
+    val (rows, schema) = hydratePage(index, page.collect().toSeq, page.schema("score"))
     localFrame(index.sparkSession,
       excludeKey(firstPerKey(rows, schema), schema, probeKey, includeSelf), schema)
-  }
-
-  /** [[similarPage]] collected and hydrated: the rows [[findSimilar]]
-    * finishes, in rank order. A key with no documents yields no rows.
-    */
-  private[graft] def similarRows(index: DataFrame, probeKey: String, k: Int,
-                                 threshold: Double, metric: Metric): (Seq[Row], StructType) = {
-    val page = similarPage(index, probeKey, k, threshold, metric)
-    hydratePage(index, page.collect().toSeq, page.schema("score"))
   }
 
   /** The candidate page of [[findSimilar]]: score every (probe-chunk, doc)
@@ -187,22 +181,22 @@ object Retrieval {
                         sourcesLimit: Int, threshold: Double,
                         systemPrompt: String): (Seq[ChatMessage], DataFrame) = {
     val page = keyed(knn(index, embedBackend.embedOne(query).toSeq, sourcesLimit, threshold))
-    ragFinish(index.sparkSession, page.collect().toSeq, page.schema, query, systemPrompt)
+    val rows = page.collect().toSeq
+    (ragMessages(rows, page.schema, query, systemPrompt),
+      localFrame(index.sparkSession, firstPerKey(rows, page.schema), page.schema))
   }
 
-  /** The RAG prompt and sources of one ranked chunk page: the context is
-    * every chunk's content in rank order, the sources the page deduped per
-    * object key.
+  /** The RAG prompt of one ranked chunk page: the context is every chunk's
+    * content in rank order. Its sources are the page deduped per object key.
     */
-  private[graft] def ragFinish(spark: SparkSession, rows: Seq[Row], schema: StructType,
-                               query: String, systemPrompt: String): (Seq[ChatMessage], DataFrame) = {
+  private[graft] def ragMessages(rows: Seq[Row], schema: StructType, query: String,
+                                 systemPrompt: String): Seq[ChatMessage] = {
     val content = schema.fieldIndex("content")
     val context = rows.sorted(byRank(schema)).map(_.getString(content)).mkString("\n")
-    val messages = Seq(
+    Seq(
       ChatMessage("system", systemPrompt),
       ChatMessage("system", context),
       ChatMessage("user", query))
-    (messages, localFrame(spark, firstPerKey(rows, schema), schema))
   }
 
   // ---- candidate-page finish -------------------------------------------
@@ -269,7 +263,10 @@ object Retrieval {
     * rows shaped like `page.join(docs, Seq("doc_id"))` plus `key` — doc_id,
     * score, the other document columns, key — in rank order, one per
     * (page row, document row) pair. A doc hit by several probes keeps its
-    * best score. Scores are thresholded before this by the caller.
+    * best score. Scores are thresholded before this by the caller. The ids
+    * are bound as one `InSet`: the filter is pushed into the parquet scan
+    * and its generated code is the same for every id set, so a new id set
+    * compiles no class.
     */
   private[graft] def hydratePage(docs: DataFrame, page: Seq[Row],
                                  scoreField: StructField): (Seq[Row], StructType) = {
@@ -283,15 +280,14 @@ object Retrieval {
     val idIdx = docSchema.fieldIndex("doc_id")
     val keysIdx = docSchema.fieldIndex("object_keys")
     val others = docSchema.fields.indices.filter(_ != idIdx)
-    val keyType = docSchema("object_keys").dataType match {
-      case org.apache.spark.sql.types.ArrayType(t, _) => t
-      case t => throw new IllegalArgumentException(s"object_keys must be an array, got $t")
-    }
     val schema = StructType(docSchema(idIdx) +: scoreField +: others.map(docSchema.fields(_)) :+
-      StructField("key", keyType, nullable = true))
+      keyField(docSchema))
+    // a HashSet at every size: the generated code names the set's class,
+    // and Scala's small sets (Set1..Set4) would each compile their own
+    val ids = scala.collection.immutable.HashSet.from[Any](best.keys)
     val docRows =
       if (best.isEmpty) Array.empty[Row]
-      else docs.filter(col("doc_id").isin(best.keys.toSeq: _*)).collect()
+      else docs.filter(toColumn(InSet(toExpression(col("doc_id").cast(LongType)), ids))).collect()
     val byId = docRows.groupBy(_.get(idIdx).asInstanceOf[Number].longValue)
     val rows = best.toSeq.flatMap { case (id, score) =>
       byId.getOrElse(id, Array.empty[Row]).toSeq.map { d =>
@@ -302,6 +298,39 @@ object Retrieval {
     }
     (rows.sorted(byRank(schema)), schema)
   }
+
+  // ---- pages read from a planned scan ----------------------------------
+
+  /** The [[knn]] page of `keyed(knn(...))` read from a planned scan: the
+    * document columns, `score` and `key`, in rank order. One job.
+    */
+  private[graft] def knnPage(scan: VersionScan, queryVec: Seq[Float], k: Int, threshold: Double,
+                             metric: Metric): (Seq[Row], StructType) = {
+    val hits = scan.topK(Seq(queryVec), k, threshold, metric).head
+    (hits.map(h => Row.fromSeq(h.row.toSeq :+ h.score :+ h.key)),
+      scan.schema.add(ScoreField).add(keyField(scan.schema)))
+  }
+
+  /** [[findSimilar]]'s hydrated page, its candidates read from a planned
+    * scan: one job for the probe object's chunks and one multi-probe top-k,
+    * both over the narrow (doc_id, vector, object_keys) projection, then
+    * [[hydratePage]]'s one read of the hit ids. A key with no documents
+    * runs the first job only.
+    */
+  private[graft] def similarRows(scan: VersionScan, probeKey: String, k: Int, threshold: Double,
+                                 metric: Metric): (Seq[Row], StructType) = {
+    val hits = scan.topKIds(scan.withKey(probeKey).map(_._2), k, threshold, metric)
+    hydratePage(scan.docs, hits.map { case (id, score) => Row(id, score) }, ScoreField)
+  }
+
+  /** The `key` field a page adds: the type of an `object_keys` element. */
+  private def keyField(docSchema: StructType): StructField = docSchema("object_keys").dataType match {
+    case org.apache.spark.sql.types.ArrayType(t, _) => StructField("key", t, nullable = true)
+    case t => throw new IllegalArgumentException(s"object_keys must be an array, got $t")
+  }
+
+  /** The `score` field of the [[knn]] and [[similarPage]] pages. */
+  private[graft] val ScoreField = StructField("score", DoubleType, nullable = true)
 
   /** A DataFrame over rows already on the driver (a LocalRelation:
     * collecting, projecting or filtering it runs no Spark job).

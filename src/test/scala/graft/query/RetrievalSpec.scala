@@ -184,4 +184,29 @@ class RetrievalSpec extends AnyFunSuite {
       assert(local == local.sorted(Retrieval.byRank(page.schema)), s"trial $trial: not in rank order")
     }
   }
+
+  // hydration binds its ids as one InSet, whose generated code is the same
+  // for every id set, so a new id set compiles nothing (an `In` of <= 10
+  // literals compiled 2 classes per call)
+  test("hydratePage: after warm-up, hydrations of new id sets compile no classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft-hydrate").toString + "/docs"
+    (0L until 200L).map(i => (i, Seq(s"p:${i % 50}"), Seq(i.toFloat, 1f), s"content $i"))
+      .toDF("doc_id", "object_keys", "vector", "content").write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val scoreField = org.apache.spark.sql.types.StructField("score",
+      org.apache.spark.sql.types.DoubleType, nullable = false)
+    def hydrate(ids: Seq[Long]) =
+      Retrieval.hydratePage(docs, ids.map(i => org.apache.spark.sql.Row(i, i / 1000.0)), scoreField)
+    hydrate(Seq(1L, 2L, 3L))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    for (call <- 0 until 10) {
+      val ids = (0 until 1 + call).map(j => (call * 17L + j * 3) % 200)
+      val (rows, schema) = hydrate(ids)
+      assert(schema.fieldNames.toSeq == Seq("doc_id", "score", "object_keys", "vector", "content", "key"))
+      assert(rows.map(_.getLong(0)) == ids.distinct.sortBy(i => (-i / 1000.0, i)), s"call $call")
+      assert(rows.forall(r => r.getString(4) == s"content ${r.getLong(0)}" && r.getString(5) == s"p:${r.getLong(0) % 50}"))
+    }
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0, "classes compiled by new id sets")
+  }
 }

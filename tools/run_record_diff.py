@@ -7,6 +7,10 @@ record, with the B/A ratio:
 
 - the record-level `repeat_share` (the share of requests that repeat an
   earlier one), `attempted` and `failed` operations;
+- the per-call wall times (`call_ms`): their count, sum, p10, p50 and p90
+  (linear-interpolated, as perfbench computes its quantiles), so a
+  throughput change shows whether its time went to the slow tail or to the
+  fast calls;
 - the gated metrics (`metrics`: end-to-end with --trace 0, per-layer with
   --trace 1), the workload metrics and the layer metrics;
 - for traced records, per span name: the number of spans, the median wall
@@ -35,6 +39,22 @@ def ratio(a, b):
 
 def metric_rows(rec, section):
     return {k: m["value"] for k, m in rec.get(section, {}).items()}
+
+
+def quantile(xs, q):
+    s = sorted(xs)
+    pos = q * (len(s) - 1)
+    lo = int(pos)
+    hi = min(lo + 1, len(s) - 1)
+    return s[lo] + (s[hi] - s[lo]) * (pos - lo)
+
+
+def call_rows(rec):
+    xs = rec.get("call_ms") or []
+    if not xs:
+        return {}
+    return {"count": len(xs), "sum": float(sum(xs)),
+            **{f"p{int(q * 100)}": quantile(xs, q) for q in (0.1, 0.5, 0.9)}}
 
 
 def span_rows(rec):
@@ -69,6 +89,11 @@ def main(path_a, path_b):
     table("record", ("name", "A", "B", "B/A"),
           [(n, fmt(a.get(n)), fmt(b.get(n)), ratio(a.get(n), b.get(n)))
            for n in ("repeat_share", "attempted", "failed")])
+    ca, cb = call_rows(a), call_rows(b)
+    if ca or cb:
+        table("call_ms", ("name", "A", "B", "B/A"),
+              [(n, fmt(ca.get(n)), fmt(cb.get(n)), ratio(ca.get(n), cb.get(n)))
+               for n in ("count", "sum", "p10", "p50", "p90")])
     for section in ("metrics", "workload_metrics", "layer_metrics"):
         ma, mb = metric_rows(a, section), metric_rows(b, section)
         names = sorted(set(ma) | set(mb))
