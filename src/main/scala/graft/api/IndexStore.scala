@@ -58,22 +58,16 @@ trait IndexStore {
     */
   private[graft] def insertPrechecked(inserted: DataFrame): Unit = upsert(inserted)
 
-  /** [[read]] together with a token of the version it read, both from one
-    * snapshot: two reads with equal tokens have the same contents, and every
-    * write yields a new token. `None` means the store cannot tell, and
-    * nothing derived from the read may be reused ([[VectorIndex]]'s page
-    * cache keys on this).
+  /** [[read]] as a [[VersionScan]], together with a token of the version
+    * it read, both from one snapshot: two reads with equal tokens have the
+    * same contents, and every write yields a new token. `None` means the
+    * store cannot tell, and nothing derived from the read may be reused
+    * ([[VectorIndex]]'s page cache keys on this). A store with version
+    * tokens keeps one scan per version, so a version is planned once; by
+    * default every call gets a scan of its own.
     */
-  private[graft] def readVersioned(): (DataFrame, Option[Any]) = (read(), None)
-
-  /** [[readVersioned]] as a [[VersionScan]] of the read. A store with
-    * version tokens keeps one scan per version, so a version is planned
-    * once; by default every call gets a scan of its own.
-    */
-  private[graft] def readScan(): (VersionScan, Option[Any]) = {
-    val (docs, token) = readVersioned()
-    (new VersionScan(docs), token)
-  }
+  private[graft] def readScan(): (VersionScan, Option[Any]) =
+    (new VersionScan(read()), None)
 }
 
 /** Connector capability: the backing service answers similarity search
@@ -124,12 +118,7 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
       s.isFile && s.getPath.getName.endsWith(".parquet"))
   }
 
-  override def read(): DataFrame = readVersioned()._1
-
-  override private[graft] def readVersioned(): (DataFrame, Option[Any]) = {
-    val (scan, token) = readScan()
-    (scan.docs, token)
-  }
+  override def read(): DataFrame = readScan()._1.docs
 
   /** The token is the resolved read's key; the legacy flat layout has no
     * snapshot, so it has none.

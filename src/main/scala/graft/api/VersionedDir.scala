@@ -113,7 +113,7 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     case None    => throw new IllegalStateException(s"no version present under $root")
   }
 
-  /** Atomically reserve the next version name: an atomic create of a marker
+  /** Atomically claim a version or delta name: an atomic create of a marker
     * file fails on collision, so a concurrent writer moves on to the next
     * number instead of writing into the same directory.
     *
@@ -132,16 +132,19 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
       catch { case _: java.io.IOException => false }
   }
 
-  private def reserve(f: FileSystem): (String, Path) = {
-    var n = listVersions.lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1
+  /** Claim the first free name `format(n)`, n >= `first`, in `dir` by
+    * atomic-creating its `.reserve_<name>` marker — the one claim
+    * mechanism for version numbers and delta sequence numbers.
+    */
+  private def reserve(f: FileSystem, dir: Path, first: Long, format: String): String = {
+    var n = first
     var attempts = 0
     while (attempts < 10000) {
-      val name = "v%05d".format(n)
-      val marker = new Path(rootPath, s".reserve_$name")
-      if (atomicCreate(f, marker)) return (name, marker)
+      val name = format.format(n)
+      if (atomicCreate(f, new Path(dir, s".reserve_$name"))) return name
       n += 1; attempts += 1
     }
-    throw new IllegalStateException(s"could not reserve a version dir under $root")
+    throw new IllegalStateException(s"could not reserve a name under $dir")
   }
 
   /** Write a new version via `write(versionDirPath)`, install its flip
@@ -157,7 +160,8 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     // the marker is NOT deleted on success — it guards its number until the
     // version is pruned. Deleting it early would let a racing writer that
     // computed a stale next-number re-claim an existing version dir.
-    val (next, _) = reserve(f)
+    val next = reserve(f, rootPath,
+      listVersions.lastOption.map(_.drop(1).toLong).getOrElse(0L) + 1, "v%05d")
     try write(new Path(rootPath, next).toString)
     catch { case e: Throwable =>
       // remove the partial version dir so the no-manifest newest-wins
@@ -227,7 +231,10 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
 
   /** Append one delta beside the active version via `write(tmpDir)`; the
     * temp dir renames into its final sequence-numbered name on success.
-    * Single-writer contract (same as replaceWith read-modify-write).
+    * The sequence number is reserved like a version number, so racing
+    * appends get distinct numbers and temp dirs and none is lost; a
+    * read-modify-write over deltas still needs a single writer (same as
+    * replaceWith).
     */
   def appendDelta(write: String => Unit, kind: String = "put"): Unit = {
     require(kind.matches("[a-z]+"), s"delta kind must be lowercase letters: $kind")
@@ -237,13 +244,16 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     val f = fs
     val dr = deltaRoot(v)
     f.mkdirs(dr)
-    val next = snap.deltas.lastOption.map(_.seq).getOrElse(0L) + 1
-    val name = "d%08d".format(next) + (if (kind == "put") "" else s"_$kind")
-    val tmp = new Path(dr, s".tmp_$name")
-    f.delete(tmp, true)
+    val seqName = reserve(f, dr, snap.deltas.lastOption.map(_.seq).getOrElse(0L) + 1, "d%08d")
+    val name = seqName + (if (kind == "put") "" else s"_$kind")
+    val tmp = new Path(dr, s".tmp_$seqName")
+    f.delete(tmp, true) // a crashed writer's leftover; the number is ours now
     try write(tmp.toString)
     catch { case e: Throwable => f.delete(tmp, true); throw e }
-    require(f.rename(tmp, new Path(dr, name)), s"delta rename failed for $root/$v/$name")
+    // a local-FS rename onto an existing dir moves tmp INSIDE it and succeeds
+    val dest = new Path(dr, name)
+    require(!f.exists(dest), s"delta $root/$v.deltas/$name already exists")
+    require(f.rename(tmp, dest), s"delta rename failed for $root/$v/$name")
   }
 
   /** Compact the ACTIVE version into a new version with `targetFileMB`-sized

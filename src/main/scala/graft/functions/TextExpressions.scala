@@ -1385,7 +1385,6 @@ object textkernel {
     toColumn(CutSpansInSetExpr(toExpression(text), hashes, w))
   def word_shingles(c: Column, n: Int): Column = toColumn(WordShinglesExpr(toExpression(c), n))
   def word_trigrams(c: Column): Column = toColumn(WordNgramsExpr(toExpression(c), 3))
-  def word_fourgrams(c: Column): Column = toColumn(WordNgramsExpr(toExpression(c), 4))
   def word_ngrams(c: Column, n: Int): Column = toColumn(WordNgramsExpr(toExpression(c), n))
   def minhash_sig(c: Column, numHashes: Int, shingleSize: Int): Column =
     toColumn(MinHashSigExpr(toExpression(c), numHashes, shingleSize))

@@ -576,16 +576,6 @@ object FullText {
                           minCount: Int = 1): DataFrame =
     ngramSurprisalKN(docs, 4, textCol, idCol, discount, minCount)
 
-  /** [[trigramSurprisalKN]] with the exact integer accumulator exposed
-    * ((id, n_trigrams, s) micro-nat sum — the [[bigramSurprisalRaw]]
-    * contract, so [[surprisalBuckets]]-style consumers stay exact).
-    */
-  private[graft] def trigramSurprisalKNRaw(docs: DataFrame, textCol: String,
-                                           idCol: String,
-                                           discount: Double,
-                                           minCount: Int = 1): DataFrame =
-    ngramSurprisalKNRaw2(3, docs, docs, textCol, idCol, discount, minCount)
-
   /** [[ngramSurprisalKN]] with the exact integer accumulator exposed —
     * the [[surprisalBuckets]] contract at any order. */
   private[graft] def ngramSurprisalKNRaw(order: Int, docs: DataFrame,

@@ -495,6 +495,26 @@ object Multimodal {
     }
   }
 
+  /** The scaffold of every per-blob decode operator: each row's
+    * `binaryCol` blob becomes the rows `perBlob(id, bytes)` returns, under
+    * the schema `idCol` +: `fields`. A null blob yields no rows — the one
+    * place that rule lives. Partition-local: the media bytes never cross a
+    * shuffle, only the small output rows flow on.
+    */
+  private def blobRows(df: DataFrame, idCol: String, binaryCol: String,
+                       fields: Seq[StructField])(
+                       perBlob: (Any, Array[Byte]) => Iterator[Row]): DataFrame = {
+    val idIdx = df.schema.fieldIndex(idCol)
+    val binIdx = df.schema.fieldIndex(binaryCol)
+    implicit val enc = RowEncoder.encoderFor(StructType(df.schema(idCol) +: fields))
+    df.mapPartitions { rows =>
+      rows.flatMap { r =>
+        val bytes = r.getAs[Array[Byte]](binIdx)
+        if (bytes == null) Iterator.empty else perBlob(r.get(idIdx), bytes)
+      }
+    }
+  }
+
   /** Shared REAL video-frame decode: AVI (uncompressed DIB or MJPEG,
     * [[AviCodec]]) and ANIMATED GIF (full-canvas composited frames,
     * [[GifCodec.decodeFrames]] — a web "video" format in practice). None
@@ -513,31 +533,19 @@ object Multimodal {
     * deterministic stand-in.
     */
   def sampleFrames(df: DataFrame, idCol: String, binaryCol: String = "media",
-                   everyN: Int = 4): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("frame_index", IntegerType),
-      StructField("frame", BinaryType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else videoFrames(bytes) match {
-          case Some(frames) =>
-            (0 until frames.length by everyN).iterator.map { f =>
-              Row(r.get(idIdx), f, frames(f).pixels)
-            }
-          case None =>
-            StubCodec.sampleFrames(bytes, everyN).zipWithIndex.iterator.map {
-              case (frame, i) => Row(r.get(idIdx), i, frame)
-            }
-        }
+                   everyN: Int = 4): DataFrame =
+    blobRows(df, idCol, binaryCol, Seq(
+        StructField("frame_index", IntegerType),
+        StructField("frame", BinaryType))) { (id, bytes) =>
+      videoFrames(bytes) match {
+        case Some(frames) =>
+          (0 until frames.length by everyN).iterator.map(f => Row(id, f, frames(f).pixels))
+        case None =>
+          StubCodec.sampleFrames(bytes, everyN).zipWithIndex.iterator.map {
+            case (frame, i) => Row(id, i, frame)
+          }
       }
     }
-  }
 
   /** REAL per-frame pixel stats over decodable videos — uncompressed-DIB
     * / MJPEG AVI and animated GIF ([[videoFrames]]): one row per sampled
@@ -550,8 +558,7 @@ object Multimodal {
   def videoFrameStats(df: DataFrame, idCol: String, binaryCol: String = "media",
                       everyN: Int = 1): DataFrame = {
     require(everyN >= 1, s"everyN must be >= 1: $everyN")
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
+    blobRows(df, idCol, binaryCol, Seq(
       StructField("frame_index", LongType),
       StructField("width", LongType),
       StructField("height", LongType),
@@ -562,30 +569,22 @@ object Multimodal {
       // row-order evidence)
       StructField("px_wsum", LongType),
       StructField("px_min", LongType),
-      StructField("px_max", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else videoFrames(bytes).iterator.flatMap { frames =>
-          (0 until frames.length by everyN).iterator.map { f =>
-            val img = frames(f)
-            var sum = 0L; var wsum = 0L; var mn = 255L; var mx = 0L
-            var i = 0
-            while (i < img.pixels.length) {
-              val v = (img.pixels(i) & 0xFF).toLong
-              sum += v
-              wsum += i * v
-              if (v < mn) mn = v
-              if (v > mx) mx = v
-              i += 1
-            }
-            Row(r.get(idIdx), f.toLong, img.width.toLong, img.height.toLong,
-              img.pixels.length.toLong, sum, wsum, mn, mx)
+      StructField("px_max", LongType))) { (id, bytes) =>
+      videoFrames(bytes).iterator.flatMap { frames =>
+        (0 until frames.length by everyN).iterator.map { f =>
+          val img = frames(f)
+          var sum = 0L; var wsum = 0L; var mn = 255L; var mx = 0L
+          var i = 0
+          while (i < img.pixels.length) {
+            val v = (img.pixels(i) & 0xFF).toLong
+            sum += v
+            wsum += i * v
+            if (v < mn) mn = v
+            if (v > mx) mx = v
+            i += 1
           }
+          Row(id, f.toLong, img.width.toLong, img.height.toLong,
+            img.pixels.length.toLong, sum, wsum, mn, mx)
         }
       }
     }
@@ -621,29 +620,19 @@ object Multimodal {
     * decoder, surfaced by [[extractMeta]]'s format column).
     */
   def audioFrameFeatures(df: DataFrame, idCol: String, binaryCol: String = "media",
-                         frameSize: Int = 1024): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("frame_index", IntegerType),
-      StructField("rms", FloatType),
-      StructField("zcr", FloatType),
-      StructField("peak", FloatType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        // per-row Try: a corrupt container yields no frames, not a job failure
-        else scala.util.Try(PcmCodec.decode(bytes)).toOption.flatten.iterator.flatMap { pcm =>
-          PcmCodec.frameFeatures(pcm, frameSize).iterator.map {
-            case (fi, rms, zcr, peak) => Row(r.get(idIdx), fi, rms, zcr, peak)
-          }
+                         frameSize: Int = 1024): DataFrame =
+    blobRows(df, idCol, binaryCol, Seq(
+        StructField("frame_index", IntegerType),
+        StructField("rms", FloatType),
+        StructField("zcr", FloatType),
+        StructField("peak", FloatType))) { (id, bytes) =>
+      // per-row Try: a corrupt container yields no frames, not a job failure
+      scala.util.Try(PcmCodec.decode(bytes)).toOption.flatten.iterator.flatMap { pcm =>
+        PcmCodec.frameFeatures(pcm, frameSize).iterator.map {
+          case (fi, rms, zcr, peak) => Row(id, fi, rms, zcr, peak)
         }
       }
     }
-  }
 
   /** Full image decode, all four still formats through OUR OWN codecs:
     * PNG ([[PngCodec]] — inflate + unfilter), baseline JPEG
@@ -701,37 +690,27 @@ object Multimodal {
     * 100 TB discipline: media bytes never cross a shuffle). Unsupported /
     * corrupt rows yield nothing, like [[audioFrameFeatures]].
     */
-  def imagePixelStats(df: DataFrame, idCol: String, binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("width", LongType),
-      StructField("height", LongType),
-      StructField("channels", LongType),
-      StructField("n_px", LongType),
-      StructField("px_sum", LongType),
-      StructField("px_min", LongType),
-      StructField("px_max", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else decodeImage(bytes).iterator.map { img =>
-          var sum = 0L; var mn = 255L; var mx = 0L
-          var i = 0
-          while (i < img.pixels.length) {
-            val v = (img.pixels(i) & 0xFF).toLong
-            sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-            i += 1
-          }
-          Row(r.get(idIdx), img.width.toLong, img.height.toLong, img.channels.toLong,
-            (img.pixels.length / img.channels).toLong, sum, mn, mx)
+  def imagePixelStats(df: DataFrame, idCol: String, binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, Seq(
+        StructField("width", LongType),
+        StructField("height", LongType),
+        StructField("channels", LongType),
+        StructField("n_px", LongType),
+        StructField("px_sum", LongType),
+        StructField("px_min", LongType),
+        StructField("px_max", LongType))) { (id, bytes) =>
+      decodeImage(bytes).iterator.map { img =>
+        var sum = 0L; var mn = 255L; var mx = 0L
+        var i = 0
+        while (i < img.pixels.length) {
+          val v = (img.pixels(i) & 0xFF).toLong
+          sum += v; if (v < mn) mn = v; if (v > mx) mx = v
+          i += 1
         }
+        Row(id, img.width.toLong, img.height.toLong, img.channels.toLong,
+          (img.pixels.length / img.channels).toLong, sum, mn, mx)
       }
     }
-  }
 
   /** 64-bit dHash (difference hash — the published perceptual-hash
     * construction popularized by Krawetz's "Kind of Like That"; the one
@@ -788,24 +767,14 @@ object Multimodal {
     * inside the partition — only 28 bytes per image flow on (media bytes
     * never cross a shuffle); undecodable rows yield nothing.
     */
-  def imageDHash(df: DataFrame, idCol: String, binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("width", LongType),
-      StructField("height", LongType),
-      StructField("dhash", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else decodeImage(bytes).iterator.map(img =>
-          Row(r.get(idIdx), img.width.toLong, img.height.toLong, dhash64(img)))
-      }
+  def imageDHash(df: DataFrame, idCol: String, binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, Seq(
+        StructField("width", LongType),
+        StructField("height", LongType),
+        StructField("dhash", LongType))) { (id, bytes) =>
+      decodeImage(bytes).iterator.map(img =>
+        Row(id, img.width.toLong, img.height.toLong, dhash64(img)))
     }
-  }
 
   /** Image-level perceptual dedup: group by dHash, keeper = min id — the
     * image twin of [[Dedup.exact]]. The group stats are WINDOW functions
@@ -924,27 +893,16 @@ object Multimodal {
     * audio bytes never cross a shuffle); non-PCM/corrupt rows yield
     * nothing, like [[audioFrameFeatures]].
     */
-  def audioFingerprintDF(df: DataFrame, idCol: String, binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("sample_rate", LongType),
-      StructField("n_frames", LongType),
-      StructField("afp", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else scala.util.Try(PcmCodec.decodeInt16(bytes)).toOption.flatten.iterator.map { p =>
-          Row(r.get(idIdx), p.sampleRate.toLong,
-            (p.samples.length / math.max(1, p.channels)).toLong,
-            audioFingerprint64(p.samples, p.channels))
-        }
+  def audioFingerprintDF(df: DataFrame, idCol: String, binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, Seq(
+        StructField("sample_rate", LongType),
+        StructField("n_frames", LongType),
+        StructField("afp", LongType))) { (id, bytes) =>
+      scala.util.Try(PcmCodec.decodeInt16(bytes)).toOption.flatten.iterator.map { p =>
+        Row(id, p.sampleRate.toLong, (p.samples.length / math.max(1, p.channels)).toLong,
+          audioFingerprint64(p.samples, p.channels))
       }
     }
-  }
 
   /** Audio-level perceptual dedup: group by fingerprint — the audio twin of
     * [[imageDedup]], same posture (ONE exchange of ~24-byte hash rows and
@@ -1093,6 +1051,75 @@ object Multimodal {
     hash
   }
 
+  /** The output fields of the compressed-audio fingerprints, one row per
+    * clip: sample rate, frame count, granule count and the
+    * [[envelopeHash64]] of the granule energies.
+    */
+  private val granuleFpFields: Seq[StructField] = Seq(
+    StructField("sample_rate", LongType),
+    StructField("n_frames", LongType),
+    StructField("n_granules", LongType),
+    StructField("afp", LongType))
+
+  private def granuleFpRow(id: Any, sampleRate: Int, nFrames: Int, nGranules: Int,
+                           energies: Array[Long]): Row =
+    Row(id, sampleRate.toLong, nFrames.toLong, nGranules.toLong, envelopeHash64(energies))
+
+  /** Per-slice energies: Σ v² over every value of a slice, ×`scale`,
+    * rounded to a Long — the subband slices of Layer I/II (all subbands ×
+    * channels, ×50176) and the per-channel spectra of Layer III (×4096).
+    */
+  private def sliceEnergies(slices: Array[Array[Double]], scale: Double): Array[Long] =
+    slices.map { g =>
+      var e = 0.0
+      var i = 0
+      while (i < g.length) { e += g(i) * g(i); i += 1 }
+      math.round(e * scale)
+    }
+
+  /** Per-channel subband slice energies ×50176, channel-minor
+    * ((s0, ch0), (s0, ch1), (s1, ch0), …) over Layer I/II slices laid out
+    * `slice(sb * channels + ch)`.
+    */
+  private def channelSliceEnergies(slices: Array[Array[Double]], channels: Int): Array[Long] = {
+    val energies = new Array[Long](slices.length * channels)
+    var g = 0
+    while (g < slices.length) {
+      val gr = slices(g)
+      var c = 0
+      while (c < channels) {
+        var e = 0.0
+        var sb = 0
+        while (sb < 32) { val v = gr(sb * channels + c); e += v * v; sb += 1 }
+        energies(g * channels + c) = math.round(e * 50176.0)
+        c += 1
+      }
+      g += 1
+    }
+    energies
+  }
+
+  /** Per-granule Layer III spectral energies ×64, channels summed: Σ xr²,
+    * or Σ (i+1)·xr(i)² when `positionWeighted`.
+    */
+  private def mp3GranuleEnergies(d: Mp3Codec.Mp3Data, positionWeighted: Boolean): Array[Long] = {
+    val nG = d.spectra.length / d.channels
+    Array.tabulate(nG) { g =>
+      var e = 0.0
+      var c = 0
+      while (c < d.channels) {
+        val xr = d.spectra(g * d.channels + c)
+        var i = 0
+        while (i < xr.length) {
+          e += (if (positionWeighted) i + 1 else 1) * xr(i) * xr(i)
+          i += 1
+        }
+        c += 1
+      }
+      math.round(e * 64.0)
+    }
+  }
+
   /** Compressed-audio perceptual fingerprint rows via the scoped MPEG-1
     * Layer-I subband decoder ([[Mp1Codec]]): per clip
     * (id, sample_rate, n_frames, n_granules, afp). Each granule's subband
@@ -1107,33 +1134,11 @@ object Multimodal {
     * [[audioFingerprintDF]].
     */
   def mp1EnergyFingerprintDF(df: DataFrame, idCol: String,
-                             binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("sample_rate", LongType),
-      StructField("n_frames", LongType),
-      StructField("n_granules", LongType),
-      StructField("afp", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else Mp1Codec.decode(bytes).iterator.map { d =>
-          val energies = d.granules.map { g =>
-            var e = 0.0
-            var i = 0
-            while (i < g.length) { e += g(i) * g(i); i += 1 }
-            math.round(e * 50176.0)
-          }
-          Row(r.get(idIdx), d.sampleRate.toLong, d.nFrames.toLong,
-            d.granules.length.toLong, envelopeHash64(energies))
-        }
-      }
+                             binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, granuleFpFields) { (id, bytes) =>
+      Mp1Codec.decode(bytes).iterator.map(d => granuleFpRow(id, d.sampleRate, d.nFrames,
+        d.granules.length, sliceEnergies(d.granules, 50176.0)))
     }
-  }
 
   /** [[mp1EnergyFingerprintDF]]'s Layer-II twin via [[Mp2Codec]]: per clip
     * (id, sample_rate, n_frames, n_granules, afp) where a "granule" is one
@@ -1143,6 +1148,13 @@ object Multimodal {
     * envelope hash. Decode in-partition; non-Layer-II/corrupt/null rows
     * yield nothing.
     */
+  def mp2EnergyFingerprintDF(df: DataFrame, idCol: String,
+                             binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, granuleFpFields) { (id, bytes) =>
+      Mp2Codec.decode(bytes).iterator.map(d => granuleFpRow(id, d.sampleRate, d.nFrames,
+        d.granules.length, sliceEnergies(d.granules, 50176.0)))
+    }
+
   /** The Layer-III member of the compressed-audio fingerprint family via
     * [[Mp3Codec]]: per clip (id, sample_rate, n_frames, n_granules, afp)
     * where a granule is one Layer-III granule (2 per frame) and its
@@ -1156,28 +1168,11 @@ object Multimodal {
     * in-partition; non-Layer-III/corrupt/null rows yield nothing.
     */
   def mp3SpectralFingerprintDF(df: DataFrame, idCol: String,
-                               binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("sample_rate", LongType),
-      StructField("n_frames", LongType),
-      StructField("n_granules", LongType),
-      StructField("afp", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else Mp3Codec.decode(bytes).iterator.map { d =>
-          Row(r.get(idIdx), d.sampleRate.toLong, d.nFrames.toLong,
-            (d.spectra.length / d.channels).toLong,
-            envelopeHash64(mp3GranuleEnergies(d)))
-        }
-      }
+                               binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, granuleFpFields) { (id, bytes) =>
+      Mp3Codec.decode(bytes).iterator.map(d => granuleFpRow(id, d.sampleRate, d.nFrames,
+        d.spectra.length / d.channels, mp3GranuleEnergies(d, positionWeighted = false)))
     }
-  }
 
   /** [[mp3SpectralFingerprintDF]] with POSITION-WEIGHTED energies —
     * per granule Σ (i+1)·xr(i)² ×64 (channel-summed) instead of the
@@ -1189,39 +1184,11 @@ object Multimodal {
     * surface for q_mp3_short.
     */
   def mp3WeightedSpectralFingerprintDF(df: DataFrame, idCol: String,
-                                       binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("sample_rate", LongType),
-      StructField("n_frames", LongType),
-      StructField("n_granules", LongType),
-      StructField("afp", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else Mp3Codec.decode(bytes).iterator.map { d =>
-          val nG = d.spectra.length / d.channels
-          val weighted = Array.tabulate(nG) { g =>
-            var e = 0.0
-            var c = 0
-            while (c < d.channels) {
-              val xr = d.spectra(g * d.channels + c)
-              var i = 0
-              while (i < xr.length) { e += (i + 1) * xr(i) * xr(i); i += 1 }
-              c += 1
-            }
-            math.round(e * 64.0)
-          }
-          Row(r.get(idIdx), d.sampleRate.toLong, d.nFrames.toLong, nG.toLong,
-            envelopeHash64(weighted))
-        }
-      }
+                                       binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, granuleFpFields) { (id, bytes) =>
+      Mp3Codec.decode(bytes).iterator.map(d => granuleFpRow(id, d.sampleRate, d.nFrames,
+        d.spectra.length / d.channels, mp3GranuleEnergies(d, positionWeighted = true)))
     }
-  }
 
   /** [[mp3SpectralFingerprintDF]] with PER-CHANNEL energies — the gate
     * surface for stereo processing: channel-summed energy is invariant
@@ -1232,51 +1199,11 @@ object Multimodal {
     * units of 1/4096 — see q_mp3_ms_decode).
     */
   def mp3ChannelSpectralFingerprintDF(df: DataFrame, idCol: String,
-                                      binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("sample_rate", LongType),
-      StructField("n_frames", LongType),
-      StructField("n_granules", LongType),
-      StructField("afp", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else Mp3Codec.decode(bytes).iterator.map { d =>
-          val energies = d.spectra.map { xr =>
-            var e = 0.0
-            var i = 0
-            while (i < xr.length) { e += xr(i) * xr(i); i += 1 }
-            math.round(e * 4096.0)
-          }
-          Row(r.get(idIdx), d.sampleRate.toLong, d.nFrames.toLong,
-            (d.spectra.length / d.channels).toLong, envelopeHash64(energies))
-        }
-      }
+                                      binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, granuleFpFields) { (id, bytes) =>
+      Mp3Codec.decode(bytes).iterator.map(d => granuleFpRow(id, d.sampleRate, d.nFrames,
+        d.spectra.length / d.channels, sliceEnergies(d.spectra, 4096.0)))
     }
-  }
-
-  /** Per-granule spectral energies ×64, channels summed (the
-    * [[mp3SpectralFingerprintDF]] kernel, shared with the tag router).
-    */
-  private def mp3GranuleEnergies(d: Mp3Codec.Mp3Data): Array[Long] = {
-    val nG = d.spectra.length / d.channels
-    Array.tabulate(nG) { g =>
-      var e = 0.0
-      var c = 0
-      while (c < d.channels) {
-        val xr = d.spectra(g * d.channels + c)
-        var i = 0
-        while (i < xr.length) { e += xr(i) * xr(i); i += 1 }
-        c += 1
-      }
-      math.round(e * 64.0)
-    }
-  }
 
   /** [[mp1EnergyFingerprintDF]] with PER-CHANNEL granule energies
     * (channel-minor interleave, same ×50176 scale) — the gate surface
@@ -1285,112 +1212,21 @@ object Multimodal {
     * per-channel envelope can pin that assignment (q_mp1_js_decode).
     */
   def mp1ChannelEnergyFingerprintDF(df: DataFrame, idCol: String,
-                                    binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("sample_rate", LongType),
-      StructField("n_frames", LongType),
-      StructField("n_granules", LongType),
-      StructField("afp", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else Mp1Codec.decode(bytes).iterator.map { d =>
-          val ch = d.channels
-          val energies = new Array[Long](d.granules.length * ch)
-          var g = 0
-          while (g < d.granules.length) {
-            val gr = d.granules(g)
-            var c = 0
-            while (c < ch) {
-              var e = 0.0
-              var sb = 0
-              while (sb < 32) { val v = gr(sb * ch + c); e += v * v; sb += 1 }
-              energies(g * ch + c) = math.round(e * 50176.0)
-              c += 1
-            }
-            g += 1
-          }
-          Row(r.get(idIdx), d.sampleRate.toLong, d.nFrames.toLong,
-            d.granules.length.toLong, envelopeHash64(energies))
-        }
-      }
+                                    binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, granuleFpFields) { (id, bytes) =>
+      Mp1Codec.decode(bytes).iterator.map(d => granuleFpRow(id, d.sampleRate, d.nFrames,
+        d.granules.length, channelSliceEnergies(d.granules, d.channels)))
     }
-  }
 
   /** [[mp1ChannelEnergyFingerprintDF]]'s Layer-II twin via [[Mp2Codec]]
     * (per-channel slice energies ×50176) — q_mp2_js_decode's surface.
     */
   def mp2ChannelEnergyFingerprintDF(df: DataFrame, idCol: String,
-                                    binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("sample_rate", LongType),
-      StructField("n_frames", LongType),
-      StructField("n_granules", LongType),
-      StructField("afp", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else Mp2Codec.decode(bytes).iterator.map { d =>
-          val ch = d.channels
-          val energies = new Array[Long](d.granules.length * ch)
-          var g = 0
-          while (g < d.granules.length) {
-            val gr = d.granules(g)
-            var c = 0
-            while (c < ch) {
-              var e = 0.0
-              var sb = 0
-              while (sb < 32) { val v = gr(sb * ch + c); e += v * v; sb += 1 }
-              energies(g * ch + c) = math.round(e * 50176.0)
-              c += 1
-            }
-            g += 1
-          }
-          Row(r.get(idIdx), d.sampleRate.toLong, d.nFrames.toLong,
-            d.granules.length.toLong, envelopeHash64(energies))
-        }
-      }
+                                    binaryCol: String = "media"): DataFrame =
+    blobRows(df, idCol, binaryCol, granuleFpFields) { (id, bytes) =>
+      Mp2Codec.decode(bytes).iterator.map(d => granuleFpRow(id, d.sampleRate, d.nFrames,
+        d.granules.length, channelSliceEnergies(d.granules, d.channels)))
     }
-  }
-
-  def mp2EnergyFingerprintDF(df: DataFrame, idCol: String,
-                             binaryCol: String = "media"): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("sample_rate", LongType),
-      StructField("n_frames", LongType),
-      StructField("n_granules", LongType),
-      StructField("afp", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binaryCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Iterator.empty
-        else Mp2Codec.decode(bytes).iterator.map { d =>
-          val energies = d.granules.map { g =>
-            var e = 0.0
-            var i = 0
-            while (i < g.length) { e += g(i) * g(i); i += 1 }
-            math.round(e * 50176.0)
-          }
-          Row(r.get(idIdx), d.sampleRate.toLong, d.nFrames.toLong,
-            d.granules.length.toLong, envelopeHash64(energies))
-        }
-      }
-    }
-  }
 
   /** Tag-routed perceptual fingerprint — [[withMediaFingerprint]] for a
     * MIXED fetched-media table (what a media-fetch pipeline actually
@@ -1424,26 +1260,14 @@ object Multimodal {
               scala.util.Try(PcmCodec.decodeInt16(bytes)).toOption.flatten
                 .map(p => audioFingerprint64(p.samples, p.channels)).orNull
             case "mp1" =>
-              Mp1Codec.decode(bytes).map { d =>
-                envelopeHash64(d.granules.map { g =>
-                  var e = 0.0
-                  var i = 0
-                  while (i < g.length) { e += g(i) * g(i); i += 1 }
-                  math.round(e * 50176.0)
-                })
-              }.orNull
+              Mp1Codec.decode(bytes)
+                .map(d => envelopeHash64(sliceEnergies(d.granules, 50176.0))).orNull
             case "mp2" =>
-              Mp2Codec.decode(bytes).map { d =>
-                envelopeHash64(d.granules.map { g =>
-                  var e = 0.0
-                  var i = 0
-                  while (i < g.length) { e += g(i) * g(i); i += 1 }
-                  math.round(e * 50176.0)
-                })
-              }.orNull
+              Mp2Codec.decode(bytes)
+                .map(d => envelopeHash64(sliceEnergies(d.granules, 50176.0))).orNull
             case "mp3" =>
               Mp3Codec.decode(bytes)
-                .map(d => envelopeHash64(mp3GranuleEnergies(d))).orNull
+                .map(d => envelopeHash64(mp3GranuleEnergies(d, positionWeighted = false))).orNull
             case "video" | "avi" | "anim" =>
               // video identity = the ordered frame dHash sequence folded
               // into one long (order-sensitive: a re-cut is not a dup);

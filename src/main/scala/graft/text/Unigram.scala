@@ -123,11 +123,6 @@ object Unigram {
     out.reverseIterator.toArray
   }
 
-  /** Total Viterbi score of a word (the path [[viterbi]] picks). */
-  def viterbiScore(word: String, m: Model): Long =
-    viterbi(word, m).iterator.map(p =>
-      m.scores.getOrElse(p, UnkScore)).sum
-
   /** One EM iteration (Kudo §3.2): E-step accumulates expected piece counts
     * with forward-backward over every word's segmentation lattice (log-space
     * α/β, real probabilities — EM is spec-gated, not oracle-replayed, so

@@ -197,6 +197,39 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(dir.listVersions == Seq("v00001", "v00002", "v00003", "v00004"))
   }
 
+  test("racing delta writers claim distinct sequence numbers and both stay visible") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-store").toString
+    val dir = new VersionedDir(spark, s"$tmp/deltas")
+    dir.replaceWith(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
+    // both writers are inside `write` at once, so each has picked its
+    // number (and temp dir) before either renames; plain-file payloads as
+    // above, one file per writer holding its ids
+    val inWrite = new java.util.concurrent.CountDownLatch(2)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to 2).map { w =>
+      new Thread(() => try {
+        dir.appendDelta { d =>
+          inWrite.countDown()
+          assert(inWrite.await(60, java.util.concurrent.TimeUnit.SECONDS))
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+          java.nio.file.Files.write(java.nio.file.Paths.get(d, s"payload_w$w"),
+            (0 until 3).map(i => (w * 10 + i).toString).mkString("\n").getBytes("UTF-8"))
+        }
+      } catch { case t: Throwable => failures.add(t) })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(failures.isEmpty, s"writer failed: ${failures.peek()}")
+    val deltas = dir.listDeltas
+    assert(deltas.map(_.seq) == Seq(1L, 2L))
+    val ids = deltas.flatMap { d =>
+      val files = new java.io.File(new java.net.URI(d.path).getPath).listFiles()
+        .filter(f => f.isFile && f.getName.startsWith("payload_"))
+      files.toSeq.flatMap(f => scala.jdk.CollectionConverters.ListHasAsScala(
+        java.nio.file.Files.readAllLines(f.toPath)).asScala.map(_.toLong))
+    }
+    assert(ids.sorted == Seq(10L, 11L, 12L, 20L, 21L, 22L))
+  }
+
   test("compact bin-packs a fragmented version; pinned readers survive the swap") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-store").toString
     val store = new ParquetIndexStore(spark, s"$tmp/cmp")

@@ -13,6 +13,7 @@ holds them.
 
 Usage: dup_windows.py FILE...
 """
+import os
 import sys
 from collections import defaultdict
 
@@ -56,8 +57,13 @@ def cross_file_windows(paths):
 
 
 if __name__ == "__main__":
-    if len(sys.argv) < 2:
-        sys.exit(__doc__.strip())
+    paths = sys.argv[1:]
+    missing = [p for p in paths if not p.startswith("-") and not os.path.isfile(p)]
+    if not paths or missing or any(p.startswith("-") for p in paths):
+        for p in missing:
+            print(f"not a file: {p}", file=sys.stderr)
+        print(__doc__.strip(), file=sys.stderr)
+        sys.exit(2)
     for p in sys.argv[1:]:
         n, extra = dup_windows(p)
         print(f"{p}: repeated_windows={n} extra_copy_lines={extra}")
