@@ -67,7 +67,7 @@ trait IndexStore {
     * default every call gets a scan of its own.
     */
   private[graft] def readScan(): (VersionScan, Option[Any]) =
-    (new VersionScan(read()), None)
+    (new VersionScan(read(), None), None)
 }
 
 /** Connector capability: the backing service answers similarity search
@@ -128,7 +128,7 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     if (snap.exists) {
       val key = (snap, broadcastDeltaCap)
       (resolved(key), Some(key))
-    } else (new VersionScan(spark.read.parquet(root)), None) // legacy flat layout (or throw)
+    } else (new VersionScan(spark.read.parquet(root), None), None) // legacy flat layout (or throw)
   }
 
   /** One snapshot decides both existence and contents, so `exists` and
@@ -143,7 +143,8 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
 
   /** The resolved read of the last snapshot seen: the base relation (file
     * listing and schema resolved once) merged with its deltas, and its
-    * [[VersionScan]], planned on first use. Version and
+    * [[VersionScan]], planned on first use — given the base's files when
+    * no delta is pending, so reads by doc_id skip files. Version and
     * delta directories are immutable, so while the root's snapshot is
     * unchanged the same DataFrame is the same contents; any write — through
     * this handle, another handle or another process — changes the snapshot
@@ -157,7 +158,9 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     val (snap, cap) = key
     lastRead.collect { case (k, scan) if k == key => scan }.getOrElse {
       val base = spark.read.parquet(snap.dir.get)
-      val scan = new VersionScan(if (snap.deltas.isEmpty) base else mergeOnRead(base, snap.deltas, cap))
+      val scan =
+        if (snap.deltas.isEmpty) new VersionScan(base, Some(base.inputFiles.toSeq))
+        else new VersionScan(mergeOnRead(base, snap.deltas, cap), None)
       lastRead = Some((key, scan))
       scan
     }

@@ -2,11 +2,13 @@ package graft.api
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, If, InSet, Literal, Round}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructType}
 
-import graft.core.{Checkpoints, IndexConfig, Metric}
-import graft.core.Checkpoints.MaterializeSyntax
+import graft.core.{IndexConfig, Metric}
 import graft.embed.{ChatBackend, EchoChatBackend, EmbeddingBackend, HashEmbeddingBackend}
 import graft.ops.SimilaritySearch
 import graft.pipeline.IndexBuild
@@ -195,7 +197,7 @@ final class VectorIndex(
   def annBqPath: String = annRoot(classOf[SearchMode.Bq])
   def annHnswPath: String = annRoot(classOf[SearchMode.Hnsw])
 
-  private def annRoot(mode: Class[_]): String = s"$indexPath/__ann_${VectorIndex.AnnLayouts(mode)._1}"
+  private def annRoot(mode: Class[_]): String = s"$indexPath/__ann_${VectorIndex.AnnLayouts(mode).name}"
 
   /** The configured ANN modes (Exact has no side index). */
   private def annModes: Seq[SearchMode] = ann.filter(_ != SearchMode.Exact)
@@ -288,7 +290,7 @@ final class VectorIndex(
     val changed = changedDocs.dropDuplicates("doc_id").select(col("doc_id"), col("vector"))
     val tombIds = removedIds.select(col("doc_id").cast("long").as("doc_id"))
     annModes.zip(roots).foreach { case (m, root) =>
-      lazy val v = annVersion(root, snaps(root))
+      lazy val v = annVersion(m, snaps(root))
       // side tables come from the STORED version — no retrain on a 1-row upsert
       val adds = m match {
         case SearchMode.Lsh(bits, _) =>
@@ -355,10 +357,12 @@ final class VectorIndex(
   /** One resolved version of an ANN side index: everything a search or an
     * incremental write reads from it — the relation pinned to the concrete
     * version dir, the side tables collected to the driver, the merged delta
-    * overlay — resolved on first use and then reused for as long as the
+    * overlay, and for the LSH, IVF and HNSW routes the planned reads their
+    * misses run — resolved on first use and then reused for as long as the
     * root's snapshot stays the same.
     */
-  private final class AnnVersion(val snapshot: VersionedDir.Snapshot, dir: String) {
+  private final class AnnVersion(val snapshot: VersionedDir.Snapshot, dir: String,
+                                 layout: VectorIndex.AnnLayout) {
     lazy val relation: DataFrame = spark.read.parquet(dir)
     lazy val centroidsDf: DataFrame = VersionedDir.readSide(spark, s"$dir/_centroids")
     lazy val centroids: (Array[Array[Float]], Array[Long]) =
@@ -372,23 +376,107 @@ final class VectorIndex(
     lazy val bqThresholds: Array[Double] = graft.ops.BinaryQuantization.collectThresholds(
       VersionedDir.readSide(spark, s"$dir/_bqparams"))
     lazy val delta: Option[DataFrame] = annDeltaRead(snapshot.deltas)
-    lazy val deltaIds: Set[Long] = graft.ops.Hnsw.deltaIdSet(delta, "doc_id")
-    private var graph: Option[DataFrame] = None
-    /** The HNSW graph relation exchanged by shard once and materialized on
-      * first use, so a query searches it without a shuffle.
+
+    /** The columns a planned read selects: doc_id and the vector. A part's
+      * read adds its key as a long `__<key>` ([[SimilaritySearch.prunedRead]]).
       */
-    def hnswGraph: DataFrame = synchronized {
-      graph.getOrElse {
-        val g = graft.ops.Hnsw.shardGraph(relation).materialize(true)
-        graph = Some(g)
+    private def readCols: Seq[String] = Seq("doc_id", layout.scored)
+
+    /** [[delta]] on the driver, collected once: every id it shadows, live
+      * or tombstoned, and its live rows laid out as a planned read's rows.
+      */
+    private lazy val overlay: (Set[Long], Seq[InternalRow]) = delta.fold((Set.empty[Long], Seq.empty[InternalRow])) { d =>
+      import org.apache.spark.sql.functions.col
+      val rows = d.select(readCols.map(col) ++ layout.part.map(k => col(k).cast("long")) :+ col("deleted"): _*)
+        .queryExecution.executedPlan.executeCollect().toSeq
+      val deleted = readCols.size + layout.part.size
+      (rows.map(_.getLong(0)).toSet, rows.filter(!_.getBoolean(deleted)))
+    }
+
+    private val parts = scala.collection.mutable.Map.empty[Long, RDD[InternalRow]]
+    private var graphs: Option[RDD[graft.ops.Hnsw.Shard]] = None
+    private var released = false
+
+    /** The read of one cell or bucket, planned through
+      * [[SimilaritySearch.prunedRead]]'s partition filter and persisted on
+      * first use ([[kept]]).
+      */
+    private def part(value: Long): RDD[InternalRow] = synchronized {
+      parts.getOrElseUpdate(value, kept(SimilaritySearch.prunedRead(relation, Some((layout.part.get, Seq(value))),
+        readCols, None, None).queryExecution.toRdd.map(_.copy())))
+    }
+
+    /** The shard graphs, persisted on first use ([[kept]]). */
+    private def shardGraphs: RDD[graft.ops.Hnsw.Shard] = synchronized {
+      graphs.getOrElse {
+        val g = kept(graft.ops.Hnsw.shardGraphs(relation))
+        graphs = Some(g)
         g
       }
     }
-    /** Drop the materialized graph — called when the version is replaced. */
+
+    /** `rdd` persisted, unless the version is already released: then it
+      * serves the searches still holding this version unpersisted.
+      */
+    private def kept[T](rdd: RDD[T]): RDD[T] = if (released) rdd else rdd.persist()
+
+    /** Unpersist the parts and graphs — called when the version is
+      * replaced. A search still running over them recomputes what it
+      * misses from their lineage.
+      */
     def release(): Unit = synchronized {
-      graph.foreach(Checkpoints.release)
-      graph = None
+      released = true
+      (parts.values ++ graphs).foreach(_.unpersist(false))
+      graphs = None
+      parts.clear()
     }
+
+    /** The (doc_id, score) candidates of a partitioned route, LSH buckets
+      * or IVF cells, for probes given as (vector, probed parts): per probe,
+      * its top `k` rows of the parts it probes under the overlay, scored
+      * `round(cosine, 6)` — the batch route's equi-join on the part key and
+      * its top-k page, no threshold. One job over the probed parts.
+      */
+    def partTopK(probes: Seq[(Seq[Float], Set[Long])], k: Int): Seq[(Long, Double)] = {
+      val (shadowed, live) = overlay
+      val scores = probes.map[Expression] { case (q, probed) =>
+        If(InSet(AnnVersion.Part, scala.collection.immutable.HashSet.from[Any](probed)),
+          VersionScan.rounded(AnnVersion.Vector, q), Literal(null, DoubleType))
+      }.toArray
+      val read = spark.sparkContext.union(probes.flatMap(_._2).distinct.map(part))
+      VersionScan.topK(read, live, AnnVersion.Id, scores, k, Double.NegativeInfinity, shadowed, keepRows = false)
+        .flatten.map(h => (h.id, h.score))
+    }
+
+    /** The (doc_id, score) candidates of the HNSW route: per probe, the top
+      * `k` of every shard's beam hits (ids the overlay shadows skipped) and
+      * of the overlay's live rows, scored `round(cosine, 6)`. One job over
+      * the shard graphs.
+      */
+    def graphTopK(probes: Seq[(Long, Seq[Float])], k: Int, ef: Int): Seq[(Long, Double)] =
+      if (probes.isEmpty || k <= 0) Nil
+      else {
+        val (shadowed, live) = overlay
+        val beams = graft.ops.Hnsw.searchShards(shardGraphs, probes, k, ef, shadowed).groupBy(_._1)
+        val fromGraph = probes.map { case (qid, _) =>
+          beams.getOrElse(qid, Array.empty[(Long, Long, Double)]).map { case (_, id, score) =>
+            VersionScan.Kept(AnnVersion.Round6.eval(InternalRow(score)).asInstanceOf[Double], id, null)
+          }
+        }.toArray
+        val fromDelta = VersionScan.heaps(live.iterator, AnnVersion.Id,
+          probes.map(p => VersionScan.rounded(AnnVersion.Vector, p._2)).toArray, k, Double.NegativeInfinity,
+          Set.empty, keepRows = false)
+        VersionScan.merge(Seq(fromGraph, fromDelta), k).flatten.map(h => (h.id, h.score))
+      }
+  }
+
+  private object AnnVersion {
+    /** The columns of a planned read's rows, bound. */
+    val Id: BoundReference = BoundReference(0, LongType, nullable = true)
+    val Vector: BoundReference = BoundReference(1, ArrayType(FloatType), nullable = true)
+    val Part: BoundReference = BoundReference(2, LongType, nullable = true)
+    /** `round(score, 6)` of a score computed outside Spark. */
+    val Round6: Round = Round(BoundReference(0, DoubleType, nullable = false), Literal(6))
   }
 
   /** One [[AnnVersion]] per ANN root, replaced whenever the root's snapshot
@@ -399,10 +487,11 @@ final class VectorIndex(
     */
   private val annVersions = TrieMap.empty[String, AnnVersion]
 
-  private def annVersion(root: String, snap: VersionedDir.Snapshot): AnnVersion = {
+  private def annVersion(m: SearchMode, snap: VersionedDir.Snapshot): AnnVersion = {
+    val root = annRoot(m.getClass)
     def current = annVersions.get(root).filter(_.snapshot == snap)
     current.getOrElse(annVersions.synchronized(current.getOrElse {
-      val v = new AnnVersion(snap, snap.dir.getOrElse(root))
+      val v = new AnnVersion(snap, snap.dir.getOrElse(root), VectorIndex.AnnLayouts(m.getClass))
       annVersions.put(root, v).foreach(_.release())
       v
     }))
@@ -418,9 +507,10 @@ final class VectorIndex(
   // findSimilar), so a repeat returns a frame Spark has already planned; the
   // RAG prompt and the chat call run on every call. Any write, through any
   // handle, changes the token, so a page of an older version is never
-  // served; it ages out. An exact miss, and the probe rows of an ANN
-  // findSimilar, read the store's version scan ([[IndexStore.readScan]]),
-  // planned once per version.
+  // served; it ages out. A miss reads the store's version scan
+  // ([[IndexStore.readScan]]) and, on the LSH, IVF and HNSW routes, the ANN
+  // version's planned parts or shard graphs ([[AnnVersion]]), each planned
+  // once per version.
   // Filtered searches (a predicate may be non-deterministic), server-side
   // searches and stores without a version token are never cached.
 
@@ -449,10 +539,14 @@ final class VectorIndex(
     require(ann.exists(_.getClass == m.getClass),
       s"index was not built with ANN mode $m — pass it in VectorIndex(ann = ...)")
     val (scan, token) = store.readScan()
-    val root = annRoot(m.getClass)
-    val v = annVersion(root, new VersionedDir(spark, root).snapshot)
+    val v = annVersion(m, new VersionedDir(spark, annRoot(m.getClass)).snapshot)
     (scan, v, token.map((_, v.snapshot)))
   }
+
+  /** The delta overlay an ANN request in mode `m` reads now: the
+    * latest-per-doc rows of the version's pending sidecars.
+    */
+  private[graft] def annDelta(m: SearchMode): Option[DataFrame] = annRead(m)._2.delta
 
   /** search(q): embed the query once on the driver (reference
     * storage/base.py:303-316) and search by its vector ([[searchVector]]).
@@ -463,10 +557,10 @@ final class VectorIndex(
              filter: Option[Column] = None): DataFrame =
     searchVector(backend.embedOne(query).toSeq, k, threshold, metric, mode, filter)
 
-  /** The ANN candidate page of a driver-resident probe batch: the route's
-    * per-probe top-k as (doc_id, score), the top-k operator at the plan root
-    * — a single probe's is one TakeOrderedAndProject job, a batch's the
-    * bounded TopK aggregator. Lazy; [[annHits]] collects it.
+  /** The candidate page of a quantized ANN route (IVF-PQ, residual PQ, SQ,
+    * BQ) for a driver-resident probe batch: the route's per-probe top-k as
+    * (doc_id, score), the top-k operator at the plan root. Lazy; [[annHits]]
+    * collects it.
     */
   private[graft] def annPage(probes: Seq[(Long, Seq[Float])], k: Int, m: SearchMode): DataFrame = {
     val (scan, v, _) = annRead(m)
@@ -477,18 +571,10 @@ final class VectorIndex(
                       m: SearchMode): DataFrame = {
     import org.apache.spark.sql.functions.col
     import graft.ops.{BinaryQuantization => BQ, ProductQuantization => PQ, ScalarQuantization => SQ}
-    val scored = VectorIndex.AnnLayouts(m.getClass)._2
-    def page(candidates: DataFrame) =
-      SimilaritySearch.topKPage(candidates, k, probes.size, "doc_id")
     // SQ/BQ codes are unpartitioned: the whole relation under the overlay
-    def codes = SimilaritySearch.prunedRead(v.relation, None, Seq("doc_id", scored), v.delta, None)
+    def codes = SimilaritySearch.prunedRead(v.relation, None,
+      Seq("doc_id", VectorIndex.AnnLayouts(m.getClass).scored), v.delta, None)
     val topk = m match {
-      case SearchMode.Lsh(bits, maxHamming) =>
-        page(SimilaritySearch.lshCandidates(v.relation, probes, config.dims,
-          bits, maxHamming, itemId = "doc_id", itemVec = scored, v.delta, payloadFilter = None))
-      case SearchMode.Ivf(_, nProbe, _) =>
-        page(SimilaritySearch.ivfCandidates(v.relation, v.centroids, probes,
-          nProbe, itemId = "doc_id", itemVec = scored, v.delta, payloadFilter = None))
       case IvfPqMode(_, nProbe, pm, ksub, refine, _, residual) =>
         val cfg = PQ.PqConfig(config.dims, pm, ksub)
         PQ.ivfPqTopKResolved(v.relation, v.centroids, v.codebooks(cfg), docs, probes, cfg,
@@ -498,24 +584,38 @@ final class VectorIndex(
         SQ.sqTopK(codes, docs, mins, maxs, probes, k, refine, itemId = "doc_id", itemVec = "vector")
       case SearchMode.Bq(refine) =>
         BQ.bqTopK(codes, docs, v.bqThresholds, probes, k, refine, itemId = "doc_id", itemVec = "vector")
-      case SearchMode.Hnsw(_, _, ef) =>
-        page(graft.ops.Hnsw.hnswCandidates(v.hnswGraph, probes, k, ef, v.delta, v.deltaIds,
-          itemId = "doc_id", itemVec = scored))
-      case SearchMode.Exact => throw new IllegalStateException("unreachable")
+      case other => throw new IllegalArgumentException(s"$other reads planned parts, not a page")
     }
     topk.select(col("doc_id"), col("score"))
   }
 
-  /** [[annPage]] collected, thresholded on the driver and hydrated back to
-    * full documents (+`key`) with one read of the ≤ probes·k hit ids — the
-    * shared tail of every ANN-routed query method. Rows in rank order.
+  /** The route's per-probe top-k candidates, thresholded on the driver and
+    * hydrated back to full documents (+`key`) with one read of the
+    * ≤ probes·k hit ids — the shared tail of every ANN-routed query method.
+    * LSH, IVF and HNSW read the version's planned parts or graphs
+    * ([[AnnVersion.partTopK]], [[AnnVersion.graphTopK]]); the quantized
+    * routes collect their [[annPage]]. Rows in rank order.
     */
-  private def annHits(docs: DataFrame, v: AnnVersion, probes: Seq[(Long, Seq[Float])], k: Int,
+  private def annHits(scan: VersionScan, v: AnnVersion, probes: Seq[(Long, Seq[Float])], k: Int,
                       threshold: Double, m: SearchMode): Page = {
-    val page = annPage(docs, v, probes, k, m)
-    val hits = page.collect().toSeq
-      .filter(r => Retrieval.compareScores(r.getDouble(1), threshold) >= 0)
-    Page(Retrieval.hydratePage(docs, hits, page.schema("score")))
+    val hits = m match {
+      case SearchMode.Lsh(bits, maxHamming) =>
+        val masks = SimilaritySearch.hammingMasks(bits, maxHamming)
+        v.partTopK(probes.map { case (_, q) =>
+          val bucket = SimilaritySearch.lshBucketLocal(q, config.dims, bits)
+          (q, masks.map(bucket ^ _).toSet)
+        }, k)
+      case SearchMode.Ivf(_, nProbe, _) =>
+        val (cvs, cids) = v.centroids
+        v.partTopK(probes.map { case (_, q) => (q, SimilaritySearch.nearestCellsLocal(q, cvs, cids, nProbe).toSet) }, k)
+      case SearchMode.Hnsw(_, _, ef) => v.graphTopK(probes, k, ef)
+      case _ =>
+        annPage(scan.docs, v, probes, k, m).collect().toSeq
+          .map(r => (r.getLong(0), r.get(1).asInstanceOf[Number].doubleValue))
+    }
+    Page(Retrieval.hydratePage(scan, hits.collect {
+      case (id, score) if Retrieval.compareScores(score, threshold) >= 0 => Row(id, score)
+    }, Retrieval.ScoreField))
   }
 
   /** The top-k chunk page of one query vector — exact (the KNN page) or
@@ -532,7 +632,7 @@ final class VectorIndex(
         cached(token, request)(Page(Retrieval.knnPage(scan, queryVec, k, threshold, metric)))
       case m =>
         val (scan, v, token) = annRead(m)
-        cached(token, request)(annHits(scan.docs, v, Seq((0L, queryVec)), k, threshold, m))
+        cached(token, request)(annHits(scan, v, Seq((0L, queryVec)), k, threshold, m))
     }
   }
 
@@ -595,7 +695,7 @@ final class VectorIndex(
           // pre-filtering alternative is the exact path above, or
           // ivfTopKPruned(payloadFilter) when the payload rides in the index)
           val (scan, v, _) = annRead(m)
-          val page = annHits(scan.docs, v, Seq((0L, queryVec)), k * VectorIndex.AnnFilterOverfetch,
+          val page = annHits(scan, v, Seq((0L, queryVec)), k * VectorIndex.AnnFilterOverfetch,
             threshold, m)
           // the predicate runs over the local rows (no Spark job)
           val kept = Retrieval.localFrame(spark, page.rows, page.schema).filter(pred).collect().toSeq
@@ -626,8 +726,8 @@ final class VectorIndex(
         cached(token, request) {
           val probes = scan.withKey(objectKey)
           // nothing to probe: the exact path's empty page
-          if (probes.isEmpty) Page(Retrieval.hydratePage(scan.docs, Nil, Retrieval.ScoreField))
-          else annHits(scan.docs, v, probes, k, threshold, m)
+          if (probes.isEmpty) Page(Retrieval.hydratePage(scan, Nil, Retrieval.ScoreField))
+          else annHits(scan, v, probes, k, threshold, m)
         }
     }
     if (includeSelf) firstPerKey(page)
@@ -724,18 +824,20 @@ object IndexRegistry {
 
 object VectorIndex {
   /** Per ANN mode: the name of its versioned root under the index path
-    * (`__ann_<name>`), and the column its rows are scored by — the vector,
-    * or the mode's codes. Delta sidecars carry it too, beside doc_id, any
-    * partition key and `deleted`.
+    * (`__ann_<name>`), the column its rows are scored by — the vector, or
+    * the mode's codes — and the column it is partitioned by, if any. Delta
+    * sidecars carry them too, beside doc_id and `deleted`.
     */
-  private val AnnLayouts: Map[Class[_], (String, String)] = Map(
-    classOf[SearchMode.Lsh] -> ("lsh", "vector"),
-    classOf[SearchMode.Ivf] -> ("ivf", "vector"),
-    classOf[SearchMode.IvfPq] -> ("ivfpq", "codes"),
-    classOf[SearchMode.RpqIvf] -> ("rpq", "codes"),
-    classOf[SearchMode.Sq] -> ("sq", "sq"),
-    classOf[SearchMode.Bq] -> ("bq", "bq"),
-    classOf[SearchMode.Hnsw] -> ("hnsw", "vector"))
+  private final case class AnnLayout(name: String, scored: String, part: Option[String])
+
+  private val AnnLayouts: Map[Class[_], AnnLayout] = Map(
+    classOf[SearchMode.Lsh] -> AnnLayout("lsh", "vector", Some("bucket")),
+    classOf[SearchMode.Ivf] -> AnnLayout("ivf", "vector", Some("cell")),
+    classOf[SearchMode.IvfPq] -> AnnLayout("ivfpq", "codes", Some("cell")),
+    classOf[SearchMode.RpqIvf] -> AnnLayout("rpq", "codes", Some("cell")),
+    classOf[SearchMode.Sq] -> AnnLayout("sq", "sq", None),
+    classOf[SearchMode.Bq] -> AnnLayout("bq", "bq", None),
+    classOf[SearchMode.Hnsw] -> AnnLayout("hnsw", "vector", None))
 
   /** Candidate-page multiplier for ANN + post-filter searches: fetch
     * k·overfetch hits before the payload predicate re-limits to k.

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -201,94 +202,59 @@ object Hnsw {
                       delta: Option[DataFrame] = None,
                       itemId: String = "vec_id", itemVec: String = "embedding"): DataFrame =
     SimilaritySearch.topKByProbe(
-      hnswCandidates(shardGraph(spark.read.parquet(graft.api.VersionedDir.resolve(spark, path))),
-        probes, k, ef, delta, deltaIdSet(delta, itemId), itemId, itemVec),
+      hnswCandidates(spark.read.parquet(graft.api.VersionedDir.resolve(spark, path)),
+        probes, k, ef, delta, itemId, itemVec),
       k, "qid", itemId)
 
-  /** The ids a delta overlay suppresses in graph results (one collect). */
-  private[graft] def deltaIdSet(delta: Option[DataFrame], itemId: String): Set[Long] =
-    delta.fold(Set.empty[Long])(
-      _.select(col(itemId).cast("long")).collect().map(_.getLong(0)).toSet)
-
   /** A persisted graph relation ([[hnswIndexWrite]]) exchanged by shard, so
-    * each partition holds whole shards — what [[hnswCandidates]] searches.
+    * each partition holds whole shards.
     */
-  private[graft] def shardGraph(raw: DataFrame): DataFrame =
+  private def shardGraph(raw: DataFrame): DataFrame =
     raw.select(col("shard"), col("pos"), col("vec_id"),
         col("level"), col("embedding"), col("nbrs"))
       .repartition(col("shard"))
 
-  /** The scored candidates of [[hnswTopKIndexed]] — (qid, itemId, score),
-    * ≤ k live beam hits per (probe, shard) plus every live delta row —
-    * over a shard-partitioned graph relation ([[shardGraph]]), with the
-    * delta's id set already collected ([[deltaIdSet]]).
+  /** The graphs of a persisted graph relation ([[hnswIndexWrite]]), one
+    * element per shard, rebuilt from their stored positions. Planned, not
+    * run: the caller persists or searches it.
     */
-  private[graft] def hnswCandidates(graph: DataFrame, probes: Seq[(Long, Seq[Float])],
-                                    k: Int, ef: Int, delta: Option[DataFrame],
-                                    deltaIds: Set[Long],
-                                    itemId: String, itemVec: String): DataFrame = {
-    val spark = graph.sparkSession
+  private[graft] def shardGraphs(raw: DataFrame): RDD[Shard] = shardGraph(raw).rdd.mapPartitions(shards)
+
+  /** The live top-k of every (probe, shard) of `graphs`: (qid, id, cosine),
+    * ids in `stale` skipped. One job, the probes in its closure.
+    */
+  private[graft] def searchShards(graphs: RDD[Shard], probes: Seq[(Long, Seq[Float])], k: Int, ef: Int,
+                                  stale: Set[Long]): Array[(Long, Long, Double)] = {
+    val probeArr = probes.map { case (qid, qv) => (qid, qv.toArray) }.toArray
+    graphs.mapPartitions(_.flatMap(shard => probeArr.iterator.flatMap { case (qid, qv) =>
+      shard.search(qv, k, ef, stale).map { case (id, score) => (qid, id, score) }
+    })).collect()
+  }
+
+  /** The scored candidates of [[hnswTopKIndexed]] — (qid, itemId, score),
+    * ≤ k live beam hits per (probe, shard) plus every live delta row.
+    */
+  private def hnswCandidates(raw: DataFrame, probes: Seq[(Long, Seq[Float])],
+                             k: Int, ef: Int, delta: Option[DataFrame],
+                             itemId: String, itemVec: String): DataFrame = {
+    val spark = raw.sparkSession
     require(probes.size <= 4096, s"probe batch too large: ${probes.size}")
     val probeArr = probes.map { case (qid, qv) => (qid, qv.toArray) }.toArray
     val probesB = spark.sparkContext.broadcast(probeArr)
+    // the ids a delta overlay suppresses in graph results (one collect)
+    val deltaIds = delta.fold(Set.empty[Long])(
+      _.select(col(itemId).cast("long")).collect().map(_.getLong(0)).toSet)
     require(deltaIds.size <= 1000000, s"delta too large to overlay: ${deltaIds.size} — rebuild")
     val deltaIdsB = spark.sparkContext.broadcast(deltaIds)
     val outSchema = StructType(Seq(
       StructField("qid", LongType), StructField(itemId, LongType),
       StructField("score", DoubleType)))
     implicit val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    val graphBeams = graph
-      .mapPartitions { rows =>
-        // a partition may hold several whole shards (hash partitioning) —
-        // group, reassemble each graph from its stored positions, search
-        rows.toSeq.groupBy(_.getInt(0)).iterator.flatMap { case (_, nodes) =>
-          val n = nodes.length
-          val vecs = new Array[Array[Float]](n)
-          val ids = new Array[Long](n)
-          val levels = new Array[Int](n)
-          val nbrSeqs = new Array[Seq[Seq[Int]]](n)
-          nodes.foreach { r =>
-            val pos = r.getInt(1)
-            ids(pos) = r.getLong(2)
-            levels(pos) = r.getInt(3)
-            vecs(pos) = r.getSeq[Float](4).toArray
-            nbrSeqs(pos) = r.getSeq[Seq[Int]](5)
-          }
-          val norms = vecs.map { v =>
-            var s = 0.0; var i = 0
-            while (i < v.length) { s += v(i) * v(i); i += 1 }
-            math.sqrt(s)
-          }
-          val g = new Graph(vecs, norms, levels, 0)
-          var pos = 0
-          while (pos < n) {
-            val lv = nbrSeqs(pos)
-            var l = 0
-            while (l < lv.length) {
-              if (lv(l).nonEmpty) g.neighbors(l)(pos) = lv(l).toArray
-              l += 1
-            }
-            pos += 1
-          }
-          // entry = deepest node, lowest pos on ties (the build invariant:
-          // build() only moves the entry on a STRICTLY deeper insert, and
-          // inserts ascend by pos)
-          var e = 0; var eL = levels(0)
-          var i = 1
-          while (i < n) { if (levels(i) > eL) { e = i; eL = levels(i) }; i += 1 }
-          g.entry = e
-          val stale = deltaIdsB.value
-          val efEff = effectiveEf(ef, k, n)
-          probesB.value.iterator.flatMap { case (qid, qv) =>
-            // beam at the population-scaled width; only the top-k live
-            // rows leave the task for the merge
-            g.search(qv, efEff).iterator
-              .filter { case (idx, _) => !stale.contains(ids(idx)) }
-              .take(k)
-              .map { case (idx, score) => Row(qid, ids(idx), score) }
-          }
-        }
-      }
+    val graphBeams = shardGraph(raw).mapPartitions { rows =>
+      shards(rows).flatMap(shard => probesB.value.iterator.flatMap { case (qid, qv) =>
+        shard.search(qv, k, ef, deltaIdsB.value).map { case (id, score) => Row(qid, id, score) }
+      })
+    }
     val withDelta = delta.fold(graphBeams: DataFrame) { d =>
       import spark.implicits._
       lazy val probeDf = probeArr.toSeq.map { case (qid, qv) => (qid, qv.toSeq) }
@@ -306,6 +272,63 @@ object Hnsw {
     withDelta.withColumn("score", round(col("score"), 6))
   }
 
+  /** One shard's graph with the ids of its nodes, by position. */
+  private[graft] final class Shard private[Hnsw] (ids: Array[Long], g: Graph) extends Serializable {
+    /** The best `k` nodes for `qv` whose ids `stale` does not hold, as
+      * (id, cosine), best first: a beam at the population-scaled width
+      * ([[effectiveEf]]), of which only the top-k live rows are kept.
+      */
+    def search(qv: Array[Float], k: Int, ef: Int, stale: Set[Long]): Iterator[(Long, Double)] =
+      g.search(qv, effectiveEf(ef, k, ids.length)).iterator
+        .filter { case (idx, _) => !stale.contains(ids(idx)) }
+        .take(k)
+        .map { case (idx, score) => (ids(idx), score) }
+  }
+
+  /** The shards among one partition of [[shardGraph]]'s rows — hash
+    * partitioning may put several whole shards in one — each graph
+    * reassembled from its stored positions.
+    */
+  private def shards(rows: Iterator[Row]): Iterator[Shard] =
+    rows.toSeq.groupBy(_.getInt(0)).iterator.map { case (_, nodes) =>
+      val n = nodes.length
+      val vecs = new Array[Array[Float]](n)
+      val ids = new Array[Long](n)
+      val levels = new Array[Int](n)
+      val nbrSeqs = new Array[Seq[Seq[Int]]](n)
+      nodes.foreach { r =>
+        val pos = r.getInt(1)
+        ids(pos) = r.getLong(2)
+        levels(pos) = r.getInt(3)
+        vecs(pos) = r.getSeq[Float](4).toArray
+        nbrSeqs(pos) = r.getSeq[Seq[Int]](5)
+      }
+      val norms = vecs.map { v =>
+        var s = 0.0; var i = 0
+        while (i < v.length) { s += v(i) * v(i); i += 1 }
+        math.sqrt(s)
+      }
+      val g = new Graph(vecs, norms, levels, 0)
+      var pos = 0
+      while (pos < n) {
+        val lv = nbrSeqs(pos)
+        var l = 0
+        while (l < lv.length) {
+          if (lv(l).nonEmpty) g.neighbors(l)(pos) = lv(l).toArray
+          l += 1
+        }
+        pos += 1
+      }
+      // entry = deepest node, lowest pos on ties (the build invariant:
+      // build() only moves the entry on a STRICTLY deeper insert, and
+      // inserts ascend by pos)
+      var e = 0; var eL = levels(0)
+      var i = 1
+      while (i < n) { if (levels(i) > eL) { e = i; eL = levels(i) }; i += 1 }
+      g.entry = e
+      new Shard(ids, g)
+    }
+
   // ---- in-memory per-shard graph ----
 
   /** Deterministic "uniform" in (0,1) from an id (splitmix64 finalizer). */
@@ -318,7 +341,7 @@ object Hnsw {
   }
 
   private final class Graph(vecs: Array[Array[Float]], norms: Array[Double],
-                            levels: Array[Int], m: Int) {
+                            levels: Array[Int], m: Int) extends Serializable {
     val n = vecs.length
     val maxLevel = if (n == 0) 0 else levels.max
     // adjacency per level: neighbors(level)(node) = growable int array

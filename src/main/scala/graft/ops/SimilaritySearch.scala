@@ -189,7 +189,7 @@ object SimilaritySearch {
     * every item in a probe's Hamming ball — over an already-resolved
     * bucket-partitioned relation `raw` (one version directory's read).
     */
-  private[graft] def lshCandidates(raw: DataFrame, probes: Seq[(Long, Seq[Float])],
+  private def lshCandidates(raw: DataFrame, probes: Seq[(Long, Seq[Float])],
                                    dims: Int, bits: Int, maxHamming: Int,
                                    itemId: String, itemVec: String,
                                    delta: Option[DataFrame],
@@ -210,7 +210,9 @@ object SimilaritySearch {
 
   /** The one pruned ANN read, shared by every route over a versioned ANN
     * relation (LSH buckets; IVF cells over vectors, PQ, residual PQ, SQ and
-    * BQ codes; the unpartitioned SQ/BQ code scans):
+    * BQ codes; the unpartitioned SQ/BQ code scans) and by the once-planned
+    * part reads of [[graft.api.VectorIndex]]'s LSH and IVF misses, one
+    * bucket or cell each, which resolve the overlay on the driver instead:
     *  1. prune — with `part = Some((key, candidates))` the scan carries
     *     `key IN (candidates)`, the candidates computed on the driver. The
     *     literals take the parquet-inferred partition type (small dirs read
@@ -600,7 +602,7 @@ object SimilaritySearch {
     * every item in a probe's nProbe nearest cells — over an already-resolved
     * cell-partitioned relation `raw` and its version's collected centroids.
     */
-  private[graft] def ivfCandidates(raw: DataFrame,
+  private def ivfCandidates(raw: DataFrame,
                                    centroids: (Array[Array[Float]], Array[Long]),
                                    probes: Seq[(Long, Seq[Float])], nProbe: Int,
                                    itemId: String, itemVec: String,

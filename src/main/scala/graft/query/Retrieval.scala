@@ -263,40 +263,55 @@ object Retrieval {
     * rows shaped like `page.join(docs, Seq("doc_id"))` plus `key` — doc_id,
     * score, the other document columns, key — in rank order, one per
     * (page row, document row) pair. A doc hit by several probes keeps its
-    * best score. Scores are thresholded before this by the caller. The ids
-    * are bound as one `InSet`: the filter is pushed into the parquet scan
-    * and its generated code is the same for every id set, so a new id set
-    * compiles no class.
+    * best score. Scores are thresholded before this by the caller. The read
+    * is [[idRows]]'.
     */
   private[graft] def hydratePage(docs: DataFrame, page: Seq[Row],
-                                 scoreField: StructField): (Seq[Row], StructType) = {
+                                 scoreField: StructField): (Seq[Row], StructType) =
+    hydrate(docs.schema, page, scoreField)(idRows(docs, _))
+
+  /** [[hydratePage]] over a planned scan: the ids are read with
+    * [[VersionScan.byIds]].
+    */
+  private[graft] def hydratePage(scan: VersionScan, page: Seq[Row],
+                                 scoreField: StructField): (Seq[Row], StructType) =
+    hydrate(scan.schema, page, scoreField)(scan.byIds)
+
+  private def hydrate(docSchema: StructType, page: Seq[Row], scoreField: StructField)(
+      read: Set[Long] => Seq[Row]): (Seq[Row], StructType) = {
     val best = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
     page.foreach { r =>
       val id = r.getLong(0)
       val s = doubleAt(r, 1)
       if (best.get(id).forall(compareScores(s, _) > 0)) best(id) = s
     }
-    val docSchema = docs.schema
     val idIdx = docSchema.fieldIndex("doc_id")
     val keysIdx = docSchema.fieldIndex("object_keys")
     val others = docSchema.fields.indices.filter(_ != idIdx)
     val schema = StructType(docSchema(idIdx) +: scoreField +: others.map(docSchema.fields(_)) :+
       keyField(docSchema))
-    // a HashSet at every size: the generated code names the set's class,
-    // and Scala's small sets (Set1..Set4) would each compile their own
-    val ids = scala.collection.immutable.HashSet.from[Any](best.keys)
-    val docRows =
-      if (best.isEmpty) Array.empty[Row]
-      else docs.filter(toColumn(InSet(toExpression(col("doc_id").cast(LongType)), ids))).collect()
+    val docRows = if (best.isEmpty) Nil else read(best.keySet.toSet)
     val byId = docRows.groupBy(_.get(idIdx).asInstanceOf[Number].longValue)
     val rows = best.toSeq.flatMap { case (id, score) =>
-      byId.getOrElse(id, Array.empty[Row]).toSeq.map { d =>
+      byId.getOrElse(id, Nil).map { d =>
         val keys = d.getSeq[Any](keysIdx)
         val key = if (keys == null || keys.isEmpty) null else keys.head
         Row.fromSeq(d.get(idIdx) +: score +: others.map(d.get) :+ key)
       }
     }
     (rows.sorted(byRank(schema)), schema)
+  }
+
+  /** The rows of `docs` whose doc_id is one of `ids`. The ids are bound as
+    * one `InSet`: the filter is pushed into the parquet scan and its
+    * generated code is the same for every id set, so a new id set compiles
+    * no class.
+    */
+  private[graft] def idRows(docs: DataFrame, ids: Set[Long]): Seq[Row] = {
+    // a HashSet at every size: the generated code names the set's class,
+    // and Scala's small sets (Set1..Set4) would each compile their own
+    val set = scala.collection.immutable.HashSet.from[Any](ids)
+    docs.filter(toColumn(InSet(toExpression(col("doc_id").cast(LongType)), set))).collect().toSeq
   }
 
   // ---- pages read from a planned scan ----------------------------------
@@ -311,16 +326,16 @@ object Retrieval {
       scan.schema.add(ScoreField).add(keyField(scan.schema)))
   }
 
-  /** [[findSimilar]]'s hydrated page, its candidates read from a planned
-    * scan: one job for the probe object's chunks and one multi-probe top-k,
-    * both over the narrow (doc_id, vector, object_keys) projection, then
-    * [[hydratePage]]'s one read of the hit ids. A key with no documents
-    * runs the first job only.
+  /** [[findSimilar]]'s hydrated page, read from a planned scan: one job
+    * for the probe object's chunks and one multi-probe top-k, both over the
+    * narrow (doc_id, vector, object_keys) projection, then the scan's read
+    * of the hit ids ([[VersionScan.byIds]]). A key with no documents runs
+    * the first job only.
     */
   private[graft] def similarRows(scan: VersionScan, probeKey: String, k: Int, threshold: Double,
                                  metric: Metric): (Seq[Row], StructType) = {
     val hits = scan.topKIds(scan.withKey(probeKey).map(_._2), k, threshold, metric)
-    hydratePage(scan.docs, hits.map { case (id, score) => Row(id, score) }, ScoreField)
+    hydratePage(scan, hits.map { case (id, score) => Row(id, score) }, ScoreField)
   }
 
   /** The `key` field a page adds: the type of an `object_keys` element. */

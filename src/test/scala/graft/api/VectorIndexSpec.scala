@@ -202,15 +202,29 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(lshFull == exact)
     assert(ivfFull == exact)
 
-    // narrow probe ⇒ the candidate page's scan carries a NON-EMPTY
-    // partition filter, and the page's top-k is TakeOrderedAndProject at
-    // the plan root with no window (the search finishes on the driver)
-    val nonEmptyPf = "PartitionFilters: \\[[^\\]]".r
-    val qv = Seq((0L, idx.backend.embedOne(q).toSeq))
-    for (m <- Seq(SearchMode.Lsh(4, 1), SearchMode.Ivf(4, 2, 1))) {
-      val p = idx.annPage(qv, 5, m).queryExecution.executedPlan.toString
-      assert(nonEmptyPf.findFirstIn(p).isDefined, s"no partition filter in:\n$p")
-      assert(p.contains("TakeOrderedAndProject") && !p.contains("Window"), p)
+    // narrow probe ⇒ a miss's candidate job reads exactly the rows of the
+    // parts it probes, fewer than the index holds, in one stage (the top-k
+    // finishes on the driver, no exchange)
+    val lshRows = spark.read.parquet(VersionedDir.resolve(spark, idx.annLshPath))
+      .select(col("bucket").cast("long")).as[Long].collect().toSeq
+    val ivfRows = spark.read.parquet(VersionedDir.resolve(spark, idx.annIvfPath))
+      .select(col("cell").cast("long")).as[Long].collect().toSeq
+    val (cvs, cids) = graft.ops.SimilaritySearch.collectCentroids(
+      graft.ops.SimilaritySearch.ivfCentroidsRead(spark, idx.annIvfPath))
+    for (i <- 1 to 3) {
+      val text = s"document number ${17 + i} about topic${i % 7} detail${17 + i}"
+      val qv = idx.backend.embedOne(text).toSeq
+      val bucket = graft.ops.SimilaritySearch.lshBucketLocal(qv, 32, 4)
+      val probed = Seq(
+        (SearchMode.Lsh(4, 1), lshRows.count(b => java.lang.Long.bitCount(b ^ bucket) <= 1), lshRows.size),
+        (SearchMode.Ivf(4, 2, 1), ivfRows.count(graft.ops.SimilaritySearch.nearestCellsLocal(qv, cvs, cids, 2).toSet),
+          ivfRows.size))
+      for ((m, rows, all) <- probed) {
+        val runs = jobRuns(idx.search(text, k = 5, threshold = -1.0, mode = m).collect())
+        assert(runs.size == 2, s"$m: $runs")
+        assert(runs.head == JobRun(stages = 1, records = rows, shuffleRead = 0), s"$m candidates read $runs, probed $rows")
+        assert(rows < all, s"$m probed all $all rows")
+      }
     }
   }
 
@@ -595,6 +609,52 @@ class VectorIndexSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** What one Spark job read and ran: the stages it submitted (a stage
+    * whose output is already there is skipped, not submitted), the input
+    * records its tasks read, and the shuffle bytes they read.
+    */
+  private final case class JobRun(stages: Int, records: Long, shuffleRead: Long)
+
+  /** The jobs launched while `f` runs, in launch order. The listener bus
+    * delivers in order: once a marker job in another group starts, every
+    * task and stage of the counted jobs has been seen.
+    */
+  private def jobRuns(f: => Unit): Seq[JobRun] = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"runs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, Seq[Int]]()
+    val submitted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val shuffle = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.put(e.jobId, e.stageIds)
+          case g if g == s"$group-flush" => flushed.countDown()
+          case _ => ()
+        }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = submitted.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+        records.merge(e.stageId, m.inputMetrics.recordsRead, _ + _)
+        shuffle.merge(e.stageId, m.shuffleReadMetrics.totalBytesRead, _ + _)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not flushed")
+      jobs.values.toArray(Array.empty[Seq[Int]]).toSeq.map { stages =>
+        val ran = stages.filter(submitted.contains)
+        JobRun(ran.size, ran.map(records.getOrDefault(_, 0L)).sum, ran.map(shuffle.getOrDefault(_, 0L)).sum)
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
   // each call stops at its candidate page: one top-k collect, one hydration
   // read by id, the rest on the driver. A version is resolved once (no
   // file-listing / schema-inference job, no side-table collect on later
@@ -629,14 +689,10 @@ class VectorIndexSpec extends AnyFunSuite {
       if (pending && m == ivf) idx.upsert(graft.pipeline.IndexBuild.buildDocuments(
         Seq((100L, "completely new page about quasars")).toDF("id", "body"),
         idx.config, idx.backend, "page", "id"))
-      // pending deltas add the ANN overlay's shadowing join to every first
-      // call (IVF's also joins the overlay per probed cell), and the
-      // document store's merge-on-read broadcasts to the hydration read
-      val (searchJobs, similarJobs) = (pending, m) match {
-        case (false, _)   => (2, 3)
-        case (true, `ivf`) => (8, 9)
-        case (true, _)    => (6, 7)
-      }
+      // the ANN overlay is collected once per version, so its candidates
+      // stay one job; pending store deltas make hydration a read of the
+      // merged documents, whose broadcasts add 2 jobs
+      val (searchJobs, similarJobs) = if (pending) (4, 5) else (2, 3)
       val n = 20 + 10 * j + (if (pending) 5 else 0) // texts and keys not asked yet
       idx.search(text(n), k = 5, mode = m)
       assert(jobsDuring(idx.search(text(n + 1), k = 5, mode = m)) == searchJobs, s"$m search, deltas=$pending")
@@ -669,10 +725,12 @@ class VectorIndexSpec extends AnyFunSuite {
     val idx = annIndex("hnsw_graph", Seq(hnsw))
     idx.rebuild(annSource)
     val q = "document number 17 about topic3 detail17"
-    val qv = Seq((0L, idx.backend.embedOne(q).toSeq))
     idx.search(q, k = 5, mode = hnsw)
-    val p = idx.annPage(qv, 5, hnsw).queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"), s"HNSW page re-shuffles the graph:\n$p")
+    // a miss searches the persisted graphs: one stage that reads one cached
+    // graph per shard, and shuffles nothing
+    val shards = spark.read.parquet(VersionedDir.resolve(spark, idx.annHnswPath)).select("shard").distinct().count()
+    val runs = jobRuns(idx.search("document number 18 about topic4 detail18", k = 5, mode = hnsw).collect())
+    assert(runs.head == JobRun(stages = 1, records = shards, shuffleRead = 0), s"HNSW candidates: $runs")
     val sc = spark.sparkContext
     val live = sc.getPersistentRDDs.size
     // every persisted RDD stays referenced here, so only an explicit
@@ -817,6 +875,86 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(idx.searchVector(queries.head, k, threshold = 1.5).isEmpty)
     assert(idx.searchVector(queries.head, k, threshold = 1.5, mode = ivf).columns.toSeq == annCols)
     assert(idx.findSimilar("page:3", k, threshold = 1.5, mode = hnsw).isEmpty)
+  }
+
+  // LSH, IVF and HNSW misses score planned parts and graphs on their own;
+  // the public lazy routes over the same version and overlay are the
+  // reference: their (doc_id, score) page, thresholded and hydrated
+  test("planned ANN misses equal the public DataFrame routes, without and with a pending delta") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    import graft.ops.{Hnsw, SimilaritySearch => SS}
+    import graft.query.Retrieval
+    val lsh = SearchMode.Lsh(bits = 4, maxHamming = 1)
+    val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
+    val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 4)
+    val (idx, queries) = pageIndex(Seq(lsh, ivf, hnsw))
+    val ks = Seq(1, 5, 50) // 50: more than the candidates
+    /** Per k, the route's page over the handle's current version and
+      * overlay, as a function of the threshold: thresholded and hydrated
+      * from the documents. LSH and IVF rank their candidates exactly, so
+      * their top 1 and 5 are the top 50's first ranks; HNSW's beam widens
+      * with k, so it runs per k.
+      */
+    def reference(m: SearchMode, probes: Seq[(Long, Seq[Float])]): Int => Double => (Seq[Row], StructType) = {
+      val delta = idx.annDelta(m)
+      def route(k: Int) = (m match {
+        case SearchMode.Lsh(bits, h) =>
+          SS.lshTopKPruned(spark, idx.annLshPath, probes, 32, k, bits, h, "doc_id", "vector", delta)
+        case SearchMode.Ivf(_, nProbe, _) =>
+          SS.ivfTopKPruned(spark, idx.annIvfPath, SS.ivfCentroidsRead(spark, idx.annIvfPath), probes, k, nProbe,
+            "doc_id", "vector", delta)
+        case SearchMode.Hnsw(_, _, ef) => Hnsw.hnswTopKIndexed(spark, idx.annHnswPath, probes, k, ef, delta, "doc_id", "vector")
+        case other => fail(s"no route for $other")
+      }).select("doc_id", "score", "rank").collect().toSeq
+      val pages = if (m == hnsw) ks.map(k => k -> route(k)).toMap
+        else { val top = route(ks.max); ks.map(k => k -> top.filter(_.getInt(2) <= k)).toMap }
+      val docs = idx.documents
+      k => t => Retrieval.hydratePage(docs,
+        pages(k).filter(r => Retrieval.compareScores(r.getDouble(1), t) >= 0).map(r => Row(r.getLong(0), r.getDouble(1))),
+        Retrieval.ScoreField)
+    }
+    // thresholds -2, 0 and 1 at k = 5; k = 1, 5 and 50 unthresholded
+    val asks = ks.map(_ -> -2.0) ++ Seq(5 -> 0.0, 5 -> 1.0)
+    def check(state: String): Unit = {
+      for (m <- Seq(lsh, ivf, hnsw); (qv, i) <- Seq(queries(0), queries(1), queries.last).zipWithIndex) {
+        val ref = reference(m, Seq((0L, qv)))
+        for ((k, t) <- asks) {
+          val (rows, schema) = ref(k)(t)
+          assert(idx.searchVector(qv, k, t, mode = m).collect().toSeq == Retrieval.firstPerKey(rows, schema),
+            s"$state: $m search, query $i, k $k, threshold $t")
+        }
+      }
+      val docs = idx.documents
+      for (m <- Seq(lsh, ivf, hnsw); obj <- Seq("page:0", "page:5")) {
+        val probes = docs.filter(array_contains(col("object_keys"), obj)).select("doc_id", "vector")
+          .as[(Long, Seq[Float])].collect().toSeq
+        val ref = reference(m, probes)
+        for ((k, t) <- asks; self <- Seq(false, true)) {
+          val (rows, schema) = ref(k)(t)
+          assert(idx.findSimilar(obj, k, t, includeSelf = self, mode = m).collect().toSeq ==
+            Retrieval.excludeKey(Retrieval.firstPerKey(rows, schema), schema, obj, self),
+            s"$state: $m findSimilar($obj), k $k, threshold $t, includeSelf $self")
+        }
+      }
+    }
+    check("no deltas")
+    // one pending sidecar per root: doc 1003 added; doc 87 tombstoned;
+    // doc 3 upserted again with its vector turned around. 3 and 87 hold
+    // dirs(0) exactly, so without the overlay's shadowing they would take
+    // top places of query 0
+    val added = Seq((1003L, Seq("page:20"), queries.head, "added", Map("chunk_index" -> "0")))
+      .toDF("doc_id", "object_keys", "vector", "content", "metadata")
+    idx.store.upsert(added)
+    idx.store.delete(Seq(87L))
+    idx.refreshAnnIncremental(
+      added.select("doc_id", "vector").unionByName(Seq((3L, queries.head.map(-_))).toDF("doc_id", "vector")),
+      Seq(87L).toDF("doc_id"))
+    for (m <- Seq(lsh, ivf, hnsw)) {
+      val delta = idx.annDelta(m).get.select("doc_id", "deleted").as[(Long, Boolean)].collect().toSet
+      assert(delta == Set((1003L, false), (3L, false), (87L, true)), s"$m: $delta")
+    }
+    check("pending delta")
   }
 
   test("findSimilar of a key with no documents is empty, with the same columns, in every mode") {
@@ -965,6 +1103,73 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(idx.pageCacheSize._1 > 0)
   }
 
+  // searches beside writes on one handle: each write replaces the ANN
+  // versions and releases their graphs and parts while misses run on them
+  test("concurrent IVF and HNSW misses beside 10 upserts: none throws, each answers some version") {
+    val ivf = SearchMode.Ivf(nCells = 4, nProbe = 4, lloydIters = 1) // every cell
+    val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 1 << 20) // exact
+    val (idx, queries) = pageIndex(Seq(ivf, hnsw))
+    val sc = spark.sparkContext
+    // the first version's graphs and its parts (nProbe = nCells: all four)
+    Seq(ivf, hnsw).foreach(m => idx.searchVector(queries.head, 4, mode = m))
+    val live = sc.getPersistentRDDs.size
+    val base = idx.documents.select("doc_id", "object_keys", "vector")
+      .as[(Long, Seq[String], Seq[Float])].collect().toSeq
+    val rnd = new scala.util.Random(5)
+    val upserts = (1 to 10).map(i => (2000L + i, Seq(s"page:${100 + i}"),
+      queries(i % 6).map(x => x + (rnd.nextFloat() - 0.5f) * 0.2f)))
+    /** `round(vec_cosine(a, b), 6)`, as the kernel computes it. */
+    def cosine6(a: Seq[Float], b: Seq[Float]): Double = {
+      val n = math.min(a.size, b.size)
+      val (dot, na, nb) = (0 until n).foldLeft((0.0, 0.0, 0.0)) { case ((d, x, y), i) =>
+        (d + a(i).toDouble * b(i), x + a(i).toDouble * a(i), y + b(i).toDouble * b(i)) }
+      val den = math.sqrt(na) * math.sqrt(nb)
+      BigDecimal(if (den == 0.0) 0.0 else dot / den).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    // k covers every document: a search that resolved the store and the
+    // ANN root on either side of a write still answers one version
+    val k = 64
+    val versions = (0 to upserts.size).map(j => base ++ upserts.take(j))
+    def answers(qv: Seq[Float]): Set[Seq[(Long, String, Double)]] = versions.map(docs =>
+      firstPerKey(rank(docs.map { case (id, keys, v) => (id, keys.head, cosine6(v, qv)) }, -2.0).take(k))).toSet
+    // HNSW scores its graph hits with the graph's own cosine, which can
+    // differ from the kernel's by one unit in the 6th decimal: its rows
+    // must match in order, its scores to that unit
+    def same(want: Seq[(Long, String, Double)], got: Seq[(Long, String, Double)], m: SearchMode): Boolean =
+      if (m == ivf) want == got
+      else want.map(r => (r._1, r._2)) == got.map(r => (r._1, r._2)) &&
+        want.zip(got).forall { case (a, b) => math.abs(a._3 - b._3) <= 1.5e-6 }
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+    try {
+      val writer = pool.submit(new Runnable {
+        def run(): Unit = upserts.foreach { case (id, keys, v) =>
+          idx.upsert(Seq((id, keys, v, s"upserted $id", Map("chunk_index" -> "0")))
+            .toDF("doc_id", "object_keys", "vector", "content", "metadata"))
+        }
+      })
+      val searchers = (0 until 4).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 8).foreach { i =>
+            // a vector no thread asked before: every search is a miss
+            val qv = queries(i % queries.size).map(_ + (t * 8 + i + 1) * 1e-3f)
+            val m = if ((t + i) % 2 == 0) ivf else hnsw
+            try {
+              val got = triples(idx.searchVector(qv, k, -2.0, mode = m))
+              val near = answers(qv).minBy(a => a.diff(got).size + got.diff(a).size)
+              if (!same(near, got, m))
+                failures.add(s"thread $t, search $i, $m: missing ${near.diff(got)}, extra ${got.diff(near)}")
+            } catch { case e: Throwable => failures.add(s"thread $t, search $i, $m: $e") }
+          }
+        })
+      }
+      (writer +: searchers).foreach(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    assert(failures.isEmpty, failures.toArray.take(5).mkString("\n"))
+    assert(idx.documents.count() == base.size + upserts.size)
+    assert(sc.getPersistentRDDs.size <= live, s"${sc.getPersistentRDDs.size} persisted RDDs, was $live")
+  }
+
   test("page cache: least recently used pages go first, within both bounds; a page over the row bound is not kept") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.StructType
@@ -1037,7 +1242,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val k = 4
     val metrics = Seq(Metric.Cosine, Metric.L2, Metric.MaxInnerProduct)
     def check(state: String, store: IndexStore, viaHandle: Boolean): Unit = {
-      val scan = new VersionScan(store.read())
+      val scan = store.readScan()._1
       // the reference reads the same rows from the driver, so it does not
       // re-run the store's merge-on-read per query
       val docs = onDriver(store.read())
@@ -1086,56 +1291,79 @@ class VectorIndexSpec extends AnyFunSuite {
   }
 
   test("version scan: after warm-up, misses compile no classes; exact search and query run 1 job, exact findSimilar 3, IVF and HNSW search 2") {
+    val lsh = SearchMode.Lsh(bits = 4, maxHamming = 1)
     val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
     val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 16)
-    val idx = annIndex("scan_misses", Seq(ivf, hnsw))
+    val idx = annIndex("scan_misses", Seq(lsh, ivf, hnsw))
     idx.rebuild(annSource)
     def text(i: Int) = s"document number $i about topic${i % 7} detail$i"
-    // each kind asks texts and keys of its own: every call is a miss
+    // the ANN kinds of one index version, each asking texts and keys of its
+    // own: every call is a miss
+    def annKinds(version: Int, searchJobs: Int, similarJobs: Int) =
+      Seq(lsh -> "LSH", ivf -> "IVF", hnsw -> "HNSW").zipWithIndex.flatMap { case ((m, name), j) =>
+        val at = 200 + 100 * (3 * version + j)
+        Seq[(String, Int => Unit, Int)](
+          (s"$name search, version $version", i => idx.search(text(at + i), k = 5, mode = m).collect(), searchJobs),
+          (s"$name findSimilar, version $version",
+            i => idx.findSimilar(s"page:${20 * j + i + 1}", k = 5, mode = m).collect(), similarJobs))
+      }
     val kinds = Seq[(String, Int => Unit, Int)](
       ("exact search", i => idx.search(text(i), k = 5).collect(), 1),
       ("query", i => idx.query(text(100 + i), sourcesLimit = 5).sources.collect(), 1),
-      ("exact findSimilar", i => idx.findSimilar(s"page:${i + 1}", k = 5).collect(), 3),
-      ("IVF search", i => idx.search(text(200 + i), k = 5, mode = ivf).collect(), 2),
-      ("HNSW search", i => idx.search(text(300 + i), k = 5, mode = hnsw).collect(), 2),
-      ("IVF findSimilar", i => idx.findSimilar(s"page:${i + 21}", k = 5, mode = ivf).collect(), 3),
-      ("HNSW findSimilar", i => idx.findSimilar(s"page:${i + 41}", k = 5, mode = hnsw).collect(), 3))
+      ("exact findSimilar", i => idx.findSimilar(s"page:${i + 1}", k = 5).collect(), 3)) ++
+      annKinds(0, 2, 3)
     for ((kind, ask, jobsEach) <- kinds) {
+      val (jobs, compiled) = misses(ask)
+      assert(compiled == 0, s"$kind: $compiled classes compiled")
+      assert(jobs.forall(_ == jobsEach), s"$kind: $jobs")
+    }
+    // a pending delta on every root and on the store: the candidates are
+    // still one job, as exact findSimilar's are, and hydration reads the
+    // store's merged documents in 3
+    idx.upsert(graft.pipeline.IndexBuild.buildDocuments(
+      Seq((100L, "completely new page about quasars")).toDF("id", "body"), idx.config, idx.backend, "page", "id"))
+    val pendingKinds = Seq[(String, Int => Unit, Int)](
+      ("exact findSimilar, version 1", i => idx.findSimilar(s"page:${i + 1}", k = 5).collect(), 5)) ++
+      annKinds(1, 4, 5)
+    for ((kind, ask, jobsEach) <- pendingKinds) {
       val (jobs, compiled) = misses(ask)
       assert(compiled == 0, s"$kind: $compiled classes compiled")
       assert(jobs.forall(_ == jobsEach), s"$kind: $jobs")
     }
   }
 
-  // hydration stays a read by id on the documents relation: the hit ids
-  // reach the parquet scan as a pushed filter, so a range-partitioned
-  // version's footer statistics skip the files that hold none of them
-  test("hydration of ANN hits and of findSimilar's candidates is an id filter pushed into the parquet scan") {
-    import org.apache.spark.sql.execution.QueryExecution
+  // a version without pending deltas is range-partitioned by doc_id, one
+  // disjoint id range per file: hydrating a page reads the files whose
+  // range holds one of its ids, and no other
+  test("hydration of ANN hits and of findSimilar's candidates reads only the files whose doc_id range holds a hit") {
     val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
-    val idx = annIndex("hydrate_pushed", Seq(ivf))
-    idx.rebuild(annSource)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan.toString)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 16)
+    val idx = annIndex("hydrate_files", Seq(ivf, hnsw))
+    // one file per range partition: 8 of them, none coalesced away
+    val conf = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false", "spark.sql.shuffle.partitions" -> "8")
+    val before = conf.map { case (key, _) => key -> spark.conf.getOption(key) }
+    conf.foreach { case (key, value) => spark.conf.set(key, value) }
+    try idx.rebuild(annSource)
+    finally before.foreach { case (key, value) => value.fold(spark.conf.unset(key))(spark.conf.set(key, _)) }
+    // (lowest doc_id, highest doc_id, rows) of every file
+    val files = idx.documents.groupBy(col("_metadata.file_path"))
+      .agg(min("doc_id"), max("doc_id"), count(lit(1))).as[(String, Long, Long, Long)].collect().toSeq
+    assert(files.size >= 4, files)
+    // the hits are the result rows: each object has one chunk, and
+    // includeSelf keeps the probe's own
+    val asks = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      ("IVF search", i => idx.search(s"document number $i about topic${i % 7} detail$i", k = 3, threshold = -1.0, mode = ivf)),
+      ("HNSW search", i => idx.search(s"document number $i about topic${i % 7} detail$i", k = 3, threshold = -1.0, mode = hnsw)),
+      ("exact findSimilar", i => idx.findSimilar(s"page:$i", k = 3, threshold = -1.0, includeSelf = true)),
+      ("IVF findSimilar", i => idx.findSimilar(s"page:${i + 20}", k = 3, threshold = -1.0, includeSelf = true, mode = ivf)),
+      ("HNSW findSimilar", i => idx.findSimilar(s"page:${i + 40}", k = 3, threshold = -1.0, includeSelf = true, mode = hnsw)))
+    for ((kind, ask) <- asks; i <- 1 to 3) {
+      var ids = Seq.empty[Long]
+      val runs = jobRuns { ids = ask(i).select("doc_id").as[Long].collect().toSeq }
+      val hit = files.filter { case (_, lo, hi, _) => ids.exists(id => lo <= id && id <= hi) }
+      assert(ids.size == 3 && hit.size < files.size, s"$kind $i: hits $ids in ${hit.size} of ${files.size} files")
+      assert(runs.last.records == hit.map(_._4).sum, s"$kind $i: hydration read $runs, the hit files hold $hit")
     }
-    // the listener is called from the listener bus: wait for the plan
-    def pushedDuring(ask: => Unit): Boolean = {
-      plans.clear()
-      spark.listenerManager.register(listener)
-      try {
-        ask
-        def found = plans.toArray.exists(_.toString.contains("In(doc_id, ["))
-        val deadline = System.nanoTime + 30000000000L
-        while (!found && System.nanoTime < deadline) Thread.sleep(20)
-        found
-      } finally spark.listenerManager.unregister(listener)
-    }
-    assert(pushedDuring(idx.search("document number 17 about topic3 detail17", k = 5, mode = ivf).collect()),
-      "IVF search")
-    assert(pushedDuring(idx.findSimilar("page:17", k = 5).collect()), "exact findSimilar")
-    assert(pushedDuring(idx.findSimilar("page:23", k = 5, mode = ivf).collect()), "IVF findSimilar")
   }
 
   test("page cache: a hit returns the page's DataFrame; after a write through another handle, a new one") {

@@ -16,7 +16,13 @@ record, with the B/A ratio:
 - for traced records, per span name: the number of spans, the median wall
   time in ms and the median Spark jobs, counting the jobs of the span and of
   every span below it (a request span launches no job itself; its
-  `api.build`, `query.plan` and `query.exec` children do).
+  `api.build`, `query.plan` and `query.exec` children do);
+- for traced records, per request kind (a top-level `request.*` span), the
+  median wall time of its misses and of its hits, each on its own row: a
+  miss is a request whose subtree ran at least one Spark job, a hit one
+  that ran none (the page cache answered it). The ratio of two kinds' miss
+  medians in one record, for example `request.search_ivf` over
+  `request.search` (exact), reads straight off one traced A/B.
 
 Usage: run_record_diff.py A.json B.json
 """
@@ -57,20 +63,37 @@ def call_rows(rec):
             **{f"p{int(q * 100)}": quantile(xs, q) for q in (0.1, 0.5, 0.9)}}
 
 
-def span_rows(rec):
-    spans = rec.get("spans", [])
+def subtree_jobs(spans):
+    """Span id -> the Spark jobs of the span and of every span below it."""
     children = {}
     for s in spans:
         children.setdefault(s["parent"], []).append(s)
 
-    def subtree_jobs(s):
-        return s["jobs"] + sum(subtree_jobs(c) for c in children.get(s["id"], []))
+    def jobs(s):
+        return s["jobs"] + sum(jobs(c) for c in children.get(s["id"], []))
 
+    return {s["id"]: jobs(s) for s in spans}
+
+
+def span_rows(rec):
+    spans = rec.get("spans", [])
+    jobs = subtree_jobs(spans)
     by_name = {}
     for s in spans:
-        by_name.setdefault(s["name"], []).append((s["end_ms"] - s["start_ms"], subtree_jobs(s)))
+        by_name.setdefault(s["name"], []).append((s["end_ms"] - s["start_ms"], jobs[s["id"]]))
     return {name: (len(xs), statistics.median(x[0] for x in xs), statistics.median(x[1] for x in xs))
             for name, xs in by_name.items()}
+
+
+def request_rows(rec):
+    spans = rec.get("spans", [])
+    jobs = subtree_jobs(spans)
+    by_kind = {}
+    for s in spans:
+        if s["parent"] == -1 and s["name"].startswith("request."):
+            kind = "miss" if jobs[s["id"]] > 0 else "hit"
+            by_kind.setdefault(f"{s['name']} {kind}", []).append(s["end_ms"] - s["start_ms"])
+    return {name: (len(xs), statistics.median(xs)) for name, xs in by_kind.items()}
 
 
 def table(title, header, rows):
@@ -110,6 +133,15 @@ def main(path_a, path_b):
                 fmt(sa.get(n, none)[1]), fmt(sb.get(n, none)[1]),
                 ratio(sa.get(n, none)[1], sb.get(n, none)[1]),
                 fmt(sa.get(n, none)[2]), fmt(sb.get(n, none)[2])) for n in names])
+    ra, rb = request_rows(a), request_rows(b)
+    names = sorted(set(ra) | set(rb))
+    if names:
+        none = (None, None)
+        table("requests (median wall time of misses, which ran a Spark job, and of hits)",
+              ("request", "n A", "n B", "ms A", "ms B", "ms B/A"),
+              [(n, fmt(ra.get(n, none)[0]), fmt(rb.get(n, none)[0]),
+                fmt(ra.get(n, none)[1]), fmt(rb.get(n, none)[1]),
+                ratio(ra.get(n, none)[1], rb.get(n, none)[1])) for n in names])
 
 
 if __name__ == "__main__":
