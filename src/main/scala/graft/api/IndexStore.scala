@@ -1,10 +1,13 @@
 package graft.api
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
+import graft.embed.HttpSupport
 import graft.query.VersionScan
 
 /** Pluggable index storage — the Spark analog of the reference's
@@ -85,11 +88,150 @@ trait ServerSideSearch { this: IndexStore =>
                     similarityThreshold: Double = 0.0): DataFrame
 }
 
+/** The executor-shippable half of a remote connector: plain serializable
+  * settings, the retrying HTTP calls ([[HttpSupport]]'s policy: 429/5xx/IO
+  * back off, other 4xx surface) and the batched upload of document-row
+  * JSONs, one dialect request ([[uploadBatch]]) per `uploadBatchRows`
+  * rows. An executor-side upload captures only this, never the
+  * SparkSession or the store.
+  */
+trait StoreWire extends Serializable {
+  def apiKey: Option[String]
+  def maxRetries: Int
+  def backoffMs: Long
+  def requestTimeoutMs: Long
+  def uploadBatchRows: Int
+
+  @transient private lazy val http = HttpSupport.client(requestTimeoutMs)
+  protected def mapper: ObjectMapper = HttpSupport.mapper
+
+  private def send(method: String, url: String, body: Option[String]): (Int, String) =
+    HttpSupport.sendWithRetry(http, method, url, body, apiKey, maxRetries,
+      backoffMs, requestTimeoutMs)
+
+  private def failure(method: String, url: String, status: Int, body: String) =
+    new IllegalStateException(s"$method $url returned $status: ${body.take(500)}")
+
+  def expect200(method: String, url: String, body: Option[String]): String =
+    send(method, url, body) match {
+      case (200, b) => b
+      case (status, b) => throw failure(method, url, status, b)
+    }
+
+  /** GET `url`: its body on 200, None on 404; any other status throws. */
+  def getOption(url: String): Option[String] = send("GET", url, None) match {
+    case (200, b) => Some(b)
+    case (404, _) => None
+    case (status, b) => throw failure("GET", url, status, b)
+  }
+
+  /** DELETE `url`, accepting 404 (already gone); a real failure (5xx
+    * after retries, 403) surfaces here.
+    */
+  def deleteIfExists(url: String): Unit = send("DELETE", url, None) match {
+    case (200, _) | (404, _) => ()
+    case (status, b) => throw failure("DELETE", url, status, b)
+  }
+
+  /** `rowJson` parsed, with its doc_id and its vector — what every vector
+    * service keys and searches on; a row lacking either fails loudly.
+    */
+  protected def keyedRow(rowJson: String): (ObjectNode, Long, JsonNode) = {
+    val row = mapper.readTree(rowJson).asInstanceOf[ObjectNode]
+    val id = row.path("doc_id")
+    require(id.canConvertToLong,
+      s"document row lacks an integral doc_id: ${rowJson.take(200)}")
+    val vector = row.path("vector")
+    require(vector.isArray,
+      s"document row lacks a vector array column: ${rowJson.take(200)}")
+    (row, id.asLong(), vector)
+  }
+
+  /** One upload request carrying `batch`, a group of document-row JSONs. */
+  protected def uploadBatch(batch: Seq[String]): Unit
+
+  def uploadRowJsons(rows: Iterator[String]): Unit =
+    rows.grouped(uploadBatchRows).foreach(uploadBatch)
+}
+
+/** What every remote connector ([[RestIndexStore]], [[QdrantIndexStore]],
+  * [[WeaviateIndexStore]]) does the same way: the exists probe, the
+  * 404-tolerant drop, the upload of document rows and the client-side
+  * old-wins upsert. A connector supplies its dialect: URLs, the JSON shape
+  * of a stored row, id listing, schema storage and search.
+  *
+  * Uploads run driver-side below `executorUploadMinRows` rows (no Spark job
+  * for a small batch) and per partition from executors at or above it, so
+  * a large index upload never serializes through the driver.
+  */
+abstract class RemoteIndexStore(spark: SparkSession, executorUploadMinRows: Long)
+    extends IndexStore {
+  protected def wire: StoreWire
+  protected def mapper: ObjectMapper = HttpSupport.mapper
+  /** GET answers 200 iff the collection exists and 404 iff not; DELETE
+    * drops it.
+    */
+  protected def collectionUrl: String
+  /** The doc_ids the collection holds. */
+  protected def existingIds(): Seq[Long]
+
+  override def exists: Boolean = wire.getOption(collectionUrl).isDefined
+
+  override def clear(): Unit = wire.deleteIfExists(collectionUrl)
+
+  /** Old-wins upsert. The services' own upserts replace by id (new-wins),
+    * so the contract's old-wins semantics are enforced client-side: the
+    * stored ids feed a broadcast anti-join that drops conflicting rows
+    * before upload.
+    */
+  override def upsert(docs: DataFrame): Unit =
+    if (!exists) replace(docs)
+    else {
+      import spark.implicits._
+      insertPrechecked(docs
+        .join(broadcast(existingIds().toDF("doc_id")), Seq("doc_id"), "left_anti")
+        .dropDuplicates("doc_id"))
+    }
+
+  /** Conflict-free pre-deduped rows are uploaded as they are: no second
+    * id listing (the caller already holds the conflict set).
+    */
+  override private[graft] def insertPrechecked(inserted: DataFrame): Unit =
+    if (!exists) replace(inserted) else upload(inserted)
+
+  protected def upload(docs: DataFrame): Unit = withJson(docs)(ship)
+
+  /** Runs `f` on `docs` as JSON rows and their count, persisted across
+    * both so the upstream plan (for `upsert`, a broadcast anti-join)
+    * computes once.
+    */
+  protected def withJson(docs: DataFrame)(f: (Dataset[String], Long) => Unit): Unit = {
+    val json = docs.toJSON.persist()
+    try f(json, json.count())
+    finally json.unpersist(false)
+  }
+
+  /** Upload the `n` rows of `json` through [[StoreWire.uploadRowJsons]]. */
+  protected def ship(json: Dataset[String], n: Long): Unit =
+    if (n > 0) {
+      val w = wire
+      if (n < executorUploadMinRows) w.uploadRowJsons(json.collect().iterator)
+      else json.foreachPartition((it: Iterator[String]) => w.uploadRowJsons(it))
+    }
+
+  /** Document-row JSONs read with the stored schema: a schema-directed
+    * parse (exact array<float>/map types, no inference).
+    */
+  protected def rowsOf(schema: StructType, rows: Seq[String]): DataFrame =
+    spark.read.schema(schema).json(spark.createDataset(rows)(Encoders.STRING))
+}
+
 /** Parquet-backed store with versioned atomic swaps (see [[VersionedDir]]
   * for the layout and reader/writer guarantees). `keepVersions` controls how
   * many versions stay readable for in-flight readers (default 2 = current +
   * previous; raise it for long-running readers that may lag more rebuilds).
-  * A legacy flat layout (parquet directly under `root`) is still readable.
+  * A root holding bare parquet files and no version is not a store: reads
+  * and writes on it throw `IllegalStateException`.
   */
 final class ParquetIndexStore(spark: SparkSession, root: String,
                               keepVersions: Int = 2,
@@ -108,27 +250,16 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private val rootPath = new Path(root)
-
-  override def exists: Boolean = dir.exists || legacyExists
-
-  private def legacyExists: Boolean = {
-    val f = fs
-    f.exists(rootPath) && f.listStatus(rootPath).exists(s =>
-      s.isFile && s.getPath.getName.endsWith(".parquet"))
-  }
+  override def exists: Boolean = dir.exists
 
   override def read(): DataFrame = readScan()._1.docs
 
-  /** The token is the resolved read's key; the legacy flat layout has no
-    * snapshot, so it has none.
-    */
+  /** The token is the resolved read's key. */
   override private[graft] def readScan(): (VersionScan, Option[Any]) = {
     val snap = dir.snapshot
-    if (snap.exists) {
-      val key = (snap, broadcastDeltaCap)
-      (resolved(key), Some(key))
-    } else (new VersionScan(spark.read.parquet(root), None), None) // legacy flat layout (or throw)
+    if (!snap.exists) throw new IllegalStateException(s"no index under $root")
+    val key = (snap, broadcastDeltaCap)
+    (resolved(key), Some(key))
   }
 
   /** One snapshot decides both existence and contents, so `exists` and
@@ -136,9 +267,7 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     */
   override def readOption(): Option[DataFrame] = {
     val snap = dir.snapshot
-    if (snap.exists) Some(resolved((snap, broadcastDeltaCap)).docs)
-    else if (legacyExists) Some(spark.read.parquet(root))
-    else None
+    if (snap.exists) Some(resolved((snap, broadcastDeltaCap)).docs) else None
   }
 
   /** The resolved read of the last snapshot seen: the base relation (file
@@ -314,15 +443,31 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
         .write.mode("overwrite").parquet(versionDir)
     }
 
+  /** Rewrite the active version bin-packed to `targetFileMB` files, in
+    * [[replace]]'s layout (range-partitioned to the file count, sorted by
+    * doc_id within files) — heals the small-file accretion of repeated
+    * upsert/replace cycles without interrupting readers (atomic versioned
+    * swap, like any other write).
+    */
+  def compact(targetFileMB: Int = 128): Unit = {
+    foldDeltas() // the rewrite reads the base version only — fold first
+    val src = dir.currentDir.getOrElse(
+      throw new IllegalStateException(s"nothing to compact under $root"))
+    val (bytes, target) = (fs.getContentSummary(new Path(src)).getLength, targetFileMB.toLong << 20)
+    val nFiles = math.max(1, ((bytes + target - 1) / target).toInt)
+    dir.replaceWith { versionDir =>
+      spark.read.parquet(src).repartitionByRange(nFiles, col("doc_id"))
+        .sortWithinPartitions("doc_id").write.mode("overwrite").parquet(versionDir)
+    }
+  }
+
   /** O(batch) write: the conflict check reads the index (a scan — at scale,
     * the layout's min/max doc_id footer stats prune it), but only the
-    * genuinely-new rows are WRITTEN, as an "add" delta. The legacy flat
-    * layout (no versioned base to append to) falls back to read-and-replace.
+    * genuinely-new rows are WRITTEN, as an "add" delta.
     */
   override def upsert(docs: DataFrame): Unit = readOption() match {
     case None => replace(docs)
     case Some(existing) =>
-      import org.apache.spark.sql.functions.broadcast
       // old-wins: only doc_ids not already present are inserted. The
       // conflict set is found by probing the column-pruned index id scan
       // with a BROADCAST of the batch ids (left_semi, index streamed) —
@@ -356,43 +501,26 @@ final class ParquetIndexStore(spark: SparkSession, root: String,
     */
   private def writeInserted(inserted: DataFrame, existing: DataFrame): Unit = {
     requireBaseSchema(existing.schema, inserted)
-    if (!inserted.isEmpty) {
-      if (dir.exists) {
-        dir.appendDelta({ tmp =>
-          inserted.write.mode("overwrite").parquet(tmp)
-        }, kind = "add")
-        if (deltaCount >= foldEvery) foldDeltas()
-      } else replace(inserted.unionByName(existing))
-    }
+    if (!inserted.isEmpty) appendFolding("add")(inserted.write.mode("overwrite").parquet(_))
   }
 
   /** O(batch) write: ids land as a "del" tombstone delta; the rows vanish
     * at merge-on-read and physically at the next fold/compact.
     */
-  override def delete(docIds: Seq[Long]): Unit = if (docIds.nonEmpty) {
+  override def delete(docIds: Seq[Long]): Unit = if (docIds.nonEmpty && dir.exists) {
     import spark.implicits._
-    if (dir.exists) {
-      dir.appendDelta({ tmp =>
-        docIds.toDF("doc_id").write.mode("overwrite").parquet(tmp)
-      }, kind = "del")
-      if (deltaCount >= foldEvery) foldDeltas()
-    } else readOption().foreach { existing =>
-      replace(existing.join(
-        org.apache.spark.sql.functions.broadcast(docIds.toDF("doc_id")),
-        Seq("doc_id"), "left_anti"))
-    }
+    appendFolding("del")(docIds.toDF("doc_id").write.mode("overwrite").parquet(_))
+  }
+
+  /** Append a `kind` delta through `write`, then fold once `foldEvery`
+    * deltas are pending.
+    */
+  private def appendFolding(kind: String)(write: String => Unit): Unit = {
+    dir.appendDelta(write, kind)
+    if (deltaCount >= foldEvery) foldDeltas()
   }
 
   override def clear(): Unit = dir.deleteAll()
-
-  /** Rewrite the active version bin-packed to `targetFileMB` files — heals
-    * the small-file accretion of repeated upsert/replace cycles without
-    * interrupting readers (atomic versioned swap, like any other write).
-    */
-  def compact(targetFileMB: Int = 128): Unit = {
-    foldDeltas() // dir.compact reads the base version only — fold first
-    dir.compact(spark, None, targetFileMB, sortCol = Some("doc_id"))
-  }
 }
 
 /** Driver-memory store — the second [[IndexStore]] impl, proving the

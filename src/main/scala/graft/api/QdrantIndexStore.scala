@@ -2,10 +2,8 @@ package graft.api
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
-
-import graft.embed.HttpSupport
 
 /** Serializable qdrant wire client — the executor-shippable half of
   * [[QdrantIndexStore]]. Point uploads above the store's threshold run as
@@ -35,24 +33,10 @@ final case class QdrantWire(base: String, collection: String,
                             apiKey: Option[String],
                             maxRetries: Int, backoffMs: Long,
                             requestTimeoutMs: Long,
-                            uploadBatchRows: Int) extends Serializable {
+                            uploadBatchRows: Int) extends StoreWire {
 
   def collectionUrl: String = s"$base/collections/$collection"
   def pointsUrl: String = s"$collectionUrl/points"
-
-  @transient private lazy val http = HttpSupport.client(requestTimeoutMs)
-  private def mapper = HttpSupport.mapper
-
-  def send(method: String, url: String, body: Option[String]): (Int, String) =
-    HttpSupport.sendWithRetry(http, method, url, body, apiKey, maxRetries,
-      backoffMs, requestTimeoutMs)
-
-  def expect200(method: String, url: String, body: Option[String]): String =
-    send(method, url, body) match {
-      case (200, b) => b
-      case (status, b) => throw new IllegalStateException(
-        s"$method $url returned $status: ${b.take(500)}")
-    }
 
   /** Document row JSON → qdrant PointStruct: id = doc_id, vector = the
     * vector column, payload = every remaining column INCLUDING the vector
@@ -65,34 +49,24 @@ final case class QdrantWire(base: String, collection: String,
     * `read()` restores, keeping write/read fidelity exact.
     */
   def pointOf(rowJson: String): ObjectNode = {
-    val row = mapper.readTree(rowJson).asInstanceOf[ObjectNode]
-    val id = row.path("doc_id")
-    require(id.canConvertToLong,
-      s"document row lacks an integral doc_id: ${rowJson.take(200)}")
-    val vector = row.path("vector")
-    require(vector.isArray,
-      s"document row lacks a vector array column: ${rowJson.take(200)}")
+    val (row, id, vector) = keyedRow(rowJson)
     val pt = mapper.createObjectNode()
-    pt.put("id", id.asLong())
+    pt.put("id", id)
     pt.set[JsonNode]("vector", vector.deepCopy[JsonNode]())
     row.remove("doc_id")
     pt.set[JsonNode]("payload", row)
     pt
   }
 
-  /** Batched id-keyed points upsert — `?wait=true` so a 200 means the points
-    * are readable (the reference's client defaults to waiting the same way).
-    * Safe to call from executors; each partition streams its rows in
-    * `uploadBatchRows`-sized PUTs.
+  /** Id-keyed points upsert — `?wait=true` so a 200 means the points are
+    * readable (the reference's client defaults to waiting the same way).
     */
-  def uploadRowJsons(rows: Iterator[String]): Unit =
-    rows.grouped(uploadBatchRows).foreach { batch =>
-      val root = mapper.createObjectNode()
-      val pts = root.putArray("points")
-      batch.foreach(r => pts.add(pointOf(r)))
-      expect200("PUT", s"$pointsUrl?wait=true",
-        Some(mapper.writeValueAsString(root)))
-    }
+  protected def uploadBatch(batch: Seq[String]): Unit = {
+    val root = mapper.createObjectNode()
+    val pts = root.putArray("points")
+    batch.foreach(r => pts.add(pointOf(r)))
+    expect200("PUT", s"$pointsUrl?wait=true", Some(mapper.writeValueAsString(root)))
+  }
 }
 
 /** [[IndexStore]] speaking qdrant's LITERAL REST wire protocol — the
@@ -104,8 +78,9 @@ final case class QdrantWire(base: String, collection: String,
   *    (rebuild_index, provider.py:34-42; NOT atomic — neither is the
   *    reference's, a reader mid-rebuild sees the partial collection);
   *  - `insertPrechecked`/`upsert` = `PUT /points` PointStructs
-  *    (provider.py:44-55) — old-wins enforced CLIENT-side by an ids-only
-  *    scroll + anti-join, because qdrant's own upsert is new-wins by id;
+  *    (provider.py:44-55) — old-wins enforced CLIENT-side
+  *    ([[RemoteIndexStore]]) against an ids-only scroll, because qdrant's
+  *    own upsert is new-wins by id;
   *  - `delete` = `POST /points/delete` PointIdsList (provider.py:57-61);
   *  - [[searchSimilar]] = `POST /points/search` with `score_threshold`
   *    (get_similar_documents, provider.py:63-104) — similarity search runs
@@ -119,9 +94,7 @@ final case class QdrantWire(base: String, collection: String,
   *
   * Scale posture: reads are driver-mediated (scroll pages through one JVM —
   * this is a serving-index connector, like the reference's own providers),
-  * but WRITES distribute: batches of at least `executorUploadMinRows` rows
-  * are PUT per-partition from executors, so a large index upload never
-  * serializes through the driver.
+  * but WRITES distribute ([[RemoteIndexStore]]'s upload).
   */
 final class QdrantIndexStore(spark: SparkSession, base: String,
                              collection: String, dims: Int,
@@ -131,26 +104,19 @@ final class QdrantIndexStore(spark: SparkSession, base: String,
                              uploadBatchRows: Int = 500,
                              executorUploadMinRows: Long = 10000,
                              scrollBatchRows: Int = 1000)
-    extends IndexStore with ServerSideSearch {
+    extends RemoteIndexStore(spark, executorUploadMinRows) with ServerSideSearch {
   import QdrantIndexStore.SchemaPointId
 
-  private val wire = QdrantWire(base, collection, apiKey, maxRetries,
+  protected val wire: QdrantWire = QdrantWire(base, collection, apiKey, maxRetries,
     backoffMs, requestTimeoutMs, uploadBatchRows)
-  private def mapper = HttpSupport.mapper
-
-  override def exists: Boolean = wire.send("GET", wire.collectionUrl, None) match {
-    case (200, _) => true
-    case (404, _) => false
-    case (status, b) => throw new IllegalStateException(
-      s"GET ${wire.collectionUrl} returned $status: ${b.take(500)}")
-  }
+  protected def collectionUrl: String = wire.collectionUrl
 
   private def createCollection(): Unit = {
     val root = mapper.createObjectNode()
     val vectors = root.putObject("vectors")
     vectors.put("size", dims)
     vectors.put("distance", "Cosine")
-    wire.expect200("PUT", wire.collectionUrl, Some(mapper.writeValueAsString(root)))
+    wire.expect200("PUT", collectionUrl, Some(mapper.writeValueAsString(root)))
   }
 
   private def putSchemaPoint(schema: StructType): Unit = {
@@ -165,37 +131,14 @@ final class QdrantIndexStore(spark: SparkSession, base: String,
       Some(mapper.writeValueAsString(root)))
   }
 
-  /** Upload document rows as points — driver-side in one JVM below
-    * `executorUploadMinRows` (one request, no distributed job for small
-    * batches), per-partition from executors at or above it. The executor
-    * closure captures only [[QdrantWire]] (strings/numbers), never this
-    * store. The JSON rows are persisted across the count and the ship so
-    * the upstream plan (for `upsert`, a broadcast anti-join) computes once.
-    */
-  private def upload(docs: DataFrame): Unit = {
-    val json = docs.toJSON.persist()
-    try {
-      val n = json.count()
-      if (n > 0) {
-        val w = wire
-        if (n < executorUploadMinRows) w.uploadRowJsons(json.collect().iterator)
-        else json.foreachPartition((it: Iterator[String]) => w.uploadRowJsons(it))
-      }
-    } finally json.unpersist(false)
-  }
-
   override def replace(docs: DataFrame): Unit = {
     val d = docs.dropDuplicates("doc_id")
     // reference rebuild_index: delete_collection + create_collection + upsert
     // (provider.py:34-42). Not atomic — qdrant has no versioned swap; a
     // failed upload leaves a partial collection, exactly like the reference.
-    // 404-tolerant, but a real failure (5xx after retries, 403) must surface
-    // HERE, not as a baffling 409 from the create that follows
-    wire.send("DELETE", wire.collectionUrl, None) match {
-      case (200, _) | (404, _) => ()
-      case (status, b) => throw new IllegalStateException(
-        s"DELETE ${wire.collectionUrl} returned $status: ${b.take(500)}")
-    }
+    // A real delete failure surfaces HERE, not as a baffling 409 from the
+    // create that follows
+    wire.deleteIfExists(collectionUrl)
     createCollection()
     putSchemaPoint(d.schema)
     upload(d)
@@ -204,7 +147,7 @@ final class QdrantIndexStore(spark: SparkSession, base: String,
   /** Ids currently in the collection (payload- and vector-free scroll — the
     * cheapest read qdrant offers), excluding the schema meta point.
     */
-  private def existingIds(): Seq[Long] = {
+  protected def existingIds(): Seq[Long] = {
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     scroll(withPayload = false, withVector = false) { p =>
       val id = p.path("id")
@@ -277,27 +220,8 @@ final class QdrantIndexStore(spark: SparkSession, base: String,
     val schema = schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(throw new IllegalStateException(
         s"collection $collection carries no graft schema point — not a graft-written collection?"))
-    spark.read.schema(schema).json(spark.createDataset(rows.toSeq)(Encoders.STRING))
+    rowsOf(schema, rows.toSeq)
   }
-
-  /** Old-wins upsert. qdrant's native upsert REPLACES by point id
-    * (new-wins), so the IndexStore contract's old-wins semantics are
-    * enforced client-side: an ids-only scroll (no payloads, no vectors)
-    * feeds a broadcast anti-join that drops conflicting rows before upload.
-    */
-  override def upsert(docs: DataFrame): Unit =
-    if (!exists) replace(docs)
-    else {
-      import org.apache.spark.sql.functions.broadcast
-      import spark.implicits._
-      val ids = existingIds().toDF("doc_id")
-      insertPrechecked(docs
-        .join(broadcast(ids), Seq("doc_id"), "left_anti")
-        .dropDuplicates("doc_id"))
-    }
-
-  override private[graft] def insertPrechecked(inserted: DataFrame): Unit =
-    if (!exists) replace(inserted) else upload(inserted)
 
   override def delete(docIds: Seq[Long]): Unit = if (docIds.nonEmpty && exists) {
     val root = mapper.createObjectNode()
@@ -305,12 +229,6 @@ final class QdrantIndexStore(spark: SparkSession, base: String,
     docIds.foreach(pts.add)
     wire.expect200("POST", s"${wire.pointsUrl}/delete?wait=true",
       Some(mapper.writeValueAsString(root)))
-  }
-
-  override def clear(): Unit = wire.send("DELETE", wire.collectionUrl, None) match {
-    case (200, _) | (404, _) => ()
-    case (status, b) => throw new IllegalStateException(
-      s"DELETE ${wire.collectionUrl} returned $status: ${b.take(500)}")
   }
 
   /** SERVER-side similarity search (reference get_similar_documents,
@@ -342,8 +260,7 @@ final class QdrantIndexStore(spark: SparkSession, base: String,
       row.put("score", hit.path("score").asDouble())
       rows += row.toString
     }
-    spark.read.schema(schema.add("score", DoubleType))
-      .json(spark.createDataset(rows.toSeq)(Encoders.STRING))
+    rowsOf(schema.add("score", DoubleType), rows.toSeq)
   }
 }
 

@@ -1,9 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
-
-import graft.embed.HttpSupport
 
 /** Serializable wire client for [[RestIndexStore]]'s graft REST dialect —
   * the executor-shippable half (same split as [[QdrantWire]] /
@@ -14,37 +13,22 @@ final case class RestWire(base: String, collection: String,
                           apiKey: Option[String],
                           maxRetries: Int, backoffMs: Long,
                           requestTimeoutMs: Long,
-                          uploadBatchRows: Int) extends Serializable {
+                          uploadBatchRows: Int) extends StoreWire {
 
   def collectionUrl: String = s"$base/collections/$collection"
   def pointsUrl: String = s"$collectionUrl/points"
-
-  @transient private lazy val http = HttpSupport.client(requestTimeoutMs)
-  private def mapper = HttpSupport.mapper
-
-  def send(method: String, url: String, body: Option[String]): (Int, String) =
-    HttpSupport.sendWithRetry(http, method, url, body, apiKey, maxRetries,
-      backoffMs, requestTimeoutMs)
-
-  def expect200(method: String, url: String, body: Option[String]): String =
-    send(method, url, body) match {
-      case (200, b) => b
-      case (status, b) => throw new IllegalStateException(
-        s"$method $url returned $status: ${b.take(500)}")
-    }
 
   /** Batched points POST. The wire append is an UPSERT KEYED BY doc_id
     * (the server replaces an existing id, like qdrant/weaviate points), so
     * a retry after an ambiguous failure (server committed, response lost)
     * rewrites the same rows instead of duplicating them — idempotent.
     */
-  def uploadRowJsons(rows: Iterator[String]): Unit =
-    rows.grouped(uploadBatchRows).foreach { batch =>
-      val root = mapper.createObjectNode()
-      val pts = root.putArray("points")
-      batch.foreach(r => pts.add(mapper.readTree(r)))
-      expect200("POST", pointsUrl, Some(mapper.writeValueAsString(root)))
-    }
+  protected def uploadBatch(batch: Seq[String]): Unit = {
+    val root = mapper.createObjectNode()
+    val pts = root.putArray("points")
+    batch.foreach(r => pts.add(mapper.readTree(r)))
+    expect200("POST", pointsUrl, Some(mapper.writeValueAsString(root)))
+  }
 }
 
 /** [[IndexStore]] connector against a remote REST collection service — the
@@ -78,9 +62,7 @@ final case class RestWire(base: String, collection: String,
   * The collection stores the Spark schema JSON alongside the points, so a
   * fresh session reads rows back with exact types (array<float> vectors
   * survive the JSON round-trip via schema-directed parsing, not inference).
-  * Retry policy is [[HttpSupport]]'s: 429/5xx/IO back off, other 4xx are
-  * surfaced; old-wins upsert semantics are enforced CLIENT-side (anti-join
-  * against existing ids) exactly like [[ParquetIndexStore]].
+  * Retry, upload and old-wins upsert are [[RemoteIndexStore]]'s.
   *
   * Scale posture: reads are driver-mediated (this is a serving-index
   * connector), but WRITES distribute — batches of at least
@@ -95,91 +77,46 @@ final class RestIndexStore(spark: SparkSession, base: String, collection: String
                            maxRetries: Int = 3, backoffMs: Long = 200,
                            requestTimeoutMs: Long = 60000,
                            uploadBatchRows: Int = 500,
-                           executorUploadMinRows: Long = 10000) extends IndexStore {
+                           executorUploadMinRows: Long = 10000)
+    extends RemoteIndexStore(spark, executorUploadMinRows) {
 
-  private val wire = RestWire(base, collection, apiKey, maxRetries, backoffMs,
-    requestTimeoutMs, uploadBatchRows)
-  private def mapper = HttpSupport.mapper
+  protected val wire: RestWire = RestWire(base, collection, apiKey, maxRetries,
+    backoffMs, requestTimeoutMs, uploadBatchRows)
+  protected def collectionUrl: String = wire.collectionUrl
 
-  override def exists: Boolean = wire.send("GET", wire.collectionUrl, None) match {
-    case (200, _) => true
-    case (404, _) => false
-    case (status, b) => throw new IllegalStateException(
-      s"GET ${wire.collectionUrl} returned $status: ${b.take(500)}")
+  /** Stored points, each a document-row JSON. */
+  private def points(): Seq[JsonNode] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[JsonNode]
+    mapper.readTree(wire.expect200("GET", wire.pointsUrl, None)).path("points").forEach(p => buf += p)
+    buf.toSeq
   }
 
   override def read(): DataFrame = {
-    val meta = wire.send("GET", wire.collectionUrl, None) match {
-      case (200, b) => b
-      case (404, _) => throw new IllegalStateException(
-        s"collection $collection does not exist")
-      case (status, b) => throw new IllegalStateException(
-        s"GET ${wire.collectionUrl} returned $status: ${b.take(500)}")
-    }
+    val meta = wire.getOption(collectionUrl).getOrElse(
+      throw new IllegalStateException(s"collection $collection does not exist"))
     val schema = DataType.fromJson(mapper.readTree(meta).path("schema").asText())
       .asInstanceOf[StructType]
-    val body = wire.expect200("GET", wire.pointsUrl, None)
-    val rows = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      mapper.readTree(body).path("points").forEach(p => buf += p.toString)
-      buf.toSeq
-    }
-    spark.read.schema(schema).json(spark.createDataset(rows)(Encoders.STRING))
+    rowsOf(schema, points().map(_.toString))
   }
 
-  override def replace(docs: DataFrame): Unit = {
-    val json = docs.dropDuplicates("doc_id").toJSON.persist()
-    try {
-      val n = json.count() // persisted: count + ship compute the plan once
-      if (n < executorUploadMinRows) {
-        // ONE request: schema and points replace together (server-side atomic),
-        // so a concurrent reader sees either the old collection or the new one
-        // — never the new schema parsed over the old points, and a failed call
-        // leaves the old collection fully intact
-        val body = mapper.createObjectNode()
-        body.put("schema", docs.schema.json)
-        val pts = body.putArray("points")
-        json.collect().foreach(r => pts.add(mapper.readTree(r)))
-        wire.expect200("PUT", wire.collectionUrl, Some(mapper.writeValueAsString(body)))
-      } else {
-        // distributed replace: recreate empty driver-side, append per-partition
-        val body = mapper.createObjectNode()
-        body.put("schema", docs.schema.json)
-        body.putArray("points")
-        wire.expect200("PUT", wire.collectionUrl, Some(mapper.writeValueAsString(body)))
-        val w = wire
-        json.foreachPartition((it: Iterator[String]) => w.uploadRowJsons(it))
-      }
-    } finally json.unpersist(false)
-  }
+  protected def existingIds(): Seq[Long] = points().map(_.path("doc_id").asLong())
 
-  override def upsert(docs: DataFrame): Unit = readOption() match {
-    case None => replace(docs)
-    case Some(existing) =>
-      import org.apache.spark.sql.functions.broadcast
-      insertPrechecked(docs
-        .join(broadcast(existing.select("doc_id")), Seq("doc_id"), "left_anti")
-        .dropDuplicates("doc_id"))
-  }
-
-  /** Conflict-free pre-deduped rows append — no second full-collection
-    * download (the caller already holds the conflict set). Driver-side in
-    * one POST below `executorUploadMinRows`; per-partition from executors
-    * at or above it.
+  /** Below `executorUploadMinRows`, ONE request: schema and points replace
+    * together (server-side atomic), so a concurrent reader sees either the
+    * old collection or the new one — never the new schema parsed over the
+    * old points, and a failed call leaves the old collection fully intact.
+    * At or above it, the schema is PUT with an empty point set and the
+    * points append per partition from executors.
     */
-  override private[graft] def insertPrechecked(inserted: DataFrame): Unit =
-    if (!exists) replace(inserted)
-    else {
-      val json = inserted.toJSON.persist()
-      try {
-        val n = json.count() // persisted: the upsert anti-join computes once
-        if (n > 0) {
-          val w = wire
-          if (n < executorUploadMinRows) w.uploadRowJsons(json.collect().iterator)
-          else json.foreachPartition((it: Iterator[String]) => w.uploadRowJsons(it))
-        }
-      } finally json.unpersist(false)
-    }
+  override def replace(docs: DataFrame): Unit = withJson(docs.dropDuplicates("doc_id")) { (json, n) =>
+    val small = n < executorUploadMinRows
+    val body = mapper.createObjectNode()
+    body.put("schema", docs.schema.json)
+    val pts = body.putArray("points")
+    if (small) json.collect().foreach(r => pts.add(mapper.readTree(r)))
+    wire.expect200("PUT", collectionUrl, Some(mapper.writeValueAsString(body)))
+    if (!small) ship(json, n)
+  }
 
   override def delete(docIds: Seq[Long]): Unit = if (docIds.nonEmpty && exists) {
     val root = mapper.createObjectNode()
@@ -187,11 +124,5 @@ final class RestIndexStore(spark: SparkSession, base: String, collection: String
     docIds.foreach(ids.add)
     wire.expect200("POST", s"${wire.pointsUrl}/delete",
       Some(mapper.writeValueAsString(root)))
-  }
-
-  override def clear(): Unit = wire.send("DELETE", wire.collectionUrl, None) match {
-    case (200, _) | (404, _) => ()
-    case (status, b) => throw new IllegalStateException(
-      s"DELETE ${wire.collectionUrl} returned $status: ${b.take(500)}")
   }
 }

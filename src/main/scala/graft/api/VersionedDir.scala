@@ -15,8 +15,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   root/_FLIP_v00002        install markers: atomic-created AFTER the
   *                            version's data is complete, never mutated;
   *                            active version = newest marker with a dir
-  *   root/_CURRENT            legacy single-file manifest (read-only compat)
+  *   root/v00002.deltas/…     delta sidecars of v00002 (see [[appendDelta]])
   * }}}
+  *
+  * This is the only layout: a root that holds bare `.parquet` files and no
+  * version directory is not a versioned root, and every operation that
+  * lists the root fails on it with an `IllegalStateException` instead of
+  * reading those files or installing a version beside them.
   *
   * Guarantees:
   *  - readers: a reader that resolved a version keeps reading its files;
@@ -40,7 +45,6 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val rootPath = new Path(root)
-  private def manifestPath = new Path(rootPath, "_CURRENT")
 
   /** One read of the root's state: a single `listStatus(root)` gives the
     * active version and the modification time of its install marker, and a
@@ -54,30 +58,19 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     * by ATOMIC CREATE after the version's data is complete and are NEVER
     * overwritten or renamed, so there is no window in which two writers can
     * regress each other (the delete+rename single-manifest scheme this
-    * replaces had an unfixable check-then-act race). Fallbacks, in order:
-    * a legacy `_CURRENT` manifest (pre-marker layouts stay readable), then
-    * the newest version dir (crash between data write and marker create —
-    * the data is complete at that point).
+    * replaces had an unfixable check-then-act race). A root where no
+    * version was ever installed resolves to its newest version dir (a crash
+    * between the first data write and its marker create — the data is
+    * complete at that point); once any version is installed, a dir without
+    * a marker never shadows it.
     */
   def snapshot: VersionedDir.Snapshot = {
-    val f = fs
-    val entries =
-      try f.listStatus(rootPath).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val entries = listRoot()
     val byName = entries.map(s => s.getPath.getName -> s).toMap
     val dirs = versionsIn(entries)
     val marked = byName.keys.filter(_.matches("_FLIP_v\\d+")).map(_.drop("_FLIP_".length))
       .filter(dirs.contains).toSeq.sortBy(_.drop(1).toLong).lastOption
-    val version = marked.orElse {
-      if (byName.contains(manifestPath.getName)) {
-        val in = f.open(manifestPath)
-        try {
-          val v = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          if (v.nonEmpty && dirs.contains(v)) Some(v) else dirs.lastOption
-        } finally in.close()
-      } else dirs.lastOption
-    }
-    version match {
+    marked.orElse(dirs.lastOption) match {
       case None => VersionedDir.Snapshot(None, 0L, Seq.empty)
       case Some(v) =>
         // the marker's mtime tells a re-created version apart from the one
@@ -97,9 +90,20 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     * a cosmetic default; past v99999 names grow a digit and lexicographic
     * order would misorder them).
     */
-  def listVersions: Seq[String] = {
-    val f = fs
-    if (!f.exists(rootPath)) Seq.empty else versionsIn(f.listStatus(rootPath).toSeq)
+  def listVersions: Seq[String] = versionsIn(listRoot())
+
+  /** The root's entries (none when it does not exist), from one listing.
+    * Throws on a root that holds bare parquet files and no version.
+    */
+  private def listRoot(): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val entries =
+      try fs.listStatus(rootPath).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    if (versionsIn(entries).isEmpty &&
+        entries.exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
+      throw new IllegalStateException(s"$root holds bare parquet files and no version " +
+        "directory; it is not a versioned root")
+    entries
   }
 
   private def versionsIn(entries: Seq[org.apache.hadoop.fs.FileStatus]): Seq[String] =
@@ -107,11 +111,6 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
       .filter(_.matches("v\\d+")).sortBy(_.drop(1).toLong)
 
   def exists: Boolean = snapshot.exists
-
-  def read(): DataFrame = currentDir match {
-    case Some(d) => spark.read.parquet(d)
-    case None    => throw new IllegalStateException(s"no version present under $root")
-  }
 
   /** Atomically claim a version or delta name: an atomic create of a marker
     * file fails on collision, so a concurrent writer moves on to the next
@@ -180,9 +179,6 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     require(atomicCreate(f, new Path(rootPath, s"_FLIP_$next")) ||
         f.exists(new Path(rootPath, s"_FLIP_$next")),
       s"could not install flip marker for $root/$next")
-    // a stale legacy manifest would shadow nothing (markers win resolution)
-    // but clean it up so pre-marker readers of this layout don't misresolve
-    if (f.exists(manifestPath)) f.delete(manifestPath, false)
     listVersions.dropRight(keepVersions).foreach { v =>
       f.delete(new Path(rootPath, v), true)
       f.delete(new Path(rootPath, s"$v.deltas"), true) // sidecars die with their base
@@ -253,49 +249,7 @@ final class VersionedDir(spark: SparkSession, val root: String, keepVersions: In
     // a local-FS rename onto an existing dir moves tmp INSIDE it and succeeds
     val dest = new Path(dr, name)
     require(!f.exists(dest), s"delta $root/$v.deltas/$name already exists")
-    require(f.rename(tmp, dest), s"delta rename failed for $root/$v/$name")
-  }
-
-  /** Compact the ACTIVE version into a new version with `targetFileMB`-sized
-    * files (bin-packed read → coalesced write; per partition-dir layouts the
-    * repartition keys on the partition column, keeping one file per dir).
-    * Small-file accretion is the silent killer of long-lived indexes at
-    * scale: every streaming upsert/rebuild cycle writes task-count files,
-    * and a year of micro-batches turns a scan into millions of opens.
-    * Compaction is just `replaceWith` — readers keep their version, the
-    * swap is atomic, old versions prune by `keepVersions`.
-    */
-  def compact(spark: SparkSession, partitionCol: Option[String] = None,
-              targetFileMB: Int = 128, sortCol: Option[String] = None): Unit = {
-    val src = currentDir.getOrElse(
-      throw new IllegalStateException(s"nothing to compact under $root"))
-    val f = fs
-    def dirBytes(p: Path): Long = f.getContentSummary(p).getLength
-    val bytes = dirBytes(new Path(src))
-    val nFiles = math.max(1, (bytes / (targetFileMB.toLong << 20)).toInt +
-      (if (bytes % (targetFileMB.toLong << 20) > 0) 1 else 0))
-    replaceWith { dir =>
-      val df = spark.read.parquet(src)
-      (partitionCol, sortCol) match {
-        case (Some(c), _) =>
-          df.repartition(org.apache.spark.sql.functions.col(c))
-            .write.mode("overwrite").partitionBy(c).parquet(dir)
-        case (None, Some(s)) =>
-          // keep the store's zone-map layout: range-partitioned to the
-          // bin-packed file count, sorted within files → tight min/max
-          df.repartitionByRange(nFiles, org.apache.spark.sql.functions.col(s))
-            .sortWithinPartitions(s).write.mode("overwrite").parquet(dir)
-        case (None, None) =>
-          df.repartition(nFiles).write.mode("overwrite").parquet(dir)
-      }
-      // side tables (_codebooks/_centroids, tiny by design) carry over so
-      // the compacted version stays self-contained
-      f.listStatus(new Path(src)).filter(s => s.isDirectory && s.getPath.getName.startsWith("_"))
-        .foreach { s =>
-          VersionedDir.readSide(spark, s.getPath.toString).coalesce(1)
-            .write.mode("overwrite").parquet(s"$dir/${s.getPath.getName}")
-        }
-    }
+    require(f.rename(tmp, dest), s"delta rename failed for $root/$v.deltas/$name")
   }
 }
 
@@ -318,9 +272,9 @@ object VersionedDir {
     def version: Option[String] = dir.map(d => new Path(d).getName)
   }
 
-  /** Resolve a path that may be a versioned root OR a plain directory: the
-    * active version dir if a manifest/version layout is present, the path
-    * itself otherwise. Readers pin the resolved CONCRETE version dir, so a
+  /** Resolve a versioned root to its active version dir; a root with no
+    * version resolves to itself, so reading it fails the way reading a
+    * missing path does. Readers pin the resolved CONCRETE version dir, so a
     * concurrent `replaceWith` cannot pull files out from under a plan built
     * from the resolved path (within `keepVersions` rebuilds).
     */

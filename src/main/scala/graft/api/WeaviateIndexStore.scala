@@ -2,10 +2,8 @@ package graft.api
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
-
-import graft.embed.HttpSupport
 
 /** Serializable weaviate wire client — the executor-shippable half of
   * [[WeaviateIndexStore]] (same split as [[QdrantWire]]): batch-object
@@ -34,21 +32,10 @@ final case class WeaviateWire(base: String, className: String,
                               apiKey: Option[String],
                               maxRetries: Int, backoffMs: Long,
                               requestTimeoutMs: Long,
-                              uploadBatchRows: Int) extends Serializable {
+                              uploadBatchRows: Int) extends StoreWire {
 
-  @transient private lazy val http = HttpSupport.client(requestTimeoutMs)
-  private def mapper = HttpSupport.mapper
-
-  def send(method: String, url: String, body: Option[String]): (Int, String) =
-    HttpSupport.sendWithRetry(http, method, s"$base$url", body, apiKey,
-      maxRetries, backoffMs, requestTimeoutMs)
-
-  def expect200(method: String, url: String, body: Option[String]): String =
-    send(method, url, body) match {
-      case (200, b) => b
-      case (status, b) => throw new IllegalStateException(
-        s"$method $base$url returned $status: ${b.take(500)}")
-    }
+  /** URL of a `/v1/` API path. */
+  def v1(path: String): String = s"$base/v1/$path"
 
   /** doc_id → deterministic weaviate object UUID (weaviate requires UUID
     * ids; deriving them from doc_id keeps uploads id-keyed and retryable).
@@ -63,46 +50,36 @@ final case class WeaviateWire(base: String, className: String,
     * where-filter deletes, plus the vector for nearVector search.
     */
   def objectOf(rowJson: String): ObjectNode = {
-    val row = mapper.readTree(rowJson)
-    val id = row.path("doc_id")
-    require(id.canConvertToLong,
-      s"document row lacks an integral doc_id: ${rowJson.take(200)}")
-    val vector = row.path("vector")
-    require(vector.isArray,
-      s"document row lacks a vector array column: ${rowJson.take(200)}")
+    val (_, id, vector) = keyedRow(rowJson)
     val o = mapper.createObjectNode()
     o.put("class", className)
-    o.put("id", uuidOf(id.asLong()))
+    o.put("id", uuidOf(id))
     val props = o.putObject("properties")
     props.put("doc_json", rowJson)
-    props.put("embedding_pk", id.asLong())
+    props.put("embedding_pk", id)
     o.set[JsonNode]("vector", vector)
     o
   }
 
-  /** Batched id-keyed batch-objects POST, safe to call from executors.
-    * A real weaviate batch insert reports PER-OBJECT failures inside a 200
-    * response (each element carries result.status / result.errors — e.g. a
-    * vector length mismatch fails only that object), so the response array
-    * is inspected and any FAILED element raises loudly instead of being
-    * silently dropped from the index.
+  /** Id-keyed batch-objects POST. A real weaviate batch insert reports
+    * PER-OBJECT failures inside a 200 response (each element carries
+    * result.status / result.errors — e.g. a vector length mismatch fails
+    * only that object), so the response array is inspected and any FAILED
+    * element raises loudly instead of being silently dropped from the index.
     */
-  def uploadRowJsons(rows: Iterator[String]): Unit =
-    rows.grouped(uploadBatchRows).foreach { batch =>
-      val root = mapper.createObjectNode()
-      val objs = root.putArray("objects")
-      batch.foreach(r => objs.add(objectOf(r)))
-      val resp = expect200("POST", "/v1/batch/objects",
-        Some(mapper.writeValueAsString(root)))
-      val results = mapper.readTree(resp)
-      if (results.isArray) results.forEach { r =>
-        val status = r.path("result").path("status").asText("")
-        if (status == "FAILED")
-          throw new IllegalStateException(
-            s"batch object ${r.path("id").asText()} failed: " +
-              r.path("result").path("errors").toString.take(500))
-      }
+  protected def uploadBatch(batch: Seq[String]): Unit = {
+    val root = mapper.createObjectNode()
+    val objs = root.putArray("objects")
+    batch.foreach(r => objs.add(objectOf(r)))
+    val results = mapper.readTree(expect200("POST", v1("batch/objects"),
+      Some(mapper.writeValueAsString(root))))
+    if (results.isArray) results.forEach { r =>
+      if (r.path("result").path("status").asText("") == "FAILED")
+        throw new IllegalStateException(
+          s"batch object ${r.path("id").asText()} failed: " +
+            r.path("result").path("errors").toString.take(500))
     }
+  }
 }
 
 /** [[IndexStore]] speaking weaviate's LITERAL REST + GraphQL wire protocol —
@@ -128,8 +105,8 @@ final case class WeaviateWire(base: String, className: String,
   * name is sanitized deterministically ([[WeaviateIndexStore.classNameOf]]).
   * The Spark schema JSON travels in the class `description`, so a fresh
   * session reads exact types back. Scale posture matches the qdrant
-  * connector: driver-mediated reads (serving-sized indexes), executor-side
-  * per-partition uploads at or above `executorUploadMinRows`.
+  * connector: driver-mediated reads (serving-sized indexes), uploads and
+  * old-wins upserts as [[RemoteIndexStore]] runs them.
   */
 final class WeaviateIndexStore(spark: SparkSession, base: String,
                                collection: String,
@@ -139,19 +116,12 @@ final class WeaviateIndexStore(spark: SparkSession, base: String,
                                uploadBatchRows: Int = 500,
                                executorUploadMinRows: Long = 10000,
                                listBatchRows: Int = 1000)
-    extends IndexStore with ServerSideSearch {
+    extends RemoteIndexStore(spark, executorUploadMinRows) with ServerSideSearch {
 
   val className: String = WeaviateIndexStore.classNameOf(collection)
-  private val wire = WeaviateWire(base, className, apiKey, maxRetries,
+  protected val wire: WeaviateWire = WeaviateWire(base, className, apiKey, maxRetries,
     backoffMs, requestTimeoutMs, uploadBatchRows)
-  private def mapper = HttpSupport.mapper
-
-  override def exists: Boolean = wire.send("GET", s"/v1/schema/$className", None) match {
-    case (200, _) => true
-    case (404, _) => false
-    case (status, b) => throw new IllegalStateException(
-      s"GET /v1/schema/$className returned $status: ${b.take(500)}")
-  }
+  protected def collectionUrl: String = wire.v1(s"schema/$className")
 
   private def createClass(schema: StructType): Unit = {
     val root = mapper.createObjectNode()
@@ -161,40 +131,21 @@ final class WeaviateIndexStore(spark: SparkSession, base: String,
     val props = root.putArray("properties")
     val pj = props.addObject(); pj.put("name", "doc_json"); pj.putArray("dataType").add("text")
     val pk = props.addObject(); pk.put("name", "embedding_pk"); pk.putArray("dataType").add("int")
-    wire.expect200("POST", "/v1/schema", Some(mapper.writeValueAsString(root)))
-  }
-
-  /** Same single-computation upload discipline as the qdrant connector:
-    * persist the JSON rows across the count and the ship.
-    */
-  private def upload(docs: DataFrame): Unit = {
-    val json = docs.toJSON.persist()
-    try {
-      val n = json.count()
-      if (n > 0) {
-        val w = wire
-        if (n < executorUploadMinRows) w.uploadRowJsons(json.collect().iterator)
-        else json.foreachPartition((it: Iterator[String]) => w.uploadRowJsons(it))
-      }
-    } finally json.unpersist(false)
+    wire.expect200("POST", wire.v1("schema"), Some(mapper.writeValueAsString(root)))
   }
 
   override def replace(docs: DataFrame): Unit = {
     val d = docs.dropDuplicates("doc_id")
     // reference rebuild_index: delete_class + create_class + upsert
-    // (provider.py:35-44); like it, not atomic. 404-tolerant, but a real
-    // failure surfaces here instead of as a confusing duplicate-class error
-    wire.send("DELETE", s"/v1/schema/$className", None) match {
-      case (200, _) | (404, _) => ()
-      case (status, b) => throw new IllegalStateException(
-        s"DELETE /v1/schema/$className returned $status: ${b.take(500)}")
-    }
+    // (provider.py:35-44); like it, not atomic. A real delete failure
+    // surfaces here instead of as a confusing duplicate-class error
+    wire.deleteIfExists(collectionUrl)
     createClass(d.schema)
     upload(d)
   }
 
   private def storedSchema(): StructType = {
-    val body = wire.expect200("GET", s"/v1/schema/$className", None)
+    val body = wire.expect200("GET", collectionUrl, None)
     val json = mapper.readTree(body).path("description").asText()
     if (json.isEmpty) throw new IllegalStateException(
       s"class $className carries no graft schema description — not a graft-written class?")
@@ -211,7 +162,7 @@ final class WeaviateIndexStore(spark: SparkSession, base: String,
       val inc = include.map(i => s"&include=$i").getOrElse("")
       val afterQ = after.map(a => s"&after=$a").getOrElse("")
       val body = wire.expect200("GET",
-        s"/v1/objects?class=$className&limit=$listBatchRows$inc$afterQ", None)
+        wire.v1(s"objects?class=$className&limit=$listBatchRows$inc$afterQ"), None)
       val objs = mapper.readTree(body).path("objects")
       var last: Option[String] = None
       objs.forEach { o => f(o); last = Some(o.path("id").asText()) }
@@ -227,33 +178,16 @@ final class WeaviateIndexStore(spark: SparkSession, base: String,
     listObjects(include = None) { o =>
       rows += o.path("properties").path("doc_json").asText()
     }
-    spark.read.schema(schema).json(spark.createDataset(rows.toSeq)(Encoders.STRING))
+    rowsOf(schema, rows.toSeq)
   }
 
-  private def existingIds(): Seq[Long] = {
+  protected def existingIds(): Seq[Long] = {
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     listObjects(include = None) { o =>
       ids += o.path("properties").path("embedding_pk").asLong()
     }
     ids.toSeq
   }
-
-  /** Old-wins upsert, client-enforced like the qdrant connector (weaviate's
-    * batch add replaces by object id — new-wins).
-    */
-  override def upsert(docs: DataFrame): Unit =
-    if (!exists) replace(docs)
-    else {
-      import org.apache.spark.sql.functions.broadcast
-      import spark.implicits._
-      val ids = existingIds().toDF("doc_id")
-      insertPrechecked(docs
-        .join(broadcast(ids), Seq("doc_id"), "left_anti")
-        .dropDuplicates("doc_id"))
-    }
-
-  override private[graft] def insertPrechecked(inserted: DataFrame): Unit =
-    if (!exists) replace(inserted) else upload(inserted)
 
   /** Batch delete by where-filter — `ContainsAny` over the embedding_pk
     * property with the array-typed `valueIntArray` operand weaviate's
@@ -270,14 +204,8 @@ final class WeaviateIndexStore(spark: SparkSession, base: String,
     where.put("operator", "ContainsAny")
     val vals = where.putArray("valueIntArray")
     docIds.foreach(vals.add)
-    wire.expect200("DELETE", "/v1/batch/objects",
+    wire.expect200("DELETE", wire.v1("batch/objects"),
       Some(mapper.writeValueAsString(root)))
-  }
-
-  override def clear(): Unit = wire.send("DELETE", s"/v1/schema/$className", None) match {
-    case (200, _) | (404, _) => ()
-    case (status, b) => throw new IllegalStateException(
-      s"DELETE /v1/schema/$className returned $status: ${b.take(500)}")
   }
 
   /** SERVER-side similarity search: GraphQL `nearVector` with the threshold
@@ -300,7 +228,7 @@ final class WeaviateIndexStore(spark: SparkSession, base: String,
       " { doc_json embedding_pk _additional { distance vector } } } }"
     val root = mapper.createObjectNode()
     root.put("query", gql)
-    val resp = wire.expect200("POST", "/v1/graphql",
+    val resp = wire.expect200("POST", wire.v1("graphql"),
       Some(mapper.writeValueAsString(root)))
     val tree = mapper.readTree(resp)
     val errors = tree.path("errors")
@@ -312,8 +240,7 @@ final class WeaviateIndexStore(spark: SparkSession, base: String,
       row.put("score", 1.0 - hit.path("_additional").path("distance").asDouble())
       rows += row.toString
     }
-    spark.read.schema(schema.add("score", DoubleType))
-      .json(spark.createDataset(rows.toSeq)(Encoders.STRING))
+    rowsOf(schema.add("score", DoubleType), rows.toSeq)
   }
 }
 

@@ -35,11 +35,10 @@ import graft.embed.HashEmbeddingBackend
   * Huffman + IDCT), AVI video frames decode for real both
   * uncompressed-DIB and MJPEG ([[AviCodec]]), and MPEG-1 VIDEO decodes
   * I-, P- AND B-pictures with real forward/bidirectional motion
-  * compensation and presentation reordering ([[Mpeg1Codec]]). What
-  * remains behind [[StubCodec]]'s deterministic fakes: video codec
+  * compensation and presentation reordering ([[Mpeg1Codec]]). Video codec
   * families we don't parse at all (H.26x/MP4-payload pixels — the MP4
-  * box walk itself is real) — a documented README descope; swap in a
-  * real decoder (e.g. javacv) to productionize, nothing else changes.
+  * box walk itself is real) decode to nothing — a documented README
+  * descope; swap in a real decoder (e.g. javacv) to productionize.
   *
   * Scale notes: media bytes never leave their partition (mapPartitions, no
   * shuffle); metadata extraction is projection-shaped; feature vectors are
@@ -54,6 +53,29 @@ object Multimodal {
     StructField("n_frames", IntegerType),   // audio sample frames; 1 for stills
     StructField("sample_rate", IntegerType), // audio; null for images
     StructField("channels", IntegerType)))
+
+  private def le16(b: Array[Byte], i: Int): Int =
+    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
+  private def le32(b: Array[Byte], i: Int): Int =
+    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8) | ((b(i + 2) & 0xFF) << 16) | ((b(i + 3) & 0xFF) << 24)
+
+  /** Walk the chunks of a RIFF/WAVE container, calling `chunk(id, offset,
+    * size)` for each one whose 8-byte chunk header lies in `b`; anything
+    * that is not RIFF/WAVE has no chunks. Chunk sizes are UNSIGNED u32 and
+    * attacker-controlled: the walk keeps Long offsets, so a size near 2^32
+    * ends it (offset past length) instead of wrapping Int-negative and
+    * re-entering at a garbage offset (out-of-bounds throw on hostile input).
+    */
+  private def riffChunks(b: Array[Byte])(chunk: (String, Int, Long) => Unit): Unit =
+    if (b.length >= 12 && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E') {
+      var i = 12L
+      while (i + 8 <= b.length) {
+        val o = i.toInt
+        val size = le32(b, o + 4).toLong & 0xFFFFFFFFL
+        chunk(new String(b, o, 4, "US-ASCII"), o, size)
+        i += 8 + size + (size & 1L) // chunks are word-aligned
+      }
+    }
 
   /** ======= REAL header parsing (no external libs) =======
     * Best-effort: the format is sniffed from magic bytes; fields that can't
@@ -92,10 +114,6 @@ object Multimodal {
       ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
     private def be32(b: Array[Byte], i: Int): Int =
       ((b(i) & 0xFF) << 24) | ((b(i + 1) & 0xFF) << 16) | ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
-    private def le16(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-    private def le32(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8) | ((b(i + 2) & 0xFF) << 16) | ((b(i + 3) & 0xFF) << 24)
 
     /** PNG: 8-byte signature, then the IHDR chunk (must be first): 4-byte
       * length, "IHDR", width/height as big-endian u32 (PNG spec §11.2.2).
@@ -132,27 +150,16 @@ object Multimodal {
       * blockAlign = sample-frame count (RIFF WAVE spec).
       */
     private def wav(b: Array[Byte]): Row = {
-      if (b.length < 12 || !(b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'))
-        return Row("wav", null, null, null, null, null)
       var channels: Any = null; var rate: Any = null; var frames: Any = null
       var blockAlign = 0
-      // Chunk sizes are UNSIGNED u32 and attacker-controlled: walk with Long
-      // offsets so a size near 2^32 ends the walk (offset past length)
-      // instead of wrapping Int-negative and re-entering the loop at a
-      // garbage offset (out-of-bounds throw on hostile input).
-      var i = 12L
-      while (i + 8 <= b.length) {
-        val o = i.toInt
-        val id = new String(b, o, 4, "US-ASCII")
-        val size = le32(b, o + 4).toLong & 0xFFFFFFFFL
-        if (id == "fmt " && i + 8 + 16 <= b.length) {
+      riffChunks(b) { (id, o, size) =>
+        if (id == "fmt " && o + 8 + 16 <= b.length) {
           channels = le16(b, o + 10)
           rate = le32(b, o + 12)
           blockAlign = le16(b, o + 20)
         } else if (id == "data" && blockAlign > 0) {
           frames = math.min(size / blockAlign, Int.MaxValue.toLong).toInt // header-declared count
         }
-        i += 8 + size + (size & 1L) // chunks are word-aligned
       }
       Row("wav", null, null, frames, rate, channels)
     }
@@ -325,41 +332,26 @@ object Multimodal {
     * frame-level feature extraction here are REAL signal processing, not a
     * stub. MPEG-1 Layer I/II/III audio and MPEG-1 video decode for real
     * too ([[Mp1Codec]]/[[Mp2Codec]]/[[Mp3Codec]]/[[Mpeg1Codec]]); only
-    * H.26x/MP4-payload video pixels remain behind [[StubCodec]].
+    * H.26x/MP4-payload video pixels are not decoded.
     */
   object PcmCodec {
     final case class Pcm(channels: Int, sampleRate: Int, bitsPerSample: Int,
                          samples: Array[Float]) // interleaved, normalized [-1, 1]
 
-    private def le16(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-    private def le32(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8) | ((b(i + 2) & 0xFF) << 16) | ((b(i + 3) & 0xFF) << 24)
-
     private final case class Header(fmt: Int, channels: Int, rate: Int,
                                     bits: Int, dataOff: Int, dataLen: Int)
 
     private def parseHeader(b: Array[Byte]): Option[Header] = {
-      if (b.length < 12 || HeaderCodec.sniffFormat(b) != "wav" ||
-          !(b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')) return None
+      if (HeaderCodec.sniffFormat(b) != "wav") return None
       var fmt = 0; var channels = 0; var rate = 0; var bits = 0
       var dataOff = -1; var dataLen = 0
-      // Long offsets + unsigned u32 sizes: a hostile declared size walks the
-      // offset past the buffer and exits cleanly instead of wrapping Int-
-      // negative and indexing out of bounds (decode contract: garbage → None,
-      // never a thrown executor error).
-      var i = 12L
-      while (i + 8 <= b.length) {
-        val o = i.toInt
-        val id = new String(b, o, 4, "US-ASCII")
-        val size = le32(b, o + 4).toLong & 0xFFFFFFFFL
-        if (id == "fmt " && i + 8 + 16 <= b.length) {
+      riffChunks(b) { (id, o, size) =>
+        if (id == "fmt " && o + 8 + 16 <= b.length) {
           fmt = le16(b, o + 8); channels = le16(b, o + 10)
           rate = le32(b, o + 12); bits = le16(b, o + 22)
         } else if (id == "data") {
           dataOff = o + 8; dataLen = math.min(size, (b.length - dataOff).toLong).toInt
         }
-        i += 8 + size + (size & 1L)
       }
       // integer PCM (format 1): 8-bit unsigned, 16/24/32-bit signed LE;
       // IEEE float PCM (format 3): 32-bit LE — the full uncompressed WAV
@@ -456,22 +448,6 @@ object Multimodal {
     }
   }
 
-  /** ======= STUB: deterministic fake decode =======
-    * A real implementation would decode pixels/samples. The fake derives
-    * frame bytes deterministically from the input so tests are stable.
-    */
-  object StubCodec {
-    def sniffFormat(bytes: Array[Byte]): String = HeaderCodec.sniffFormat(bytes)
-    /** "Decode" a frame: deterministic byte slice standing in for pixels. */
-    def sampleFrames(bytes: Array[Byte], everyN: Int): Seq[Array[Byte]] = {
-      val nFrames = 1 + bytes.length % 32
-      (0 until nFrames by everyN).map { f =>
-        val start = (f * 7) % math.max(1, bytes.length)
-        bytes.slice(start, math.min(bytes.length, start + 64))
-      }
-    }
-  }
-
   /** Extract typed metadata from a binary media column by REAL header
     * parsing ([[HeaderCodec]]). Partition-local; batch-shaped like a
     * Pandas-UDF `mapInPandas` (iterator of batches in, iterator out) but in
@@ -525,25 +501,19 @@ object Multimodal {
       .orElse(GifCodec.decodeFrames(bytes).map(_.frames))
       .orElse(Mpeg1Codec.decode(bytes).map(_.frames)) // I + P (forward MC)
 
-  /** Frame sampling for "video" bytes: one output row per sampled frame.
-    * Media expansion happens within the partition; only (id, frame_index,
-    * frame feature) rows flow on. Uncompressed-DIB / MJPEG AVI and
-    * animated GIF decode for REAL ([[videoFrames]] — frame bytes are the
-    * top-down RGB pixels); anything else falls back to [[StubCodec]]'s
-    * deterministic stand-in.
+  /** Frame sampling for "video" bytes: one output row per sampled frame
+    * (every `everyN`th) of a decodable video ([[videoFrames]]: AVI, animated
+    * GIF, MPEG-1), the frame bytes being its top-down RGB pixels. Media
+    * expansion happens within the partition; only (id, frame_index, frame)
+    * rows flow on. Undecodable, empty and null blobs yield no rows.
     */
   def sampleFrames(df: DataFrame, idCol: String, binaryCol: String = "media",
                    everyN: Int = 4): DataFrame =
     blobRows(df, idCol, binaryCol, Seq(
         StructField("frame_index", IntegerType),
         StructField("frame", BinaryType))) { (id, bytes) =>
-      videoFrames(bytes) match {
-        case Some(frames) =>
-          (0 until frames.length by everyN).iterator.map(f => Row(id, f, frames(f).pixels))
-        case None =>
-          StubCodec.sampleFrames(bytes, everyN).zipWithIndex.iterator.map {
-            case (frame, i) => Row(id, i, frame)
-          }
+      videoFrames(bytes).iterator.flatMap { frames =>
+        (0 until frames.length by everyN).iterator.map(f => Row(id, f, frames(f).pixels))
       }
     }
 
@@ -552,8 +522,7 @@ object Multimodal {
     * frame (every `everyN`th) with the [[imagePixelStats]] column shape
     * plus `frame_index` — frame sampling + feature extraction as one
     * in-partition pass, only ~48 B/frame ever leaving the partition.
-    * Undecodable/corrupt/null rows yield nothing (the stub path is for
-    * shape-testing, not stats).
+    * Undecodable/corrupt/null rows yield nothing.
     */
   def videoFrameStats(df: DataFrame, idCol: String, binaryCol: String = "media",
                       everyN: Int = 1): DataFrame = {

@@ -7,7 +7,9 @@ import graft.TestSpark
 
 /** Versioned parquet store: atomic swaps (concurrent readers never observe a
   * missing index), deterministic old-wins upsert (reference conflict-ignore,
-  * pgvector provider.py:65-72), version pruning, legacy-layout read.
+  * pgvector provider.py:65-72), version pruning, and the one on-disk layout:
+  * the installed version wins over an unflipped dir, a never-installed root
+  * resolves to its newest dir, and a root of bare parquet files is rejected.
   */
 class IndexStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -171,7 +173,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(dir.currentVersion.contains("v100000"))       // no-manifest fallback = newest
     dir.replaceWith(d => docs(1L -> "next").write.parquet(d))
     assert(dir.currentVersion.contains("v100001"))       // derives past the 5-digit width
-    assert(dir.read().select("content").as[String].head() == "next")
+    assert(spark.read.parquet(dir.currentDir.get).select("content").as[String].head() == "next")
   }
 
   test("racing writers reserve distinct version dirs (no clobber)") {
@@ -342,12 +344,45 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(stored == Seq(10L, 11L), s"one survivor per id, got $stored")
   }
 
-  test("legacy flat parquet layout is still readable") {
+  // one on-disk layout: parquet written straight under the root (no
+  // version directory) is not an index, and no operation may read it as
+  // one or install a version beside it
+  test("a root holding bare parquet files fails loudly on exists, read and upsert and writes nothing") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-store").toString
-    docs(7L -> "legacy").write.parquet(s"$tmp/flat")
+    docs(7L -> "bare").write.parquet(s"$tmp/flat")
+    def listing() = new java.io.File(s"$tmp/flat").list().toSeq.sorted
+    val before = listing()
     val store = new ParquetIndexStore(spark, s"$tmp/flat")
+    for ((what, op) <- Seq[(String, () => Any)](
+        "exists" -> (() => store.exists),
+        "read" -> (() => store.read()),
+        "upsert" -> (() => store.upsert(docs(8L -> "new"))))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("bare parquet"), s"$what: ${e.getMessage}")
+    }
+    assert(listing() == before, "a rejected operation wrote under the root")
+  }
+
+  test("a version dir written without its flip marker does not shadow the installed version") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-store").toString
+    val store = new ParquetIndexStore(spark, s"$tmp/crash")
+    store.replace(docs(1L -> "installed"))
+    // a writer that crashed after its data write and before its marker create
+    docs(2L -> "unflipped").write.parquet(s"$tmp/crash/v00002")
+    val dir = new VersionedDir(spark, s"$tmp/crash")
+    assert(dir.listVersions == Seq("v00001", "v00002"))
+    assert(dir.currentVersion.contains("v00001"))
+    assert(store.read().select("content").as[String].collect().toSeq == Seq("installed"))
+  }
+
+  test("a root where no version was ever installed resolves to its newest dir") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-store").toString
+    docs(1L -> "older").write.parquet(s"$tmp/unflipped/v00001")
+    docs(2L -> "newest").write.parquet(s"$tmp/unflipped/v00002")
+    val store = new ParquetIndexStore(spark, s"$tmp/unflipped")
+    assert(new VersionedDir(spark, s"$tmp/unflipped").currentVersion.contains("v00002"))
     assert(store.exists)
-    assert(store.read().select("doc_id").as[Long].head() == 7L)
+    assert(store.read().select("content").as[String].collect().toSeq == Seq("newest"))
   }
 
   // readSide's flat-layout contract: side tables are written coalesce(1),

@@ -1038,7 +1038,7 @@ class VectorIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("page cache: filtered searches, the in-memory store and the legacy flat layout run jobs on every repeat") {
+  test("page cache: filtered searches and the in-memory store run jobs on every repeat") {
     val lsh = SearchMode.Lsh(bits = 4, maxHamming = 1)
     val idx = annIndex("cache_off", Seq(lsh))
     idx.rebuild(annSource)
@@ -1048,20 +1048,16 @@ class VectorIndexSpec extends AnyFunSuite {
       idx.search(q, k = 3, mode = m, filter = Some(pred))
       assert(jobsDuring(idx.search(q, k = 3, mode = m, filter = Some(pred))) >= 1, s"filtered $m")
     }
-    // stores that give no version token
+    // a store that gives no version token
     val tmp = java.nio.file.Files.createTempDirectory("graft-cache-off").toString
-    val inMemory = new VectorIndex(spark, idx.config, idx.backend, idx.chatBackend, s"$tmp/mem",
+    val h = new VectorIndex(spark, idx.config, idx.backend, idx.chatBackend, s"$tmp/mem",
       "page", "id", storeOverride = Some(new InMemoryIndexStore(spark)))
-    inMemory.rebuild(annSource)
-    idx.documents.write.parquet(s"$tmp/flat")
-    val flat = new VectorIndex(spark, idx.config, idx.backend, idx.chatBackend, s"$tmp/flat", "page", "id")
-    for ((name, h) <- Seq("in-memory" -> inMemory, "legacy flat" -> flat)) {
-      h.search(q, k = 3); h.query(q, sourcesLimit = 3); h.findSimilar("page:17", k = 3)
-      assert(jobsDuring(h.search(q, k = 3)) >= 1, s"$name search")
-      assert(jobsDuring(h.query(q, sourcesLimit = 3)) >= 1, s"$name query")
-      assert(jobsDuring(h.findSimilar("page:17", k = 3)) >= 1, s"$name findSimilar")
-      assert(h.pageCacheSize == ((0, 0)), name)
-    }
+    h.rebuild(annSource)
+    h.search(q, k = 3); h.query(q, sourcesLimit = 3); h.findSimilar("page:17", k = 3)
+    assert(jobsDuring(h.search(q, k = 3)) >= 1, "in-memory search")
+    assert(jobsDuring(h.query(q, sourcesLimit = 3)) >= 1, "in-memory query")
+    assert(jobsDuring(h.findSimilar("page:17", k = 3)) >= 1, "in-memory findSimilar")
+    assert(h.pageCacheSize == ((0, 0)))
   }
 
   test("page cache: 8 threads on one handle get brute-force answers, within the cache's bounds") {

@@ -96,10 +96,10 @@ class AviCodecSpec extends AnyFunSuite {
     assert(sampled.map(_.getLong(1)).toSeq == (0 until nf by 2).map(_.toLong))
   }
 
-  test("sampleFrames uses REAL AVI frames when decodable, stub otherwise") {
+  test("sampleFrames uses REAL AVI frames when decodable, no rows otherwise") {
     val id = 9L
     val df = Seq((id, graft.SparkEntry.synthAvi(id)),
-      (99L, "opaque blob for the stub path".getBytes))
+      (99L, "opaque blob no codec decodes".getBytes))
       .toDF("doc_id", "media")
     val rows = Multimodal.sampleFrames(df, "doc_id", everyN = 1).collect()
     val (w, h, nf) = ((4 + id % 5).toInt, (3 + id % 4).toInt, (2 + id % 3).toInt)
@@ -108,7 +108,7 @@ class AviCodecSpec extends AnyFunSuite {
     val f0 = real.find(_.getInt(1) == 0).get.getAs[Array[Byte]](2)
     assert(f0.length == w * h * 3, "frame bytes are the raw RGB pixels")
     assert((f0(0) & 0xFF) == pxVal(id, 0, 0))
-    assert(rows.exists(_.getLong(0) == 99L), "non-AVI still flows through the stub")
+    assert(!rows.exists(_.getLong(0) == 99L), "an undecodable blob yields no frames")
   }
 
   test("video tag route in mediaDedup: identical videos collapse, re-cuts do not") {

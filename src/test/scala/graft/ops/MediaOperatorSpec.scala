@@ -59,6 +59,9 @@ class MediaOperatorSpec extends AnyFunSuite {
       "id BIGINT,frame_index BIGINT,width BIGINT,height BIGINT,n_px BIGINT," +
         "px_sum BIGINT,px_wsum BIGINT,px_min BIGINT,px_max BIGINT",
         "1a405ecb9f87b3c00d295624144487ce51e3cefa420bc5f034d2fa29c6903d03"),
+    ("sampleFrames", Multimodal.sampleFrames(_, "id", everyN = 2),
+      "id BIGINT,frame_index INT,frame BINARY",
+        "69071f97b9efc19f010badebb0c30fba82c878f9e2db5579670b7b9a29df14d7"),
     ("audioFrameFeatures", Multimodal.audioFrameFeatures(_, "id", frameSize = 256),
       "id BIGINT,frame_index INT,rms FLOAT,zcr FLOAT,peak FLOAT",
         "a215d49b225ab289e98a3961f5b28344bad1e82fe9c5c0deebd5e762f1a1edf1"),
@@ -137,16 +140,6 @@ class MediaOperatorSpec extends AnyFunSuite {
       val got = op(hostile).select("id", "media_fp").collect().map(r => (r.getLong(0), r.get(1)))
       assert(got.sortBy(_._1).toSeq == Seq((1L, null), (2L, null), (3L, null)))
     }
-  }
-
-  test("sampleFrames: pinned schema and digest; only a null blob yields no frames") {
-    val out = Multimodal.sampleFrames(media, "id", everyN = 2)
-    assert(out.schema.toDDL == "id BIGINT,frame_index INT,frame BINARY")
-    assert(digest(out) == "b7daafc9c00a85d5110d040797c4bfd65b1039ff6d5ebf4df037842e797d7c50")
-    // undecodable bytes fall back to the stub's deterministic stand-in frames
-    val got = Multimodal.sampleFrames(hostile, "id", everyN = 2)
-      .select("id", "frame_index").collect().map(r => (r.getLong(0), r.getInt(1)))
-    assert(got.sorted.toSeq == Seq((2L, 0), (3L, 0)))
   }
 
   test("extractMeta: pinned schema and digest; hostile blobs keep their row") {

@@ -2146,11 +2146,12 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("sampleFrames expands video bytes into frame rows") {
-    val frames = Multimodal.sampleFrames(media, "media_id", everyN = 2)
-    assert(frames.count() > 0)
+    // synthAvi(i) holds 2 + i % 3 frames; everyN = 2 keeps frames 0, 2, ...
+    val videos = Seq(1L, 2L, 3L).map(i => (i, graft.SparkEntry.synthAvi(i))).toDF("media_id", "media")
+    val frames = Multimodal.sampleFrames(videos, "media_id", everyN = 2)
     val perDoc = frames.groupBy("media_id").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(perDoc.keySet == Set(1L, 2L, 3L))
+    assert(perDoc == Map(1L -> 2L, 2L -> 2L, 3L -> 1L))
   }
 
   test("extractFeatures yields fixed-dim deterministic vectors") {

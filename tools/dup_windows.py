@@ -6,12 +6,15 @@ comment-only and longer than 3 characters. Per file, prints the number of
 distinct windows that occur more than once, and the number of lines that are
 extra copies (lines covered by a window's second and later occurrences).
 
+A directory argument stands for the `*.scala` files under it, recursively, in
+sorted path order.
+
 Given more than one file, also prints one `across files:` line: the number of
 distinct windows that occur in two or more of the files, and the number of
 lines their occurrences cover outside the first file (in argument order) that
 holds them.
 
-Usage: dup_windows.py FILE...
+Usage: dup_windows.py FILE|DIR...
 """
 import os
 import sys
@@ -56,17 +59,26 @@ def cross_file_windows(paths):
     return len(shared), len(extra - first)
 
 
+def expand(arg):
+    """The files an argument names: itself, or a directory's *.scala files."""
+    if not os.path.isdir(arg):
+        return [arg]
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(arg)
+                  for f in fs if f.endswith(".scala"))
+
+
 if __name__ == "__main__":
-    paths = sys.argv[1:]
-    missing = [p for p in paths if not p.startswith("-") and not os.path.isfile(p)]
-    if not paths or missing or any(p.startswith("-") for p in paths):
+    args = sys.argv[1:]
+    paths = [p for a in args if not a.startswith("-") for p in expand(a)]
+    missing = [p for p in paths if not os.path.isfile(p)]
+    if not paths or missing or any(a.startswith("-") for a in args):
         for p in missing:
-            print(f"not a file: {p}", file=sys.stderr)
+            print(f"not a file or directory: {p}", file=sys.stderr)
         print(__doc__.strip(), file=sys.stderr)
         sys.exit(2)
-    for p in sys.argv[1:]:
+    for p in paths:
         n, extra = dup_windows(p)
         print(f"{p}: repeated_windows={n} extra_copy_lines={extra}")
-    if len(sys.argv) > 2:
-        n, extra = cross_file_windows(sys.argv[1:])
+    if len(paths) > 1:
+        n, extra = cross_file_windows(paths)
         print(f"across files: repeated_windows={n} extra_copy_lines={extra}")
