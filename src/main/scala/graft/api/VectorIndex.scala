@@ -5,22 +5,26 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, If, InSet, Literal, Round}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructType}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, CaseWhen, Cast, EqualTo, Expression, If, InSet,
+  Literal, Round, UnaryMinus, UnsafeArrayData}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, FloatType, LongType, StructType}
 
 import graft.core.{IndexConfig, Metric}
 import graft.embed.{ChatBackend, EchoChatBackend, EmbeddingBackend, HashEmbeddingBackend}
-import graft.ops.SimilaritySearch
+import graft.functions.{BqHammingExpr, PqAdcExpr, SqAdcExpr}
+import graft.ops.{BinaryQuantization => BQ, ProductQuantization => PQ, ScalarQuantization => SQ, SimilaritySearch}
 import graft.pipeline.IndexBuild
 import graft.query.{Retrieval, VersionScan}
 
 /** How [[VectorIndex.search]] matches candidates. `Exact` (the default, and
   * the reference's own posture — its numpy provider is a full scan,
   * storage/numpy/provider.py:38-59) scans every vector. The ANN modes
-  * query the bucket/cell-partitioned side indexes maintained at
-  * rebuild/update/upsert/delete time — partition-PRUNED reads
-  * ([[graft.ops.SimilaritySearch.lshTopKPruned]] / `ivfTopKPruned`), the
-  * 100 TB path. ANN modes score cosine (rerank convention).
+  * query the side indexes maintained at rebuild/update/upsert/delete time:
+  * a miss reads only the buckets or cells its probe selects (or, for SQ
+  * and BQ, the whole codes relation, and for HNSW the shard graphs), each
+  * read planned once per index version. ANN modes score cosine (rerank
+  * convention).
   */
 sealed trait SearchMode
 object SearchMode {
@@ -73,8 +77,9 @@ object SearchMode {
   *   index.rebuild_index()                  -> index.rebuild(sourceDf)
   *   provider.upsert/delete/clear           -> index.upsert / delete / clear
   *
-  * The index is a parquet Document table at `indexPath`; all query methods
-  * are lazy DataFrames (Catalyst plans them; see PLANS.md §1-§3).
+  * The index is a parquet Document table at `indexPath`. Every query method
+  * reads its bounded candidate page eagerly and returns a DataFrame over the
+  * finished rows, so collecting the result runs no further job.
   */
 final class VectorIndex(
     val spark: SparkSession,
@@ -209,7 +214,6 @@ final class VectorIndex(
     */
   def refreshAnn(): Unit = if (ann.nonEmpty && store.exists) {
     import org.apache.spark.sql.functions.col
-    import graft.ops.{BinaryQuantization => BQ, ProductQuantization => PQ, ScalarQuantization => SQ}
     val docs = store.read()
     annModes.foreach { m =>
       val root = annRoot(m.getClass)
@@ -263,7 +267,7 @@ final class VectorIndex(
   private def pqFrame(assigned: DataFrame, centroids: DataFrame,
                       residual: Boolean): (DataFrame, String) =
     if (!residual) (assigned, "vector")
-    else (graft.ops.ProductQuantization.residualize(assigned, centroids, itemVec = "vector"), "residual")
+    else (PQ.residualize(assigned, centroids, itemVec = "vector"), "residual")
 
   /** Incremental ANN maintenance (the 100 TB mutation path): changed rows
     * are assigned against the EXISTING structures — LSH hyperplanes are
@@ -272,11 +276,10 @@ final class VectorIndex(
     * versioned layout ([[VersionedDir.appendDelta]]); removed ids become
     * tombstones. Search merges deltas new-wins over the pruned base scan.
     * A full retrain (re-seeded centroids/codebooks + rewrite) happens only
-    * on [[rebuild]]/[[update]] or when `foldEvery` deltas accumulate —
-    * never on a 1-row upsert/delete.
+    * on [[rebuild]]/[[update]] or when [[VectorIndex.AnnFoldEvery]] deltas
+    * accumulate on a root — never on a 1-row upsert/delete.
     */
-  def refreshAnnIncremental(changedDocs: DataFrame, removedIds: DataFrame,
-                            foldEvery: Int = 10): Unit = if (ann.nonEmpty && store.exists) {
+  def refreshAnnIncremental(changedDocs: DataFrame, removedIds: DataFrame): Unit = if (ann.nonEmpty && store.exists) {
     import org.apache.spark.sql.functions._
     import graft.functions.vector.{bq_encode, nearest_centroid, pq_encode, sq_encode}
     // one listing per root serves the missing-base check, the side tables
@@ -303,7 +306,7 @@ final class VectorIndex(
         case IvfPqMode(_, _, pm, ksub, _, _, residual) =>
           // encoded in the assigned cell's frame for the residual form (the
           // FAISS IVFPQ add path)
-          val cfg = graft.ops.ProductQuantization.PqConfig(config.dims, pm, ksub)
+          val cfg = PQ.PqConfig(config.dims, pm, ksub)
           val (cvs, cids) = v.centroids
           val (framed, vec) = pqFrame(
             changed.withColumn("cell", nearest_centroid(col("vector"), cvs, cids)), v.centroidsDf, residual)
@@ -325,7 +328,7 @@ final class VectorIndex(
     // amortized cost of staying incremental between folds. Each root holds
     // the deltas of its snapshot plus the ones just appended to it.
     val pending = roots.groupBy(identity).map { case (r, appended) => snaps(r).deltas.size + appended.size }
-    if (pending.exists(_ >= foldEvery)) refreshAnn()
+    if (pending.exists(_ >= VectorIndex.AnnFoldEvery)) refreshAnn()
   }
 
   private def annDeltaWrite(root: String, rows: DataFrame): Unit =
@@ -357,9 +360,8 @@ final class VectorIndex(
   /** One resolved version of an ANN side index: everything a search or an
     * incremental write reads from it — the relation pinned to the concrete
     * version dir, the side tables collected to the driver, the merged delta
-    * overlay, and for the LSH, IVF and HNSW routes the planned reads their
-    * misses run — resolved on first use and then reused for as long as the
-    * root's snapshot stays the same.
+    * overlay, and the planned reads every miss runs — resolved on first use
+    * and then reused for as long as the root's snapshot stays the same.
     */
   private final class AnnVersion(val snapshot: VersionedDir.Snapshot, dir: String,
                                  layout: VectorIndex.AnnLayout) {
@@ -367,20 +369,21 @@ final class VectorIndex(
     lazy val centroidsDf: DataFrame = VersionedDir.readSide(spark, s"$dir/_centroids")
     lazy val centroids: (Array[Array[Float]], Array[Long]) =
       SimilaritySearch.collectCentroids(centroidsDf)
-    private lazy val codebookRows = graft.ops.ProductQuantization.codebookRows(
-      VersionedDir.readSide(spark, s"$dir/_codebooks"))
-    def codebooks(cfg: graft.ops.ProductQuantization.PqConfig): Array[Array[Array[Float]]] =
-      graft.ops.ProductQuantization.codebooksFrom(codebookRows, cfg)
-    lazy val sqParams: (Array[Float], Array[Float]) = graft.ops.ScalarQuantization.collectParams(
-      VersionedDir.readSide(spark, s"$dir/_sqparams"))
-    lazy val bqThresholds: Array[Double] = graft.ops.BinaryQuantization.collectThresholds(
-      VersionedDir.readSide(spark, s"$dir/_bqparams"))
+    private lazy val codebookRows = PQ.codebookRows(VersionedDir.readSide(spark, s"$dir/_codebooks"))
+    def codebooks(cfg: PQ.PqConfig): Array[Array[Array[Float]]] = PQ.codebooksFrom(codebookRows, cfg)
+    lazy val sqParams: (Array[Float], Array[Float]) =
+      SQ.collectParams(VersionedDir.readSide(spark, s"$dir/_sqparams"))
+    lazy val bqThresholds: Array[Double] = BQ.collectThresholds(VersionedDir.readSide(spark, s"$dir/_bqparams"))
     lazy val delta: Option[DataFrame] = annDeltaRead(snapshot.deltas)
 
-    /** The columns a planned read selects: doc_id and the vector. A part's
-      * read adds its key as a long `__<key>` ([[SimilaritySearch.prunedRead]]).
+    /** The columns a planned read selects: doc_id and the scored column,
+      * the vector or the codes. A part's read adds its key as a long
+      * `__<key>` ([[SimilaritySearch.prunedRead]]).
       */
     private def readCols: Seq[String] = Seq("doc_id", layout.scored)
+
+    /** The scored column of a planned read's rows, bound. */
+    lazy val scored: BoundReference = BoundReference(1, relation.schema(layout.scored).dataType, nullable = true)
 
     /** [[delta]] on the driver, collected once: every id it shadows, live
       * or tombstoned, and its live rows laid out as a planned read's rows.
@@ -393,17 +396,22 @@ final class VectorIndex(
       (rows.map(_.getLong(0)).toSet, rows.filter(!_.getBoolean(deleted)))
     }
 
-    private val parts = scala.collection.mutable.Map.empty[Long, RDD[InternalRow]]
+    private val parts = scala.collection.mutable.Map.empty[Option[Long], RDD[InternalRow]]
     private var graphs: Option[RDD[graft.ops.Hnsw.Shard]] = None
     private var released = false
 
-    /** The read of one cell or bucket, planned through
-      * [[SimilaritySearch.prunedRead]]'s partition filter and persisted on
-      * first use ([[kept]]).
+    /** The read of one cell or bucket, or with None of the whole relation
+      * of an unpartitioned layout, through [[SimilaritySearch.prunedRead]].
       */
-    private def part(value: Long): RDD[InternalRow] = synchronized {
-      parts.getOrElseUpdate(value, kept(SimilaritySearch.prunedRead(relation, Some((layout.part.get, Seq(value))),
-        readCols, None, None).queryExecution.toRdd.map(_.copy())))
+    private def read(value: Option[Long]): DataFrame =
+      SimilaritySearch.prunedRead(relation, value.map(v => (layout.part.get, Seq(v))), readCols, None, None)
+
+    /** The schema of the planned reads. */
+    def partSchema: StructType = read(layout.part.map(_ => 0L)).schema
+
+    /** [[read]], planned and persisted on first use ([[kept]]). */
+    private def part(value: Option[Long]): RDD[InternalRow] = synchronized {
+      parts.getOrElseUpdate(value, kept(read(value).queryExecution.toRdd.map(_.copy())))
     }
 
     /** The shard graphs, persisted on first use ([[kept]]). */
@@ -431,21 +439,16 @@ final class VectorIndex(
       parts.clear()
     }
 
-    /** The (doc_id, score) candidates of a partitioned route, LSH buckets
-      * or IVF cells, for probes given as (vector, probed parts): per probe,
-      * its top `k` rows of the parts it probes under the overlay, scored
-      * `round(cosine, 6)` — the batch route's equi-join on the part key and
-      * its top-k page, no threshold. One job over the probed parts.
+    /** Per probe `p`, its top `k` candidates among the planned reads of
+      * `probed` ([[part]]'s values) under the overlay, by `scores(p)`: null
+      * where a row is not its candidate (a part it does not probe) — the
+      * batch route's equi-join on the part key and its top-k page, no
+      * threshold. One job over the probed parts.
       */
-    def partTopK(probes: Seq[(Seq[Float], Set[Long])], k: Int): Seq[(Long, Double)] = {
+    def partTopK(scores: Array[Expression], probed: Seq[Option[Long]], k: Int): Seq[Seq[VersionScan.Kept]] = {
       val (shadowed, live) = overlay
-      val scores = probes.map[Expression] { case (q, probed) =>
-        If(InSet(AnnVersion.Part, scala.collection.immutable.HashSet.from[Any](probed)),
-          VersionScan.rounded(AnnVersion.Vector, q), Literal(null, DoubleType))
-      }.toArray
-      val read = spark.sparkContext.union(probes.flatMap(_._2).distinct.map(part))
-      VersionScan.topK(read, live, AnnVersion.Id, scores, k, Double.NegativeInfinity, shadowed, keepRows = false)
-        .flatten.map(h => (h.id, h.score))
+      VersionScan.topK(spark.sparkContext.union(probed.distinct.map(part)), live, AnnVersion.Id, scores, k,
+        Double.NegativeInfinity, shadowed, keepRows = false)
     }
 
     /** The (doc_id, score) candidates of the HNSW route: per probe, the top
@@ -471,12 +474,14 @@ final class VectorIndex(
   }
 
   private object AnnVersion {
-    /** The columns of a planned read's rows, bound. */
+    /** The columns of a planned read's rows, and of (doc_id, vector) rows, bound. */
     val Id: BoundReference = BoundReference(0, LongType, nullable = true)
     val Vector: BoundReference = BoundReference(1, ArrayType(FloatType), nullable = true)
     val Part: BoundReference = BoundReference(2, LongType, nullable = true)
     /** `round(score, 6)` of a score computed outside Spark. */
     val Round6: Round = Round(BoundReference(0, DoubleType, nullable = false), Literal(6))
+    /** The score of a row that is not the probe's candidate. */
+    val NoScore: Literal = Literal(null, DoubleType)
   }
 
   /** One [[AnnVersion]] per ANN root, replaced whenever the root's snapshot
@@ -508,9 +513,9 @@ final class VectorIndex(
   // RAG prompt and the chat call run on every call. Any write, through any
   // handle, changes the token, so a page of an older version is never
   // served; it ages out. A miss reads the store's version scan
-  // ([[IndexStore.readScan]]) and, on the LSH, IVF and HNSW routes, the ANN
-  // version's planned parts or shard graphs ([[AnnVersion]]), each planned
-  // once per version.
+  // ([[IndexStore.readScan]]) and, on the ANN routes, the ANN version's
+  // planned parts or shard graphs ([[AnnVersion]]), each planned once per
+  // version.
   // Filtered searches (a predicate may be non-deterministic), server-side
   // searches and stores without a version token are never cached.
 
@@ -548,6 +553,9 @@ final class VectorIndex(
     */
   private[graft] def annDelta(m: SearchMode): Option[DataFrame] = annRead(m)._2.delta
 
+  /** The schema of the planned reads a miss in mode `m` scores. */
+  private[graft] def annPartSchema(m: SearchMode): StructType = annRead(m)._2.partSchema
+
   /** search(q): embed the query once on the driver (reference
     * storage/base.py:303-316) and search by its vector ([[searchVector]]).
     */
@@ -557,65 +565,90 @@ final class VectorIndex(
              filter: Option[Column] = None): DataFrame =
     searchVector(backend.embedOne(query).toSeq, k, threshold, metric, mode, filter)
 
-  /** The candidate page of a quantized ANN route (IVF-PQ, residual PQ, SQ,
-    * BQ) for a driver-resident probe batch: the route's per-probe top-k as
-    * (doc_id, score), the top-k operator at the plan root. Lazy; [[annHits]]
-    * collects it.
-    */
-  private[graft] def annPage(probes: Seq[(Long, Seq[Float])], k: Int, m: SearchMode): DataFrame = {
-    val (scan, v, _) = annRead(m)
-    annPage(scan.docs, v, probes, k, m)
-  }
-
-  private def annPage(docs: DataFrame, v: AnnVersion, probes: Seq[(Long, Seq[Float])], k: Int,
-                      m: SearchMode): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import graft.ops.{BinaryQuantization => BQ, ProductQuantization => PQ, ScalarQuantization => SQ}
-    // SQ/BQ codes are unpartitioned: the whole relation under the overlay
-    def codes = SimilaritySearch.prunedRead(v.relation, None,
-      Seq("doc_id", VectorIndex.AnnLayouts(m.getClass).scored), v.delta, None)
-    val topk = m match {
-      case IvfPqMode(_, nProbe, pm, ksub, refine, _, residual) =>
-        val cfg = PQ.PqConfig(config.dims, pm, ksub)
-        PQ.ivfPqTopKResolved(v.relation, v.centroids, v.codebooks(cfg), docs, probes, cfg,
-          k, nProbe, refine, itemId = "doc_id", itemVec = "vector", v.delta, residual)
-      case SearchMode.Sq(refine) =>
-        val (mins, maxs) = v.sqParams
-        SQ.sqTopK(codes, docs, mins, maxs, probes, k, refine, itemId = "doc_id", itemVec = "vector")
-      case SearchMode.Bq(refine) =>
-        BQ.bqTopK(codes, docs, v.bqThresholds, probes, k, refine, itemId = "doc_id", itemVec = "vector")
-      case other => throw new IllegalArgumentException(s"$other reads planned parts, not a page")
-    }
-    topk.select(col("doc_id"), col("score"))
-  }
-
-  /** The route's per-probe top-k candidates, thresholded on the driver and
-    * hydrated back to full documents (+`key`) with one read of the
-    * ≤ probes·k hit ids — the shared tail of every ANN-routed query method.
-    * LSH, IVF and HNSW read the version's planned parts or graphs
-    * ([[AnnVersion.partTopK]], [[AnnVersion.graphTopK]]); the quantized
-    * routes collect their [[annPage]]. Rows in rank order.
+  /** The route's per-probe top-k hits, thresholded on the driver and
+    * hydrated to full documents (+`key`) — the shared tail of every
+    * ANN-routed query method. HNSW searches the version's shard graphs
+    * ([[AnnVersion.graphTopK]]); every other mode scores its planned parts
+    * ([[AnnVersion.partTopK]], scores by [[annScore]]), and the quantized
+    * modes rerank their top k·refine per probe exactly ([[reranked]]) over
+    * one read of the candidates' documents, which also hydrates the hits.
+    * The other routes hydrate with one read of the hit ids. Rows in rank
+    * order.
     */
   private def annHits(scan: VersionScan, v: AnnVersion, probes: Seq[(Long, Seq[Float])], k: Int,
                       threshold: Double, m: SearchMode): Page = {
-    val hits = m match {
-      case SearchMode.Lsh(bits, maxHamming) =>
-        val masks = SimilaritySearch.hammingMasks(bits, maxHamming)
-        v.partTopK(probes.map { case (_, q) =>
-          val bucket = SimilaritySearch.lshBucketLocal(q, config.dims, bits)
-          (q, masks.map(bucket ^ _).toSet)
-        }, k)
-      case SearchMode.Ivf(_, nProbe, _) =>
-        val (cvs, cids) = v.centroids
-        v.partTopK(probes.map { case (_, q) => (q, SimilaritySearch.nearestCellsLocal(q, cvs, cids, nProbe).toSet) }, k)
-      case SearchMode.Hnsw(_, _, ef) => v.graphTopK(probes, k, ef)
-      case _ =>
-        annPage(scan.docs, v, probes, k, m).collect().toSeq
-          .map(r => (r.getLong(0), r.get(1).asInstanceOf[Number].doubleValue))
+    val refine = m match {
+      case IvfPqMode(_, _, _, _, refine, _, _) => Some(refine)
+      case SearchMode.Sq(refine)               => Some(refine)
+      case SearchMode.Bq(refine)               => Some(refine)
+      case _                                   => None
     }
-    Page(Retrieval.hydratePage(scan, hits.collect {
+    val (hits, read) = m match {
+      case SearchMode.Hnsw(_, _, ef) => (v.graphTopK(probes, k, ef), scan.byIds _)
+      case _ =>
+        val scores = probes.map(p => annScore(v, p._2, m))
+        val cands = v.partTopK(scores.map(_._2).toArray, scores.flatMap(_._1), k * refine.getOrElse(1))
+        refine.fold((cands.flatten.map(h => (h.id, h.score)), scan.byIds _)) { _ =>
+          val rows = scan.byIds(cands.flatten.map(_.id).toSet)
+          (reranked(scan.schema, rows, probes.map(_._2), cands, k), (_: Set[Long]) => rows)
+        }
+    }
+    Page(Retrieval.hydrate(scan.schema, hits.collect {
       case (id, score) if Retrieval.compareScores(score, threshold) >= 0 => Row(id, score)
-    }, Retrieval.ScoreField))
+    }, Retrieval.ScoreField)(read))
+  }
+
+  /** What a miss in mode `m` reads of version `v` for probe `q`, and how it
+    * scores a row: the parts the probe probes ([[AnnVersion.partTopK]];
+    * None, the whole codes relation, for SQ and BQ), and its score — for
+    * LSH and IVF `round(cosine, 6)`, for the quantized modes the negated
+    * distance of the mode's kernel to the probe's lookup table or bits, a
+    * literal. A row of a part the probe does not probe scores null; the
+    * residual form scores each probed cell with that cell's lookup table.
+    */
+  private def annScore(v: AnnVersion, q: Seq[Float], m: SearchMode): (Seq[Option[Long]], Expression) = {
+    def in(parts: Seq[Long], score: Expression) = (parts.map(Some(_)),
+      If(InSet(AnnVersion.Part, scala.collection.immutable.HashSet.from[Any](parts)), score, AnnVersion.NoScore))
+    def negated(distance: Expression): Expression = Cast(UnaryMinus(distance), DoubleType)
+    def lut(values: Array[Long]) = Literal(UnsafeArrayData.fromPrimitiveArray(values), ArrayType(LongType, false))
+    lazy val (cvs, cids) = v.centroids
+    m match {
+      case SearchMode.Lsh(bits, maxHamming) =>
+        val bucket = SimilaritySearch.lshBucketLocal(q, config.dims, bits)
+        in(SimilaritySearch.hammingMasks(bits, maxHamming).map(bucket ^ _), VersionScan.rounded(v.scored, q))
+      case SearchMode.Ivf(_, nProbe, _) =>
+        in(SimilaritySearch.nearestCellsLocal(q, cvs, cids, nProbe), VersionScan.rounded(v.scored, q))
+      case IvfPqMode(_, nProbe, pm, ksub, _, _, residual) =>
+        val cfg = PQ.PqConfig(config.dims, pm, ksub)
+        def adc(frame: Seq[Float]) = negated(PqAdcExpr(v.scored, lut(PQ.adcLut(frame, v.codebooks(cfg), cfg)), ksub))
+        val cells = SimilaritySearch.nearestCellsLocal(q, cvs, cids, nProbe)
+        if (!residual) in(cells, adc(q))
+        else (cells.map(Some(_)), CaseWhen(cells.map(c =>
+          EqualTo(AnnVersion.Part, Literal(c)) -> adc(PQ.residualOf(q, cvs(cids.indexOf(c))))), AnnVersion.NoScore))
+      case SearchMode.Sq(_) =>
+        val (mins, maxs) = v.sqParams
+        (Seq(None), negated(SqAdcExpr(v.scored, lut(SQ.sqLut(q, mins, maxs)))))
+      case SearchMode.Bq(_) =>
+        (Seq(None), negated(BqHammingExpr(v.scored, Literal(BQ.bqEncodeLocal(q, v.bqThresholds), BinaryType))))
+      case other => throw new IllegalArgumentException(s"$other does not score planned parts")
+    }
+  }
+
+  /** The exact rerank of a quantized mode: per probe, the top `k` of its
+    * candidates `cands` by `round(cosine, 6)` of their documents' vectors
+    * in `rows` (their read, in the documents' `schema`), as (doc_id, score)
+    * — the rank order of [[VersionScan.topK]]'s heap.
+    */
+  private def reranked(schema: StructType, rows: Seq[Row], probes: Seq[Seq[Float]],
+                       cands: Seq[Seq[VersionScan.Kept]], k: Int): Seq[(Long, Double)] = {
+    val (id, vec) = (schema.fieldIndex("doc_id"), schema.fieldIndex("vector"))
+    val toVector = CatalystTypeConverters.createToCatalystConverter(schema(vec).dataType)
+    val scores = probes.zip(cands).map[Expression] { case (q, c) =>
+      If(InSet(AnnVersion.Id, scala.collection.immutable.HashSet.from[Any](c.map(_.id))),
+        VersionScan.rounded(AnnVersion.Vector, q), AnnVersion.NoScore)
+    }
+    VersionScan.heaps(rows.iterator.map(r => InternalRow(r.get(id), toVector(r.get(vec)))), AnnVersion.Id,
+      scores.toArray, k, Double.NegativeInfinity, Set.empty, keepRows = false).flatten.map(h => (h.id, h.score))
   }
 
   /** The top-k chunk page of one query vector — exact (the KNN page) or
@@ -843,6 +876,11 @@ object VectorIndex {
     * k·overfetch hits before the payload predicate re-limits to k.
     */
   val AnnFilterOverfetch = 4
+
+  /** Pending deltas on one ANN root at which an incremental write folds
+    * them into a retrained version ([[VectorIndex.refreshAnnIncremental]]).
+    */
+  private val AnnFoldEvery = 10
 
   /** A collected page: its rows in rank order, their schema, and the
     * DataFrames finished from it. Each frame is built once, so a request the

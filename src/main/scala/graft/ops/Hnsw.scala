@@ -119,27 +119,37 @@ object Hnsw {
     val outSchema = StructType(Seq(
       StructField(probeId, LongType), StructField(itemId, LongType),
       StructField("score", DoubleType)))
+    perShard(items, nShards, m, efConstruction, itemId, itemVec, outSchema) { (buf, g) =>
+      val efEff = effectiveEf(ef, k, buf.length)
+      probesB.value.iterator.flatMap { case (qid, qv) =>
+        // beam width scales with shard population (effectiveEf), but
+        // only the shard-local top-k crosses the shuffle — the merge
+        // needs no more than k rows per shard
+        g.search(qv, efEff).take(k).map { case (idx, score) =>
+          Row(qid, buf(idx)._1, score)
+        }
+      }
+    }
+  }
+
+  /** Per shard of `items` — hash-partitioned by id into `nShards` — the rows
+    * `out` gives for its members as (id, vector), sorted by id, and the
+    * graph [[build]] makes of them; an empty shard gives none.
+    */
+  private def perShard(items: DataFrame, nShards: Int, m: Int, efConstruction: Int, itemId: String,
+                       itemVec: String, outSchema: StructType)(
+      out: (Array[(Long, Array[Float])], Graph) => Iterator[Row]): DataFrame = {
     implicit val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    val beams = items.select(col(itemId).cast("long"), col(itemVec))
+    items.select(col(itemId).cast("long"), col(itemVec))
       .repartition(nShards, col(itemId))
       .mapPartitions { rows =>
         val buf = rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toArray
         if (buf.isEmpty) Iterator.empty
         else {
           java.util.Arrays.sort(buf, Ordering.by((t: (Long, Array[Float])) => t._1))
-          val g = build(buf, m, efConstruction)
-          val efEff = effectiveEf(ef, k, buf.length)
-          probesB.value.iterator.flatMap { case (qid, qv) =>
-            // beam width scales with shard population (effectiveEf), but
-            // only the shard-local top-k crosses the shuffle — the merge
-            // needs no more than k rows per shard
-            g.search(qv, efEff).take(k).map { case (idx, score) =>
-              Row(qid, buf(idx)._1, score)
-            }
-          }
+          out(buf, build(buf, m, efConstruction))
         }
       }
-    beams
   }
 
   /** Persist the per-shard graphs so recurring query batches skip the
@@ -164,25 +174,16 @@ object Hnsw {
       StructField("vec_id", LongType), StructField("level", IntegerType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("nbrs", ArrayType(ArrayType(IntegerType)))))
-    implicit val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    val graphRows = items.select(col(itemId).cast("long"), col(itemVec))
-      .repartition(nShards, col(itemId))
-      .mapPartitions { rows =>
-        val buf = rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toArray
-        if (buf.isEmpty) Iterator.empty
-        else {
-          java.util.Arrays.sort(buf, Ordering.by((t: (Long, Array[Float])) => t._1))
-          val g = build(buf, m, efConstruction)
-          val shard = org.apache.spark.TaskContext.getPartitionId()
-          (0 until buf.length).iterator.map { pos =>
-            val level = g.levelOf(pos)
-            val lvls = (0 to level).map { l =>
-              Option(g.neighbors(l)(pos)).map(_.toSeq).getOrElse(Seq.empty[Int])
-            }
-            Row(shard, pos, buf(pos)._1, level, buf(pos)._2.toSeq, lvls)
-          }
+    val graphRows = perShard(items, nShards, m, efConstruction, itemId, itemVec, outSchema) { (buf, g) =>
+      val shard = org.apache.spark.TaskContext.getPartitionId()
+      (0 until buf.length).iterator.map { pos =>
+        val level = g.levelOf(pos)
+        val lvls = (0 to level).map { l =>
+          Option(g.neighbors(l)(pos)).map(_.toSeq).getOrElse(Seq.empty[Int])
         }
+        Row(shard, pos, buf(pos)._1, level, buf(pos)._2.toSeq, lvls)
       }
+    }
     new graft.api.VersionedDir(spark, path, keepVersions).replaceWith { dir =>
       graphRows.write.mode("overwrite").parquet(dir)
     }
@@ -303,12 +304,7 @@ object Hnsw {
         vecs(pos) = r.getSeq[Float](4).toArray
         nbrSeqs(pos) = r.getSeq[Seq[Int]](5)
       }
-      val norms = vecs.map { v =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        math.sqrt(s)
-      }
-      val g = new Graph(vecs, norms, levels, 0)
+      val g = new Graph(vecs, vecs.map(norm), levels, 0)
       var pos = 0
       while (pos < n) {
         val lv = nbrSeqs(pos)
@@ -330,6 +326,13 @@ object Hnsw {
     }
 
   // ---- in-memory per-shard graph ----
+
+  /** `sqrt(Σ v_i²)`, each component widened to double first. */
+  private def norm(v: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
+    math.sqrt(s)
+  }
 
   /** Deterministic "uniform" in (0,1) from an id (splitmix64 finalizer). */
   private def u01(id: Long): Double = {
@@ -353,12 +356,16 @@ object Hnsw {
 
     def cosineNodes(a: Int, b: Int): Double = cosine(vecs(a), b)
 
+    /** [[graft.functions.CosineSimilarity]]'s arithmetic: each component
+      * widened to double before it is multiplied, 0 when a norm is.
+      */
     def cosine(a: Array[Float], i: Int): Double = {
       val b = vecs(i)
       var s = 0.0; var na = 0.0
       var j = 0
-      while (j < a.length) { s += a(j) * b(j); na += a(j) * a(j); j += 1 }
-      if (na == 0 || norms(i) == 0) 0.0 else s / (math.sqrt(na) * norms(i))
+      while (j < a.length) { val x = a(j).toDouble; s += x * b(j); na += x * x; j += 1 }
+      val den = math.sqrt(na) * norms(i)
+      if (den == 0.0) 0.0 else s / den
     }
 
     /** Beam search at one level from `start`, width `ef`, by descending
@@ -471,14 +478,9 @@ object Hnsw {
                     efConstruction: Int): Graph = {
     val n = buf.length
     val vecs = buf.map(_._2)
-    val norms = vecs.map { v =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
     val mL = 1.0 / math.log(m.toDouble)
     val levels = buf.map(t => math.min(31, (-math.log(u01(t._1)) * mL).toInt))
-    val g = new Graph(vecs, norms, levels, m)
+    val g = new Graph(vecs, vecs.map(norm), levels, m)
     if (n == 0) return g
     g.entry = 0
     var entryLevel = levels(0)

@@ -155,11 +155,9 @@ object ProductQuantization {
                               probes: Seq[(Long, Seq[Float])], cfg: PqConfig,
                               k: Int = 10, nProbe: Int = 4, refine: Int = 4,
                               itemId: String = "vec_id", itemVec: String = "embedding",
-                              delta: Option[org.apache.spark.sql.DataFrame] = None): DataFrame = {
-    val (raw, centroids, cbs) = resolveIndex(spark, indexPath, cfg)
-    ivfPqTopKResolved(raw, centroids, cbs, items, probes, cfg, k, nProbe, refine,
-      itemId, itemVec, delta, residual = true)
-  }
+                              delta: Option[org.apache.spark.sql.DataFrame] = None): DataFrame =
+    ivfPqTopKResolved(spark, indexPath, items, probes, cfg, k, nProbe, refine, itemId, itemVec, delta,
+      residual = true)
 
   /** Codebooks of the ACTIVE index version. */
   def pqCodebooksRead(spark: SparkSession, path: String): DataFrame =
@@ -291,43 +289,34 @@ object ProductQuantization {
                       probes: Seq[(Long, Seq[Float])], cfg: PqConfig,
                       k: Int = 10, nProbe: Int = 4, refine: Int = 4,
                       itemId: String = "vec_id", itemVec: String = "embedding",
-                      delta: Option[org.apache.spark.sql.DataFrame] = None): DataFrame = {
-    val (raw, centroids, cbs) = resolveIndex(spark, indexPath, cfg)
-    ivfPqTopKResolved(raw, centroids, cbs, items, probes, cfg, k, nProbe, refine,
-      itemId, itemVec, delta, residual = false)
-  }
-
-  /** One version of an IVF×PQ index resolved from its versioned root: the
-    * cell-partitioned codes relation pinned to the concrete version dir,
-    * and the centroids and codebooks riding in that dir, collected.
-    */
-  private def resolveIndex(spark: SparkSession, indexPath: String, cfg: PqConfig)
-      : (DataFrame, (Array[Array[Float]], Array[Long]), Array[Array[Array[Float]]]) = {
-    val resolved = graft.api.VersionedDir.resolve(spark, indexPath)
-    (spark.read.parquet(resolved),
-      SimilaritySearch.collectCentroids(graft.api.VersionedDir.readSide(spark, s"$resolved/_centroids")),
-      collectCodebooks(graft.api.VersionedDir.readSide(spark, s"$resolved/_codebooks"), cfg))
-  }
+                      delta: Option[org.apache.spark.sql.DataFrame] = None): DataFrame =
+    ivfPqTopKResolved(spark, indexPath, items, probes, cfg, k, nProbe, refine, itemId, itemVec, delta,
+      residual = false)
 
   /** [[ivfPqTopKPruned]] (`residual` false) and [[residualIvfPqTopKPruned]]
-    * (`residual` true) over an already-resolved version: its
-    * cell-partitioned codes relation, collected centroids and codebooks.
-    * The two differ only in the frame the LUT is built in — the probe `q`,
-    * or per probed cell its residual `q − centroid`. Delta codes rows were
-    * encoded against THIS version's codebooks, in the same frame.
+    * (`residual` true) over the version of `indexPath` active now: its
+    * cell-partitioned codes relation pinned to the concrete version dir,
+    * and the centroids and codebooks riding in that dir, collected. The two
+    * differ only in the frame the LUT is built in — the probe `q`, or per
+    * probed cell its residual `q − centroid`. Delta codes rows were encoded
+    * against THIS version's codebooks, in the same frame.
     */
-  private[graft] def ivfPqTopKResolved(raw: DataFrame,
-      centroids: (Array[Array[Float]], Array[Long]), cbs: Array[Array[Array[Float]]],
-      items: DataFrame, probes: Seq[(Long, Seq[Float])], cfg: PqConfig,
-      k: Int, nProbe: Int, refine: Int, itemId: String, itemVec: String,
-      delta: Option[DataFrame], residual: Boolean): DataFrame = {
-    def frame(qv: Seq[Float], j: Int): Seq[Float] =
-      if (!residual) qv
-      else Seq.tabulate(qv.length)(i => (qv(i).toDouble - centroids._1(j)(i).toDouble).toFloat)
-    ivfCodesTopK(raw, centroids, probes, nProbe, "codes",
-      (qv, j) => adcLut(frame(qv, j), cbs, cfg).toSeq, LutType, pq_adc(_, _, cfg.ksub),
-      items, k, refine, itemId, itemVec, delta)
+  private def ivfPqTopKResolved(spark: SparkSession, indexPath: String, items: DataFrame,
+      probes: Seq[(Long, Seq[Float])], cfg: PqConfig, k: Int, nProbe: Int, refine: Int,
+      itemId: String, itemVec: String, delta: Option[DataFrame], residual: Boolean): DataFrame = {
+    val resolved = graft.api.VersionedDir.resolve(spark, indexPath)
+    val (cvs, cids) = SimilaritySearch.collectCentroids(graft.api.VersionedDir.readSide(spark, s"$resolved/_centroids"))
+    val cbs = collectCodebooks(graft.api.VersionedDir.readSide(spark, s"$resolved/_codebooks"), cfg)
+    ivfCodesTopK(spark.read.parquet(resolved), (cvs, cids), probes, nProbe, "codes",
+      (qv, j) => adcLut(if (residual) residualOf(qv, cvs(j)) else qv, cbs, cfg).toSeq, LutType,
+      pq_adc(_, _, cfg.ksub), items, k, refine, itemId, itemVec, delta)
   }
+
+  /** A probe's residual `qv − centroid` in a cell's frame, each component
+    * computed in double and rounded once to float, as [[residualize]] does.
+    */
+  private[graft] def residualOf(qv: Seq[Float], centroid: Array[Float]): Seq[Float] =
+    Seq.tabulate(qv.length)(i => (qv(i).toDouble - centroid(i).toDouble).toFloat)
 
   /** (sub, code, cv) rows → `cbs(sub)(code)` float arrays (tiny by design:
     * ≤ m·ksub rows). A corpus with fewer than `ksub` training rows yields

@@ -208,11 +208,12 @@ object SimilaritySearch {
     scoreCandidates(withProbes(live, probes, probeDf, Some("__bucket")), itemId, itemVec, "qid", "qv")
   }
 
-  /** The one pruned ANN read, shared by every route over a versioned ANN
-    * relation (LSH buckets; IVF cells over vectors, PQ, residual PQ, SQ and
-    * BQ codes; the unpartitioned SQ/BQ code scans) and by the once-planned
-    * part reads of [[graft.api.VectorIndex]]'s LSH and IVF misses, one
-    * bucket or cell each, which resolve the overlay on the driver instead:
+  /** The one pruned ANN read, shared by the public lazy routes over a
+    * versioned ANN relation (LSH buckets; IVF cells over vectors, PQ,
+    * residual PQ, SQ and BQ codes) and by the once-planned reads of
+    * [[graft.api.VectorIndex]]'s misses — one bucket or cell each, or a
+    * whole unpartitioned SQ or BQ relation — which pass no delta and
+    * resolve the overlay on the driver instead:
     *  1. prune — with `part = Some((key, candidates))` the scan carries
     *     `key IN (candidates)`, the candidates computed on the driver. The
     *     literals take the parquet-inferred partition type (small dirs read

@@ -277,7 +277,7 @@ object Retrieval {
                                  scoreField: StructField): (Seq[Row], StructType) =
     hydrate(scan.schema, page, scoreField)(scan.byIds)
 
-  private def hydrate(docSchema: StructType, page: Seq[Row], scoreField: StructField)(
+  private[graft] def hydrate(docSchema: StructType, page: Seq[Row], scoreField: StructField)(
       read: Set[Long] => Seq[Row]): (Seq[Row], StructType) = {
     val best = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
     page.foreach { r =>

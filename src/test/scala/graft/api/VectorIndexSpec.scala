@@ -180,6 +180,12 @@ class VectorIndexSpec extends AnyFunSuite {
       s"$tmp/$name", "page", "id", ann = modes)
   }
 
+  /** IVF-PQ, residual PQ, SQ and BQ, each narrower than a full scan. */
+  private val quantizedModes = Seq(
+    SearchMode.IvfPq(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1),
+    SearchMode.RpqIvf(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1),
+    SearchMode.Sq(refine = 2), SearchMode.Bq(refine = 2))
+
   private def annSource = (1 to 60)
     .map(i => (i.toLong, s"document number $i about topic${i % 7} detail$i"))
     .toDF("id", "body")
@@ -303,14 +309,37 @@ class VectorIndexSpec extends AnyFunSuite {
       .select(col("doc_id"), round(col("score"), 6)).as[(Long, Double)].collect().toSet
     assert(pqFull == exact)
 
-    // narrow probe: static partition filter on the CODES scan, and that
-    // scan must not read a vector column (codes are the 32×-smaller read)
-    val narrow = idx.annPage(Seq((0L, idx.backend.embedOne(q).toSeq)), 5,
-      SearchMode.IvfPq(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1))
-    val p = narrow.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(p).isDefined, s"no partition filter in:\n$p")
-    val codesScan = p.linesIterator.find(l => l.contains("__ann_ivfpq")).getOrElse("")
-    assert(!codesScan.contains("vector"), s"codes scan reads vectors:\n$codesScan")
+    // narrow probe: the candidates are the probed cells' CODES only (codes
+    // are the 32×-smaller read)
+    assertProbesCodes(idx, SearchMode.IvfPq(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1),
+      idx.annIvfPqPath)
+  }
+
+  /** Misses in `m`, an IVF-PQ or residual-PQ mode probing fewer cells than
+    * there are: each candidate job reads only the rows of the cells it
+    * probes, fewer than the root holds, from planned parts with no vector
+    * column.
+    */
+  private def assertProbesCodes(idx: VectorIndex, m: SearchMode, root: String): Unit = {
+    val nProbe = m match {
+      case SearchMode.IvfPq(_, p, _, _, _, _)  => p
+      case SearchMode.RpqIvf(_, p, _, _, _, _) => p
+      case other                               => fail(s"$other is not a PQ mode")
+    }
+    val dir = VersionedDir.resolve(spark, root)
+    val cells = spark.read.parquet(dir).select(col("cell").cast("long")).as[Long].collect().toSeq
+    val (cvs, cids) = graft.ops.SimilaritySearch.collectCentroids(VersionedDir.readSide(spark, s"$dir/_centroids"))
+    for (i <- 1 to 3) {
+      val text = s"document number ${17 + i} about topic${i % 7} detail${17 + i}"
+      val probed = graft.ops.SimilaritySearch.nearestCellsLocal(idx.backend.embedOne(text).toSeq, cvs, cids, nProbe)
+      val rows = cells.count(probed.toSet)
+      val runs = jobRuns(idx.search(text, k = 5, threshold = -1.0, mode = m).collect())
+      assert(runs.size == 2, s"$m: $runs")
+      assert(runs.head == JobRun(stages = 1, records = rows, shuffleRead = 0), s"$m candidates read $runs, probed $rows")
+      assert(rows < cells.size, s"$m probed all ${cells.size} rows")
+    }
+    val schema = idx.annPartSchema(m)
+    assert(!schema.fieldNames.contains("vector"), s"$m parts read $schema")
   }
 
   // r8 advice: SearchMode.RpqIvf was declared but unwired — an index
@@ -330,14 +359,9 @@ class VectorIndexSpec extends AnyFunSuite {
       .select(col("doc_id"), round(col("score"), 6)).as[(Long, Double)].collect().toSet
     assert(rpqFull == exact)
 
-    // narrow probe: static partition filter on the residual-codes scan,
-    // and that scan must not read a vector column
-    val narrow = idx.annPage(Seq((0L, idx.backend.embedOne(q).toSeq)), 5,
-      SearchMode.RpqIvf(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1))
-    val p = narrow.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(p).isDefined, s"no partition filter in:\n$p")
-    val codesScan = p.linesIterator.find(_.contains("__ann_rpq")).getOrElse("")
-    assert(!codesScan.contains("vector"), s"codes scan reads vectors:\n$codesScan")
+    // narrow probe: the candidates are the probed cells' residual codes only
+    assertProbesCodes(idx, SearchMode.RpqIvf(nCells = 4, nProbe = 2, m = 4, ksub = 16, refine = 2, lloydIters = 1),
+      idx.annRpqPath)
 
     // upsert lands as a delta sidecar (no retrain), searchable through the
     // overlay; delete tombstones it back out
@@ -663,7 +687,8 @@ class VectorIndexSpec extends AnyFunSuite {
   test("repeated searches on an unchanged index launch only their own execution's jobs") {
     val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
     val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 16)
-    val idx = annIndex("jobs", Seq(ivf, hnsw))
+    val anns = Seq(ivf, hnsw) ++ quantizedModes
+    val idx = annIndex("jobs", anns)
     idx.rebuild(annSource)
     def text(i: Int) = s"document number $i about topic${i % 7} detail$i"
     // first calls, on texts and keys this version has not answered yet
@@ -685,7 +710,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(jobsDuring(done.collect()) == 0, "collect() on a returned result")
     // with a pending delta on every root, so the overlays and the HNSW
     // delta-id set are resolved once too
-    for (pending <- Seq(false, true); (m, j) <- Seq(ivf, hnsw).zipWithIndex) {
+    for (pending <- Seq(false, true); (m, j) <- anns.zipWithIndex) {
       if (pending && m == ivf) idx.upsert(graft.pipeline.IndexBuild.buildDocuments(
         Seq((100L, "completely new page about quasars")).toDF("id", "body"),
         idx.config, idx.backend, "page", "id"))
@@ -694,17 +719,18 @@ class VectorIndexSpec extends AnyFunSuite {
       // merged documents, whose broadcasts add 2 jobs
       val (searchJobs, similarJobs) = if (pending) (4, 5) else (2, 3)
       val n = 20 + 10 * j + (if (pending) 5 else 0) // texts and keys not asked yet
+      def key(i: Int) = s"page:${(n + i - 1) % 60 + 1}"
       idx.search(text(n), k = 5, mode = m)
       assert(jobsDuring(idx.search(text(n + 1), k = 5, mode = m)) == searchJobs, s"$m search, deltas=$pending")
-      idx.findSimilar(s"page:${n + 2}", k = 5, mode = m)
-      assert(jobsDuring(idx.findSimilar(s"page:${n + 3}", k = 5, mode = m)) == similarJobs,
+      idx.findSimilar(key(2), k = 5, mode = m)
+      assert(jobsDuring(idx.findSimilar(key(3), k = 5, mode = m)) == similarJobs,
         s"$m findSimilar, deltas=$pending")
       assert(jobsDuring(idx.search(text(n + 1), k = 5, mode = m)) == 0, s"$m search repeat, deltas=$pending")
       assert(jobsDuring(idx.query(text(n + 1), sourcesLimit = 5, mode = m)) == 0,
         s"$m query of a searched text, deltas=$pending")
-      val res = idx.findSimilar(s"page:${n + 3}", k = 5, mode = m)
+      val res = idx.findSimilar(key(3), k = 5, mode = m)
       assert(jobsDuring(res.collect()) == 0, s"$m collect()")
-      assert(jobsDuring(idx.findSimilar(s"page:${n + 3}", k = 5, mode = m)) == 0,
+      assert(jobsDuring(idx.findSimilar(key(3), k = 5, mode = m)) == 0,
         s"$m findSimilar repeat, deltas=$pending")
     }
     // a write through a second handle: the next repeats run their jobs again
@@ -877,27 +903,35 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(idx.findSimilar("page:3", k, threshold = 1.5, mode = hnsw).isEmpty)
   }
 
-  // LSH, IVF and HNSW misses score planned parts and graphs on their own;
-  // the public lazy routes over the same version and overlay are the
-  // reference: their (doc_id, score) page, thresholded and hydrated
+  // every ANN miss scores planned parts and graphs on its own; the public
+  // lazy routes over the same version and overlay are the reference: their
+  // (doc_id, score) page, thresholded and hydrated
   test("planned ANN misses equal the public DataFrame routes, without and with a pending delta") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.StructType
-    import graft.ops.{Hnsw, SimilaritySearch => SS}
+    import graft.ops.{BinaryQuantization => BQ, Hnsw, ProductQuantization => PQ, ScalarQuantization => SQ,
+      SimilaritySearch => SS}
     import graft.query.Retrieval
     val lsh = SearchMode.Lsh(bits = 4, maxHamming = 1)
     val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
     val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 4)
-    val (idx, queries) = pageIndex(Seq(lsh, ivf, hnsw))
+    val modes = Seq(lsh, ivf, hnsw) ++ quantizedModes
+    val (idx, queries) = pageIndex(modes)
     val ks = Seq(1, 5, 50) // 50: more than the candidates
     /** Per k, the route's page over the handle's current version and
       * overlay, as a function of the threshold: thresholded and hydrated
       * from the documents. LSH and IVF rank their candidates exactly, so
-      * their top 1 and 5 are the top 50's first ranks; HNSW's beam widens
-      * with k, so it runs per k.
+      * their top 1 and 5 are the top 50's first ranks; HNSW's beam and the
+      * quantized routes' candidate count widen with k, so they run per k.
       */
     def reference(m: SearchMode, probes: Seq[(Long, Seq[Float])]): Int => Double => (Seq[Row], StructType) = {
       val delta = idx.annDelta(m)
+      val docs = idx.documents
+      /** The version's unpartitioned SQ or BQ codes under the overlay, and its dir. */
+      def codes(root: String, col: String) = {
+        val dir = VersionedDir.resolve(spark, root)
+        (SS.prunedRead(spark.read.parquet(dir), None, Seq("doc_id", col), delta, None), dir)
+      }
       def route(k: Int) = (m match {
         case SearchMode.Lsh(bits, h) =>
           SS.lshTopKPruned(spark, idx.annLshPath, probes, 32, k, bits, h, "doc_id", "vector", delta)
@@ -905,11 +939,24 @@ class VectorIndexSpec extends AnyFunSuite {
           SS.ivfTopKPruned(spark, idx.annIvfPath, SS.ivfCentroidsRead(spark, idx.annIvfPath), probes, k, nProbe,
             "doc_id", "vector", delta)
         case SearchMode.Hnsw(_, _, ef) => Hnsw.hnswTopKIndexed(spark, idx.annHnswPath, probes, k, ef, delta, "doc_id", "vector")
+        case SearchMode.IvfPq(_, nProbe, pm, ksub, refine, _) =>
+          PQ.ivfPqTopKPruned(spark, idx.annIvfPqPath, docs, probes, PQ.PqConfig(32, pm, ksub), k, nProbe, refine,
+            "doc_id", "vector", delta)
+        case SearchMode.RpqIvf(_, nProbe, pm, ksub, refine, _) =>
+          PQ.residualIvfPqTopKPruned(spark, idx.annRpqPath, docs, probes, PQ.PqConfig(32, pm, ksub), k, nProbe,
+            refine, "doc_id", "vector", delta)
+        case SearchMode.Sq(refine) =>
+          val (sq, dir) = codes(idx.annSqPath, "sq")
+          val (mins, maxs) = SQ.collectParams(VersionedDir.readSide(spark, s"$dir/_sqparams"))
+          SQ.sqTopK(sq, docs, mins, maxs, probes, k, refine, "doc_id", "vector")
+        case SearchMode.Bq(refine) =>
+          val (bq, dir) = codes(idx.annBqPath, "bq")
+          BQ.bqTopK(bq, docs, BQ.collectThresholds(VersionedDir.readSide(spark, s"$dir/_bqparams")), probes, k,
+            refine, "doc_id", "vector")
         case other => fail(s"no route for $other")
       }).select("doc_id", "score", "rank").collect().toSeq
-      val pages = if (m == hnsw) ks.map(k => k -> route(k)).toMap
+      val pages = if (m != lsh && m != ivf) ks.map(k => k -> route(k)).toMap
         else { val top = route(ks.max); ks.map(k => k -> top.filter(_.getInt(2) <= k)).toMap }
-      val docs = idx.documents
       k => t => Retrieval.hydratePage(docs,
         pages(k).filter(r => Retrieval.compareScores(r.getDouble(1), t) >= 0).map(r => Row(r.getLong(0), r.getDouble(1))),
         Retrieval.ScoreField)
@@ -917,7 +964,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // thresholds -2, 0 and 1 at k = 5; k = 1, 5 and 50 unthresholded
     val asks = ks.map(_ -> -2.0) ++ Seq(5 -> 0.0, 5 -> 1.0)
     def check(state: String): Unit = {
-      for (m <- Seq(lsh, ivf, hnsw); (qv, i) <- Seq(queries(0), queries(1), queries.last).zipWithIndex) {
+      for (m <- modes; (qv, i) <- Seq(queries(0), queries(1), queries.last).zipWithIndex) {
         val ref = reference(m, Seq((0L, qv)))
         for ((k, t) <- asks) {
           val (rows, schema) = ref(k)(t)
@@ -926,7 +973,7 @@ class VectorIndexSpec extends AnyFunSuite {
         }
       }
       val docs = idx.documents
-      for (m <- Seq(lsh, ivf, hnsw); obj <- Seq("page:0", "page:5")) {
+      for (m <- modes; obj <- Seq("page:0", "page:5")) {
         val probes = docs.filter(array_contains(col("object_keys"), obj)).select("doc_id", "vector")
           .as[(Long, Seq[Float])].collect().toSeq
         val ref = reference(m, probes)
@@ -950,7 +997,7 @@ class VectorIndexSpec extends AnyFunSuite {
     idx.refreshAnnIncremental(
       added.select("doc_id", "vector").unionByName(Seq((3L, queries.head.map(-_))).toDF("doc_id", "vector")),
       Seq(87L).toDF("doc_id"))
-    for (m <- Seq(lsh, ivf, hnsw)) {
+    for (m <- modes) {
       val delta = idx.annDelta(m).get.select("doc_id", "deleted").as[(Long, Boolean)].collect().toSet
       assert(delta == Set((1003L, false), (3L, false), (87L, true)), s"$m: $delta")
     }
@@ -1128,13 +1175,6 @@ class VectorIndexSpec extends AnyFunSuite {
     val versions = (0 to upserts.size).map(j => base ++ upserts.take(j))
     def answers(qv: Seq[Float]): Set[Seq[(Long, String, Double)]] = versions.map(docs =>
       firstPerKey(rank(docs.map { case (id, keys, v) => (id, keys.head, cosine6(v, qv)) }, -2.0).take(k))).toSet
-    // HNSW scores its graph hits with the graph's own cosine, which can
-    // differ from the kernel's by one unit in the 6th decimal: its rows
-    // must match in order, its scores to that unit
-    def same(want: Seq[(Long, String, Double)], got: Seq[(Long, String, Double)], m: SearchMode): Boolean =
-      if (m == ivf) want == got
-      else want.map(r => (r._1, r._2)) == got.map(r => (r._1, r._2)) &&
-        want.zip(got).forall { case (a, b) => math.abs(a._3 - b._3) <= 1.5e-6 }
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
     try {
@@ -1153,7 +1193,7 @@ class VectorIndexSpec extends AnyFunSuite {
             try {
               val got = triples(idx.searchVector(qv, k, -2.0, mode = m))
               val near = answers(qv).minBy(a => a.diff(got).size + got.diff(a).size)
-              if (!same(near, got, m))
+              if (near != got)
                 failures.add(s"thread $t, search $i, $m: missing ${near.diff(got)}, extra ${got.diff(near)}")
             } catch { case e: Throwable => failures.add(s"thread $t, search $i, $m: $e") }
           }
@@ -1164,6 +1204,32 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.toArray.take(5).mkString("\n"))
     assert(idx.documents.count() == base.size + upserts.size)
     assert(sc.getPersistentRDDs.size <= live, s"${sc.getPersistentRDDs.size} persisted RDDs, was $live")
+  }
+
+  // two writers on one handle, each appending deltas of its own new ids.
+  // 12 deltas stay below the parquet store's fold (16), so only the
+  // appends race, not a fold
+  test("concurrent upserts: two threads x 6 single-object batches of disjoint ids, each id stored once") {
+    val idx = newIndex("concurrent_upserts")
+    idx.rebuild(source)
+    val before = idx.documents.select("doc_id").as[Long].collect().toSeq
+    // each batch embedded up front, as rows on the driver
+    val batches = (0 until 2).map(t => (1 to 6).map { i =>
+      val id = 100L + 10 * t + i
+      val df = graft.pipeline.IndexBuild.buildDocuments(Seq((id, s"Page $id", s"body of page number $id"))
+        .toDF("id", "title", "body"), idx.config, idx.backend, "page", "id")
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    })
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      batches.map(batch => pool.submit(new Runnable {
+        def run(): Unit = batch.foreach(idx.upsert)
+      })).foreach(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    val stored = idx.documents.select("doc_id").as[Long].collect().toSeq
+    val upserted = batches.flatten.flatMap(_.select("doc_id").as[Long].collect())
+    assert(stored.diff(stored.distinct).isEmpty, s"stored twice: ${stored.diff(stored.distinct)}")
+    assert(stored.sorted == (before ++ upserted).sorted, s"missing ${(before ++ upserted).diff(stored)}")
   }
 
   test("page cache: least recently used pages go first, within both bounds; a page over the row bound is not kept") {
@@ -1290,18 +1356,19 @@ class VectorIndexSpec extends AnyFunSuite {
     val lsh = SearchMode.Lsh(bits = 4, maxHamming = 1)
     val ivf = SearchMode.Ivf(nCells = 4, nProbe = 2, lloydIters = 1)
     val hnsw = SearchMode.Hnsw(m = 6, efConstruction = 24, ef = 16)
-    val idx = annIndex("scan_misses", Seq(lsh, ivf, hnsw))
+    val anns = Seq(lsh, ivf, hnsw) ++ quantizedModes
+    val idx = annIndex("scan_misses", anns)
     idx.rebuild(annSource)
     def text(i: Int) = s"document number $i about topic${i % 7} detail$i"
     // the ANN kinds of one index version, each asking texts and keys of its
     // own: every call is a miss
     def annKinds(version: Int, searchJobs: Int, similarJobs: Int) =
-      Seq(lsh -> "LSH", ivf -> "IVF", hnsw -> "HNSW").zipWithIndex.flatMap { case ((m, name), j) =>
-        val at = 200 + 100 * (3 * version + j)
+      anns.zipWithIndex.flatMap { case (m, j) =>
+        val at = 200 + 100 * (anns.size * version + j)
         Seq[(String, Int => Unit, Int)](
-          (s"$name search, version $version", i => idx.search(text(at + i), k = 5, mode = m).collect(), searchJobs),
-          (s"$name findSimilar, version $version",
-            i => idx.findSimilar(s"page:${20 * j + i + 1}", k = 5, mode = m).collect(), similarJobs))
+          (s"$m search, version $version", i => idx.search(text(at + i), k = 5, mode = m).collect(), searchJobs),
+          (s"$m findSimilar, version $version",
+            i => idx.findSimilar(s"page:${(20 * j + i) % 60 + 1}", k = 5, mode = m).collect(), similarJobs))
       }
     val kinds = Seq[(String, Int => Unit, Int)](
       ("exact search", i => idx.search(text(i), k = 5).collect(), 1),

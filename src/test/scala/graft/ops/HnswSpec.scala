@@ -165,6 +165,32 @@ class HnswSpec extends AnyFunSuite {
     assert(r == truth)
   }
 
+  // the beam scores with the kernel's arithmetic (each component widened to
+  // double before it is multiplied), so its scores are the exact route's
+  test("exact mode: (id, score) pairs equal round(vec_cosine, 6) of brute force on seeded vectors") {
+    // 8 dims, 40 probes x top 50: float products put about 1 score in 70
+    // one unit off in the 6th decimal
+    val rnd = new scala.util.Random(5)
+    def gaussian(n: Int) = Seq.fill(n)(Seq.fill(8)(rnd.nextGaussian().toFloat))
+    val items = gaussian(300).zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
+    val probes = gaussian(40).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    val probeDf = probes.toDF("qid", "qv")
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "vec_id", "score").as[(Long, Long, Double)].collect().toSet
+    val exact = triples(SimilaritySearch.bruteForceTopK(items, probeDf, k = 50))
+    val tmp = java.nio.file.Files.createTempDirectory("hnsw_kernel").toString
+    try {
+      Hnsw.hnswIndexWrite(items, tmp, dims = 8, m = 6, efConstruction = 24, shards = 3)
+      val stateless = triples(Hnsw.hnswTopK(items, probeDf, dims = 8, k = 50, m = 6, efConstruction = 24,
+        ef = 1 << 20, shards = 3))
+      assert(stateless == exact, s"stateless: ${stateless.diff(exact).size} of ${exact.size} differ")
+      val persisted = triples(Hnsw.hnswTopKIndexed(spark, tmp, probes, k = 50, ef = 1 << 20))
+      assert(persisted == exact, s"persisted: ${persisted.diff(exact).size} of ${exact.size} differ")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    }
+  }
+
   test("merge input is bounded by shards x probes x k rows, independent of ef") {
     val items = vecs(800)
     val probes = probesOf(items, 6)
