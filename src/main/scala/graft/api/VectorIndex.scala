@@ -370,7 +370,9 @@ final class VectorIndex(
     lazy val centroids: (Array[Array[Float]], Array[Long]) =
       SimilaritySearch.collectCentroids(centroidsDf)
     private lazy val codebookRows = PQ.codebookRows(VersionedDir.readSide(spark, s"$dir/_codebooks"))
-    def codebooks(cfg: PQ.PqConfig): Array[Array[Array[Float]]] = PQ.codebooksFrom(codebookRows, cfg)
+    private val codebookArrays = TrieMap.empty[PQ.PqConfig, Array[Array[Array[Float]]]]
+    def codebooks(cfg: PQ.PqConfig): Array[Array[Array[Float]]] =
+      codebookArrays.getOrElseUpdate(cfg, PQ.codebooksFrom(codebookRows, cfg))
     lazy val sqParams: (Array[Float], Array[Float]) =
       SQ.collectParams(VersionedDir.readSide(spark, s"$dir/_sqparams"))
     lazy val bqThresholds: Array[Double] = BQ.collectThresholds(VersionedDir.readSide(spark, s"$dir/_bqparams"))
@@ -405,9 +407,6 @@ final class VectorIndex(
       */
     private def read(value: Option[Long]): DataFrame =
       SimilaritySearch.prunedRead(relation, value.map(v => (layout.part.get, Seq(v))), readCols, None, None)
-
-    /** The schema of the planned reads. */
-    def partSchema: StructType = read(layout.part.map(_ => 0L)).schema
 
     /** [[read]], planned and persisted on first use ([[kept]]). */
     private def part(value: Option[Long]): RDD[InternalRow] = synchronized {
@@ -553,9 +552,6 @@ final class VectorIndex(
     */
   private[graft] def annDelta(m: SearchMode): Option[DataFrame] = annRead(m)._2.delta
 
-  /** The schema of the planned reads a miss in mode `m` scores. */
-  private[graft] def annPartSchema(m: SearchMode): StructType = annRead(m)._2.partSchema
-
   /** search(q): embed the query once on the driver (reference
     * storage/base.py:303-316) and search by its vector ([[searchVector]]).
     */
@@ -610,7 +606,7 @@ final class VectorIndex(
     def in(parts: Seq[Long], score: Expression) = (parts.map(Some(_)),
       If(InSet(AnnVersion.Part, scala.collection.immutable.HashSet.from[Any](parts)), score, AnnVersion.NoScore))
     def negated(distance: Expression): Expression = Cast(UnaryMinus(distance), DoubleType)
-    def lut(values: Array[Long]) = Literal(UnsafeArrayData.fromPrimitiveArray(values), ArrayType(LongType, false))
+    def lut(values: Array[Long]) = Literal(UnsafeArrayData.fromPrimitiveArray(values), PQ.LutType)
     lazy val (cvs, cids) = v.centroids
     m match {
       case SearchMode.Lsh(bits, maxHamming) =>

@@ -210,7 +210,7 @@ object ProductQuantization {
   }
 
   /** Spark type of an ADC lookup table ([[adcLut]], [[ScalarQuantization.sqLut]]). */
-  private[ops] val LutType = ArrayType(LongType, containsNull = false)
+  private[graft] val LutType = ArrayType(LongType, containsNull = false)
 
   /** Quantized scoring with exact rerank — the shared body of every PQ, SQ
     * and BQ route. Each probe row is (qid, qv[, key], code): the probe's

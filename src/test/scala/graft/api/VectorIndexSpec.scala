@@ -317,8 +317,9 @@ class VectorIndexSpec extends AnyFunSuite {
 
   /** Misses in `m`, an IVF-PQ or residual-PQ mode probing fewer cells than
     * there are: each candidate job reads only the rows of the cells it
-    * probes, fewer than the root holds, from planned parts with no vector
-    * column.
+    * probes, fewer than the root holds, and reads them from the codes root,
+    * which has no vector column — a read of the documents would add their
+    * rows to the job's input.
     */
   private def assertProbesCodes(idx: VectorIndex, m: SearchMode, root: String): Unit = {
     val nProbe = m match {
@@ -327,7 +328,9 @@ class VectorIndexSpec extends AnyFunSuite {
       case other                               => fail(s"$other is not a PQ mode")
     }
     val dir = VersionedDir.resolve(spark, root)
-    val cells = spark.read.parquet(dir).select(col("cell").cast("long")).as[Long].collect().toSeq
+    val codes = spark.read.parquet(dir)
+    assert(!codes.columns.contains("vector"), s"$m codes root holds ${codes.columns.mkString(", ")}")
+    val cells = codes.select(col("cell").cast("long")).as[Long].collect().toSeq
     val (cvs, cids) = graft.ops.SimilaritySearch.collectCentroids(VersionedDir.readSide(spark, s"$dir/_centroids"))
     for (i <- 1 to 3) {
       val text = s"document number ${17 + i} about topic${i % 7} detail${17 + i}"
@@ -338,8 +341,6 @@ class VectorIndexSpec extends AnyFunSuite {
       assert(runs.head == JobRun(stages = 1, records = rows, shuffleRead = 0), s"$m candidates read $runs, probed $rows")
       assert(rows < cells.size, s"$m probed all ${cells.size} rows")
     }
-    val schema = idx.annPartSchema(m)
-    assert(!schema.fieldNames.contains("vector"), s"$m parts read $schema")
   }
 
   // r8 advice: SearchMode.RpqIvf was declared but unwired — an index
